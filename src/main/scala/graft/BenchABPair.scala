@@ -79,8 +79,6 @@ object BenchABPair {
         graft.rules.BoundedKeyDriverAgg.maxBound = if (on) boundHi else boundLo
       case "pt" =>
         graft.plans.PackedAgg.passThroughGroupRatio = if (on) ptHi else ptLo
-      case "mom" => graft.rules.PackedShuffleAgg.momentsEnabled = on
-      case "lr" => graft.plans.PackedAgg.localRadixEnabled = on
       case _ => graft.plans.PackedAgg.pairKeysEnabled = on
     }
     names.foreach { name =>

@@ -38,8 +38,10 @@ import org.apache.spark.sql.types._
   * high-cardinality keys. A wrong cardinality guess costs one aborted
   * scan, never a wrong answer or a dead query.
   *
-  * All unsupported surface (DISTINCT, FILTER, decimals, aggregates beyond
-  * Sum/Count/Average/Min/Max) throws at PLAN time in [[DriverAgg.lowCard]];
+  * All unsupported surface (DISTINCT outside count, non-deterministic
+  * FILTER, decimals, aggregates beyond Count/Sum/Avg/Min/Max and the
+  * variance/stddev/covariance moments) throws at PLAN time in
+  * [[DriverAgg.lowCard]]; slot semantics live in [[SlotKernel]];
   * the logical node itself carries only pre-compiled slot specs and
   * BoundReference-based final expressions, so nothing unresolvable ever
   * enters the plan tree.
@@ -74,8 +76,7 @@ object DriverAgg {
   /** Exact per-group distinct set for `count(DISTINCT x)` over a child
     * whose value domain is statistics-bounded. OPT-IN via
     * `layout(allowDistinct = true)` — ONLY the driver-finalized exec can
-    * carry it (set state has no radix columnar encoding); the radix and
-    * sorted-run call sites keep the default and still reject DISTINCT.
+    * carry it (set state has no blob encoding; see [[Layout.flat]]).
     */
   final case class CountDistinctSlot(si: Int, in: Int) extends Slot
   /** min/max over strings — state is a detached UTF8String in the Acc's
@@ -103,7 +104,12 @@ object DriverAgg {
 
   final case class Layout(slots: Seq[Slot], aggTypes: Seq[DataType],
                           inputs: Seq[Expression], nL: Int, nD: Int, nF: Int,
-                          nS: Int = 0, nO: Int = 0)
+                          nS: Int = 0, nO: Int = 0) {
+    /** Only flat primitive state — what the shuffled routes can carry
+      * (object state has no fixed-width blob encoding).
+      */
+    def flat: Boolean = nS == 0 && nO == 0
+  }
 
   /** Mutable per-group state (serializable: it is the task-result payload). */
   final class Acc(val longs: Array[Long], val doubles: Array[Double],
@@ -111,15 +117,6 @@ object DriverAgg {
                   val sets: Array[java.util.HashSet[AnyRef]] = null,
                   val objs: Array[AnyRef] = null)
     extends Serializable
-
-  /** Fresh distinct-set array for an Acc (null when the layout has none —
-    * the common case pays nothing).
-    */
-  private[graft] def newSets(nS: Int): Array[java.util.HashSet[AnyRef]] =
-    if (nS == 0) null else Array.fill(nS)(new java.util.HashSet[AnyRef]())
-
-  private[graft] def newObjs(nO: Int): Array[AnyRef] =
-    if (nO == 0) null else new Array[AnyRef](nO)
 
   /** Distinct sets are driver-merged task state: cap each one like the
     * group table so a false ndv bound aborts into the fallback, never
@@ -170,8 +167,6 @@ object DriverAgg {
     */
   @volatile var aggSelectionEnabled: Boolean =
     !sys.env.get("GRAFT_NO_AGG_SELECTION").contains("1")
-
-  private def maxDistinctPerGroup = maxDistinctCap
 
   // ---- vector-direct aggregate-input plans ---------------------------
   /** Per-input access plan for the batch partial: DirectIn reads the
@@ -262,290 +257,38 @@ object DriverAgg {
     else go(e).map(p => CompiledIn(p, ords.toArray))
   }
 
-  /** Long addition per the session's eval mode, decided at PLAN time:
-    * ANSI throws on overflow (Math.addExact), default Spark wraps —
-    * diverging from that would make a rewritten query fail where the
-    * un-rewritten plan returns a (wrapped) result.
+  /** A compiled double input as a batch column: NULL iff any referenced
+    * column is NULL (the null semantics of +/-/× over nullable inputs),
+    * value = the program evaluated at the row. Lets the slot kernel read
+    * compiled and direct inputs alike.
     */
-  private[graft] def longAdd(ansi: Boolean): (Long, Long) => Long =
-    if (ansi) Math.addExact else _ + _
-
-  /** Compile slots to per-row updaters against the value-projection row.
-    * Top-level (no plan capture): the returned closures ship in the task.
-    */
-  private[plans] def updaters(slots: Seq[Slot], iExprs: Seq[Expression],
-      ansi: Boolean): Array[(UnsafeRow, Acc) => Unit] = {
-    val addL = longAdd(ansi)
-    def readL(i: Int): (UnsafeRow) => Long = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toLong
-      case ShortType => r => r.getShort(i).toLong
-      case IntegerType | DateType => r => r.getInt(i).toLong
-      case _ => r => r.getLong(i)
+  private[plans] final class CompiledDoubleVector(prog: DProg, ords: Array[Int],
+      cols: Array[org.apache.spark.sql.vectorized.ColumnVector])
+    extends org.apache.spark.sql.vectorized.ColumnVector(DoubleType) {
+    override def isNullAt(r: Int): Boolean = {
+      var i = 0
+      while (i < ords.length) { if (cols(ords(i)).isNullAt(r)) return true; i += 1 }
+      false
     }
-    def readD(i: Int): (UnsafeRow) => Double = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toDouble
-      case ShortType => r => r.getShort(i).toDouble
-      case IntegerType | DateType => r => r.getInt(i).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => r.getLong(i).toDouble
-      case FloatType => r => r.getFloat(i).toDouble
-      case _ => r => r.getDouble(i)
-    }
-    slots.map[(UnsafeRow, Acc) => Unit] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        (v, acc) => {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (v.isNullAt(ia(j))) ok = false; j += 1 }
-          if (ok) acc.longs(li) += 1
-        }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        (v, acc) => if (!v.isNullAt(in)) {
-          acc.longs(li) =
-            if (acc.flags(fi)) addL(acc.longs(li), rd(v)) else rd(v)
-          acc.flags(fi) = true
-        }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        (v, acc) => if (!v.isNullAt(in)) { acc.doubles(di) += rd(v); acc.flags(fi) = true }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        (v, acc) => if (!v.isNullAt(in)) { acc.doubles(di) += rd(v); acc.longs(li) += 1 }
-      case MinMaxLSlot(li, fi, in, isMin) =>
-        val rd = readL(in)
-        (v, acc) => if (!v.isNullAt(in)) {
-          val x = rd(v)
-          if (!acc.flags(fi) || (if (isMin) x < acc.longs(li) else x > acc.longs(li)))
-            acc.longs(li) = x
-          acc.flags(fi) = true
-        }
-      case MinMaxDSlot(di, fi, in, isMin) =>
-        val rd = readD(in)
-        (v, acc) => if (!v.isNullAt(in)) {
-          val x = rd(v)
-          val c = java.lang.Double.compare(x, acc.doubles(di))
-          if (!acc.flags(fi) || (if (isMin) c < 0 else c > 0)) acc.doubles(di) = x
-          acc.flags(fi) = true
-        }
-      case CountDistinctSlot(si, in) =>
-        val rd = readBoxed(iExprs(in).dataType, in)
-        (v, acc) => if (!v.isNullAt(in)) {
-          val s = acc.sets(si)
-          if (s.add(rd(v)) && s.size() > maxDistinctPerGroup)
-            throw new GroupCardinalityExceeded(
-              s"driver agg: distinct set exceeded $maxDistinctPerGroup in one " +
-                "group — child is not low-cardinality; falling back")
-        }
-      case MinMaxSSlot(oi, in, isMin) =>
-        (v, acc) => if (!v.isNullAt(in)) {
-          val x = v.getUTF8String(in)
-          val cur = acc.objs(oi).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-          if (cur == null || (if (isMin) x.compareTo(cur) < 0 else x.compareTo(cur) > 0))
-            acc.objs(oi) = x.clone()
-        }
-      case VarSlot(di, li, in, _, _) =>
-        val rd = readD(in)
-        (v, acc) => if (!v.isNullAt(in)) {
-          val x = rd(v)
-          val n = acc.longs(li) + 1
-          acc.longs(li) = n
-          val delta = x - acc.doubles(di)
-          val deltaN = delta / n
-          acc.doubles(di) += deltaN
-          acc.doubles(di + 1) += delta * (delta - deltaN)
-        }
-      case CovarSlot(di, li, inX, inY, _, _) =>
-        val rx = readD(inX); val ry = readD(inY)
-        (v, acc) => if (!v.isNullAt(inX) && !v.isNullAt(inY)) {
-          val x = rx(v); val y = ry(v)
-          val n = acc.longs(li) + 1
-          acc.longs(li) = n
-          val dx = x - acc.doubles(di)
-          val dy = y - acc.doubles(di + 1)
-          acc.doubles(di) += dx / n
-          acc.doubles(di + 1) += dy / n
-          acc.doubles(di + 2) += dx * (y - acc.doubles(di + 1))
-        }
-    }.toArray
+    override def hasNull: Boolean = ords.exists(o => cols(o).hasNull)
+    override def getDouble(r: Int): Double = prog.eval(cols, r)
+    override def numNulls(): Int = unsupported
+    override def getBoolean(r: Int): Boolean = unsupported
+    override def getByte(r: Int): Byte = unsupported
+    override def getShort(r: Int): Short = unsupported
+    override def getInt(r: Int): Int = unsupported
+    override def getLong(r: Int): Long = unsupported
+    override def getFloat(r: Int): Float = unsupported
+    override def getArray(r: Int): org.apache.spark.sql.vectorized.ColumnarArray = unsupported
+    override def getMap(r: Int): org.apache.spark.sql.vectorized.ColumnarMap = unsupported
+    override def getDecimal(r: Int, p: Int, s: Int): Decimal = unsupported
+    override def getUTF8String(r: Int): org.apache.spark.unsafe.types.UTF8String = unsupported
+    override def getBinary(r: Int): Array[Byte] = unsupported
+    override def getChild(i: Int): org.apache.spark.sql.vectorized.ColumnVector = unsupported
+    override def close(): Unit = ()
+    private def unsupported: Nothing =
+      throw new UnsupportedOperationException("compiled input reads as double only")
   }
-
-  /** Boxed (hashable, buffer-detached) read of column `i` for distinct
-    * sets. UTF8String clones off the row buffer; primitives box.
-    */
-  private def readBoxed(dt: DataType, i: Int): UnsafeRow => AnyRef = dt match {
-    case ByteType => r => java.lang.Long.valueOf(r.getByte(i).toLong)
-    case ShortType => r => java.lang.Long.valueOf(r.getShort(i).toLong)
-    case IntegerType | DateType => r => java.lang.Long.valueOf(r.getInt(i).toLong)
-    case LongType | TimestampType | TimestampNTZType =>
-      r => java.lang.Long.valueOf(r.getLong(i))
-    case FloatType => r => java.lang.Double.valueOf(r.getFloat(i).toDouble)
-    case DoubleType => r => java.lang.Double.valueOf(r.getDouble(i))
-    case BooleanType => r => java.lang.Boolean.valueOf(r.getBoolean(i))
-    case StringType => r => r.getUTF8String(i).clone()
-    case other => throw new UnsupportedOperationException(
-      s"driver agg: distinct over ${other.simpleString} unsupported")
-  }
-
-  /** Merge one partial state into an accumulator (shared by the
-    * driver-merge exec and the radix shuffle aggregate's reducers).
-    */
-  def mergeAcc(slots: Seq[Slot], cur: Acc, in: Acc, ansi: Boolean): Unit = slots.foreach {
-    case CountSlot(li, _) => cur.longs(li) += in.longs(li)
-    case SumLSlot(li, fi, _) => if (in.flags(fi)) {
-      cur.longs(li) =
-        if (cur.flags(fi)) longAdd(ansi)(cur.longs(li), in.longs(li)) else in.longs(li)
-      cur.flags(fi) = true
-    }
-    case SumDSlot(di, fi, _) => if (in.flags(fi)) {
-      cur.doubles(di) += in.doubles(di); cur.flags(fi) = true
-    }
-    case AvgSlot(di, li, _) =>
-      cur.doubles(di) += in.doubles(di); cur.longs(li) += in.longs(li)
-    case MinMaxLSlot(li, fi, _, isMin) => if (in.flags(fi)) {
-      if (!cur.flags(fi) ||
-          (if (isMin) in.longs(li) < cur.longs(li) else in.longs(li) > cur.longs(li)))
-        cur.longs(li) = in.longs(li)
-      cur.flags(fi) = true
-    }
-    case MinMaxDSlot(di, fi, _, isMin) => if (in.flags(fi)) {
-      val c = java.lang.Double.compare(in.doubles(di), cur.doubles(di))
-      if (!cur.flags(fi) || (if (isMin) c < 0 else c > 0)) cur.doubles(di) = in.doubles(di)
-      cur.flags(fi) = true
-    }
-    case CountDistinctSlot(si, _) =>
-      val s = cur.sets(si)
-      s.addAll(in.sets(si))
-      if (s.size() > maxDistinctPerGroup) throw new GroupCardinalityExceeded(
-        s"driver agg: merged distinct set exceeded $maxDistinctPerGroup — " +
-          "child is not low-cardinality; falling back")
-    case MinMaxSSlot(oi, _, isMin) =>
-      val x = in.objs(oi).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      val c0 = cur.objs(oi).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      if (x != null &&
-          (c0 == null || (if (isMin) x.compareTo(c0) < 0 else x.compareTo(c0) > 0)))
-        cur.objs(oi) = x
-    case VarSlot(di, li, _, _, _) =>
-      // Spark CentralMomentAgg.mergeExpressions, operation-for-operation
-      val n1 = cur.longs(li); val n2 = in.longs(li)
-      val n = n1 + n2
-      val delta = in.doubles(di) - cur.doubles(di)
-      val deltaN = if (n == 0) 0.0 else delta / n
-      cur.doubles(di) += deltaN * n2
-      cur.doubles(di + 1) += in.doubles(di + 1) + delta * deltaN * n1 * n2
-      cur.longs(li) = n
-    case CovarSlot(di, li, _, _, _, _) =>
-      val n1 = cur.longs(li); val n2 = in.longs(li)
-      val n = n1 + n2
-      val dx = in.doubles(di) - cur.doubles(di)
-      val dxN = if (n == 0) 0.0 else dx / n
-      val dy = in.doubles(di + 1) - cur.doubles(di + 1)
-      val dyN = if (n == 0) 0.0 else dy / n
-      cur.doubles(di) += dxN * n2
-      cur.doubles(di + 1) += dyN * n2
-      cur.doubles(di + 2) += in.doubles(di + 2) + dx * dyN * n1 * n2
-      cur.longs(li) = n
-  }
-
-  /** Final value of aggregate `j` as a catalyst value of `aggTypes(j)`. */
-  def finalValue(slots: Seq[Slot], aggTypes: Seq[DataType], j: Int, acc: Acc): Any =
-    slots(j) match {
-      case CountSlot(li, _) => acc.longs(li)
-      case SumLSlot(li, fi, _) => if (acc.flags(fi)) acc.longs(li) else null
-      case SumDSlot(di, fi, _) =>
-        if (!acc.flags(fi)) null
-        else if (aggTypes(j) == FloatType) acc.doubles(di).toFloat else acc.doubles(di)
-      case AvgSlot(di, li, _) =>
-        if (acc.longs(li) > 0) acc.doubles(di) / acc.longs(li) else null
-      case MinMaxLSlot(li, fi, _, _) =>
-        if (!acc.flags(fi)) null
-        else aggTypes(j) match {
-          case ByteType => acc.longs(li).toByte
-          case ShortType => acc.longs(li).toShort
-          case IntegerType | DateType => acc.longs(li).toInt
-          case _ => acc.longs(li)
-        }
-      case MinMaxDSlot(di, fi, _, _) =>
-        if (!acc.flags(fi)) null
-        else if (aggTypes(j) == FloatType) acc.doubles(di).toFloat else acc.doubles(di)
-      case CountDistinctSlot(si, _) => acc.sets(si).size().toLong
-      case MinMaxSSlot(oi, _, _) => acc.objs(oi)
-      case VarSlot(di, li, _, kind, nullOnDiv) =>
-        momentFinal(acc.longs(li), acc.doubles(di + 1), kind, nullOnDiv)
-      case CovarSlot(di, li, _, _, samp, nullOnDiv) =>
-        val n = acc.longs(li)
-        if (n == 0) null
-        else if (!samp) java.lang.Double.valueOf(acc.doubles(di + 2) / n)
-        else if (n == 1) { if (nullOnDiv) null else java.lang.Double.valueOf(Double.NaN) }
-        else java.lang.Double.valueOf(acc.doubles(di + 2) / (n - 1))
-    }
-
-  /** Spark's CentralMomentAgg.evaluateExpression per statistic kind:
-    * n==0 → NULL; sample statistics at n==1 → NULL (nullOnDivideByZero,
-    * the default) or NaN (legacy).
-    */
-  private def momentFinal(n: Long, m2: Double, kind: Int,
-      nullOnDiv: Boolean): java.lang.Double =
-    if (n == 0) null
-    else kind match {
-      case 0 => // stddev_samp
-        if (n == 1) { if (nullOnDiv) null else Double.NaN }
-        else math.sqrt(m2 / (n - 1))
-      case 1 => math.sqrt(m2 / n) // stddev_pop
-      case 2 => // var_samp
-        if (n == 1) { if (nullOnDiv) null else Double.NaN }
-        else m2 / (n - 1)
-      case _ => m2 / n // var_pop
-    }
-
-  /** Dev escape hatch for the typed-drain A/B (graft.BenchABDrain): when
-    * false, [[writeFinal]] routes through the boxed finalValue +
-    * update(Any) path it replaced, so the allocation cut can be
-    * attributed interleaved same-JVM per the PERF.md protocol.
-    */
-  @volatile var typedDrain = true
-
-  /** Typed twin of [[finalValue]]: writes aggregate `j` straight into a
-    * mutable row via primitive setters. With a SpecificInternalRow
-    * target this is allocation-free — the sorted-run aggregate's drain
-    * emits one row per GROUP, so the boxed `update(Any)` path costs a
-    * Long/Double box per aggregate per group (tens of millions of
-    * objects on groups≈rows shapes, pure GC churn).
-    */
-  def writeFinal(slots: Seq[Slot], aggTypes: Seq[DataType], j: Int, acc: Acc,
-      row: org.apache.spark.sql.catalyst.InternalRow, pos: Int): Unit =
-    if (!typedDrain) {
-      val v = finalValue(slots, aggTypes, j, acc)
-      if (v == null) row.setNullAt(pos) else row.update(pos, v)
-    } else slots(j) match {
-      case CountSlot(li, _) => row.setLong(pos, acc.longs(li))
-      case SumLSlot(li, fi, _) =>
-        if (acc.flags(fi)) row.setLong(pos, acc.longs(li)) else row.setNullAt(pos)
-      case SumDSlot(di, fi, _) =>
-        if (!acc.flags(fi)) row.setNullAt(pos)
-        else if (aggTypes(j) == FloatType) row.setFloat(pos, acc.doubles(di).toFloat)
-        else row.setDouble(pos, acc.doubles(di))
-      case AvgSlot(di, li, _) =>
-        if (acc.longs(li) > 0) row.setDouble(pos, acc.doubles(di) / acc.longs(li))
-        else row.setNullAt(pos)
-      case MinMaxLSlot(li, fi, _, _) =>
-        if (!acc.flags(fi)) row.setNullAt(pos)
-        else aggTypes(j) match {
-          case ByteType => row.setByte(pos, acc.longs(li).toByte)
-          case ShortType => row.setShort(pos, acc.longs(li).toShort)
-          case IntegerType | DateType => row.setInt(pos, acc.longs(li).toInt)
-          case _ => row.setLong(pos, acc.longs(li))
-        }
-      case MinMaxDSlot(di, fi, _, _) =>
-        if (!acc.flags(fi)) row.setNullAt(pos)
-        else if (aggTypes(j) == FloatType) row.setFloat(pos, acc.doubles(di).toFloat)
-        else row.setDouble(pos, acc.doubles(di))
-      case CountDistinctSlot(si, _) => row.setLong(pos, acc.sets(si).size().toLong)
-      case MinMaxSSlot(oi, _, _) => row.update(pos, acc.objs(oi))
-      case _: VarSlot | _: CovarSlot =>
-        val v = finalValue(slots, aggTypes, j, acc)
-        if (v == null) row.setNullAt(pos)
-        else row.setDouble(pos, v.asInstanceOf[java.lang.Double].doubleValue())
-    }
 
   // ---- columnar key extraction --------------------------------------
   // The partial's row path pays ~250 ns/row at bench scale: a
@@ -646,7 +389,7 @@ object DriverAgg {
     * (in first-occurrence order), or throw for unsupported aggregates.
     */
   private[graft] def layout(aggs: Seq[AggregateExpression],
-      allowDistinct: Boolean = false, allowMoments: Boolean = false): Layout = {
+      allowDistinct: Boolean = false): Layout = {
     val inputs = ArrayBuffer.empty[Expression]
     def inputIdx(e: Expression): Int = {
       val i = inputs.indexWhere(_.semanticEquals(e))
@@ -660,8 +403,7 @@ object DriverAgg {
     def objSlot(): Int = { nO += 1; nO - 1 }
     val slots = aggs.map { ae =>
       require((allowDistinct || !ae.isDistinct) &&
-        (ae.filter.isEmpty ||
-          (allowMoments && !ae.isDistinct && ae.filter.get.deterministic)),
+        (ae.filter.isEmpty || (!ae.isDistinct && ae.filter.get.deterministic)),
         s"driver agg: DISTINCT/FILTER unsupported in ${ae.sql}")
       // FILTER (WHERE p) over a NULL-ignoring aggregate ≡ the same
       // aggregate over If(p, x, NULL) — folded into the input expression
@@ -703,26 +445,26 @@ object DriverAgg {
           MinMaxSSlot(objSlot(), inputIdx(gIn(c)), isMin = false)
         case Max(c) if isDoubleIsh(c.dataType) =>
           MinMaxDSlot(dblSlot(), flag(), inputIdx(gIn(c)), isMin = false)
-        case sd: aggregate.StddevSamp if allowMoments && isDoubleIsh(sd.child.dataType) =>
+        case sd: aggregate.StddevSamp if isDoubleIsh(sd.child.dataType) =>
           val di = dblSlot(); dblSlot()
           VarSlot(di, longSlot(), inputIdx(gIn(sd.child)), 0, sd.nullOnDivideByZero)
-        case sd: aggregate.StddevPop if allowMoments && isDoubleIsh(sd.child.dataType) =>
+        case sd: aggregate.StddevPop if isDoubleIsh(sd.child.dataType) =>
           val di = dblSlot(); dblSlot()
           VarSlot(di, longSlot(), inputIdx(gIn(sd.child)), 1, sd.nullOnDivideByZero)
-        case vr: aggregate.VarianceSamp if allowMoments && isDoubleIsh(vr.child.dataType) =>
+        case vr: aggregate.VarianceSamp if isDoubleIsh(vr.child.dataType) =>
           val di = dblSlot(); dblSlot()
           VarSlot(di, longSlot(), inputIdx(gIn(vr.child)), 2, vr.nullOnDivideByZero)
-        case vr: aggregate.VariancePop if allowMoments && isDoubleIsh(vr.child.dataType) =>
+        case vr: aggregate.VariancePop if isDoubleIsh(vr.child.dataType) =>
           val di = dblSlot(); dblSlot()
           VarSlot(di, longSlot(), inputIdx(gIn(vr.child)), 3, vr.nullOnDivideByZero)
         case cv: aggregate.CovSample
-            if allowMoments && isDoubleIsh(cv.left.dataType) &&
+            if isDoubleIsh(cv.left.dataType) &&
               isDoubleIsh(cv.right.dataType) =>
           val di = dblSlot(); dblSlot(); dblSlot()
           CovarSlot(di, longSlot(), inputIdx(gIn(cv.left)), inputIdx(cv.right),
             samp = true, cv.nullOnDivideByZero)
         case cv: aggregate.CovPopulation
-            if allowMoments && isDoubleIsh(cv.left.dataType) &&
+            if isDoubleIsh(cv.left.dataType) &&
               isDoubleIsh(cv.right.dataType) =>
           val di = dblSlot(); dblSlot(); dblSlot()
           CovarSlot(di, longSlot(), inputIdx(gIn(cv.left)), inputIdx(cv.right),
@@ -780,7 +522,7 @@ object DriverAgg {
   /** Plan-level core of [[lowCard]]: convert an analyzed/optimized bare
     * Aggregate (plus a resolved total order and optional limit) into a
     * [[DriverGroupAggPlan]]. Throws for any aggregate outside the slot
-    * surface (DISTINCT/FILTER/decimals/exotic functions) — callers that
+    * surface (DISTINCT/decimals/exotic functions) — callers that
     * must not fail (the auto-routing rule) wrap in Try.
     */
   private[graft] def fromAggregate(agg: Aggregate, order: Seq[SortOrder],
@@ -913,31 +655,16 @@ final case class DriverGroupAggExec(
     DriverAgg.colKeyParts(groupExprs, c.output).isDefined &&
       aggInputs.forall(_.references.subsetOf(c.outputSet))
 
-  private def newAcc() = new Acc(new Array[Long](nL), new Array[Double](nD),
-    new Array[Boolean](nF), DriverAgg.newSets(nS), DriverAgg.newObjs(nO))
-
-  private def mergeInto(cur: Acc, in: Acc): Unit =
-    DriverAgg.mergeAcc(slots, cur, in, ansi)
-
-  private def finalVal(j: Int, acc: Acc): Any =
-    DriverAgg.finalValue(slots, aggTypes, j, acc)
-
-  /** Input type → primitive read code (0 byte, 1 short, 2 int/date,
-    * 3 long/ts/ntz, 4 float, 5 double; -1 = not dense-readable).
+  /** Slot semantics for this aggregate's layout (inputs read with their
+    * own types: value-projection rows, direct columns, or compiled double
+    * vectors).
     */
-  private def denseTypeCode(dt: DataType): Int = dt match {
-    case ByteType => 0
-    case ShortType => 1
-    case IntegerType | DateType => 2
-    case LongType | TimestampType | TimestampNTZType => 3
-    case FloatType => 4
-    case DoubleType => 5
-    case _ => -1
-  }
+  private def kernel = new SlotKernel(slots, aggInputs.map(_.dataType), aggTypes,
+    nL, nD, nF, ansi, nS, nO)
 
   /** Dense direct-index eligibility: ONE calendar-bucket key, every
     * aggregate input a direct primitive column, and only flat-array
-    * slots (no distinct sets, no string min/max). The bucket domain is
+    * state (no distinct sets, no string min/max). The bucket domain is
     * the fixed 1900-2100 calendar window — out-of-window rows take a
     * per-row overflow map inside the arm, so eligibility never depends
     * on (possibly lying) statistics.
@@ -949,20 +676,13 @@ final case class DriverGroupAggExec(
       selection.nonEmpty) return None
     DriverAgg.colKeyParts(groupExprs, child.output) match {
       case Some(Seq(c: DriverAgg.CalendarKeyPart)) =>
-        val slotsOk = slots.forall {
-          case DriverAgg.CountSlot(_, checked) => checked.size <= 1
-          case _: DriverAgg.SumLSlot | _: DriverAgg.SumDSlot |
-               _: DriverAgg.AvgSlot | _: DriverAgg.MinMaxLSlot |
-               _: DriverAgg.MinMaxDSlot => true
-          case _ => false
-        }
         val inputsOk = aggInputs.forall {
           case a: AttributeReference =>
-            denseTypeCode(a.dataType) >= 0 &&
+            SlotKernel.typeCode(a.dataType) >= 0 &&
               child.output.exists(_.exprId == a.exprId)
           case _ => false
         }
-        if (slotsOk && inputsOk)
+        if (inputsOk)
           Some((c, aggInputs.map(e => child.output.indexWhere(
             _.exprId == e.asInstanceOf[AttributeReference].exprId)).toArray))
         else None
@@ -971,12 +691,9 @@ final case class DriverGroupAggExec(
   }
 
   /** Dense direct-index partial — the perfect-hash aggregate proper.
-    * The generic batch loop below pays per-row ADT matches (key-part
-    * extract, per-slot dispatch, per-input type dispatch) plus an
-    * open-addressing probe; for a single calendar key all of that
-    * resolves at plan time: the key is one LUT read off the micros
-    * vector, group state is flat primitive arrays indexed by bucket
-    * ordinal, and slot updates run through a compiled int-switch.
+    * For a single calendar key the key is one LUT read off the micros
+    * vector and group state is the kernel's flat primitive arrays
+    * indexed by bucket ordinal — no hash probe, no per-group object.
     * Out-of-window days (outside 1900-2100) fall into a per-row
     * overflow hash map — slower rows, never a wrong answer. Emits the
     * same (key-row bytes, Acc) payload, so the driver merge is shared.
@@ -990,78 +707,22 @@ final case class DriverGroupAggExec(
     val asDate = key.asDate
     val keyOrd = key.ord
     val keyTypes = groupExprs.map(_.dataType).toArray
-    val (accL, accD, accF) = (nL, nD, nF)
-    val ansiMode = ansi
-    val theSlots = slots.toArray
-    val iExprs = aggInputs
-    val childOut = child.output
+    val k = kernel
     val cap = maxGroups
-    // opcode compile: 0 count(*), 1 count(col), 2 sumL, 3 sumD, 4 avg,
-    // 5 minL, 6 maxL, 7 minD, 8 maxD — a1/a2 are acc offsets, vin the
-    // input-vector index, tc the primitive read code
-    val nOps = theSlots.length
-    val op = new Array[Int](nOps); val a1 = new Array[Int](nOps)
-    val a2 = new Array[Int](nOps); val vin = new Array[Int](nOps)
-    val tc = new Array[Int](nOps)
-    var j0 = 0
-    while (j0 < nOps) {
-      theSlots(j0) match {
-        case DriverAgg.CountSlot(li, Seq()) => op(j0) = 0; a1(j0) = li
-        case DriverAgg.CountSlot(li, Seq(in)) =>
-          op(j0) = 1; a1(j0) = li; vin(j0) = in
-        case DriverAgg.SumLSlot(li, fi, in) =>
-          op(j0) = 2; a1(j0) = li; a2(j0) = fi; vin(j0) = in
-          tc(j0) = denseTypeCode(iExprs(in).dataType)
-        case DriverAgg.SumDSlot(di, fi, in) =>
-          op(j0) = 3; a1(j0) = di; a2(j0) = fi; vin(j0) = in
-          tc(j0) = denseTypeCode(iExprs(in).dataType)
-        case DriverAgg.AvgSlot(di, li, in) =>
-          op(j0) = 4; a1(j0) = di; a2(j0) = li; vin(j0) = in
-          tc(j0) = denseTypeCode(iExprs(in).dataType)
-        case DriverAgg.MinMaxLSlot(li, fi, in, isMin) =>
-          op(j0) = if (isMin) 5 else 6; a1(j0) = li; a2(j0) = fi; vin(j0) = in
-          tc(j0) = denseTypeCode(iExprs(in).dataType)
-        case DriverAgg.MinMaxDSlot(di, fi, in, isMin) =>
-          op(j0) = if (isMin) 7 else 8; a1(j0) = di; a2(j0) = fi; vin(j0) = in
-          tc(j0) = denseTypeCode(iExprs(in).dataType)
-        case other =>
-          throw new IllegalStateException(s"dense arm on unsupported slot $other")
-      }
-      j0 += 1
-    }
     sparkContext.runJob(child.executeColumnar(),
         (batches: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]) => {
-      val addL = DriverAgg.longAdd(ansiMode)
-      val longsA = new Array[Long](nBuck * accL)
-      val doublesA = new Array[Double](nBuck * accD)
-      val flagsA = new Array[Boolean](nBuck * accF)
+      val (aL, aD, aF) = (k.nL, k.nD, k.nF)
+      val longsA = new Array[Long](nBuck * aL)
+      val doublesA = new Array[Double](nBuck * aD)
+      val flagsA = new Array[Boolean](nBuck * aF)
       val touched = new Array[Boolean](nBuck)
       // in-window dense buckets count toward maxGroups exactly like the
       // generic partial's per-partition group cap — without this, a
       // caller-supplied cap below the bucket count would silently pass
       // here while the generic arm throws GroupCardinalityExceeded
       var touchedCount = 0
-      // out-of-window rows (truncated key value -> Acc), built lazily —
-      // the generic row-projection updaters are correct and rare here
+      // out-of-window rows (truncated key value -> Acc), built lazily
       var ovf: java.util.HashMap[java.lang.Long, Acc] = null
-      lazy val valProj = UnsafeProjection.create(iExprs, childOut)
-      lazy val ups = DriverAgg.updaters(theSlots.toSeq, iExprs, ansiMode)
-      def readL(v: org.apache.spark.sql.vectorized.ColumnVector, r: Int, t: Int): Long =
-        t match {
-          case 0 => v.getByte(r).toLong
-          case 1 => v.getShort(r).toLong
-          case 2 => v.getInt(r).toLong
-          case _ => v.getLong(r)
-        }
-      def readD(v: org.apache.spark.sql.vectorized.ColumnVector, r: Int, t: Int): Double =
-        t match {
-          case 0 => v.getByte(r).toDouble
-          case 1 => v.getShort(r).toDouble
-          case 2 => v.getInt(r).toDouble
-          case 3 => v.getLong(r).toDouble
-          case 4 => v.getFloat(r).toDouble
-          case _ => v.getDouble(r)
-        }
       batches.foreach { batch =>
         val v0 = batch.column(keyOrd)
         val inVecs = dirOrds.map(batch.column)
@@ -1069,30 +730,26 @@ final case class DriverGroupAggExec(
         var r = 0
         while (r < n) {
           var b = 0
-          var inWindow = true
+          var acc: Acc = null
           if (!v0.isNullAt(r)) {
             val us = v0.getLong(r)
             val o = DateTruncKernel.denseOrd(kCode,
               Math.floorDiv(us, 86400000000L))
             if (o >= 0) b = o + 1
             else {
-              inWindow = false
               if (ovf == null) ovf = new java.util.HashMap()
               val kv = java.lang.Long.valueOf(key.eval(us))
-              var acc = ovf.get(kv)
+              acc = ovf.get(kv)
               if (acc == null) {
                 if (touchedCount + ovf.size() >= cap) throw new GroupCardinalityExceeded(
                   s"driver agg: dense overflow exceeded maxGroups=$cap")
-                acc = new Acc(new Array[Long](accL), new Array[Double](accD),
-                  new Array[Boolean](accF), null, null)
+                acc = k.newAcc()
                 ovf.put(kv, acc)
               }
-              val vrow = valProj(batch.getRow(r))
-              var ji = 0
-              while (ji < ups.length) { ups(ji)(vrow, acc); ji += 1 }
             }
           }
-          if (inWindow) {
+          if (acc != null) k.updateCol(inVecs, r, acc.longs, acc.doubles, acc.flags, 0)
+          else {
             if (!touched(b)) {
               val ovfSize = if (ovf == null) 0 else ovf.size()
               if (touchedCount + ovfSize >= cap) throw new GroupCardinalityExceeded(
@@ -1100,69 +757,7 @@ final case class DriverGroupAggExec(
               touched(b) = true
               touchedCount += 1
             }
-            val lb = b * accL; val db = b * accD; val fb = b * accF
-            var j = 0
-            while (j < nOps) {
-              (op(j): @annotation.switch) match {
-                case 0 => longsA(lb + a1(j)) += 1
-                case 1 => if (!inVecs(vin(j)).isNullAt(r)) longsA(lb + a1(j)) += 1
-                case 2 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    val x = readL(v, r, tc(j))
-                    longsA(lb + a1(j)) =
-                      if (flagsA(fb + a2(j))) addL(longsA(lb + a1(j)), x) else x
-                    flagsA(fb + a2(j)) = true
-                  }
-                case 3 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    doublesA(db + a1(j)) += readD(v, r, tc(j))
-                    flagsA(fb + a2(j)) = true
-                  }
-                case 4 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    doublesA(db + a1(j)) += readD(v, r, tc(j))
-                    longsA(lb + a2(j)) += 1
-                  }
-                case 5 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    val x = readL(v, r, tc(j))
-                    if (!flagsA(fb + a2(j)) || x < longsA(lb + a1(j)))
-                      longsA(lb + a1(j)) = x
-                    flagsA(fb + a2(j)) = true
-                  }
-                case 6 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    val x = readL(v, r, tc(j))
-                    if (!flagsA(fb + a2(j)) || x > longsA(lb + a1(j)))
-                      longsA(lb + a1(j)) = x
-                    flagsA(fb + a2(j)) = true
-                  }
-                case 7 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    val x = readD(v, r, tc(j))
-                    if (!flagsA(fb + a2(j)) ||
-                        java.lang.Double.compare(x, doublesA(db + a1(j))) < 0)
-                      doublesA(db + a1(j)) = x
-                    flagsA(fb + a2(j)) = true
-                  }
-                case 8 =>
-                  val v = inVecs(vin(j))
-                  if (!v.isNullAt(r)) {
-                    val x = readD(v, r, tc(j))
-                    if (!flagsA(fb + a2(j)) ||
-                        java.lang.Double.compare(x, doublesA(db + a1(j))) > 0)
-                      doublesA(db + a1(j)) = x
-                    flagsA(fb + a2(j)) = true
-                  }
-              }
-              j += 1
-            }
+            k.updateCol(inVecs, r, longsA, doublesA, flagsA, b)
           }
           r += 1
         }
@@ -1181,10 +776,9 @@ final case class DriverGroupAggExec(
               if (asDate) sd.toInt else java.lang.Long.valueOf(sd * 86400000000L))
           }
           val acc = new Acc(
-            java.util.Arrays.copyOfRange(longsA, b * accL, b * accL + accL),
-            java.util.Arrays.copyOfRange(doublesA, b * accD, b * accD + accD),
-            java.util.Arrays.copyOfRange(flagsA, b * accF, b * accF + accF),
-            null, null)
+            java.util.Arrays.copyOfRange(longsA, b * aL, b * aL + aL),
+            java.util.Arrays.copyOfRange(doublesA, b * aD, b * aD + aD),
+            java.util.Arrays.copyOfRange(flagsA, b * aF, b * aF + aF))
           out += ((keyProj(krow).copy().getBytes, acc))
         }
         b += 1
@@ -1205,29 +799,26 @@ final case class DriverGroupAggExec(
   /** Batch-direct partial: specialized key extraction off column vectors
     * (long reads, hour-bucket arithmetic, string interning to task-local
     * ids) into an open-addressing composite-long table; aggregate inputs
-    * evaluate through the ordinary value projection over the batch's row
-    * VIEW (no column-to-row materialization). Emits the same
-    * (key-row bytes, Acc) payload as the row path, so the driver merge
-    * is shared. Measured ~250 → ~70 ns/row on the sf1 tumbling partial
-    * (PERF.md r7).
+    * read straight off the batch's vectors (direct columns, or compiled
+    * double trees over them), falling back to the ordinary value
+    * projection over the batch's row VIEW (no column-to-row
+    * materialization). Emits the same (key-row bytes, Acc) payload as
+    * the row path, so the driver merge is shared. Measured ~250 → ~70
+    * ns/row on the sf1 tumbling partial (PERF.md r7).
     */
   private def runColumnarPartials(): Array[Array[(Array[Byte], Acc)]] = {
     val partsSpec = DriverAgg.colKeyParts(groupExprs, child.output).get.toArray
     val iExprs = aggInputs
-    val theSlots = slots
     val childOut = child.output
     val cap = maxGroups
-    val (accL, accD, accF, accS, accO) = (nL, nD, nF, nS, nO)
-    val ansiMode = ansi
+    val k = kernel
     val keyTypes = groupExprs.map(_.dataType).toArray
     val selPreds: Array[Expression] =
       if (selection.nonEmpty) selection.toArray else null
     val dictKeys = DriverAgg.dictKeysEnabled
-    // per-input access plans: direct column, compiled double tree, or
-    // null (projection row path). The vector arm engages only when every
-    // input has a plan AND every slot's read kind is satisfiable: long/
-    // string/boxed-exact reads need a direct column; double reads accept
-    // a compiled tree.
+    // per-input access plans: direct column or compiled double tree; the
+    // vector arm engages only when every input has one (else the rows go
+    // through the value projection)
     val inPlans: Array[DriverAgg.InPlan] = iExprs.map {
       case a: AttributeReference if childOut.exists(_.exprId == a.exprId) =>
         DriverAgg.DirectIn(childOut.indexWhere(_.exprId == a.exprId))
@@ -1235,73 +826,11 @@ final case class DriverGroupAggExec(
         DriverAgg.compileDouble(e, childOut).orNull
       case _ => null
     }.toArray
-    def direct(in: Int): Boolean = inPlans(in).isInstanceOf[DriverAgg.DirectIn]
-    val slotReadsOk = theSlots.forall {
-      case DriverAgg.SumLSlot(_, _, in) => direct(in)
-      case DriverAgg.MinMaxLSlot(_, _, in, _) => direct(in)
-      case DriverAgg.MinMaxSSlot(_, in, _) => direct(in)
-      case DriverAgg.CountDistinctSlot(_, in) => direct(in)
-      case _ => true
-    }
-    val vectorArm = inPlans.forall(_ != null) && slotReadsOk
-    // opcode-compile the slot program (the dense arm's int-switch,
-    // generalized to hash-grouped state): the per-row cost drops from a
-    // Seq index + ADT match + dataType match PER SLOT to one int switch.
-    // Slots outside the opcode set (string min/max, distinct sets,
-    // multi-checked count) keep the generic dispatch loop.
-    // op: 0 count(*), 1 count(x), 2 sumL, 3 sumD, 4 avg, 5 minL, 6 maxL,
-    // 7 minD, 8 maxD; -1 marks a non-opcode slot set
-    val slotsArr = theSlots.toArray
-    val nOps = slotsArr.length
-    val opA = new Array[Int](nOps); val a1A = new Array[Int](nOps)
-    val a2A = new Array[Int](nOps); val vinA = new Array[Int](nOps)
-    var opcodeOk = vectorArm
-    if (opcodeOk) {
-      var j = 0
-      while (j < nOps && opcodeOk) {
-        slotsArr(j) match {
-          case DriverAgg.CountSlot(li, Seq()) => opA(j) = 0; a1A(j) = li
-          case DriverAgg.CountSlot(li, Seq(in)) => opA(j) = 1; a1A(j) = li; vinA(j) = in
-          case DriverAgg.SumLSlot(li, fi, in) =>
-            opA(j) = 2; a1A(j) = li; a2A(j) = fi; vinA(j) = in
-          case DriverAgg.SumDSlot(di, fi, in) =>
-            opA(j) = 3; a1A(j) = di; a2A(j) = fi; vinA(j) = in
-          case DriverAgg.AvgSlot(di, li, in) =>
-            opA(j) = 4; a1A(j) = di; a2A(j) = li; vinA(j) = in
-          case DriverAgg.MinMaxLSlot(li, fi, in, isMin) =>
-            opA(j) = if (isMin) 5 else 6; a1A(j) = li; a2A(j) = fi; vinA(j) = in
-          case DriverAgg.MinMaxDSlot(di, fi, in, isMin) =>
-            opA(j) = if (isMin) 7 else 8; a1A(j) = di; a2A(j) = fi; vinA(j) = in
-          case _ => opcodeOk = false
-        }
-        j += 1
-      }
-    }
-    // per-input static read metadata for the opcode loop
-    val inProgs: Array[DriverAgg.DProg] = inPlans.map {
-      case DriverAgg.CompiledIn(p, _) => p
-      case _ => null
-    }
-    val inNullOrds: Array[Array[Int]] = inPlans.map {
-      case DriverAgg.CompiledIn(_, ords) => ords
-      case _ => null
-    }
-    val inTc: Array[Int] = iExprs.map(e => e.dataType match {
-      case ByteType => 0
-      case ShortType => 1
-      case IntegerType | DateType => 2
-      case LongType | TimestampType | TimestampNTZType => 3
-      case FloatType => 4
-      case DoubleType => 5
-      case _ => -1
-    }).toArray
+    val vectorArm = inPlans.forall(_ != null)
     sparkContext.runJob(child.executeColumnar(),
         (batches: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]) => {
       import graft.functions.DistinctWithHll.scramble
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val ups = DriverAgg.updaters(theSlots, iExprs, ansiMode)
-      def mkAcc() = new Acc(new Array[Long](accL), new Array[Double](accD),
-        new Array[Boolean](accF), DriverAgg.newSets(accS), DriverAgg.newObjs(accO))
       val nParts = partsSpec.length
       val interns = new Array[java.util.HashMap[
         org.apache.spark.unsafe.types.UTF8String, Integer]](nParts)
@@ -1346,7 +875,7 @@ final case class DriverGroupAggExec(
           gnull = java.util.Arrays.copyOf(gnull, gnull.length * 2)
         }
         gk1(idx) = k1; gk2(idx) = k2; gnull(idx) = nb.toByte
-        accs += mkAcc()
+        accs += k.newAcc()
         idx
       }
       // dense single-string-key arm state (see the directArm loop below)
@@ -1356,34 +885,6 @@ final case class DriverGroupAggExec(
       var nullGroup = -1
       // ungrouped arm state: the partition's single Acc
       var acc0: Acc = null
-      def extract(spec: DriverAgg.ColKeyPart, ci: Int,
-          vec: org.apache.spark.sql.vectorized.ColumnVector, r: Int): Long =
-        spec match {
-          case DriverAgg.LongKeyPart(_, true, _) => vec.getInt(r).toLong
-          case DriverAgg.LongKeyPart(_, false, _) => vec.getLong(r)
-          case DriverAgg.TruncKeyPart(_, u) =>
-            val m = vec.getLong(r); m - Math.floorMod(m, u)
-          case c: DriverAgg.CalendarKeyPart => c.eval(vec.getLong(r))
-          case _: DriverAgg.StringKeyPart =>
-            val s = vec.getUTF8String(r)
-            val boxed = interns(ci).get(s)
-            if (boxed != null) boxed.longValue()
-            else {
-              val copy = s.clone()
-              val id = internVals(ci).length
-              interns(ci).put(copy, Integer.valueOf(id))
-              internVals(ci) += copy
-              id.toLong
-            }
-        }
-      // selection: the folded filter's conjuncts, classified per batch
-      // into DictSelection's dict/prim/row tiers
-      val sel = if (selPreds == null) null else new DictSelection(selPreds, childOut)
-      // dict-id fast keys: per-batch dictionary ids remapped to task
-      // intern ids once per batch (≤ entries probes), rows key by an
-      // int-array read instead of a per-row UTF8String hash probe
-      val dictIdArr = new Array[Array[Int]](nParts)
-      val dictRemap = new Array[Array[Int]](nParts)
       def intern(ci: Int,
           s: org.apache.spark.unsafe.types.UTF8String): Int = {
         val boxed = interns(ci).get(s)
@@ -1396,7 +897,24 @@ final case class DriverGroupAggExec(
           id
         }
       }
-      val addL = DriverAgg.longAdd(ansiMode)
+      def extract(spec: DriverAgg.ColKeyPart, ci: Int,
+          vec: org.apache.spark.sql.vectorized.ColumnVector, r: Int): Long =
+        spec match {
+          case DriverAgg.LongKeyPart(_, true, _) => vec.getInt(r).toLong
+          case DriverAgg.LongKeyPart(_, false, _) => vec.getLong(r)
+          case DriverAgg.TruncKeyPart(_, u) =>
+            val m = vec.getLong(r); m - Math.floorMod(m, u)
+          case c: DriverAgg.CalendarKeyPart => c.eval(vec.getLong(r))
+          case _: DriverAgg.StringKeyPart => intern(ci, vec.getUTF8String(r)).toLong
+        }
+      // selection: the folded filter's conjuncts, classified per batch
+      // into DictSelection's dict/prim/row tiers
+      val sel = if (selPreds == null) null else new DictSelection(selPreds, childOut)
+      // dict-id fast keys: per-batch dictionary ids remapped to task
+      // intern ids once per batch (≤ entries probes), rows key by an
+      // int-array read instead of a per-row UTF8String hash probe
+      val dictIdArr = new Array[Array[Int]](nParts)
+      val dictRemap = new Array[Array[Int]](nParts)
       batches.foreach { batch =>
         val v0 = if (nParts == 0) null else batch.column(partsSpec(0).ord)
         val v1 = if (nParts > 1) batch.column(partsSpec(1).ord) else null
@@ -1427,275 +945,42 @@ final case class DriverGroupAggExec(
         if (sel != null) sel.reset(batch)
         val inVecs: Array[org.apache.spark.sql.vectorized.ColumnVector] =
           if (!vectorArm) null
-          else inPlans.map {
-            case DriverAgg.DirectIn(o) => batch.column(o)
-            case _ => null // compiled inputs read through allCols
-          }
-        val allCols: Array[org.apache.spark.sql.vectorized.ColumnVector] =
-          if (vectorArm && inPlans.exists(_.isInstanceOf[DriverAgg.CompiledIn]))
-            Array.tabulate(batch.numCols())(batch.column)
-          else null
-        def inNull(in: Int, r: Int): Boolean =
-          if (inProgs(in) == null) inVecs(in).isNullAt(r)
           else {
-            val ords = inNullOrds(in)
-            var i = 0
-            var nn = false
-            while (i < ords.length && !nn) {
-              if (allCols(ords(i)).isNullAt(r)) nn = true
-              i += 1
+            val cols =
+              if (inPlans.exists(_.isInstanceOf[DriverAgg.CompiledIn]))
+                Array.tabulate(batch.numCols())(batch.column)
+              else null
+            inPlans.map {
+              case DriverAgg.DirectIn(o) => batch.column(o)
+              case DriverAgg.CompiledIn(p, ords) =>
+                new DriverAgg.CompiledDoubleVector(p, ords, cols)
             }
-            nn
           }
-        def readVL(in: Int, r: Int): Long = (inTc(in): @annotation.switch) match {
-          case 0 => inVecs(in).getByte(r).toLong
-          case 1 => inVecs(in).getShort(r).toLong
-          case 2 => inVecs(in).getInt(r).toLong
-          case _ => inVecs(in).getLong(r)
-        }
-        def readVD(in: Int, r: Int): Double =
-          if (inProgs(in) != null) inProgs(in).eval(allCols, r)
-          else (inTc(in): @annotation.switch) match {
-            case 0 => inVecs(in).getByte(r).toDouble
-            case 1 => inVecs(in).getShort(r).toDouble
-            case 2 => inVecs(in).getInt(r).toDouble
-            case 3 => inVecs(in).getLong(r).toDouble
-            case 4 => inVecs(in).getFloat(r).toDouble
-            case _ => inVecs(in).getDouble(r)
+        def update(r: Int, acc: Acc): Unit =
+          if (inVecs != null) {
+            k.updateCol(inVecs, r, acc.longs, acc.doubles, acc.flags, 0)
+            if (k.hasObj) k.updateColObj(inVecs, r, acc)
+          } else {
+            val v = valProj(batch.getRow(r))
+            k.updateRow(v, acc.longs, acc.doubles, acc.flags, 0)
+            if (k.hasObj) k.updateRowObj(v, acc)
           }
-        // int-switch slot program — no per-row ADT or dataType dispatch
-        def opUpdate(r: Int, acc: Acc): Unit = {
-          var j = 0
-          while (j < nOps) {
-            val in = vinA(j)
-            (opA(j): @annotation.switch) match {
-              case 0 => acc.longs(a1A(j)) += 1
-              case 1 => if (!inNull(in, r)) acc.longs(a1A(j)) += 1
-              case 2 => if (!inVecs(in).isNullAt(r)) {
-                val x = readVL(in, r)
-                acc.longs(a1A(j)) =
-                  if (acc.flags(a2A(j))) addL(acc.longs(a1A(j)), x) else x
-                acc.flags(a2A(j)) = true
-              }
-              case 3 => if (!inNull(in, r)) {
-                acc.doubles(a1A(j)) += readVD(in, r); acc.flags(a2A(j)) = true
-              }
-              case 4 => if (!inNull(in, r)) {
-                acc.doubles(a1A(j)) += readVD(in, r); acc.longs(a2A(j)) += 1
-              }
-              case 5 => if (!inVecs(in).isNullAt(r)) {
-                val x = readVL(in, r)
-                if (!acc.flags(a2A(j)) || x < acc.longs(a1A(j))) acc.longs(a1A(j)) = x
-                acc.flags(a2A(j)) = true
-              }
-              case 6 => if (!inVecs(in).isNullAt(r)) {
-                val x = readVL(in, r)
-                if (!acc.flags(a2A(j)) || x > acc.longs(a1A(j))) acc.longs(a1A(j)) = x
-                acc.flags(a2A(j)) = true
-              }
-              case 7 => if (!inNull(in, r)) {
-                val x = readVD(in, r)
-                if (!acc.flags(a2A(j)) ||
-                    java.lang.Double.compare(x, acc.doubles(a1A(j))) < 0)
-                  acc.doubles(a1A(j)) = x
-                acc.flags(a2A(j)) = true
-              }
-              case 8 => if (!inNull(in, r)) {
-                val x = readVD(in, r)
-                if (!acc.flags(a2A(j)) ||
-                    java.lang.Double.compare(x, acc.doubles(a1A(j))) > 0)
-                  acc.doubles(a1A(j)) = x
-                acc.flags(a2A(j)) = true
-              }
-            }
-            j += 1
-          }
-        }
-        def vecUpdate(r: Int, acc: Acc): Unit = {
-          var j = 0
-          while (j < nOps) {
-            slotsArr(j) match {
-              case CountSlot(li, checked) =>
-                var ok = true
-                checked.foreach(in => if (inNull(in, r)) ok = false)
-                if (ok) acc.longs(li) += 1
-              case SumLSlot(li, fi, in) => if (!inVecs(in).isNullAt(r)) {
-                val x = readVL(in, r)
-                acc.longs(li) = if (acc.flags(fi)) addL(acc.longs(li), x) else x
-                acc.flags(fi) = true
-              }
-              case SumDSlot(di, fi, in) => if (!inNull(in, r)) {
-                acc.doubles(di) += readVD(in, r); acc.flags(fi) = true
-              }
-              case AvgSlot(di, li, in) => if (!inNull(in, r)) {
-                acc.doubles(di) += readVD(in, r); acc.longs(li) += 1
-              }
-              case MinMaxLSlot(li, fi, in, isMin) => if (!inVecs(in).isNullAt(r)) {
-                val x = readVL(in, r)
-                if (!acc.flags(fi) ||
-                    (if (isMin) x < acc.longs(li) else x > acc.longs(li)))
-                  acc.longs(li) = x
-                acc.flags(fi) = true
-              }
-              case MinMaxDSlot(di, fi, in, isMin) => if (!inNull(in, r)) {
-                val x = readVD(in, r)
-                val cc = java.lang.Double.compare(x, acc.doubles(di))
-                if (!acc.flags(fi) || (if (isMin) cc < 0 else cc > 0))
-                  acc.doubles(di) = x
-                acc.flags(fi) = true
-              }
-              case MinMaxSSlot(oi, in, isMin) => if (!inVecs(in).isNullAt(r)) {
-                val x = inVecs(in).getUTF8String(r)
-                val cur = acc.objs(oi)
-                  .asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-                if (cur == null ||
-                    (if (isMin) x.compareTo(cur) < 0 else x.compareTo(cur) > 0))
-                  acc.objs(oi) = x.clone()
-              }
-              case CountDistinctSlot(si, in) => if (!inVecs(in).isNullAt(r)) {
-                val boxed: AnyRef = iExprs(in).dataType match {
-                  case StringType => inVecs(in).getUTF8String(r).clone()
-                  case FloatType =>
-                    java.lang.Double.valueOf(inVecs(in).getFloat(r).toDouble)
-                  case DoubleType =>
-                    java.lang.Double.valueOf(inVecs(in).getDouble(r))
-                  case BooleanType =>
-                    java.lang.Boolean.valueOf(inVecs(in).getBoolean(r))
-                  case _ => java.lang.Long.valueOf(readVL(in, r))
-                }
-                val set = acc.sets(si)
-                if (set.add(boxed) && set.size() > DriverAgg.maxDistinctCap)
-                  throw new GroupCardinalityExceeded(
-                    "driver agg: distinct set exceeded cap in one group — " +
-                      "child is not low-cardinality; falling back")
-              }
-              case other => throw new UnsupportedOperationException(
-                s"driver agg vec route: unsupported slot $other")
-            }
-            j += 1
-          }
-        }
         val n = batch.numRows()
         var r = 0
         if (nParts == 0) {
           // UNGROUPED: one Acc per partition and no key work at all —
           // the fused scan→ungrouped-aggregate (reference:
           // src/execution/operator/aggregate/
-          // physical_ungrouped_aggregate.cpp). With direct vector
-          // inputs and no selection the update runs COLUMN-MAJOR: one
-          // sequential pass per slot over its vector (null-free vectors
-          // skip the per-row check entirely); otherwise the row loop
-          // keeps the opcode int-switch with the selection in front.
+          // physical_ungrouped_aggregate.cpp). With vector inputs, flat
+          // state and no selection the update runs COLUMN-MAJOR (one
+          // sequential pass per slot); otherwise row by row with the
+          // selection in front.
           if (acc0 == null) acc0 = accs(newGroup(0L, 0))
-          val colMajor = opcodeOk && sel == null && inVecs != null &&
-            inProgs.forall(_ == null)
-          if (colMajor) {
-            val acc = acc0
-            var j = 0
-            while (j < nOps) {
-              val in = vinA(j)
-              val vec = if (opA(j) == 0) null else inVecs(in)
-              val noNulls = vec == null || !vec.hasNull
-              (opA(j): @annotation.switch) match {
-                case 0 => acc.longs(a1A(j)) += n
-                case 1 =>
-                  if (noNulls) acc.longs(a1A(j)) += n
-                  else {
-                    var c = 0L; var i = 0
-                    while (i < n) { if (!vec.isNullAt(i)) c += 1; i += 1 }
-                    acc.longs(a1A(j)) += c
-                  }
-                case 2 =>
-                  var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) {
-                      val x = readVL(in, i)
-                      acc.longs(a1A(j)) =
-                        if (acc.flags(a2A(j))) addL(acc.longs(a1A(j)), x) else x
-                      acc.flags(a2A(j)) = true
-                    }
-                    i += 1
-                  }
-                // sum/avg seed the local from the acc so the FP addition
-                // SEQUENCE matches the per-row += of the row arms exactly
-                // (a batch-local subtotal would change the rounding tree)
-                case 3 =>
-                  var s = acc.doubles(a1A(j)); var any = false; var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) { s += readVD(in, i); any = true }
-                    i += 1
-                  }
-                  acc.doubles(a1A(j)) = s
-                  if (any) acc.flags(a2A(j)) = true
-                case 4 =>
-                  var s = acc.doubles(a1A(j)); var c = 0L; var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) { s += readVD(in, i); c += 1 }
-                    i += 1
-                  }
-                  acc.doubles(a1A(j)) = s; acc.longs(a2A(j)) += c
-                case 5 =>
-                  var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) {
-                      val x = readVL(in, i)
-                      if (!acc.flags(a2A(j)) || x < acc.longs(a1A(j)))
-                        acc.longs(a1A(j)) = x
-                      acc.flags(a2A(j)) = true
-                    }
-                    i += 1
-                  }
-                case 6 =>
-                  var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) {
-                      val x = readVL(in, i)
-                      if (!acc.flags(a2A(j)) || x > acc.longs(a1A(j)))
-                        acc.longs(a1A(j)) = x
-                      acc.flags(a2A(j)) = true
-                    }
-                    i += 1
-                  }
-                case 7 =>
-                  var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) {
-                      val x = readVD(in, i)
-                      if (!acc.flags(a2A(j)) ||
-                          java.lang.Double.compare(x, acc.doubles(a1A(j))) < 0)
-                        acc.doubles(a1A(j)) = x
-                      acc.flags(a2A(j)) = true
-                    }
-                    i += 1
-                  }
-                case 8 =>
-                  var i = 0
-                  while (i < n) {
-                    if (noNulls || !vec.isNullAt(i)) {
-                      val x = readVD(in, i)
-                      if (!acc.flags(a2A(j)) ||
-                          java.lang.Double.compare(x, acc.doubles(a1A(j))) > 0)
-                        acc.doubles(a1A(j)) = x
-                      acc.flags(a2A(j)) = true
-                    }
-                    i += 1
-                  }
-              }
-              j += 1
-            }
-          } else {
-            while (r < n) {
-              if (sel == null || sel.passes(r)) {
-                if (inVecs != null) {
-                  if (opcodeOk) opUpdate(r, acc0) else vecUpdate(r, acc0)
-                } else {
-                  val v = valProj(batch.getRow(r))
-                  var j = 0
-                  while (j < ups.length) { ups(j)(v, acc0); j += 1 }
-                }
-              }
-              r += 1
-            }
+          if (sel == null && inVecs != null && !k.hasObj)
+            k.updateColumnMajor(inVecs, n, acc0.longs, acc0.doubles, acc0.flags, 0)
+          else while (r < n) {
+            if (sel == null || sel.passes(r)) update(r, acc0)
+            r += 1
           }
         } else if (directArm) {
           // dense single-string-key arm: the intern id IS dense (0..N in
@@ -1705,73 +990,57 @@ final case class DriverGroupAggExec(
           // (physical_perfect_hash_aggregate.cpp) applied to the interned
           // string domain.
           while (r < n) {
-            if (sel != null && !sel.passes(r)) { r += 1 }
-            else {
-            var idx = -1
-            if (v0.isNullAt(r)) {
-              if (nullGroup == -1) nullGroup = newGroup(0L, 1)
-              idx = nullGroup
-            } else {
-              val k1i = if (dictIdArr(0) != null) dictRemap(0)(dictIdArr(0)(r))
-                else extract(partsSpec(0), 0, v0, r).toInt
-              if (k1i >= directIdx.length) {
-                val grown = new Array[Int](math.max(directIdx.length * 2, k1i + 1))
-                java.util.Arrays.fill(grown, directIdx.length, grown.length, -1)
-                System.arraycopy(directIdx, 0, grown, 0, directIdx.length)
-                directIdx = grown
+            if (sel == null || sel.passes(r)) {
+              var idx = -1
+              if (v0.isNullAt(r)) {
+                if (nullGroup == -1) nullGroup = newGroup(0L, 1)
+                idx = nullGroup
+              } else {
+                val k1i = if (dictIdArr(0) != null) dictRemap(0)(dictIdArr(0)(r))
+                  else extract(partsSpec(0), 0, v0, r).toInt
+                if (k1i >= directIdx.length) {
+                  val grown = new Array[Int](math.max(directIdx.length * 2, k1i + 1))
+                  java.util.Arrays.fill(grown, directIdx.length, grown.length, -1)
+                  System.arraycopy(directIdx, 0, grown, 0, directIdx.length)
+                  directIdx = grown
+                }
+                idx = directIdx(k1i)
+                if (idx == -1) { idx = newGroup(k1i.toLong, 0); directIdx(k1i) = idx }
               }
-              idx = directIdx(k1i)
-              if (idx == -1) { idx = newGroup(k1i.toLong, 0); directIdx(k1i) = idx }
-            }
-            val acc = accs(idx)
-            if (inVecs != null) {
-              if (opcodeOk) opUpdate(r, acc) else vecUpdate(r, acc)
-            } else {
-              val v = valProj(batch.getRow(r))
-              var j = 0
-              while (j < ups.length) { ups(j)(v, acc); j += 1 }
+              update(r, accs(idx))
             }
             r += 1
-            }
           }
         } else {
-        while (r < n) {
-          if (sel != null && !sel.passes(r)) { r += 1 }
-          else {
-          var nb = 0
-          var k1 = 0L
-          var k2 = 0L
-          if (v0.isNullAt(r)) nb |= 1
-          else k1 = if (dictIdArr(0) != null) dictRemap(0)(dictIdArr(0)(r)).toLong
-            else extract(partsSpec(0), 0, v0, r)
-          if (v1 != null) {
-            if (v1.isNullAt(r)) nb |= 2
-            else k2 = if (dictIdArr(1) != null) dictRemap(1)(dictIdArr(1)(r)).toLong
-              else extract(partsSpec(1), 1, v1, r)
+          while (r < n) {
+            if (sel == null || sel.passes(r)) {
+              var nb = 0
+              var k1 = 0L
+              var k2 = 0L
+              if (v0.isNullAt(r)) nb |= 1
+              else k1 = if (dictIdArr(0) != null) dictRemap(0)(dictIdArr(0)(r)).toLong
+                else extract(partsSpec(0), 0, v0, r)
+              if (v1 != null) {
+                if (v1.isNullAt(r)) nb |= 2
+                else k2 = if (dictIdArr(1) != null) dictRemap(1)(dictIdArr(1)(r)).toLong
+                  else extract(partsSpec(1), 1, v1, r)
+              }
+              var p = (hashOf(k1, k2, nb) & mask).toInt
+              var idx = table(p)
+              while (idx != -1 &&
+                  !(gk1(idx) == k1 && gk2(idx) == k2 && gnull(idx) == nb.toByte)) {
+                p = (p + 1) & mask
+                idx = table(p)
+              }
+              if (idx == -1) {
+                idx = newGroup(k1, nb, k2)
+                table(p) = idx
+                if (accs.length * 2 > mask) growTable()
+              }
+              update(r, accs(idx))
+            }
+            r += 1
           }
-          var p = (hashOf(k1, k2, nb) & mask).toInt
-          var idx = table(p)
-          while (idx != -1 &&
-              !(gk1(idx) == k1 && gk2(idx) == k2 && gnull(idx) == nb.toByte)) {
-            p = (p + 1) & mask
-            idx = table(p)
-          }
-          if (idx == -1) {
-            idx = newGroup(k1, nb, k2)
-            table(p) = idx
-            if (accs.length * 2 > mask) growTable()
-          }
-          val acc = accs(idx)
-          if (inVecs != null) {
-            if (opcodeOk) opUpdate(r, acc) else vecUpdate(r, acc)
-          } else {
-            val v = valProj(batch.getRow(r))
-            var j = 0
-            while (j < ups.length) { ups(j)(v, acc); j += 1 }
-          }
-          r += 1
-          }
-        }
         }
       }
       // same payload as the row path: exact-layout key rows + state
@@ -1805,11 +1074,9 @@ final case class DriverGroupAggExec(
   private def finalRows(): Array[InternalRow] = {
     val gExprs = groupExprs
     val iExprs = aggInputs
-    val theSlots = slots
     val childOut = child.output
     val cap = maxGroups
-    val (accL, accD, accF, accS, accO) = (nL, nD, nF, nS, nO)
-    val ansiMode = ansi
+    val k = kernel
 
     val parts: Array[Array[(Array[Byte], Acc)]] =
       if (columnarChild) denseCalendarSpec match {
@@ -1819,24 +1086,21 @@ final case class DriverGroupAggExec(
       else sparkContext.runJob(child.execute(), (rows: Iterator[InternalRow]) => {
         val keyProj = UnsafeProjection.create(gExprs, childOut)
         val valProj = UnsafeProjection.create(iExprs, childOut)
-        val ups = DriverAgg.updaters(theSlots, iExprs, ansiMode)
-        def mkAcc() = new Acc(new Array[Long](accL), new Array[Double](accD),
-          new Array[Boolean](accF), DriverAgg.newSets(accS), DriverAgg.newObjs(accO))
         val m = new java.util.HashMap[UnsafeRow, Acc]()
         while (rows.hasNext) {
           val row = rows.next()
-          val k = keyProj(row)
-          var acc = m.get(k)
+          val key = keyProj(row)
+          var acc = m.get(key)
           if (acc == null) {
             if (m.size() >= cap) throw new GroupCardinalityExceeded(
               s"driver agg: group count exceeded maxGroups=$cap in one partition — " +
                 "key is not low-cardinality; falling back to the shuffled aggregate")
-            acc = mkAcc()
-            m.put(k.copy(), acc)
+            acc = k.newAcc()
+            m.put(key.copy(), acc)
           }
           val v = valProj(row)
-          var j = 0
-          while (j < ups.length) { ups(j)(v, acc); j += 1 }
+          k.updateRow(v, acc.longs, acc.doubles, acc.flags, 0)
+          if (k.hasObj) k.updateRowObj(v, acc)
         }
         val out = new Array[(Array[Byte], Acc)](m.size())
         var i = 0
@@ -1850,28 +1114,28 @@ final case class DriverGroupAggExec(
     val nKeys = groupExprs.length
     val merged = new java.util.LinkedHashMap[UnsafeRow, Acc]()
     parts.foreach(_.foreach { case (bytes, acc) =>
-      val k = new UnsafeRow(nKeys)
-      k.pointTo(bytes, bytes.length)
-      val cur = merged.get(k)
+      val key = new UnsafeRow(nKeys)
+      key.pointTo(bytes, bytes.length)
+      val cur = merged.get(key)
       if (cur == null) {
         if (merged.size() >= maxGroups) throw new GroupCardinalityExceeded(
           s"driver agg: merged group count exceeded maxGroups=$maxGroups")
-        merged.put(k, acc)
-      } else mergeInto(cur, acc)
+        merged.put(key, acc)
+      } else k.mergeAcc(cur, acc)
     })
     // a GLOBAL aggregate over empty input still yields one (empty) group
     if (nKeys == 0 && merged.isEmpty)
       merged.put(UnsafeProjection.create(Seq.empty[Expression], Seq.empty)(
-        InternalRow.empty).copy(), newAcc())
+        InternalRow.empty).copy(), k.newAcc())
 
     val proj = UnsafeProjection.create(finalExprs)
-    val evalRow = new GenericInternalRow(nKeys + slots.length)
     val keyTypes = groupExprs.map(_.dataType)
+    val evalRow = new SpecificInternalRow(keyTypes ++ aggTypes)
     val rows = new ArrayBuffer[InternalRow](merged.size())
-    merged.forEach { (k, acc) =>
+    merged.forEach { (key, acc) =>
       var i = 0
-      while (i < nKeys) { evalRow.update(i, k.get(i, keyTypes(i))); i += 1 }
-      slots.indices.foreach(j => evalRow.update(nKeys + j, finalVal(j, acc)))
+      while (i < nKeys) { evalRow.update(i, key.get(i, keyTypes(i))); i += 1 }
+      k.writeFinals(acc, evalRow, nKeys)
       rows += proj(evalRow).copy()
     }
     val sorted =

@@ -16,7 +16,6 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.{ByteBuffer, ByteOrder}
 import scala.collection.mutable.ArrayBuffer
 
 /** Multi-key packed-payload shuffle aggregation — [[RadixAgg]] generalized
@@ -95,8 +94,8 @@ object PackedAgg {
     !sys.env.get("GRAFT_NO_PACKED_SELECTION").contains("1")
 
   /** Test hook: when > 0, overrides the group-count flush threshold
-    * ([[RadixAgg.FlushCap]]) so specs can exercise the multi-blob merge
-    * path without 2M-group inputs.
+    * ([[RadixAgg.FlushCap]]) of the packed AND radix partials so specs
+    * can exercise the multi-blob merge path without 2M-group inputs.
     */
   @volatile var flushCapOverride: Int = 0
 
@@ -120,50 +119,14 @@ object PackedAgg {
   @volatile var passThroughCheckRows: Int = 1 << 16
   @volatile var passThroughGroupRatio: Double = 0.75
 
-  /** Local radix split of the partial's map — the reference's
-    * radix-partitioned hash table applied to per-task locality
-    * (radix_partitioned_hashtable.cpp): past [[localRadixMinGroups]]
-    * resident groups the flat map's probe path is DRAM-random (~14 MB
-    * working set on the h2o g03 class, every probe 6-8 cold cache
-    * lines), so the map migrates into `1 << localRadixBits` hash-sliced
-    * sub-maps and each batch is scattered by hash slice before probing —
-    * every probe then hits an L2/L3-resident slice. Engages only AFTER
-    * the pass-through window is decided (the decision sees the exact
-    * same first-N rows as before) and the migration bit-copies states
-    * (one state per group, same per-group row order, same flush
-    * boundaries), so results are BIT-identical to the unsplit path.
-    *
-    * MEASURED AND SHIPPED OPT-IN (GRAFT_PACKED_LOCAL_RADIX=1): three
-    * interleaved x100 A/Bs on h2o g03 read 1.08x, 1.38x (degraded
-    * phase) and a wash — the scatter pass + randomized value-column
-    * reads cancel the probe-locality gain at this machine's L3, so the
-    * split stays off by default; the machinery and its bit-identity
-    * spec (PackedLocalRadixSpec) are kept for cache-poorer targets.
-    */
-  @volatile var localRadixEnabled: Boolean =
-    sys.env.get("GRAFT_PACKED_LOCAL_RADIX").contains("1")
-
-  /** Resident-group threshold to engage the split (below it the flat
-    * map is cache-resident anyway and the scatter is pure overhead).
-    */
-  @volatile var localRadixMinGroups: Int = 1 << 15
-
-  /** log2 of the sub-map count. */
-  @volatile var localRadixBits: Int =
-    sys.env.getOrElse("GRAFT_LR_BITS", "4").toInt
-
-  /** Test/diagnostic counter: migrations performed since JVM start. */
-  val localRadixEngagements = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Pass-through blob builder emit threshold (record + string bytes). */
   private[plans] val BuilderEmitBytes: Int = 256 << 10
 
   /** Per-bucket growable blob builder for the pass-through path: record
     * region, string-byte region, and state region append independently;
     * `emitBlobs` assembles the wire format ([n][records][strBytes] +
-    * state) and resets. Arrays are reused across emits, so the state
-    * region is explicitly zeroed per record before the singleton writers
-    * run (they only write non-zero fields).
+    * state) and resets. Arrays are reused across emits; the singleton
+    * block write overwrites every state byte of its record.
     */
   private[plans] final class BucketBuilder(recBytes: Int, blockBytes: Int) {
     var recs = new Array[Byte](recBytes * 64)
@@ -184,15 +147,11 @@ object PackedAgg {
       if (cap != strs.length) strs = java.util.Arrays.copyOf(strs, cap)
     }
 
-    /** Zeroed state-block region for record `nRecs` (call before the
-      * singleton writers; returns the Platform offset).
-      */
+    /** State-block region for record `nRecs` (Platform offset). */
     def stateBlockOffset(): Long = {
       if ((nRecs + 1) * blockBytes > state.length)
         state = java.util.Arrays.copyOf(state, math.max(state.length * 2, 64))
-      val from = nRecs * blockBytes
-      java.util.Arrays.fill(state, from, from + blockBytes, 0.toByte)
-      Platform.BYTE_ARRAY_OFFSET + from
+      Platform.BYTE_ARRAY_OFFSET + nRecs * blockBytes
     }
 
     /** (keys blob, state blob) in the wire format, then reset. */
@@ -241,18 +200,6 @@ object PackedAgg {
     override def getBinary(i: Int): Array[Byte] = base.getBinary(i)
     override def getChild(ordinal: Int): ColumnVector = base.getChild(ordinal)
     override def close(): Unit = ()
-  }
-
-  /** Singleton state-block writers for the pass-through path: write the
-    * state a fresh accumulator would hold after ONE update into a
-    * pre-zeroed block (only non-zero fields are written). Row and
-    * columnar variants mirror rowUpdaters/colUpdaters.
-    */
-  private[plans] trait RowBlockWrite {
-    def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit
-  }
-  private[plans] trait ColBlockWrite {
-    def apply(r: Int, arr: Array[Byte], off: Long): Unit
   }
 
   def supportedKey(dt: DataType): Boolean =
@@ -543,461 +490,6 @@ object PackedAgg {
       poolLen = 0
     }
   }
-
-  /** Primitive-signature updater SAMs (scala.FunctionN past Function2
-    * boxes every int — see RadixAgg's RowUp/ColUp rationale).
-    */
-  private[plans] trait MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit }
-  private[plans] trait MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit }
-  private[plans] trait MBlockMerge {
-    def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit
-  }
-
-  import DriverAgg._
-
-  private[plans] def rowUpdaters(slots: Seq[Slot], iExprs: Seq[Expression],
-      nL: Int, nD: Int, nF: Int, ansi: Boolean): Array[MRowUp] = {
-    val addL = DriverAgg.longAdd(ansi)
-    def readL(i: Int): InternalRow => Long = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toLong
-      case ShortType => r => r.getShort(i).toLong
-      case IntegerType | DateType => r => r.getInt(i).toLong
-      case _ => r => r.getLong(i)
-    }
-    def readD(i: Int): InternalRow => Double = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toDouble
-      case ShortType => r => r.getShort(i).toDouble
-      case IntegerType | DateType => r => r.getInt(i).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => r.getLong(i).toDouble
-      case FloatType => r => r.getFloat(i).toDouble
-      case _ => r => r.getDouble(i)
-    }
-    slots.map[MRowUp] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit = {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (v.isNullAt(ia(j))) ok = false; j += 1 }
-          if (ok) m.longs(s * nL + li) += 1
-        } }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            m.longs(o) = if (m.flags(fo)) addL(m.longs(o), rd(v)) else rd(v)
-            m.flags(fo) = true
-          } }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            m.doubles(s * nD + di) += rd(v); m.flags(s * nF + fi) = true
-          } }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            m.doubles(s * nD + di) += rd(v); m.longs(s * nL + li) += 1
-          } }
-      case MinMaxLSlot(li, fi, in, isMin) =>
-        val rd = readL(in)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = rd(v)
-            if (!m.flags(fo) || (if (isMin) x < m.longs(o) else x > m.longs(o)))
-              m.longs(o) = x
-            m.flags(fo) = true
-          } }
-      case MinMaxDSlot(di, fi, in, isMin) =>
-        val rd = readD(in)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val o = s * nD + di; val fo = s * nF + fi
-            val x = rd(v)
-            val c = java.lang.Double.compare(x, m.doubles(o))
-            if (!m.flags(fo) || (if (isMin) c < 0 else c > 0)) m.doubles(o) = x
-            m.flags(fo) = true
-          } }
-      case VarSlot(di, li, in, _, _) =>
-        val rd = readD(in)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val x = rd(v)
-            val lo = s * nL + li; val o = s * nD + di
-            val n = m.longs(lo) + 1
-            m.longs(lo) = n
-            val delta = x - m.doubles(o)
-            val deltaN = delta / n
-            m.doubles(o) += deltaN
-            m.doubles(o + 1) += delta * (delta - deltaN)
-          } }
-      case CovarSlot(di, li, inX, inY, _, _) =>
-        val rx = readD(inX); val ry = readD(inY)
-        new MRowUp { def apply(m: MultiKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(inX) && !v.isNullAt(inY)) {
-            val x = rx(v); val y = ry(v)
-            val lo = s * nL + li; val o = s * nD + di
-            val n = m.longs(lo) + 1
-            m.longs(lo) = n
-            val dx = x - m.doubles(o)
-            val dy = y - m.doubles(o + 1)
-            m.doubles(o) += dx / n
-            m.doubles(o + 1) += dy / n
-            m.doubles(o + 2) += dx * (y - m.doubles(o + 1))
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"packed agg: unsupported slot $other")
-    }.toArray
-  }
-
-  private[plans] def colUpdaters(slots: Seq[Slot], dts: Array[DataType],
-      vecs: Array[ColumnVector], nL: Int, nD: Int, nF: Int, ansi: Boolean)
-      : Array[MColUp] = {
-    val addL = DriverAgg.longAdd(ansi)
-    def readL(i: Int): Int => Long = dts(i) match {
-      case ByteType => r => vecs(i).getByte(r).toLong
-      case ShortType => r => vecs(i).getShort(r).toLong
-      case IntegerType | DateType => r => vecs(i).getInt(r).toLong
-      case _ => r => vecs(i).getLong(r)
-    }
-    def readD(i: Int): Int => Double = dts(i) match {
-      case ByteType => r => vecs(i).getByte(r).toDouble
-      case ShortType => r => vecs(i).getShort(r).toDouble
-      case IntegerType | DateType => r => vecs(i).getInt(r).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => vecs(i).getLong(r).toDouble
-      case FloatType => r => vecs(i).getFloat(r).toDouble
-      case _ => r => vecs(i).getDouble(r)
-    }
-    slots.map[MColUp] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit = {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (vecs(ia(j)).isNullAt(r)) ok = false; j += 1 }
-          if (ok) m.longs(s * nL + li) += 1
-        } }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            m.longs(o) = if (m.flags(fo)) addL(m.longs(o), rd(r)) else rd(r)
-            m.flags(fo) = true
-          } }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            m.doubles(s * nD + di) += rd(r); m.flags(s * nF + fi) = true
-          } }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            m.doubles(s * nD + di) += rd(r); m.longs(s * nL + li) += 1
-          } }
-      case MinMaxLSlot(li, fi, in, isMin) =>
-        val rd = readL(in)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = rd(r)
-            if (!m.flags(fo) || (if (isMin) x < m.longs(o) else x > m.longs(o)))
-              m.longs(o) = x
-            m.flags(fo) = true
-          } }
-      case MinMaxDSlot(di, fi, in, isMin) =>
-        val rd = readD(in)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val o = s * nD + di; val fo = s * nF + fi
-            val x = rd(r)
-            val c = java.lang.Double.compare(x, m.doubles(o))
-            if (!m.flags(fo) || (if (isMin) c < 0 else c > 0)) m.doubles(o) = x
-            m.flags(fo) = true
-          } }
-      case VarSlot(di, li, in, _, _) =>
-        val rd = readD(in)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val x = rd(r)
-            val lo = s * nL + li; val o = s * nD + di
-            val n = m.longs(lo) + 1
-            m.longs(lo) = n
-            val delta = x - m.doubles(o)
-            val deltaN = delta / n
-            m.doubles(o) += deltaN
-            m.doubles(o + 1) += delta * (delta - deltaN)
-          } }
-      case CovarSlot(di, li, inX, inY, _, _) =>
-        val rx = readD(inX); val ry = readD(inY)
-        new MColUp { def apply(m: MultiKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(inX).isNullAt(r) && !vecs(inY).isNullAt(r)) {
-            val x = rx(r); val y = ry(r)
-            val lo = s * nL + li; val o = s * nD + di
-            val n = m.longs(lo) + 1
-            m.longs(lo) = n
-            val dx = x - m.doubles(o)
-            val dy = y - m.doubles(o + 1)
-            m.doubles(o) += dx / n
-            m.doubles(o + 1) += dy / n
-            m.doubles(o + 2) += dx * (y - m.doubles(o + 1))
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"packed agg: unsupported slot $other")
-    }.toArray
-  }
-
-  private[plans] def rowBlockWriters(slots: Seq[Slot], iExprs: Seq[Expression],
-      nL: Int, nD: Int, nF: Int): Array[RowBlockWrite] = {
-    val dBase = 8 * nL
-    val fBase = dBase + 8 * nD
-    def readL(i: Int): InternalRow => Long = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toLong
-      case ShortType => r => r.getShort(i).toLong
-      case IntegerType | DateType => r => r.getInt(i).toLong
-      case _ => r => r.getLong(i)
-    }
-    def readD(i: Int): InternalRow => Double = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toDouble
-      case ShortType => r => r.getShort(i).toDouble
-      case IntegerType | DateType => r => r.getInt(i).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => r.getLong(i).toDouble
-      case FloatType => r => r.getFloat(i).toDouble
-      case _ => r => r.getDouble(i)
-    }
-    slots.map[RowBlockWrite] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit = {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (v.isNullAt(ia(j))) ok = false; j += 1 }
-          if (ok) Platform.putLong(arr, off + 8 * li, 1L)
-        } }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(in)) {
-            Platform.putLong(arr, off + 8 * li, rd(v))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(in)) {
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(v))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(in)) {
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(v))
-            Platform.putLong(arr, off + 8 * li, 1L)
-          } }
-      case MinMaxLSlot(li, fi, in, _) =>
-        val rd = readL(in)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(in)) {
-            Platform.putLong(arr, off + 8 * li, rd(v))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case MinMaxDSlot(di, fi, in, _) =>
-        val rd = readD(in)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(in)) {
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(v))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case VarSlot(di, li, in, _, _) =>
-        val rd = readD(in)
-        // singleton moment state: n=1, avg=x, m2=0 (delta·(delta−deltaN)
-        // is exactly 0 for the first row — matches the update recurrence)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(in)) {
-            Platform.putLong(arr, off + 8 * li, 1L)
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(v))
-          } }
-      case CovarSlot(di, li, inX, inY, _, _) =>
-        val rx = readD(inX); val ry = readD(inY)
-        new RowBlockWrite { def apply(v: InternalRow, arr: Array[Byte], off: Long): Unit =
-          if (!v.isNullAt(inX) && !v.isNullAt(inY)) {
-            Platform.putLong(arr, off + 8 * li, 1L)
-            Platform.putDouble(arr, off + dBase + 8 * di, rx(v))
-            Platform.putDouble(arr, off + dBase + 8 * (di + 1), ry(v))
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"packed agg: unsupported slot $other")
-    }.toArray
-  }
-
-  private[plans] def colBlockWriters(slots: Seq[Slot], dts: Array[DataType],
-      vecs: Array[ColumnVector], nL: Int, nD: Int, nF: Int): Array[ColBlockWrite] = {
-    val dBase = 8 * nL
-    val fBase = dBase + 8 * nD
-    def readL(i: Int): Int => Long = dts(i) match {
-      case ByteType => r => vecs(i).getByte(r).toLong
-      case ShortType => r => vecs(i).getShort(r).toLong
-      case IntegerType | DateType => r => vecs(i).getInt(r).toLong
-      case _ => r => vecs(i).getLong(r)
-    }
-    def readD(i: Int): Int => Double = dts(i) match {
-      case ByteType => r => vecs(i).getByte(r).toDouble
-      case ShortType => r => vecs(i).getShort(r).toDouble
-      case IntegerType | DateType => r => vecs(i).getInt(r).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => vecs(i).getLong(r).toDouble
-      case FloatType => r => vecs(i).getFloat(r).toDouble
-      case _ => r => vecs(i).getDouble(r)
-    }
-    slots.map[ColBlockWrite] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit = {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (vecs(ia(j)).isNullAt(r)) ok = false; j += 1 }
-          if (ok) Platform.putLong(arr, off + 8 * li, 1L)
-        } }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            Platform.putLong(arr, off + 8 * li, rd(r))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(r))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(r))
-            Platform.putLong(arr, off + 8 * li, 1L)
-          } }
-      case MinMaxLSlot(li, fi, in, _) =>
-        val rd = readL(in)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            Platform.putLong(arr, off + 8 * li, rd(r))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case MinMaxDSlot(di, fi, in, _) =>
-        val rd = readD(in)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(r))
-            Platform.putByte(arr, off + fBase + fi, 1.toByte)
-          } }
-      case VarSlot(di, li, in, _, _) =>
-        val rd = readD(in)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            Platform.putLong(arr, off + 8 * li, 1L)
-            Platform.putDouble(arr, off + dBase + 8 * di, rd(r))
-          } }
-      case CovarSlot(di, li, inX, inY, _, _) =>
-        val rx = readD(inX); val ry = readD(inY)
-        new ColBlockWrite { def apply(r: Int, arr: Array[Byte], off: Long): Unit =
-          if (!vecs(inX).isNullAt(r) && !vecs(inY).isNullAt(r)) {
-            Platform.putLong(arr, off + 8 * li, 1L)
-            Platform.putDouble(arr, off + dBase + 8 * di, rx(r))
-            Platform.putDouble(arr, off + dBase + 8 * (di + 1), ry(r))
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"packed agg: unsupported slot $other")
-    }.toArray
-  }
-
-  /** Compiled per-slot blob mergers (state block layout identical to
-    * RadixAgg: longs[nL] ++ doubles[nD] ++ flags[nF], LE at `off`).
-    */
-  private[plans] def blockMergers(slots: Seq[Slot], nL: Int, nD: Int, nF: Int,
-      ansi: Boolean): Array[MBlockMerge] = {
-    val addL = DriverAgg.longAdd(ansi)
-    val dBase = 8 * nL
-    val fBase = dBase + 8 * nD
-    slots.map[MBlockMerge] {
-      case CountSlot(li, _) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          m.longs(s * nL + li) += bb.getLong(off + 8 * li) }
-      case SumLSlot(li, fi, _) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = bb.getLong(off + 8 * li)
-            m.longs(o) = if (m.flags(fo)) addL(m.longs(o), x) else x
-            m.flags(fo) = true
-          } }
-      case SumDSlot(di, fi, _) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            m.doubles(s * nD + di) += bb.getDouble(off + dBase + 8 * di)
-            m.flags(s * nF + fi) = true
-          } }
-      case AvgSlot(di, li, _) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit = {
-          m.doubles(s * nD + di) += bb.getDouble(off + dBase + 8 * di)
-          m.longs(s * nL + li) += bb.getLong(off + 8 * li)
-        } }
-      case MinMaxLSlot(li, fi, _, isMin) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = bb.getLong(off + 8 * li)
-            if (!m.flags(fo) || (if (isMin) x < m.longs(o) else x > m.longs(o)))
-              m.longs(o) = x
-            m.flags(fo) = true
-          } }
-      case MinMaxDSlot(di, fi, _, isMin) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            val o = s * nD + di; val fo = s * nF + fi
-            val x = bb.getDouble(off + dBase + 8 * di)
-            val c = java.lang.Double.compare(x, m.doubles(o))
-            if (!m.flags(fo) || (if (isMin) c < 0 else c > 0)) m.doubles(o) = x
-            m.flags(fo) = true
-          } }
-      case VarSlot(di, li, _, _, _) =>
-        // Spark CentralMomentAgg.mergeExpressions operation-for-operation
-        // (n2==0 blobs merge as no-ops through the same arithmetic)
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit = {
-          val lo = s * nL + li; val o = s * nD + di
-          val n1 = m.longs(lo)
-          val n2 = bb.getLong(off + 8 * li)
-          val n = n1 + n2
-          val delta = bb.getDouble(off + dBase + 8 * di) - m.doubles(o)
-          val deltaN = if (n == 0) 0.0 else delta / n
-          m.doubles(o) += deltaN * n2
-          m.doubles(o + 1) += bb.getDouble(off + dBase + 8 * (di + 1)) +
-            delta * deltaN * n1 * n2
-          m.longs(lo) = n
-        } }
-      case CovarSlot(di, li, _, _, _, _) =>
-        new MBlockMerge { def apply(m: MultiKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit = {
-          val lo = s * nL + li; val o = s * nD + di
-          val n1 = m.longs(lo)
-          val n2 = bb.getLong(off + 8 * li)
-          val n = n1 + n2
-          val dx = bb.getDouble(off + dBase + 8 * di) - m.doubles(o)
-          val dxN = if (n == 0) 0.0 else dx / n
-          val dy = bb.getDouble(off + dBase + 8 * (di + 1)) - m.doubles(o + 1)
-          val dyN = if (n == 0) 0.0 else dy / n
-          m.doubles(o) += dxN * n2
-          m.doubles(o + 1) += dyN * n2
-          m.doubles(o + 2) += bb.getDouble(off + dBase + 8 * (di + 2)) +
-            dx * dyN * n1 * n2
-          m.longs(lo) = n
-        } }
-      case other => throw new UnsupportedOperationException(
-        s"packed agg: unsupported slot $other")
-    }.toArray
-  }
 }
 
 object PackedPartialAggExec {
@@ -1108,7 +600,7 @@ final case class PackedPartialAggExec(
   }
 
   /** Emit the map as packed bucket rows (one row per non-empty bucket). */
-  private def emitRows(m: MultiKeyMap): Iterator[InternalRow] = {
+  private def emitRows(k: SlotKernel, m: MultiKeyMap): Iterator[InternalRow] = {
     val nBuckets = buckets
     val counts = new Array[Int](nBuckets)
     val strBytes = new Array[Long](nBuckets)
@@ -1153,18 +645,8 @@ final case class PackedPartialAggExec(
         j += 1
       }
       recPos(bk) += recBytes
-      // state block
-      val st = stateArrs(bk)
-      var q = Platform.BYTE_ARRAY_OFFSET + statePos(bk)
-      j = 0
-      while (j < nL) { Platform.putLong(st, q, m.longs(s * nL + j)); q += 8; j += 1 }
-      j = 0
-      while (j < nD) { Platform.putDouble(st, q, m.doubles(s * nD + j)); q += 8; j += 1 }
-      j = 0
-      while (j < nF) {
-        Platform.putByte(st, q, if (m.flags(s * nF + j)) 1.toByte else 0.toByte)
-        q += 1; j += 1
-      }
+      k.writeBlock(m.longs, m.doubles, m.flags, s, stateArrs(bk),
+        Platform.BYTE_ARRAY_OFFSET + statePos(bk))
       statePos(bk) += blockBytes
     }
     val proj = UnsafeProjection.create(Array[DataType](IntegerType, BinaryType, BinaryType))
@@ -1179,10 +661,11 @@ final case class PackedPartialAggExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOut = longMetric("numOutputRows")
-    val (kTypes, iExprs, theSlots) = (keyTypes, aggInputs, slots)
+    val (kTypes, iExprs) = (keyTypes, aggInputs)
     val (aL, aD, aF) = (nL, nD, nF)
     val childOut = child.output
-    val ansiMode = ansi
+    def kernel(inTypes: Seq[DataType]) =
+      new SlotKernel(slots, inTypes, Nil, nL, nD, nF, ansi)
     val theKinds = kinds
     val theSub = subIdx
     val (kLK, kSK, kN) = (nLK, nSK, nKeys)
@@ -1199,7 +682,9 @@ final case class PackedPartialAggExec(
         childOut.indexWhere(_.exprId == a.exprId) }.toArray
       val guardOrds: Array[Array[Int]] = resolvedIn.map { case (_, gs) =>
         gs.map(g => childOut.indexWhere(_.exprId == g.exprId)).toArray }.toArray
-      val dts = resolvedIn.map(_._1.dataType).toArray
+      // batch reads use the SOURCE column's type (a cast-to-double input
+      // reads its int/long column and widens in the kernel's double read)
+      val k = kernel(resolvedIn.map(_._1.dataType))
       val kLongRead: Array[Boolean] = kTypes.map {
         case LongType | TimestampType | TimestampNTZType => true
         case _ => false
@@ -1219,7 +704,6 @@ final case class PackedPartialAggExec(
         var pairDead = false // intern budget blown — low cross-batch reuse
         val vecs = new Array[ColumnVector](ords.length)
         val kvecs = new Array[ColumnVector](kOrds.length)
-        val ups = colUpdaters(theSlots, dts, vecs, aL, aD, aF, ansiMode)
         // folded filter: classified per batch into dict/prim/row tiers
         val sel = if (selPreds == null) null else new DictSelection(selPreds, childOut)
         // per-batch dict-id key fast path: when the cache serves a string
@@ -1240,60 +724,7 @@ final case class PackedPartialAggExec(
         var rowsSeen = 0L
         var passThrough = false
         var builders: Array[BucketBuilder] = null
-        // local radix split (see PackedAgg.localRadixEnabled): engaged at
-        // a batch boundary once the map is provably huge AND the pass-
-        // through window is closed; incompatible with a live pair memo
-        // (the memo indexes the single map m)
-        val lrEnabled = PackedAgg.localRadixEnabled
-        val lrBits = PackedAgg.localRadixBits
-        val lrN = 1 << lrBits
-        val lrMin = PackedAgg.localRadixMinGroups
-        var subMaps: Array[MultiKeyMap] = null
-        def subOf(h: Long): Int =
-          (DistinctWithHll.scramble(h) >>> (64 - lrBits)).toInt & (lrN - 1)
-        // per-batch scatter buffers, lazily sized to the widest batch
-        var lrHash: Array[Long] = null
-        var lrMask: Array[Long] = null
-        var lrLongs: Array[Array[Long]] = null
-        var lrStrs: Array[Array[UTF8String]] = null
-        var lrBkt: Array[Int] = null
-        var lrIdx: Array[Int] = null
-        var lrCnt: Array[Int] = null
-        def migrateToSubMaps(): Unit = {
-          PackedAgg.localRadixEngagements.incrementAndGet()
-          if (sys.env.contains("GRAFT_LR_DEBUG"))
-            System.err.println(s"[lr] migrate at groups=${m.size} rowsSeen=$rowsSeen")
-          subMaps = Array.fill(lrN)(new MultiKeyMap(kLK, kSK, aL, aD, aF))
-          val pool = m.poolArray
-          m.foreachSlot { s =>
-            val h = m.hashAt(s)
-            val t = subMaps(subOf(h))
-            var j = 0
-            while (j < kLK) { t.stageLongs(j) = m.longKeyAt(s, j); j += 1 }
-            j = 0
-            while (j < kSK) {
-              t.stageStrs(j) =
-                UTF8String.fromBytes(pool, m.strOffAt(s, j), m.strLenAt(s, j))
-              j += 1
-            }
-            val msk = m.maskAt(s)
-            j = 0
-            while (j < kN) {
-              if ((msk & (1L << j)) != 0 && theKinds(j) == KindStr)
-                t.stageStrs(theSub(j)) = null
-              j += 1
-            }
-            t.stageMask = msk
-            val ns = t.slotOf(h)
-            // bit-copy the accumulated state: the group keeps ONE state,
-            // updated in the same row order — no accumulation split
-            System.arraycopy(m.longs, s * aL, t.longs, ns * aL, aL)
-            System.arraycopy(m.doubles, s * aD, t.doubles, ns * aD, aD)
-            System.arraycopy(m.flags, s * aF, t.flags, ns * aF, aF)
-          }
-          m.reset()
-        }
-        val blockW = colBlockWriters(theSlots, dts, vecs, aL, aD, aF)
+        val scratch = k.newAcc() // singleton-block staging state
         val passProj = UnsafeProjection.create(Array[DataType](
           IntegerType, BinaryType, BinaryType))
         val passRow = new GenericInternalRow(3)
@@ -1324,87 +755,10 @@ final case class PackedPartialAggExec(
             }
             j += 1
           }
-          val soff = bb.stateBlockOffset()
-          var u = 0
-          while (u < blockW.length) { blockW(u)(r, bb.state, soff); u += 1 }
+          val soff = bb.stateBlockOffset() // may grow bb.state: read it after
+          k.writeSingletonCol(vecs, r, scratch, bb.state, soff)
           bb.nRecs += 1
           if (bb.bytes >= BuilderEmitBytes) flushed += emitBuilder(bk)
-        }
-        // radix-scattered batch processing: pass 1 reads keys and hashes
-        // sequentially into buffers (and counts hash slices), pass 2
-        // probes each slice's rows against its OWN sub-map — per-group
-        // row order is preserved (a group lives in exactly one slice and
-        // the scatter is stable), so accumulation is unchanged
-        def processRadixed(n: Int, sel: DictSelection): Unit = {
-          if (lrHash == null || lrHash.length < n) {
-            lrHash = new Array[Long](n); lrMask = new Array[Long](n)
-            lrBkt = new Array[Int](n); lrIdx = new Array[Int](n)
-            lrLongs = Array.fill(math.max(kLK, 1))(new Array[Long](n))
-            lrStrs = Array.fill(math.max(kSK, 1))(new Array[UTF8String](n))
-            lrCnt = new Array[Int](lrN + 1)
-          }
-          java.util.Arrays.fill(lrCnt, 0)
-          var r = 0
-          while (r < n) {
-            if (sel != null && !sel.passes(r)) lrBkt(r) = -1
-            else {
-              var h = hashSeed; var msk = 0L; var j = 0
-              while (j < kN) {
-                val v = kvecs(j)
-                if (v.isNullAt(r)) {
-                  msk |= 1L << j; h = mixNull(h)
-                  if (theKinds(j) == KindStr) lrStrs(theSub(j))(r) = null
-                  else lrLongs(theSub(j))(r) = 0L
-                } else if (theKinds(j) == KindLong) {
-                  val k = if (kLongRead(j)) v.getLong(r) else v.getInt(r).toLong
-                  lrLongs(theSub(j))(r) = k; h = mix(h, k)
-                } else if (dictIds(j) != null) {
-                  val id = dictIds(j)(r)
-                  lrStrs(theSub(j))(r) = dictStrs(j)(id)
-                  h = mix(h, dictHash(j)(id))
-                } else {
-                  val s = v.getUTF8String(r)
-                  lrStrs(theSub(j))(r) = s; h = mix(h, hashStr(s))
-                }
-                j += 1
-              }
-              lrHash(r) = h; lrMask(r) = msk
-              val b = subOf(h)
-              lrBkt(r) = b; lrCnt(b + 1) += 1
-            }
-            r += 1
-          }
-          var b = 0
-          while (b < lrN) { lrCnt(b + 1) += lrCnt(b); b += 1 }
-          r = 0
-          while (r < n) {
-            val bb = lrBkt(r)
-            if (bb >= 0) { lrIdx(lrCnt(bb)) = r; lrCnt(bb) += 1 }
-            r += 1
-          }
-          var start = 0
-          b = 0
-          while (b < lrN) {
-            val end = lrCnt(b)
-            val t = subMaps(b)
-            var i = start
-            while (i < end) {
-              val r2 = lrIdx(i)
-              var j = 0
-              while (j < kLK) { t.stageLongs(j) = lrLongs(j)(r2); j += 1 }
-              j = 0
-              while (j < kSK) { t.stageStrs(j) = lrStrs(j)(r2); j += 1 }
-              t.stageMask = lrMask(r2)
-              val s = t.slotOf(lrHash(r2))
-              var u = 0
-              while (u < ups.length) { ups(u)(t, r2, s); u += 1 }
-              i += 1
-            }
-            start = end
-            b += 1
-          }
-          // rowsSeen stays frozen: its only consumer, the pass-through
-          // check, fired (and declined) before the split engaged
         }
         def processBatch(batch: org.apache.spark.sql.vectorized.ColumnarBatch): Unit = {
           var i = 0
@@ -1471,12 +825,11 @@ final case class PackedPartialAggExec(
             if (passThrough) appendPass(h, msk, r)
             else {
               val s = m.slotOf(h)
-              var u = 0
-              while (u < ups.length) { ups(u)(m, r, s); u += 1 }
+              k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
               rowsSeen += 1
               if (ptEnabled && rowsSeen == ptCheckRows &&
                   m.size >= rowsSeen * ptRatio) {
-                flushed ++= emitRows(m); m.reset()
+                flushed ++= emitRows(k, m); m.reset()
                 passThrough = true
                 builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
               }
@@ -1542,20 +895,17 @@ final case class PackedPartialAggExec(
                   pairs.sync(m.generation) // slotOf may have grown the map
                   pairs.put(a, b, s)
                 }
-                var u = 0
-                while (u < ups.length) { ups(u)(m, r, s); u += 1 }
+                k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
                 rowsSeen += 1
                 if (ptEnabled && rowsSeen == ptCheckRows &&
                     m.size >= rowsSeen * ptRatio) {
-                  flushed ++= emitRows(m); m.reset()
+                  flushed ++= emitRows(k, m); m.reset()
                   passThrough = true
                   builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
                 }
                 r += 1
               }
             }
-          } else if (subMaps != null) {
-            processRadixed(n, sel)
           } else {
             var r = 0
             while (r < n) {
@@ -1563,33 +913,8 @@ final case class PackedPartialAggExec(
               else { genericRow(r); r += 1 }
             }
           }
-          if (!passThrough) {
-            if (subMaps == null) {
-              if (m.size >= flushCap || m.poolLen >= PoolFlushBytes) {
-                flushed ++= emitRows(m); m.reset()
-              }
-              // engage the radix split at this batch boundary: the pt
-              // window is closed (its exact-rowsSeen check already ran),
-              // no pair memo is live, and the map is provably huge
-              if (lrEnabled && m.size >= lrMin &&
-                  (!ptEnabled || rowsSeen >= ptCheckRows) &&
-                  (!pairKeys || pairDead))
-                migrateToSubMaps()
-            } else {
-              var tot = 0; var pb = 0; var b2 = 0
-              while (b2 < lrN) {
-                tot += subMaps(b2).size; pb += subMaps(b2).poolLen; b2 += 1
-              }
-              // same thresholds at the same batch boundaries as the
-              // unsplit path (total resident groups/pool bytes), so the
-              // per-group flush epochs are unchanged
-              if (tot >= flushCap || pb >= PoolFlushBytes) {
-                var b3 = 0
-                while (b3 < lrN) {
-                  flushed ++= emitRows(subMaps(b3)); subMaps(b3).reset(); b3 += 1
-                }
-              }
-            }
+          if (!passThrough && (m.size >= flushCap || m.poolLen >= PoolFlushBytes)) {
+            flushed ++= emitRows(k, m); m.reset()
           }
         }
         // lazy drain: interleave batch consumption with emission so the
@@ -1611,10 +936,7 @@ final case class PackedPartialAggExec(
                   if (builders == null) Iterator.empty
                   else (0 until nBuckets).iterator
                     .filter(bk => builders(bk).nRecs > 0).map(emitBuilder)
-                val mapsOut =
-                  if (subMaps == null) emitRows(m)
-                  else subMaps.iterator.flatMap(emitRows)
-                pending = mapsOut ++ tail
+                pending = emitRows(k, m) ++ tail
               }
             }
           }
@@ -1628,7 +950,7 @@ final case class PackedPartialAggExec(
       child.execute().mapPartitions { rows =>
         val keyProj = UnsafeProjection.create(keyExprs, childOut)
         val valProj = UnsafeProjection.create(iExprs, childOut)
-        val ups = rowUpdaters(theSlots, iExprs, aL, aD, aF, ansiMode)
+        val k = kernel(iExprs.map(_.dataType))
         val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
         val readLong: Array[InternalRow => Long] = kTypes.zipWithIndex.map {
           case (ByteType, i) => (r: InternalRow) => r.getByte(i).toLong
@@ -1643,7 +965,7 @@ final case class PackedPartialAggExec(
         var rowsSeen = 0L
         var passThrough = false
         var builders: Array[BucketBuilder] = null
-        val blockW = rowBlockWriters(theSlots, iExprs, aL, aD, aF)
+        val scratch = k.newAcc() // singleton-block staging state
         val passProj = UnsafeProjection.create(Array[DataType](
           IntegerType, BinaryType, BinaryType))
         val passRow = new GenericInternalRow(3)
@@ -1674,9 +996,8 @@ final case class PackedPartialAggExec(
             }
             j += 1
           }
-          val soff = bb.stateBlockOffset()
-          var u = 0
-          while (u < blockW.length) { blockW(u)(v, bb.state, soff); u += 1 }
+          val soff = bb.stateBlockOffset() // may grow bb.state: read it after
+          k.writeSingletonRow(v, scratch, bb.state, soff)
           bb.nRecs += 1
           if (bb.bytes >= BuilderEmitBytes) flushed += emitBuilder(bk)
         }
@@ -1707,17 +1028,16 @@ final case class PackedPartialAggExec(
           if (passThrough) appendPass(h, msk, v)
           else {
             val s = m.slotOf(h)
-            var u = 0
-            while (u < ups.length) { ups(u)(m, v, s); u += 1 }
+            k.updateRow(v, m.longs, m.doubles, m.flags, s)
             rowsSeen += 1
             if (ptEnabled && rowsSeen == ptCheckRows &&
                 m.size >= rowsSeen * ptRatio) {
-              flushed ++= emitRows(m); m.reset()
+              flushed ++= emitRows(k, m); m.reset()
               passThrough = true
               builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
             }
             if (m.size >= flushCap || m.poolLen >= PoolFlushBytes) {
-              flushed ++= emitRows(m); m.reset()
+              flushed ++= emitRows(k, m); m.reset()
             }
           }
         }
@@ -1740,7 +1060,7 @@ final case class PackedPartialAggExec(
                   if (builders == null) Iterator.empty
                   else (0 until nBuckets).iterator
                     .filter(bk => builders(bk).nRecs > 0).map(emitBuilder)
-                pending = emitRows(m) ++ tail
+                pending = emitRows(k, m) ++ tail
               }
             }
           }
@@ -1813,12 +1133,11 @@ final case class PackedFinalAggExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOut = longMetric("numOutputRows")
-    val (theSlots, types) = (slots, aggTypes)
+    val k = new SlotKernel(slots, Nil, aggTypes, nL, nD, nF, ansi)
     val (aL, aD, aF) = (nL, nD, nF)
     val keyDts = keyAttrs.map(_.dataType).toArray
     val evalSchema = keyAttrs ++ aggAttrs
     val exprs = resultExprs
-    val ansiMode = ansi
     val theKinds = kinds
     val theSub = subIdx
     val (kLK, kSK, kN) = (nLK, nSK, nKeys)
@@ -1828,11 +1147,9 @@ final case class PackedFinalAggExec(
     val theOutput = output
     child.execute().mapPartitions { rows =>
       val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
-      val mergers = blockMergers(theSlots, aL, aD, aF, ansiMode)
       rows.foreach { r =>
         val keys = r.getBinary(1)
         val state = r.getBinary(2)
-        val sb = ByteBuffer.wrap(state).order(ByteOrder.LITTLE_ENDIAN)
         val n = Platform.getInt(keys, Platform.BYTE_ARRAY_OFFSET)
         var cursor = 4 + n * rec
         var g = 0
@@ -1859,19 +1176,17 @@ final case class PackedFinalAggExec(
           }
           m.stageMask = msk
           val s = m.slotOf(h)
-          var u = 0
-          while (u < mergers.length) { mergers(u)(m, s, sb, g * block); u += 1 }
+          k.mergeBlob(m.longs, m.doubles, m.flags, s, state,
+            Platform.BYTE_ARRAY_OFFSET + g.toLong * block)
           g += 1
         }
       }
       val proj = UnsafeProjection.create(exprs, evalSchema)
-      // typed drain (see DriverAgg.writeFinal): SpecificInternalRow +
-      // primitive setters — the boxed GenericInternalRow path costs a
-      // box per key/aggregate per group, tens of millions of objects on
-      // the groups≈rows shapes this operator exists for
+      // typed drain (SlotKernel.writeFinal): SpecificInternalRow +
+      // primitive setters — a boxed GenericInternalRow path costs a box
+      // per key/aggregate per group, tens of millions of objects on the
+      // groups≈rows shapes this operator exists for
       val evalRow = new SpecificInternalRow(evalSchema.map(_.dataType))
-      val acc = new DriverAgg.Acc(new Array[Long](aL), new Array[Double](aD),
-        new Array[Boolean](aF))
       // compiled per-key writers (slot → evalRow field j)
       val keyWriters: Array[Int => Unit] = Array.tabulate(kN) { j =>
         if (theKinds(j) == KindStr) {
@@ -1898,31 +1213,12 @@ final case class PackedFinalAggExec(
           }
         }
       }
-      def fillAggs(s: Int): Unit = {
-        System.arraycopy(m.longs, s * aL, acc.longs, 0, aL)
-        System.arraycopy(m.doubles, s * aD, acc.doubles, 0, aD)
-        System.arraycopy(m.flags, s * aF, acc.flags, 0, aF)
-        var c = kN
-        var j = 0
-        while (j < theSlots.length) {
-          theSlots(j) match {
-            case DriverAgg.AvgSlot(di, li, _) if buffered =>
-              evalRow.setDouble(c, acc.doubles(di))
-              evalRow.setLong(c + 1, acc.longs(li))
-              c += 2
-            case _ =>
-              DriverAgg.writeFinal(theSlots, types, j, acc, evalRow, c)
-              c += 1
-          }
-          j += 1
-        }
-      }
       // STREAM emission — the projection's output row is reused, as
       // Spark's own aggregate iterators do
       val emitted = m.slotIterator.map { s =>
         var j = 0
         while (j < kN) { keyWriters(j)(s); j += 1 }
-        fillAggs(s)
+        k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, kN, buffered)
         numOut.add(1)
         proj(evalRow)
       }

@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnVector
 
+import org.apache.spark.unsafe.Platform
+
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.collection.mutable.ArrayBuffer
 
@@ -41,13 +43,14 @@ import scala.collection.mutable.ArrayBuffer
   * reducer busy), and `spark.sql.shuffle.partitions` remains the scaling
   * knob. NULL group keys ride a side accumulator routed through bucket 0.
   *
-  * Only plan shapes whose aggregates compile to [[DriverAgg.layout]]
-  * slots (Count/Sum/Avg/Min/Max over primitives, no DISTINCT/FILTER) are
-  * rewritten — see [[graft.rules.RadixShuffleAgg]]; everything else keeps
-  * Spark's plan.
+  * Only plan shapes whose aggregates compile to flat-state
+  * [[DriverAgg.layout]] slots (count/sum/avg/min/max and the
+  * variance/stddev/covariance moments over primitives; no DISTINCT, no
+  * FILTER) are rewritten — see [[graft.rules.RadixShuffleAgg]]; everything
+  * else keeps Spark's plan. Slot semantics, including the state blocks'
+  * encoding, are [[SlotKernel]]'s.
   */
 object RadixAgg {
-  import DriverAgg._
 
   /** Partial-map group cap before a flush-and-reset (bounds task memory:
     * ~(8·nL + 8·nD + nF + 9) B per group plus open-addressing slack).
@@ -183,227 +186,6 @@ object RadixAgg {
       size = 0
     }
   }
-
-  /** Primitive-signature updater interfaces — scala.FunctionN is not
-    * specialized past Function2, so a `(LongKeyMap, Int, Int) => Unit`
-    * closure boxes BOTH ints on every call (hundreds of millions of
-    * allocations per stage at sf1); these SAM traits keep the hot loop
-    * allocation-free.
-    */
-  private[plans] trait RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit }
-  private[plans] trait ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit }
-  private[plans] trait BlockMerge {
-    def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit
-  }
-
-  /** Row-path per-slot updaters: (map, valueProjectionRow, slot). */
-  private[plans] def rowUpdaters(slots: Seq[Slot], iExprs: Seq[Expression],
-      nL: Int, nD: Int, nF: Int, ansi: Boolean): Array[RowUp] = {
-    val addL = DriverAgg.longAdd(ansi)
-    def readL(i: Int): InternalRow => Long = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toLong
-      case ShortType => r => r.getShort(i).toLong
-      case IntegerType | DateType => r => r.getInt(i).toLong
-      case _ => r => r.getLong(i)
-    }
-    def readD(i: Int): InternalRow => Double = iExprs(i).dataType match {
-      case ByteType => r => r.getByte(i).toDouble
-      case ShortType => r => r.getShort(i).toDouble
-      case IntegerType | DateType => r => r.getInt(i).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => r.getLong(i).toDouble
-      case FloatType => r => r.getFloat(i).toDouble
-      case _ => r => r.getDouble(i)
-    }
-    slots.map[RowUp] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        new RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit = {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (v.isNullAt(ia(j))) ok = false; j += 1 }
-          if (ok) m.longs(s * nL + li) += 1
-        } }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        new RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            m.longs(o) = if (m.flags(fo)) addL(m.longs(o), rd(v)) else rd(v)
-            m.flags(fo) = true
-          } }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        new RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            m.doubles(s * nD + di) += rd(v); m.flags(s * nF + fi) = true
-          } }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        new RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            m.doubles(s * nD + di) += rd(v); m.longs(s * nL + li) += 1
-          } }
-      case MinMaxLSlot(li, fi, in, isMin) =>
-        val rd = readL(in)
-        new RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = rd(v)
-            if (!m.flags(fo) || (if (isMin) x < m.longs(o) else x > m.longs(o)))
-              m.longs(o) = x
-            m.flags(fo) = true
-          } }
-      case MinMaxDSlot(di, fi, in, isMin) =>
-        val rd = readD(in)
-        new RowUp { def apply(m: LongKeyMap, v: InternalRow, s: Int): Unit =
-          if (!v.isNullAt(in)) {
-            val o = s * nD + di; val fo = s * nF + fi
-            val x = rd(v)
-            val c = java.lang.Double.compare(x, m.doubles(o))
-            if (!m.flags(fo) || (if (isMin) c < 0 else c > 0)) m.doubles(o) = x
-            m.flags(fo) = true
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"radix agg: unsupported slot $other")
-    }.toArray
-  }
-
-  /** Columnar per-slot updaters: (map, rowInBatch, slot). `vecs` is a
-    * container the caller refills per batch (closures read it live).
-    */
-  private[plans] def colUpdaters(slots: Seq[Slot], dts: Array[DataType],
-      vecs: Array[ColumnVector], nL: Int, nD: Int, nF: Int, ansi: Boolean)
-      : Array[ColUp] = {
-    val addL = DriverAgg.longAdd(ansi)
-    def readL(i: Int): Int => Long = dts(i) match {
-      case ByteType => r => vecs(i).getByte(r).toLong
-      case ShortType => r => vecs(i).getShort(r).toLong
-      case IntegerType | DateType => r => vecs(i).getInt(r).toLong
-      case _ => r => vecs(i).getLong(r)
-    }
-    def readD(i: Int): Int => Double = dts(i) match {
-      case ByteType => r => vecs(i).getByte(r).toDouble
-      case ShortType => r => vecs(i).getShort(r).toDouble
-      case IntegerType | DateType => r => vecs(i).getInt(r).toDouble
-      case LongType | TimestampType | TimestampNTZType => r => vecs(i).getLong(r).toDouble
-      case FloatType => r => vecs(i).getFloat(r).toDouble
-      case _ => r => vecs(i).getDouble(r)
-    }
-    slots.map[ColUp] {
-      case CountSlot(li, checked) =>
-        val ia = checked.toArray
-        new ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit = {
-          var ok = true; var j = 0
-          while (j < ia.length) { if (vecs(ia(j)).isNullAt(r)) ok = false; j += 1 }
-          if (ok) m.longs(s * nL + li) += 1
-        } }
-      case SumLSlot(li, fi, in) =>
-        val rd = readL(in)
-        new ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            m.longs(o) = if (m.flags(fo)) addL(m.longs(o), rd(r)) else rd(r)
-            m.flags(fo) = true
-          } }
-      case SumDSlot(di, fi, in) =>
-        val rd = readD(in)
-        new ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            m.doubles(s * nD + di) += rd(r); m.flags(s * nF + fi) = true
-          } }
-      case AvgSlot(di, li, in) =>
-        val rd = readD(in)
-        new ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            m.doubles(s * nD + di) += rd(r); m.longs(s * nL + li) += 1
-          } }
-      case MinMaxLSlot(li, fi, in, isMin) =>
-        val rd = readL(in)
-        new ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = rd(r)
-            if (!m.flags(fo) || (if (isMin) x < m.longs(o) else x > m.longs(o)))
-              m.longs(o) = x
-            m.flags(fo) = true
-          } }
-      case MinMaxDSlot(di, fi, in, isMin) =>
-        val rd = readD(in)
-        new ColUp { def apply(m: LongKeyMap, r: Int, s: Int): Unit =
-          if (!vecs(in).isNullAt(r)) {
-            val o = s * nD + di; val fo = s * nF + fi
-            val x = rd(r)
-            val c = java.lang.Double.compare(x, m.doubles(o))
-            if (!m.flags(fo) || (if (isMin) c < 0 else c > 0)) m.doubles(o) = x
-            m.flags(fo) = true
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"radix agg: unsupported slot $other")
-    }.toArray
-  }
-
-  /** Compiled per-slot block mergers (block layout:
-    * longs[nL] ++ doubles[nD] ++ flags[nF], LE at `off`).
-    */
-  private[plans] def blockMergers(slots: Seq[Slot], nL: Int, nD: Int, nF: Int,
-      ansi: Boolean): Array[BlockMerge] = {
-    val addL = DriverAgg.longAdd(ansi)
-    val dBase = 8 * nL
-    val fBase = dBase + 8 * nD
-    slots.map[BlockMerge] {
-      case CountSlot(li, _) =>
-        new BlockMerge { def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          m.longs(s * nL + li) += bb.getLong(off + 8 * li) }
-      case SumLSlot(li, fi, _) =>
-        new BlockMerge { def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = bb.getLong(off + 8 * li)
-            m.longs(o) = if (m.flags(fo)) addL(m.longs(o), x) else x
-            m.flags(fo) = true
-          } }
-      case SumDSlot(di, fi, _) =>
-        new BlockMerge { def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            m.doubles(s * nD + di) += bb.getDouble(off + dBase + 8 * di)
-            m.flags(s * nF + fi) = true
-          } }
-      case AvgSlot(di, li, _) =>
-        new BlockMerge { def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit = {
-          m.doubles(s * nD + di) += bb.getDouble(off + dBase + 8 * di)
-          m.longs(s * nL + li) += bb.getLong(off + 8 * li)
-        } }
-      case MinMaxLSlot(li, fi, _, isMin) =>
-        new BlockMerge { def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            val o = s * nL + li; val fo = s * nF + fi
-            val x = bb.getLong(off + 8 * li)
-            if (!m.flags(fo) || (if (isMin) x < m.longs(o) else x > m.longs(o)))
-              m.longs(o) = x
-            m.flags(fo) = true
-          } }
-      case MinMaxDSlot(di, fi, _, isMin) =>
-        new BlockMerge { def apply(m: LongKeyMap, s: Int, bb: ByteBuffer, off: Int): Unit =
-          if (bb.get(off + fBase + fi) != 0) {
-            val o = s * nD + di; val fo = s * nF + fi
-            val x = bb.getDouble(off + dBase + 8 * di)
-            val c = java.lang.Double.compare(x, m.doubles(o))
-            if (!m.flags(fo) || (if (isMin) c < 0 else c > 0)) m.doubles(o) = x
-            m.flags(fo) = true
-          } }
-      case other => throw new UnsupportedOperationException(
-        s"radix agg: unsupported slot $other")
-    }.toArray
-  }
-
-  private[plans] def writeBlock(bb: ByteBuffer, m: LongKeyMap, s: Int,
-      nL: Int, nD: Int, nF: Int): Unit = {
-    var i = 0
-    while (i < nL) { bb.putLong(m.longs(s * nL + i)); i += 1 }
-    i = 0
-    while (i < nD) { bb.putDouble(m.doubles(s * nD + i)); i += 1 }
-    i = 0
-    while (i < nF) { bb.put(if (m.flags(s * nF + i)) 1.toByte else 0.toByte); i += 1 }
-  }
 }
 
 /** Emit-time key prune for [[RadixPartialAggExec]]: keep only the
@@ -504,12 +286,11 @@ final case class RadixPartialAggExec(
     keyReadable && direct(keyExpr) && aggInputs.forall(direct)
   }
 
-  private val blockBytes = 8 * nL + 8 * nD + nF
-
   /** Emit the map (and, when `nullM` is non-null and non-empty, the
     * null-group block appended to bucket 0) as packed bucket rows.
     */
-  private def emitRows(m: LongKeyMap, nullM: LongKeyMap): Iterator[InternalRow] = {
+  private def emitRows(k: SlotKernel, m: LongKeyMap,
+      nullM: LongKeyMap): Iterator[InternalRow] = {
     val hasNull = nullM != null && nullM.size > 0
     // top-N-through-aggregate: keys outside this partition's top-`limit`
     // cannot reach the global top-`limit` (keys are unique; the group
@@ -526,29 +307,32 @@ final case class RadixPartialAggExec(
     val counts = new Array[Int](buckets)
     m.foreachEntry((k, _) => if (keep(k)) counts(bucketOf(k, buckets)) += 1)
     val keyBufs = new Array[ByteBuffer](buckets)
-    val stateBufs = new Array[ByteBuffer](buckets)
+    val stateArrs = new Array[Array[Byte]](buckets)
+    val statePos = new Array[Int](buckets)
     var b = 0
     while (b < buckets) {
       if (counts(b) > 0 || (b == 0 && hasNull)) {
         keyBufs(b) = ByteBuffer.allocate(8 * counts(b)).order(ByteOrder.LITTLE_ENDIAN)
-        stateBufs(b) = ByteBuffer.allocate(
-          blockBytes * (counts(b) + (if (b == 0 && hasNull) 1 else 0)))
-          .order(ByteOrder.LITTLE_ENDIAN)
+        stateArrs(b) = new Array[Byte](
+          k.blockBytes * (counts(b) + (if (b == 0 && hasNull) 1 else 0)))
       }
       b += 1
     }
-    m.foreachEntry { (k, s) =>
-      if (keep(k)) {
-        val bk = bucketOf(k, buckets)
-        keyBufs(bk).putLong(k)
-        writeBlock(stateBufs(bk), m, s, nL, nD, nF)
+    def put(bk: Int, src: LongKeyMap, s: Int): Unit = {
+      k.writeBlock(src.longs, src.doubles, src.flags, s, stateArrs(bk),
+        Platform.BYTE_ARRAY_OFFSET + statePos(bk))
+      statePos(bk) += k.blockBytes
+    }
+    m.foreachEntry { (key, s) =>
+      if (keep(key)) {
+        val bk = bucketOf(key, buckets)
+        keyBufs(bk).putLong(key)
+        put(bk, m, s)
       }
     }
     if (hasNull) {
       var done = false
-      nullM.foreachEntry((_, s) => if (!done) {
-        writeBlock(stateBufs(0), nullM, s, nL, nD, nF); done = true
-      })
+      nullM.foreachEntry((_, s) => if (!done) { put(0, nullM, s); done = true })
     }
     val proj = UnsafeProjection.create(Array[DataType](
       IntegerType, BinaryType, BinaryType, BooleanType))
@@ -556,7 +340,7 @@ final case class RadixPartialAggExec(
     (0 until buckets).iterator.filter(b => keyBufs(b) != null).map { b =>
       row.update(0, b)
       row.update(1, keyBufs(b).array())
-      row.update(2, stateBufs(b).array())
+      row.update(2, stateArrs(b))
       row.update(3, b == 0 && hasNull)
       proj(row).copy()
     }
@@ -564,10 +348,11 @@ final case class RadixPartialAggExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOut = longMetric("numOutputRows")
-    val (kT, iExprs, theSlots) = (keyType, aggInputs, slots)
-    val (aL, aD, aF, nBuckets) = (nL, nD, nF, buckets)
+    val (kT, iExprs) = (keyType, aggInputs)
+    val (aL, aD, aF) = (nL, nD, nF)
     val childOut = child.output
-    val ansiMode = ansi
+    val k = new SlotKernel(slots, iExprs.map(_.dataType), Nil, nL, nD, nF, ansi)
+    val flushAt = PackedAgg.flushCap
     // top-N early reject: once the map has been pruned to its top
     // `limit` keys, `thr` is the worst retained key and any worse row is
     // dropped with one compare — its group already has `limit` distinct
@@ -596,13 +381,11 @@ final case class RadixPartialAggExec(
       }
       val ords = iExprs.map { case a: Attribute =>
         childOut.indexWhere(_.exprId == a.exprId) }.toArray
-      val dts = iExprs.map(_.dataType).toArray
       child.executeColumnar().mapPartitions { batches =>
         var m = new LongKeyMap(aL, aD, aF)
         val nullM = new LongKeyMap(aL, aD, aF, 16)
         var thr = if (tnDesc) Long.MinValue else Long.MaxValue
         val vecs = new Array[ColumnVector](ords.length)
-        val ups = colUpdaters(theSlots, dts, vecs, aL, aD, aF, ansiMode)
         val kIsLong = isKeyLongRead(kT)
         val flushed = ArrayBuffer.empty[InternalRow]
         val dbg = sys.env.contains("GRAFT_RADIX_DEBUG") &&
@@ -619,34 +402,31 @@ final case class RadixPartialAggExec(
           while (r < n) {
             if (kv.isNullAt(r)) {
               val s = nullM.slotOf(0L)
-              var j = 0
-              while (j < ups.length) { ups(j)(nullM, r, s); j += 1 }
+              k.updateCol(vecs, r, nullM.longs, nullM.doubles, nullM.flags, s)
             } else {
-              val k = if (kIsLong) kv.getLong(r) else kv.getInt(r).toLong
-              if (if (tnDesc) k >= thr else k <= thr) {
-                val s = m.slotOf(k)
-                var j = 0
-                while (j < ups.length) { ups(j)(m, r, s); j += 1 }
+              val key = if (kIsLong) kv.getLong(r) else kv.getInt(r).toLong
+              if (if (tnDesc) key >= thr else key <= thr) {
+                val s = m.slotOf(key)
+                k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
                 if (m.size >= pruneTrigger) m = pruneLive(m, t => thr = t)
               }
             }
             r += 1
           }
-          if (m.size >= FlushCap) { flushed ++= emitRows(m, null); m.reset() }
+          if (m.size >= flushAt) { flushed ++= emitRows(k, m, null); m.reset() }
         }
         if (dbg) {
           val t1 = System.nanoTime()
-          val r = emitRows(m, nullM)
+          val r = emitRows(k, m, nullM)
           System.err.println(s"[radix] part0 rows=$nRows groups=${m.size} " +
             s"loop=${(t1 - t0) / 1000000}ms emit=${(System.nanoTime() - t1) / 1000000}ms")
           (flushed.iterator ++ r).map { row => numOut.add(1); row }
-        } else (flushed.iterator ++ emitRows(m, nullM)).map { row => numOut.add(1); row }
+        } else (flushed.iterator ++ emitRows(k, m, nullM)).map { row => numOut.add(1); row }
       }
     } else {
       child.execute().mapPartitions { rows =>
         val keyProj = UnsafeProjection.create(Seq(keyExpr), childOut)
         val valProj = UnsafeProjection.create(iExprs, childOut)
-        val ups = rowUpdaters(theSlots, iExprs, aL, aD, aF, ansiMode)
         var m = new LongKeyMap(aL, aD, aF)
         val nullM = new LongKeyMap(aL, aD, aF, 16)
         var thr = if (tnDesc) Long.MinValue else Long.MaxValue
@@ -658,20 +438,18 @@ final case class RadixPartialAggExec(
           val v = valProj(row)
           if (kr.isNullAt(0)) {
             val s = nullM.slotOf(0L)
-            var j = 0
-            while (j < ups.length) { ups(j)(nullM, v, s); j += 1 }
+            k.updateRow(v, nullM.longs, nullM.doubles, nullM.flags, s)
           } else {
-            val k = readKey(kr)
-            if (if (tnDesc) k >= thr else k <= thr) {
-              val s = m.slotOf(k)
-              var j = 0
-              while (j < ups.length) { ups(j)(m, v, s); j += 1 }
+            val key = readKey(kr)
+            if (if (tnDesc) key >= thr else key <= thr) {
+              val s = m.slotOf(key)
+              k.updateRow(v, m.longs, m.doubles, m.flags, s)
               if (m.size >= pruneTrigger) m = pruneLive(m, t => thr = t)
             }
           }
-          if (m.size >= FlushCap) { flushed ++= emitRows(m, null); m.reset() }
+          if (m.size >= flushAt) { flushed ++= emitRows(k, m, null); m.reset() }
         }
-        (flushed.iterator ++ emitRows(m, nullM)).map { row => numOut.add(1); row }
+        (flushed.iterator ++ emitRows(k, m, nullM)).map { row => numOut.add(1); row }
       }
     }
   }
@@ -731,89 +509,62 @@ final case class RadixFinalAggExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOut = longMetric("numOutputRows")
-    val (theSlots, types) = (slots, aggTypes)
+    val k = new SlotKernel(slots, Nil, aggTypes, nL, nD, nF, ansi)
     val (aL, aD, aF) = (nL, nD, nF)
-    val keyDt = groupAttr.dataType
+    val keyTc = SlotKernel.typeCode(groupAttr.dataType)
     val evalSchema = groupAttr +: aggAttrs
     val exprs = resultExprs
-    val block = 8 * aL + 8 * aD + aF
-    val ansiMode = ansi
+    val buffered = bufferMode
     child.execute().mapPartitions { rows =>
       val m = new LongKeyMap(aL, aD, aF)
       val nullM = new LongKeyMap(aL, aD, aF, 16)
-      val mergers = blockMergers(theSlots, aL, aD, aF, ansiMode)
       var sawNull = false
       rows.foreach { r =>
         val keys = r.getBinary(1)
         val state = r.getBinary(2)
         val kb = ByteBuffer.wrap(keys).order(ByteOrder.LITTLE_ENDIAN)
-        val sb = ByteBuffer.wrap(state).order(ByteOrder.LITTLE_ENDIAN)
         val n = keys.length / 8
         var g = 0
         while (g < n) {
           val s = m.slotOf(kb.getLong(8 * g))
-          var j = 0
-          while (j < mergers.length) { mergers(j)(m, s, sb, g * block); j += 1 }
+          k.mergeBlob(m.longs, m.doubles, m.flags, s, state,
+            Platform.BYTE_ARRAY_OFFSET + g.toLong * k.blockBytes)
           g += 1
         }
         if (r.getBoolean(3)) {
           sawNull = true
           val s = nullM.slotOf(0L)
-          var j = 0
-          while (j < mergers.length) { mergers(j)(nullM, s, sb, n * block); j += 1 }
+          k.mergeBlob(nullM.longs, nullM.doubles, nullM.flags, s, state,
+            Platform.BYTE_ARRAY_OFFSET + n.toLong * k.blockBytes)
         }
       }
       val proj = UnsafeProjection.create(exprs, evalSchema)
-      val evalRow = new GenericInternalRow(evalSchema.length)
-      val acc = new DriverAgg.Acc(new Array[Long](aL), new Array[Double](aD),
-        new Array[Boolean](aF))
-      def load(src: LongKeyMap, s: Int): Unit = {
-        System.arraycopy(src.longs, s * aL, acc.longs, 0, aL)
-        System.arraycopy(src.doubles, s * aD, acc.doubles, 0, aD)
-        System.arraycopy(src.flags, s * aF, acc.flags, 0, aF)
-      }
-      def keyValue(k: Long): Any = keyDt match {
-        case ByteType => k.toByte
-        case ShortType => k.toShort
-        case IntegerType | DateType => k.toInt
-        case _ => k
-      }
-      val buffered = bufferMode
-      def fillAggs(): Unit = {
-        var c = 1
-        var j = 0
-        while (j < theSlots.length) {
-          theSlots(j) match {
-            case DriverAgg.AvgSlot(di, li, _) if buffered =>
-              evalRow.update(c, acc.doubles(di))
-              evalRow.update(c + 1, acc.longs(li))
-              c += 2
-            case _ =>
-              evalRow.update(c, DriverAgg.finalValue(theSlots, types, j, acc))
-              c += 1
+      // typed drain: SpecificInternalRow + primitive setters, no box per
+      // key/aggregate per group
+      val evalRow = new SpecificInternalRow(evalSchema.map(_.dataType))
+      def emit(src: LongKeyMap, s: Int, keyNull: Boolean): InternalRow = {
+        if (keyNull) evalRow.setNullAt(0)
+        else {
+          val key = src.keyAt(s)
+          (keyTc: @annotation.switch) match {
+            case 0 => evalRow.setByte(0, key.toByte)
+            case 1 => evalRow.setShort(0, key.toShort)
+            case 2 => evalRow.setInt(0, key.toInt)
+            case _ => evalRow.setLong(0, key)
           }
-          j += 1
         }
+        k.writeOutputs(src.longs, src.doubles, src.flags, s, evalRow, 1, buffered)
+        proj(evalRow)
       }
       // STREAM emission — project each group lazily (the projection's
       // output row is reused, as Spark's own aggregate iterators do)
       // instead of buffering every UnsafeRow next to the dense map, which
       // would double reducer memory in the groups≈rows regime this
       // operator exists for
-      val mainRows = m.slotIterator.map { s =>
-        load(m, s)
-        evalRow.update(0, keyValue(m.keyAt(s)))
-        fillAggs()
-        proj(evalRow)
-      }
+      val mainRows = m.slotIterator.map(s => emit(m, s, keyNull = false))
       val nullRows =
         if (!sawNull) Iterator.empty
-        else nullM.slotIterator.map { s =>
-          load(nullM, s)
-          evalRow.update(0, null)
-          fillAggs()
-          proj(evalRow)
-        }
+        else nullM.slotIterator.map(s => emit(nullM, s, keyNull = true))
       (mainRows ++ nullRows).map { r => numOut.add(1); r }
     }
   }

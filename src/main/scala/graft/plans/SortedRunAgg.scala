@@ -161,16 +161,15 @@ object SortedRunAggExec {
   /** Machinery for the fused top-n drain shared by the batch and row
     * loops ([[SortedRunAggExec]].runBatchTopN / runRowTopN) — the
     * candidate fill, heap admit, and winner materialization are
-    * byte-identical between the two, and the per-slot type table here
-    * must stay in lockstep with [[DriverAgg.writeFinal]], so it lives in
-    * ONE place. Owns the heap and the output projection; the loops own
-    * only the child reads (column vectors vs rows) and run-boundary
-    * detection. Construct executor-side (holds an UnsafeProjection).
+    * byte-identical between the two, so it lives in ONE place (sort keys
+    * and finals come from [[SlotKernel]]). Owns the heap and the output
+    * projection; the loops own only the child reads (column vectors vs
+    * rows) and run-boundary detection. Construct executor-side (holds an
+    * UnsafeProjection).
     */
   final class TopNDrain(
       spec: TopNSpec,
-      theSlots: Seq[DriverAgg.Slot], types: Seq[DataType],
-      aL: Int, aD: Int, aF: Int,
+      k: SlotKernel,
       exprs: Seq[NamedExpression], schema: Seq[Attribute],
       pfxTypes: Array[DataType], hasKey: Boolean, kInt: Boolean,
       m: RadixAgg.LongKeyMap, nullM: RadixAgg.LongKeyMap,
@@ -178,19 +177,13 @@ object SortedRunAggExec {
     private val tSrcs = spec.srcs.toArray
     // whether each sort key is a double-valued slot (else compares long)
     private val tIsD: Array[Boolean] = tSrcs.map {
-      case AggTopKey(j) => theSlots(j) match {
-        case DriverAgg.SumDSlot(_, _, _) | DriverAgg.MinMaxDSlot(_, _, _, _) |
-             DriverAgg.AvgSlot(_, _, _) => true
-        case _ => false
-      }
+      case AggTopKey(j) => k.sortKeyIsDouble(j)
       case _ => false
     }
     val h = new GroupTopN(spec.limit, tSrcs.length, tIsD,
       spec.desc.toArray, spec.nullsFirst.toArray)
     private val proj = UnsafeProjection.create(exprs, schema)
     private val evalRow = new SpecificInternalRow(schema.map(_.dataType))
-    private val acc = new DriverAgg.Acc(new Array[Long](aL),
-      new Array[Double](aD), new Array[Boolean](aF))
     private val nP = pfxTypes.length
     private val keyPos = nP
     private val aggBase = nP + (if (hasKey) 1 else 0)
@@ -209,45 +202,10 @@ object SortedRunAggExec {
         tSrcs(d) match {
           case PrefixTopKey(i) => h.candN(d) = curNull(i); h.candL(d) = curP(i)
           case RunTopKey => h.candN(d) = keyNull; h.candL(d) = key
-          case AggTopKey(j) => theSlots(j) match {
-            case DriverAgg.CountSlot(li, _) =>
-              h.candN(d) = false; h.candL(d) = src.longs(s * aL + li)
-            case DriverAgg.SumLSlot(li, fi, _) =>
-              h.candN(d) = !src.flags(s * aF + fi)
-              h.candL(d) = src.longs(s * aL + li)
-            case DriverAgg.MinMaxLSlot(li, fi, _, _) =>
-              h.candN(d) = !src.flags(s * aF + fi)
-              h.candL(d) = src.longs(s * aL + li)
-            case DriverAgg.SumDSlot(di, fi, _) =>
-              h.candN(d) = !src.flags(s * aF + fi)
-              val v = src.doubles(s * aD + di)
-              h.candD(d) = if (v == 0.0) 0.0 else v // -0.0 → 0.0 (UnsafeRow norm)
-            case DriverAgg.MinMaxDSlot(di, fi, _, _) =>
-              h.candN(d) = !src.flags(s * aF + fi)
-              val v = src.doubles(s * aD + di)
-              h.candD(d) = if (v == 0.0) 0.0 else v
-            case DriverAgg.AvgSlot(di, li, _) =>
-              val c = src.longs(s * aL + li)
-              h.candN(d) = c == 0
-              val v = if (c == 0) 0.0 else src.doubles(s * aD + di) / c
-              h.candD(d) = if (v == 0.0) 0.0 else v
-            case other =>
-              throw new IllegalStateException(s"non-primitive top-n slot $other")
-          }
+          case AggTopKey(j) =>
+            k.sortKey(j, src.longs, src.doubles, src.flags, s, h.candL, h.candD, h.candN, d)
         }
         d += 1
-      }
-    }
-    private def load(src: RadixAgg.LongKeyMap, s: Int): Unit = {
-      System.arraycopy(src.longs, s * aL, acc.longs, 0, aL)
-      System.arraycopy(src.doubles, s * aD, acc.doubles, 0, aD)
-      System.arraycopy(src.flags, s * aF, acc.flags, 0, aF)
-    }
-    private def fillAggs(): Unit = {
-      var j = 0
-      while (j < theSlots.length) {
-        DriverAgg.writeFinal(theSlots, types, j, acc, evalRow, aggBase + j)
-        j += 1
       }
     }
     /** Drain the closed run's groups against the heap and reset the maps.
@@ -267,16 +225,15 @@ object SortedRunAggExec {
           }
           wrotePrefix = true
         }
-        load(src, s)
         if (hasKey) {
           if (keyNull) evalRow.setNullAt(keyPos)
           else {
-            val k = src.keyAt(s)
-            if (kInt) evalRow.setInt(keyPos, k.toInt)
-            else evalRow.setLong(keyPos, k)
+            val key = src.keyAt(s)
+            if (kInt) evalRow.setInt(keyPos, key.toInt)
+            else evalRow.setLong(keyPos, key)
           }
         }
-        fillAggs()
+        k.writeOutputs(src.longs, src.doubles, src.flags, s, evalRow, aggBase)
         h.insert(proj(evalRow).copy())
       }
       m.foreachOccupied { s =>
@@ -372,6 +329,9 @@ final case class SortedRunAggExec(
     if (topN.isDefined) Nil // heap emission order is arbitrary
     else child.outputOrdering.takeWhile(_.references.subsetOf(outputSet))
 
+  private def kernel = new SlotKernel(slots, aggInputs.map(_.dataType), aggTypes,
+    nL, nD, nF, ansi)
+
   private val evalSchema: Seq[Attribute] =
     prefix ++ runKey.toSeq.map(_ => keyAttr) ++ aggAttrs
   private lazy val keyAttr: Attribute = runKey.get match {
@@ -380,10 +340,11 @@ final case class SortedRunAggExec(
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (pfx, rk, iExprs, theSlots) = (prefix, runKey, aggInputs, slots)
-    val (aL, aD, aF, types) = (nL, nD, nF, aggTypes)
+    val (pfx, rk, iExprs) = (prefix, runKey, aggInputs)
+    val (aL, aD, aF) = (nL, nD, nF)
     val (childOut, exprs, schema) = (child.output, resultExprs, evalSchema)
-    val (kT, ansiMode) = (runKeyType, ansi)
+    val kT = runKeyType
+    val k = kernel
     val pfxTypes = pfx.map(_.dataType)
     if (columnarChild) return if (topN.isDefined) runBatchTopN() else runBatchDirect()
     if (rowDirectEligible) return if (topN.isDefined) runRowTopN() else runRowDirect()
@@ -391,7 +352,6 @@ final case class SortedRunAggExec(
       val prefixProj = UnsafeProjection.create(pfx, childOut)
       val keyProj = rk.map(e => UnsafeProjection.create(Seq(e), childOut))
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val ups = rowUpdaters(theSlots, iExprs, aL, aD, aF, ansiMode)
       val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
       val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
       val readKey: InternalRow => Long = kT match {
@@ -401,50 +361,34 @@ final case class SortedRunAggExec(
              org.apache.spark.sql.types.DateType => r => r.getInt(0).toLong
         case _ => r => r.getLong(0)
       }
-      def keyValue(k: Long): Any = kT match {
-        case org.apache.spark.sql.types.ByteType => k.toByte
-        case org.apache.spark.sql.types.ShortType => k.toShort
+      def keyValue(key: Long): Any = kT match {
+        case org.apache.spark.sql.types.ByteType => key.toByte
+        case org.apache.spark.sql.types.ShortType => key.toShort
         case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.DateType => k.toInt
-        case _ => k
+             org.apache.spark.sql.types.DateType => key.toInt
+        case _ => key
       }
       val proj = UnsafeProjection.create(exprs, schema)
-      val evalRow = new GenericInternalRow(schema.length)
-      val acc = new DriverAgg.Acc(new Array[Long](aL), new Array[Double](aD),
-        new Array[Boolean](aF))
+      val evalRow = new SpecificInternalRow(schema.map(_.dataType))
       val keyPos = pfx.length
       val aggBase = pfx.length + (if (rk.isDefined) 1 else 0)
       var curPrefix: UnsafeRow = null
       var sawNull = false
 
-      def load(src: LongKeyMap, s: Int): Unit = {
-        System.arraycopy(src.longs, s * aL, acc.longs, 0, aL)
-        System.arraycopy(src.doubles, s * aD, acc.doubles, 0, aD)
-        System.arraycopy(src.flags, s * aF, acc.flags, 0, aF)
-      }
-      def fillAggs(): Unit = {
-        var j = 0
-        while (j < theSlots.length) {
-          evalRow.update(aggBase + j, DriverAgg.finalValue(theSlots, types, j, acc))
-          j += 1
-        }
-      }
       def drainRun(into: ArrayBuffer[InternalRow]): Unit = {
         var i = 0
         while (i < pfxTypes.length) {
           evalRow.update(i, curPrefix.get(i, pfxTypes(i))); i += 1
         }
         m.foreachOccupied { s =>
-          load(m, s)
           if (rk.isDefined) evalRow.update(keyPos, keyValue(m.keyAt(s)))
-          fillAggs()
+          k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, aggBase)
           into += proj(evalRow).copy()
         }
         if (sawNull) {
           nullM.foreachOccupied { s =>
-            load(nullM, s)
-            evalRow.update(keyPos, null)
-            fillAggs()
+            evalRow.setNullAt(keyPos)
+            k.writeOutputs(nullM.longs, nullM.doubles, nullM.flags, s, evalRow, aggBase)
             into += proj(evalRow).copy()
           }
         }
@@ -459,9 +403,7 @@ final case class SortedRunAggExec(
         val inNull = dst < 0
         val s = if (inNull) dst & Int.MaxValue else dst
         val tgt = if (inNull) nullM else m
-        val v = valProj(row)
-        var j = 0
-        while (j < ups.length) { ups(j)(tgt, v, s); j += 1 }
+        k.updateRow(valProj(row), tgt.longs, tgt.doubles, tgt.flags, s)
       }
 
       new Iterator[InternalRow] {
@@ -499,10 +441,11 @@ final case class SortedRunAggExec(
     * emission as the batch loop.
     */
   private def runRowDirect(): RDD[InternalRow] = {
-    val (pfx, rk, iExprs, theSlots) = (prefix, runKey, aggInputs, slots)
-    val (aL, aD, aF, types) = (nL, nD, nF, aggTypes)
+    val (pfx, rk, iExprs) = (prefix, runKey, aggInputs)
+    val (aL, aD, aF) = (nL, nD, nF)
     val (childOut, exprs, schema) = (child.output, resultExprs, evalSchema)
-    val (kT, ansiMode) = (runKeyType, ansi)
+    val kT = runKeyType
+    val k = kernel
     val pfxTypes = pfx.map(_.dataType).toArray
     val pOrds = pfx.map(a => childOut.indexWhere(_.exprId == a.exprId)).toArray
     val pLong = pfxTypes.map {
@@ -519,15 +462,12 @@ final case class SortedRunAggExec(
     }
     child.execute().mapPartitions { rows =>
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val ups = rowUpdaters(theSlots, iExprs, aL, aD, aF, ansiMode)
       val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
       val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
       val proj = UnsafeProjection.create(exprs, schema)
       // typed mutable row: see the batch loop — one write per field per
       // GROUP, primitive setters keep the drain allocation-free
       val evalRow = new SpecificInternalRow(schema.map(_.dataType))
-      val acc = new DriverAgg.Acc(new Array[Long](aL), new Array[Double](aD),
-        new Array[Boolean](aF))
       val keyPos = pfx.length
       val aggBase = pfx.length + (if (rk.isDefined) 1 else 0)
       val nP = pOrds.length
@@ -570,18 +510,6 @@ final case class SortedRunAggExec(
       var curSet = false
       var sawNull = false
 
-      def load(src: LongKeyMap, s: Int): Unit = {
-        System.arraycopy(src.longs, s * aL, acc.longs, 0, aL)
-        System.arraycopy(src.doubles, s * aD, acc.doubles, 0, aD)
-        System.arraycopy(src.flags, s * aF, acc.flags, 0, aF)
-      }
-      def fillAggs(): Unit = {
-        var j = 0
-        while (j < theSlots.length) {
-          DriverAgg.writeFinal(theSlots, types, j, acc, evalRow, aggBase + j)
-          j += 1
-        }
-      }
       def differs(row: InternalRow): Boolean = {
         var i = 0
         while (i < nP) {
@@ -611,9 +539,7 @@ final case class SortedRunAggExec(
           else (m, m.slotOf(
             if (kStr) intern(row.getUTF8String(kOrd))
             else if (kLong) row.getLong(kOrd) else row.getInt(kOrd).toLong))
-        val v = valProj(row)
-        var j = 0
-        while (j < ups.length) { ups(j)(tgt, v, s); j += 1 }
+        k.updateRow(valProj(row), tgt.longs, tgt.doubles, tgt.flags, s)
       }
 
       // Lazy per-group emission (see the batch loop for the contract).
@@ -664,14 +590,13 @@ final case class SortedRunAggExec(
         def next(): InternalRow = {
           if (!drainNull) {
             val s = m.occAt(drainIdx); drainIdx += 1
-            load(m, s)
             if (rk.isDefined) {
               val k = m.keyAt(s)
               if (kStr) evalRow.update(keyPos, reverse(k.toInt))
               else if (kInt) evalRow.setInt(keyPos, k.toInt)
               else evalRow.setLong(keyPos, k)
             }
-            fillAggs()
+            k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, aggBase)
             if (drainIdx >= m.size) {
               if (sawNull && nullM.size > 0) { drainNull = true; drainIdx = 0 }
               else endDrain()
@@ -679,9 +604,8 @@ final case class SortedRunAggExec(
             proj(evalRow)
           } else {
             val s = nullM.occAt(drainIdx); drainIdx += 1
-            load(nullM, s)
             evalRow.setNullAt(keyPos)
-            fillAggs()
+            k.writeOutputs(nullM.longs, nullM.doubles, nullM.flags, s, evalRow, aggBase)
             if (drainIdx >= nullM.size) endDrain()
             proj(evalRow)
           }
@@ -692,14 +616,15 @@ final case class SortedRunAggExec(
 
   /** Batch-direct loop: prefix and run key read straight off column
     * vectors (int/long families), boundary compare is a primitive
-    * compare per prefix column, agg slots update via the columnar
-    * updaters. Same run semantics and emission as the row path.
+    * compare per prefix column, agg slots update via the kernel's
+    * column update. Same run semantics and emission as the row path.
     */
   private def runBatchDirect(): RDD[InternalRow] = {
-    val (pfx, rk, iExprs, theSlots) = (prefix, runKey, aggInputs, slots)
-    val (aL, aD, aF, types) = (nL, nD, nF, aggTypes)
+    val (pfx, rk, iExprs) = (prefix, runKey, aggInputs)
+    val (aL, aD, aF) = (nL, nD, nF)
     val (childOut, exprs, schema) = (child.output, resultExprs, evalSchema)
-    val (kT, ansiMode) = (runKeyType, ansi)
+    val kT = runKeyType
+    val k = kernel
     val pfxTypes = pfx.map(_.dataType).toArray
     val pOrds = pfx.map(a => childOut.indexWhere(_.exprId == a.exprId)).toArray
     val pLong = pfxTypes.map {
@@ -716,12 +641,10 @@ final case class SortedRunAggExec(
     }
     val ords = iExprs.map { case a: Attribute =>
       childOut.indexWhere(_.exprId == a.exprId) }.toArray
-    val dts = iExprs.map(_.dataType).toArray
     val selPreds = selection.toArray
     child.executeColumnar().mapPartitions { batches =>
       val sel = if (selPreds.isEmpty) null else new DictSelection(selPreds, childOut)
       val vecs = new Array[org.apache.spark.sql.vectorized.ColumnVector](ords.length)
-      val ups = colUpdaters(theSlots, dts, vecs, aL, aD, aF, ansiMode)
       val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
       val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
       val proj = UnsafeProjection.create(exprs, schema)
@@ -729,8 +652,6 @@ final case class SortedRunAggExec(
       // GROUP — on groups≈rows shapes a boxed update(Any) per field is
       // tens of millions of Long/Double boxes of pure GC churn
       val evalRow = new SpecificInternalRow(schema.map(_.dataType))
-      val acc = new DriverAgg.Acc(new Array[Long](aL), new Array[Double](aD),
-        new Array[Boolean](aF))
       val keyPos = pfx.length
       val aggBase = pfx.length + (if (rk.isDefined) 1 else 0)
       val nP = pOrds.length
@@ -773,18 +694,6 @@ final case class SortedRunAggExec(
       var curSet = false
       var sawNull = false
 
-      def load(src: LongKeyMap, s: Int): Unit = {
-        System.arraycopy(src.longs, s * aL, acc.longs, 0, aL)
-        System.arraycopy(src.doubles, s * aD, acc.doubles, 0, aD)
-        System.arraycopy(src.flags, s * aF, acc.flags, 0, aF)
-      }
-      def fillAggs(): Unit = {
-        var j = 0
-        while (j < theSlots.length) {
-          DriverAgg.writeFinal(theSlots, types, j, acc, evalRow, aggBase + j)
-          j += 1
-        }
-      }
 
       // Lazy per-group emission: no run buffer, no per-group UnsafeRow
       // copy — the iterator returns the projection's REUSED row (the
@@ -847,8 +756,7 @@ final case class SortedRunAggExec(
             else (m, m.slotOf(
               if (kStr) intern(kVec.getUTF8String(r))
               else if (kLong) kVec.getLong(r) else kVec.getInt(r).toLong))
-          var j = 0
-          while (j < ups.length) { ups(j)(tgt, r, s); j += 1 }
+          k.updateCol(vecs, r, tgt.longs, tgt.doubles, tgt.flags, s)
         }
 
         private def beginDrain(): Unit = {
@@ -896,14 +804,13 @@ final case class SortedRunAggExec(
         def next(): InternalRow = {
           if (!drainNull) {
             val s = m.occAt(drainIdx); drainIdx += 1
-            load(m, s)
             if (rk.isDefined) {
               val k = m.keyAt(s)
               if (kStr) evalRow.update(keyPos, reverse(k.toInt))
               else if (kInt) evalRow.setInt(keyPos, k.toInt)
               else evalRow.setLong(keyPos, k)
             }
-            fillAggs()
+            k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, aggBase)
             if (drainIdx >= m.size) {
               if (sawNull && nullM.size > 0) { drainNull = true; drainIdx = 0 }
               else endDrain()
@@ -911,9 +818,8 @@ final case class SortedRunAggExec(
             proj(evalRow)
           } else {
             val s = nullM.occAt(drainIdx); drainIdx += 1
-            load(nullM, s)
             evalRow.setNullAt(keyPos)
-            fillAggs()
+            k.writeOutputs(nullM.longs, nullM.doubles, nullM.flags, s, evalRow, aggBase)
             if (drainIdx >= nullM.size) endDrain()
             proj(evalRow)
           }
@@ -932,10 +838,11 @@ final case class SortedRunAggExec(
     */
   private def runBatchTopN(): RDD[InternalRow] = {
     import SortedRunAggExec._
-    val (pfx, rk, iExprs, theSlots) = (prefix, runKey, aggInputs, slots)
-    val (aL, aD, aF, types) = (nL, nD, nF, aggTypes)
+    val (pfx, rk, iExprs) = (prefix, runKey, aggInputs)
+    val (aL, aD, aF) = (nL, nD, nF)
     val (childOut, exprs, schema) = (child.output, resultExprs, evalSchema)
-    val (kT, ansiMode) = (runKeyType, ansi)
+    val kT = runKeyType
+    val k = kernel
     val spec = topN.get
     val pfxTypes = pfx.map(_.dataType).toArray
     val pOrds = pfx.map(a => childOut.indexWhere(_.exprId == a.exprId)).toArray
@@ -953,12 +860,10 @@ final case class SortedRunAggExec(
     }
     val ords = iExprs.map { case a: Attribute =>
       childOut.indexWhere(_.exprId == a.exprId) }.toArray
-    val dts = iExprs.map(_.dataType).toArray
     val selPreds = selection.toArray
     child.executeColumnar().mapPartitions { batches =>
       val sel = if (selPreds.isEmpty) null else new DictSelection(selPreds, childOut)
       val vecs = new Array[org.apache.spark.sql.vectorized.ColumnVector](ords.length)
-      val ups = colUpdaters(theSlots, dts, vecs, aL, aD, aF, ansiMode)
       val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
       val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
       val nP = pOrds.length
@@ -970,7 +875,7 @@ final case class SortedRunAggExec(
         case _ => false
       }
       var curSet = false
-      val drain = new TopNDrain(spec, theSlots, types, aL, aD, aF,
+      val drain = new TopNDrain(spec, k,
         exprs, schema, pfxTypes, rk.isDefined, kInt, m, nullM, curP, curNull)
 
       val pVecsHolder = new Array[org.apache.spark.sql.vectorized.ColumnVector](nP)
@@ -1003,8 +908,7 @@ final case class SortedRunAggExec(
           if (kVec == null) (m, m.slotOf(0L))
           else if (kVec.isNullAt(r)) { drain.sawNull = true; (nullM, nullM.slotOf(0L)) }
           else (m, m.slotOf(if (kLong) kVec.getLong(r) else kVec.getInt(r).toLong))
-        var j = 0
-        while (j < ups.length) { ups(j)(tgt, r, s); j += 1 }
+        k.updateCol(vecs, r, tgt.longs, tgt.doubles, tgt.flags, s)
       }
 
       // consume everything up front; emit the heap afterwards
@@ -1040,10 +944,11 @@ final case class SortedRunAggExec(
   /** Row-direct twin of [[runBatchTopN]] (filtered codegen children). */
   private def runRowTopN(): RDD[InternalRow] = {
     import SortedRunAggExec._
-    val (pfx, rk, iExprs, theSlots) = (prefix, runKey, aggInputs, slots)
-    val (aL, aD, aF, types) = (nL, nD, nF, aggTypes)
+    val (pfx, rk, iExprs) = (prefix, runKey, aggInputs)
+    val (aL, aD, aF) = (nL, nD, nF)
     val (childOut, exprs, schema) = (child.output, resultExprs, evalSchema)
-    val (kT, ansiMode) = (runKeyType, ansi)
+    val kT = runKeyType
+    val k = kernel
     val spec = topN.get
     val pfxTypes = pfx.map(_.dataType).toArray
     val pOrds = pfx.map(a => childOut.indexWhere(_.exprId == a.exprId)).toArray
@@ -1061,7 +966,6 @@ final case class SortedRunAggExec(
     }
     child.execute().mapPartitions { rows =>
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val ups = rowUpdaters(theSlots, iExprs, aL, aD, aF, ansiMode)
       val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
       val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
       val nP = pOrds.length
@@ -1073,7 +977,7 @@ final case class SortedRunAggExec(
         case _ => false
       }
       var curSet = false
-      val drain = new TopNDrain(spec, theSlots, types, aL, aD, aF,
+      val drain = new TopNDrain(spec, k,
         exprs, schema, pfxTypes, rk.isDefined, kInt, m, nullM, curP, curNull)
 
       def differs(row: InternalRow): Boolean = {
@@ -1104,9 +1008,7 @@ final case class SortedRunAggExec(
           else if (row.isNullAt(kOrd)) { drain.sawNull = true; (nullM, nullM.slotOf(0L)) }
           else (m, m.slotOf(
             if (kLong) row.getLong(kOrd) else row.getInt(kOrd).toLong))
-        val v = valProj(row)
-        var j = 0
-        while (j < ups.length) { ups(j)(tgt, v, s); j += 1 }
+        k.updateRow(valProj(row), tgt.longs, tgt.doubles, tgt.flags, s)
       }
 
       while (rows.hasNext) {

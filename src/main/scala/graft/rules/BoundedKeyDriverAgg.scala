@@ -213,7 +213,7 @@ object BoundedKeyDriverAgg extends Rule[LogicalPlan] {
 
   /** Route a root ungrouped aggregate into the driver-finalized form.
     * Declines (returns the input) for DISTINCT (FuseSingleDistinct's
-    * surface), FILTER clauses / unsupported functions (layout throws →
+    * surface), FILTER clauses, unsupported functions (layout throws →
     * Try), streaming or non-scan-like children, and metadata-answerable
     * shapes.
     */

@@ -46,14 +46,6 @@ object PackedShuffleAgg extends Rule[SparkPlan] {
   // dev escape hatch for A/B timing (GRAFT_NO_PACKED_AGG=1 disables)
   @volatile var enabled = !sys.env.get("GRAFT_NO_PACKED_AGG").contains("1")
 
-  /** Moment-slot routing (stddev/variance/covariance + FILTER folds) —
-    * separate hatch so the h2o g09 class can be A/B'd against the stock
-    * aggregate without disabling the whole packed surface.
-    * GRAFT_NO_PACKED_MOMENTS=1 disables.
-    */
-  @volatile var momentsEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_PACKED_MOMENTS").contains("1")
-
   private def strip(e: Expression): Expression = e match {
     case a: Alias => a.child
     case x => x
@@ -140,10 +132,9 @@ object PackedShuffleAgg extends Rule[SparkPlan] {
             aligned(gPs, gAttrsRaw.map(_.asInstanceOf[Attribute]), pks) &&
             !skipFinals.contains(fin) =>
         val gAttrs = gAttrsRaw.map(_.asInstanceOf[Attribute])
-        // allowMoments: stddev/variance/covariance slots (+ FILTER folds)
-        // are implemented by the packed partial/final pair specifically —
-        // the radix/driver routes keep declining them
-        scala.util.Try(DriverAgg.layout(aggsP, allowMoments = momentsEnabled)).toOption match {
+        // layout() throws on unsupported aggregates; object-state slots
+        // (string min/max) have no blob encoding
+        scala.util.Try(DriverAgg.layout(aggsP)).toOption.filter(_.flat) match {
           case Some(lay) =>
             changed = true
             val partial = PackedPartialAggExec(gPs.map(strip),
@@ -181,7 +172,7 @@ object PackedShuffleAgg extends Rule[SparkPlan] {
             // the no-reduction proof (see provedNoReduction)
             !provedNoReduction(gPs, gchild) =>
         val gAttrs = gAttrsRaw.map(_.asInstanceOf[Attribute])
-        scala.util.Try(DriverAgg.layout(aggsP)).toOption match {
+        scala.util.Try(DriverAgg.layout(aggsP)).toOption.filter(_.flat) match {
           case Some(lay) =>
             changed = true
             val partial = PackedPartialAggExec(gPs.map(strip),

@@ -27,9 +27,12 @@ import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExcha
   * Match guards: Final/Partial adjacency with aligned resultIds, the
   * exchange hash-partitions on exactly the partial's single grouping
   * column, key widens losslessly to long, and every aggregate compiles
-  * to a [[DriverAgg.layout]] slot (Count/Sum/Avg/Min/Max on primitives,
-  * no DISTINCT/FILTER — distinct rewrites plan PartialMerge and never
-  * match). After a rewrite, [[EnsureRequirements]] re-runs over the plan:
+  * to a flat-state [[DriverAgg.layout]] slot (count/sum/avg/min/max and
+  * the variance/stddev/covariance moments over primitives; no DISTINCT —
+  * distinct rewrites plan PartialMerge, whose buffer shapes
+  * [[bufferShapeOk]] limits to count/sum/avg/min/max). FILTER clauses
+  * are declined here (see [[noFilter]]). After a rewrite,
+  * [[EnsureRequirements]] re-runs over the plan:
   * the new final demands clustering on `bucket` (inserting the bucket
   * exchange), and any parent that relied on the replaced aggregate's
   * key-hash output partitioning gets a compensating exchange instead of
@@ -69,6 +72,24 @@ object RadixShuffleAgg extends Rule[SparkPlan] {
       }
     }
 
+  /** FILTER folds stay on Spark's plan for this route: the batch loop
+    * reads direct columns only, so a folded `If(p, x, NULL)` input would
+    * put every row through the interpreted row partial, which has not
+    * been measured against Spark's codegen'd partial on this shape (the
+    * packed route reads the IsNotNull form of the fold batch-direct).
+    */
+  private def noFilter(
+      aggs: Seq[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression]) =
+    aggs.forall(_.filter.isEmpty)
+
+  /** The supported-surface check: layout() throws on unsupported
+    * aggregates, and object-state slots (string min/max) have no blob
+    * encoding.
+    */
+  private def flatLayout(
+      aggs: Seq[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression]) =
+    scala.util.Try(DriverAgg.layout(aggs)).toOption.filter(_.flat)
+
   override def apply(plan: SparkPlan): SparkPlan = {
     if (!enabled) return plan
     var changed = false
@@ -81,10 +102,8 @@ object RadixShuffleAgg extends Rule[SparkPlan] {
             aggsF.map(_.resultId) == aggsP.map(_.resultId) &&
             gP.toAttribute.exprId == gAttr.exprId &&
             pk.semanticEquals(gP.toAttribute) &&
-            RadixAgg.supportedKey(gAttr.dataType) =>
-        // layout() throws on unsupported aggregates — that is the
-        // supported-surface check, not an error
-        scala.util.Try(DriverAgg.layout(aggsP)).toOption match {
+            RadixAgg.supportedKey(gAttr.dataType) && noFilter(aggsP) =>
+        flatLayout(aggsP) match {
           case Some(lay) =>
             changed = true
             val partial = RadixPartialAggExec(strip(gP), gAttr.dataType,
@@ -130,8 +149,8 @@ object RadixShuffleAgg extends Rule[SparkPlan] {
             gP.toAttribute.exprId == gAttr.exprId &&
             pk.semanticEquals(gP.toAttribute) &&
             RadixAgg.supportedKey(gAttr.dataType) &&
-            bufferShapeOk(aggsF) =>
-        scala.util.Try(DriverAgg.layout(aggsP)).toOption match {
+            bufferShapeOk(aggsF) && noFilter(aggsP) =>
+        flatLayout(aggsP) match {
           case Some(lay) =>
             changed = true
             val partial = RadixPartialAggExec(strip(gP), gAttr.dataType,

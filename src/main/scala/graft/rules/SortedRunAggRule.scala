@@ -52,13 +52,6 @@ object SortedRunAggRule extends Rule[SparkPlan] {
         }
     }
 
-  private def primitiveSlot(s: DriverAgg.Slot): Boolean = s match {
-    case DriverAgg.CountSlot(_, _) | DriverAgg.SumLSlot(_, _, _) |
-         DriverAgg.SumDSlot(_, _, _) | DriverAgg.AvgSlot(_, _, _) |
-         DriverAgg.MinMaxLSlot(_, _, _, _) | DriverAgg.MinMaxDSlot(_, _, _, _) => true
-    case _ => false
-  }
-
   private def topNSpecFor(limit: Int,
       order: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder],
       s: SortedRunAggExec): Option[SortedRunAggExec.TopNSpec] = {
@@ -84,7 +77,7 @@ object SortedRunAggRule extends Rule[SparkPlan] {
               Some(RunTopKey)
               else {
                 val j = s.aggAttrs.indexWhere(_.exprId == ar.exprId)
-                if (j >= 0 && primitiveSlot(s.slots(j))) Some(AggTopKey(j))
+                if (j >= 0 && graft.plans.SlotKernel.sortable(s.slots(j))) Some(AggTopKey(j))
                 else None
               }
             case _ => None
@@ -130,7 +123,7 @@ object SortedRunAggRule extends Rule[SparkPlan] {
           if (prefix.isEmpty || remainder.size > 1 ||
             !remainder.forall(a => RadixAgg.supportedKey(a.dataType) ||
               a.dataType == org.apache.spark.sql.types.StringType)) agg
-          else scala.util.Try(DriverAgg.layout(aggs)).toOption match {
+          else scala.util.Try(DriverAgg.layout(aggs)).toOption.filter(_.flat) match {
             case Some(lay) =>
               val exec = SortedRunAggExec(prefix, remainder.headOption,
                 remainder.headOption.map(_.dataType)

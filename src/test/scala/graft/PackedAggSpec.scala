@@ -196,11 +196,14 @@ class PackedAggSpec extends AnyFunSuite {
         .agg(sum(col("d").cast("decimal(20,2)")).as("x"))
       assert(dec.queryExecution.executedPlan.collect {
         case p: graft.plans.PackedFinalAggExec => p }.isEmpty)
-      // FILTER clause
-      val filt = data().groupBy("k", "s")
+      // a FILTER clause folds into the slot input and routes packed,
+      // with the stock plan's rows
+      def filt() = data().groupBy("k", "s")
         .agg(expr("sum(l) FILTER (WHERE d > 2)").as("x"))
-      assert(filt.queryExecution.executedPlan.collect {
-        case p: graft.plans.PackedFinalAggExec => p }.isEmpty)
+        .orderBy(col("k").asc_nulls_first, col("s").asc_nulls_first)
+      assert(filt().queryExecution.executedPlan.collect {
+        case p: graft.plans.PackedFinalAggExec => p }.nonEmpty)
+      assert(filt().collect().toSeq == packedOff(filt().collect().toSeq))
       // single long key stays on the radix route
       val single = data().groupBy("k").agg(sum(col("l")).as("x"))
       assert(single.queryExecution.executedPlan.collect {
