@@ -51,13 +51,7 @@ object BenchH2o {
     println(s"scaled_dir=$dir factor=$factor")
     graft.sources.H2oFixture.tables.foreach { t =>
       val view = if (t == "x") "h2o_x" else t
-      if (sys.env.get("GRAFT_H2O_WARM").contains("legacy")) {
-        // A/B arm: the pre-r15 bare cacheTable warm path (no stats
-        // metadata, parquet-layout partitioning)
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(view)
-        spark.catalog.cacheTable(view)
-        spark.table(view).count()
-      } else if (!sys.env.get("GRAFT_DS_CACHE").contains("0")) {
+      if (!sys.env.get("GRAFT_DS_CACHE").contains("0")) {
         // r15: the Tables() warm path (the engine's table format — same
         // as the TPC-H bench arm), not bare cacheTable: it attaches the
         // ndv/day-range statistics metadata that lets the bounded

@@ -14,8 +14,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * Usage: runMain graft.BoardPlanExplain <outDir> <tag> <query...>
   * Query names decide the board (h2o_* → H2oFixture, cb_* → HitsFixture).
   * Env: SPARK_GRAFT_H2O_FACTOR / SPARK_GRAFT_HITS_FACTOR (default 10/20),
-  * GRAFT_H2O_WARM=legacy for the bare-cacheTable warm arm, plus the
-  * per-rule GRAFT_NO_* hatches for "before" plans.
+  * plus the per-rule GRAFT_NO_* hatches for "before" plans.
   */
 object BoardPlanExplain {
   def main(args: Array[String]): Unit = {
@@ -48,14 +47,8 @@ object BoardPlanExplain {
         graft.sources.H2oFixture.ensureScaled(spark, factor))
       graft.sources.H2oFixture.tables.foreach { t =>
         val view = if (t == "x") "h2o_x" else t
-        if (sys.env.get("GRAFT_H2O_WARM").contains("legacy")) {
-          spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(view)
-          spark.catalog.cacheTable(view)
-          spark.table(view).count()
-        } else {
-          Tables.cacheMode = true
-          Tables(spark, dir, t).createOrReplaceTempView(view)
-        }
+        Tables.cacheMode = true
+        Tables(spark, dir, t).createOrReplaceTempView(view)
       }
     }
     if (names.exists(_.startsWith("cb_"))) {

@@ -107,6 +107,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // warm-mode cross-execution broadcast cache under AQE (no-op
     // otherwise; the non-AQE wrap lives in InsertCacheColumnarToRow)
     e.injectQueryStagePrepRule(_ => graft.plans.CachedBroadcastPrep)
+    // root ORDER BY → per-task sorted runs merged on the driver at
+    // collect (no range-sampling job). LAST, so it sees the plan every
+    // rule above left
+    e.injectQueryStagePrepRule(_ => graft.rules.MergeSortedCollect)
     e.injectPlanNormalizationRule(_ => graft.rules.RepairCachedOrdering)
     e.injectOptimizerRule(_ => graft.rules.RepairCachedOrdering)
     e.injectColumnar(_ => graft.rules.VectorizedCacheRead)

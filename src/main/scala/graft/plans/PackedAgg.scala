@@ -82,7 +82,10 @@ object PackedAgg {
     * values the task has proved cross-batch reuse is low (every batch
     * brings mostly new entries — the q15-class high-cardinality regime),
     * so the pair path permanently yields to the generic loop. Bounds
-    * intern memory AND the per-batch translation overhead.
+    * intern memory AND the per-batch translation overhead. The count is
+    * of every dictionary entry a batch translates, including entries no
+    * surviving row references (e.g. under a selective folded filter), so
+    * the budget can trip on values that are never grouped.
     */
   @volatile var pairInternCap: Int = 1 << 15
 
@@ -854,6 +857,8 @@ final case class PackedPartialAggExec(
                 }
                 var e = 0
                 while (e < es.length) { gm(e) = it.gidOf(es(e), eh(e)); e += 1 }
+                // every entry counts toward the budget, referenced by a
+                // surviving row or not (see PackedAgg.pairInternCap)
                 if (it.n > internCap) { pairDead = true; pairOk = false }
               }
               j += 1

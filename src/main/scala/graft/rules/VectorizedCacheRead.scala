@@ -229,10 +229,14 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
     val topFused = SortedRunAggRule.fuseTopN(fusedColumnar)
     // cross-execution dimension broadcast cache (warm mode, AQE off only —
     // see plans/CachedBroadcast.scala)
-    if (!graft.Tables.cacheMode || conf.adaptiveExecutionEnabled) topFused
-    else topFused.transformUp {
-      case b: BroadcastExchangeExec if CachedBroadcastExec.eligible(b.child) =>
-        CachedBroadcastExec(b)
-    }
+    val bcached =
+      if (!graft.Tables.cacheMode || conf.adaptiveExecutionEnabled) topFused
+      else topFused.transformUp {
+        case b: BroadcastExchangeExec if CachedBroadcastExec.eligible(b.child) =>
+          CachedBroadcastExec(b)
+      }
+    // root ORDER BY: per-task sorted runs merged at collect, LAST (same
+    // place as its query-stage-prep registration under AQE)
+    if (conf.adaptiveExecutionEnabled) bcached else MergeSortedCollect(bcached)
   }
 }

@@ -13,6 +13,18 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Streams in the codec `spark.io.compression.codec` names — the one
+    * `SparkPlan.executeCollect` compresses task results with;
+    * `CompressionCodec` is `private[spark]`, hence the bridge.
+    */
+  def compressedOutput(out: java.io.OutputStream): java.io.OutputStream =
+    org.apache.spark.io.CompressionCodec.createCodec(org.apache.spark.SparkEnv.get.conf)
+      .compressedOutputStream(out)
+
+  def compressedInput(in: java.io.InputStream): java.io.InputStream =
+    org.apache.spark.io.CompressionCodec.createCodec(org.apache.spark.SparkEnv.get.conf)
+      .compressedInputStream(in)
+
   /** DataFrame over an arbitrary (resolved) logical plan —
     * `classic.Dataset.ofRows` is `private[sql]`, hence the bridge.
     */

@@ -30,6 +30,20 @@ class QueryProfileSpec extends AnyFunSuite {
     assert(ids.min == 0)
   }
 
+  test("ORDER BY over a multi-partition aggregate: the merge node reports the group count") {
+    import spark.implicits._
+    val df = spark.range(0, 20000, 1, 4).selectExpr("id % 1000 AS k", "id AS v")
+      .groupBy(col("k")).agg(sum(col("v")).as("s")).orderBy(col("k"))
+    assert(MergeSortedCollectSpec.mergedRoot(df).isDefined,
+      df.queryExecution.executedPlan.toString.take(2000))
+    val prof = QueryProfile.profile(df).collect()
+    val rows = prof.filter(r =>
+      r.getString(1) == "MergeSortedCollect" && r.getString(2) == "numOutputRows")
+    assert(rows.map(_.getLong(3)).toSeq == Seq(1000L), prof.mkString("; "))
+    val named = prof.filter(_.getString(1) == "MergeSortedCollect").map(_.getString(2)).toSet
+    assert(Set("numOutputRows", "sortTime", "mergeTime").subsetOf(named), named)
+  }
+
   test("profile executes the df's own plan, not a rewritten count") {
     import spark.implicits._
     val df = (1 to 10).toDF("v").filter(col("v") > 5)
