@@ -15,6 +15,20 @@ import org.apache.spark.sql.SparkSession
   * Usage: SPARK_GRAFT_HITS_FACTOR=20 sbt "runMain graft.BenchClickBench [cb_qNN ...]"
   */
 object BenchClickBench {
+  /** Registers `hits` from `dir` as a temp view. `cached` uses the
+    * annotating loader (Tables): the columnar cache plus the NDV/day-range
+    * column metadata the stats-routed rules consume (BoundedKeyDriverAgg,
+    * SinglePhaseAgg); otherwise the view re-reads parquet cold.
+    */
+  def register(spark: SparkSession, dir: String, cached: Boolean): Unit =
+    if (cached) {
+      Tables.cacheMode = true
+      Tables(spark, dir, "hits").createOrReplaceTempView("hits")
+      spark.table("hits").count()
+    } else {
+      spark.read.parquet(s"$dir/hits.parquet").createOrReplaceTempView("hits")
+    }
+
   def main(args: Array[String]): Unit = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_HITS_FACTOR", "20").toLong
     val names = if (args.nonEmpty) args.toSeq
@@ -46,16 +60,7 @@ object BenchClickBench {
     val dir = sys.env.getOrElse("GRAFT_HITS_DIR",
       graft.sources.HitsFixture.ensureScaled(spark, factor))
     println(s"scaled_dir=$dir factor=$factor")
-    if (!sys.env.get("GRAFT_DS_CACHE").contains("0")) {
-      // the annotating loader (Tables): same columnar cache as before,
-      // plus the NDV/day-range column metadata the stats-routed rules
-      // consume (BoundedKeyDriverAgg, SinglePhaseAgg)
-      Tables.cacheMode = true
-      Tables(spark, dir, "hits").createOrReplaceTempView("hits")
-      spark.table("hits").count()
-    } else {
-      spark.read.parquet(s"$dir/hits.parquet").createOrReplaceTempView("hits")
-    }
+    register(spark, dir, cached = !sys.env.get("GRAFT_DS_CACHE").contains("0"))
     // probe gate: don't time in a degraded scheduler phase
     locally {
       val gate = sys.env.getOrElse("SPARK_GRAFT_PROBE_GATE_MS", "22").toDouble

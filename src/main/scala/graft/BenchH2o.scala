@@ -16,6 +16,25 @@ import org.apache.spark.sql.SparkSession
   * Usage: SPARK_GRAFT_H2O_FACTOR=100 sbt "runMain graft.BenchH2o [h2o_gNN ...]"
   */
 object BenchH2o {
+  /** Registers the fixture tables in `dir` as temp views (`x` as
+    * `h2o_x`). `cached` loads them through the warm Tables() path (the
+    * engine's table format — the same as the TPC-H bench arm), not bare
+    * cacheTable: it attaches the ndv/day-range statistics metadata that
+    * lets the bounded driver-finalized aggregate prove h2o's K=100
+    * string/int keys low-cardinality (g01/g04-class shapes route
+    * exchange-free). Otherwise the views re-read parquet cold.
+    */
+  def register(spark: SparkSession, dir: String, cached: Boolean): Unit =
+    graft.sources.H2oFixture.tables.foreach { t =>
+      val view = if (t == "x") "h2o_x" else t
+      if (cached) {
+        Tables.cacheMode = true
+        Tables(spark, dir, t).createOrReplaceTempView(view)
+      } else {
+        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(view)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_H2O_FACTOR", "100").toLong
     val names = if (args.nonEmpty) args.toSeq
@@ -49,20 +68,7 @@ object BenchH2o {
     val dir = sys.env.getOrElse("GRAFT_H2O_DIR",
       graft.sources.H2oFixture.ensureScaled(spark, factor))
     println(s"scaled_dir=$dir factor=$factor")
-    graft.sources.H2oFixture.tables.foreach { t =>
-      val view = if (t == "x") "h2o_x" else t
-      if (!sys.env.get("GRAFT_DS_CACHE").contains("0")) {
-        // r15: the Tables() warm path (the engine's table format — same
-        // as the TPC-H bench arm), not bare cacheTable: it attaches the
-        // ndv/day-range statistics metadata that lets the bounded
-        // driver-finalized aggregate prove h2o's K=100 string/int keys
-        // low-cardinality (g01/g04-class shapes route exchange-free)
-        Tables.cacheMode = true
-        Tables(spark, dir, t).createOrReplaceTempView(view)
-      } else {
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(view)
-      }
-    }
+    register(spark, dir, cached = !sys.env.get("GRAFT_DS_CACHE").contains("0"))
     println(f"probe_job_ms_before=${probeMs()}%.1f")
     def med(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
     val textMap = queries.H2oBoard.texts.toMap

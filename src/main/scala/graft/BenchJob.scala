@@ -32,6 +32,34 @@ import org.apache.spark.sql.SparkSession
   * Usage: SPARK_GRAFT_IMDB_FACTOR=20 sbt "runMain graft.BenchJob [job_NNx ...]"
   */
 object BenchJob {
+  /** Registers the fixture tables in `dir` as ANALYZE'd catalog tables.
+    * `buckets` lays the movie-keyed tables out bucketed+sorted on their
+    * join key (the warehouse layout for a fact-to-fact join chain) —
+    * every movie_id⋈movie_id/id SMJ then co-locates with no exchange and
+    * no sort. `cached` also pins each table in Spark's cache.
+    */
+  def register(spark: SparkSession, dir: String, buckets: Option[Int] = None,
+      cached: Boolean = false): Unit = {
+    val bucketKey: Map[String, String] = Map(
+      "title" -> "id", "movie_companies" -> "movie_id",
+      "movie_keyword" -> "movie_id", "movie_info" -> "movie_id",
+      "movie_info_idx" -> "movie_id", "cast_info" -> "movie_id")
+    graft.sources.ImdbFixture.tables.foreach { t =>
+      (buckets, bucketKey.get(t)) match {
+        case (Some(n), Some(k)) =>
+          spark.read.parquet(s"$dir/$t.parquet")
+            .write.bucketBy(n, k).sortBy(k).format("parquet").saveAsTable(t)
+        case _ =>
+          spark.sql(s"CREATE TABLE IF NOT EXISTS $t USING parquet LOCATION '$dir/$t.parquet'")
+      }
+      spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
+      if (cached) {
+        spark.catalog.cacheTable(t)
+        spark.table(t).count()
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_IMDB_FACTOR", "20").toLong
     val names = if (args.nonEmpty) args.toSeq else queries.JobSlice.texts.map(_._1)
@@ -66,30 +94,10 @@ object BenchJob {
     }
     val dir = graft.sources.ImdbFixture.ensureScaled(spark, factor)
     println(s"scaled_dir=$dir factor=$factor")
-    // GRAFT_JOB_BUCKETS=N: lay the movie-keyed tables out bucketed+sorted
-    // on their join key (the warehouse layout for a fact-to-fact join
-    // chain) — every movie_id⋈movie_id/id SMJ then co-locates with no
-    // exchange and no sort. One-time layout cost, reported separately.
+    // GRAFT_JOB_BUCKETS=N: lay the movie-keyed tables out bucketed
     val buckets = sys.env.get("GRAFT_JOB_BUCKETS").map(_.toInt)
-    val bucketKey: Map[String, String] = Map(
-      "title" -> "id", "movie_companies" -> "movie_id",
-      "movie_keyword" -> "movie_id", "movie_info" -> "movie_id",
-      "movie_info_idx" -> "movie_id", "cast_info" -> "movie_id")
     val t0s = System.nanoTime()
-    graft.sources.ImdbFixture.tables.foreach { t =>
-      (buckets, bucketKey.get(t)) match {
-        case (Some(n), Some(k)) =>
-          spark.read.parquet(s"$dir/$t.parquet")
-            .write.bucketBy(n, k).sortBy(k).format("parquet").saveAsTable(t)
-        case _ =>
-          spark.sql(s"CREATE TABLE $t USING parquet LOCATION '$dir/$t.parquet'")
-      }
-      spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
-      if (sys.env.get("GRAFT_DS_CACHE").contains("1")) {
-        spark.catalog.cacheTable(t)
-        spark.table(t).count()
-      }
-    }
+    register(spark, dir, buckets, cached = sys.env.get("GRAFT_DS_CACHE").contains("1"))
     println(f"analyze_all_tables_s=${(System.nanoTime() - t0s) / 1e9}%.1f" +
       buckets.map(n => s" buckets=$n").getOrElse(""))
     locally {

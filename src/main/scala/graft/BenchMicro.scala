@@ -41,39 +41,40 @@ object BenchMicro {
     ("stock_large_groupby", "micro_large_groupby"),
     ("stock_join_key_cast", "micro_join_key_cast"))
 
-  /** (shape name, flag setter, anchor query, plan substring proving the
-    * rule fired; null = perf-only pair with no structural pin).
+  /** (shape name, the `spark.graft.disabled` name it toggles, anchor
+    * query, plan substring proving the rule fired; null = perf-only pair
+    * with no structural pin).
     */
-  private def shapes: Seq[(String, Boolean => Unit, String, String)] = Seq(
-    ("vector_read", v => rules.InsertCacheColumnarToRow.enabled = v,
+  private def shapes: Seq[(String, String, String, String)] = Seq(
+    ("vector_read", "VectorizedCacheRead",
       "q1_pricing_summary", null),
-    ("radix_agg", v => rules.RadixShuffleAgg.enabled = v,
+    ("radix_agg", "RadixShuffleAgg",
       "h2o_range_agg", "RadixPartialAgg"),
-    ("packed_agg", v => rules.PackedShuffleAgg.enabled = v,
+    ("packed_agg", "PackedShuffleAgg",
       "cb_count_distinct_pairs", "PackedPartialAgg"),
-    ("packed_selection", v => plans.PackedAgg.selectionFoldEnabled = v,
+    ("packed_selection", "PackedAgg.selectionFold",
       "cb_q15", null),
-    ("sorted_run", v => rules.SortedRunAggRule.enabled = v,
+    ("sorted_run", "SortedRunAggRule",
       "cb_filter_multi_agg", "SortedRunAgg"),
-    ("bounded_driver_agg", v => rules.BoundedKeyDriverAgg.enabled = v,
+    ("bounded_driver_agg", "BoundedKeyDriverAgg",
       "cb_date_histogram", "DriverGroupAgg"),
-    ("driveragg_columnar", v => rules.InsertCacheColumnarToRow.driverAggColumnarEnabled = v,
+    ("driveragg_columnar", "DriverAgg.columnar",
       "cb_date_histogram", null),
-    ("dict_keys", v => plans.DriverAgg.dictKeysEnabled = v,
+    ("dict_keys", "DriverAgg.dictKeys",
       "thq01", null),
-    ("direct_str_key", v => plans.DriverAgg.directStringArm = v,
+    ("direct_str_key", "DriverAgg.directStringKey",
       "cb_q13", null),
-    ("fused_distinct", v => rules.FuseSingleDistinct.enabled = v,
+    ("fused_distinct", "FuseSingleDistinct",
       "h2o_count_distinct", "Distinct"),
-    ("topn_through_agg", v => rules.TopNThroughAgg.enabled = v,
+    ("topn_through_agg", "TopNThroughAgg",
       "topk_lineitem", null),
-    ("session_count", v => rules.SessionCountRule.enabled = v,
+    ("session_count", "SessionCountRule",
       "events_sessionize_lag", null),
-    ("stream_window", v => rules.InsertCacheColumnarToRow.streamWindowEnabled = v,
+    ("stream_window", "StreamingWindow",
       "window_lead_lag", null),
-    ("fast_regex", v => rules.FastRegexpExtract.enabled = v,
+    ("fast_regex", "FastRegexpExtract",
       "cb_regex_key", null),
-    ("fast_percentile", v => rules.FastPercentileRule.enabled = v,
+    ("fast_percentile", "FastPercentileRule",
       "agg_quantiles", "fast_percentile"),
     // no plan pin: standalone CacheFilterExec no longer survives in the
     // gated plans (the agg partials fold it as a DictSelection — r14's
@@ -81,17 +82,17 @@ object BenchMicro {
     // DictFilterSpec pins the node structurally at unit level. On cb_q15
     // the toggle still gates whether the packed partial can fold at all
     // (its fold matches CacheFilterExec, which this rule produces).
-    ("dict_filter", v => rules.DictFilterScan.enabled = v,
+    ("dict_filter", "DictFilterScan",
       "cb_q15", null),
-    ("single_phase", v => rules.SinglePhaseAgg.enabled = v,
+    ("single_phase", "SinglePhaseAgg",
       "cb_q16", null),
-    ("collapse_agg", v => rules.CollapsePartialAggregate.enabled = v,
+    ("collapse_agg", "CollapsePartialAggregate",
       "q18_large_volume", null),
-    ("ungrouped_driver_agg", v => rules.BoundedKeyDriverAgg.ungroupedEnabled = v,
+    ("ungrouped_driver_agg", "DriverAgg.ungrouped",
       "micro_ref_scan", "DriverGroupAgg"),
-    ("str_bcast_join", v => rules.StringBcastJoinRule.enabled = v,
+    ("str_bcast_join", "StringBcastJoinRule",
       "h2o_j04", "StringBcastJoin"),
-    ("window_topk", v => rules.WindowTopKToAgg.enabled = v,
+    ("window_topk", "WindowTopKToAgg",
       "window_topk_group", "graft_top_k_rows"))
 
   private def floorsPath = ToolPaths.toolsDir.resolve("micro_floors.json")
@@ -130,8 +131,11 @@ object BenchMicro {
 
     var failures = 0
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    shapes.foreach { case (shape, set, qname, node) =>
+    shapes.foreach { case (shape, arm, qname, node) =>
       val fn = SparkEntry.queries(qname)
+      def set(on: Boolean): Unit =
+        if (on) spark.conf.unset("spark.graft.disabled")
+        else spark.conf.set("spark.graft.disabled", arm)
       set(true)
       if (node != null) {
         val plan = fn(spark, sfDir).queryExecution.executedPlan.toString

@@ -74,33 +74,8 @@ object BenchTpcdsScale {
     // its fact tables sit in the OS page cache either way, but Spark's
     // per-run parquet decode is real work the cache removes)
     if (sys.env.get("GRAFT_DS_CACHE").contains("1")) {
-      // declared warehouse layout (the TPC-H lineitem-by-l_orderkey and
-      // ClickBench hits-by-UserID argument applied to TPC-DS): each
-      // sales channel and its returns twin hash-cluster on the order/
-      // ticket key, sorted by (order, item). MEASURED MIXED at x10
-      // (same-hour consecutive arms): dsq95 0.90x, dsq23 0.86x, dsq14
-      // 0.89x, dsq75 wash — but dsq78 1.24x WORSE (its
-      // (item, customer)-keyed aggregation pays the order-key layout) —
-      // so the arm is OPT-IN via GRAFT_DS_CLUSTER=1, not the default.
-      val clusterKeys: Map[String, (String, Seq[String])] =
-        if (!sys.env.get("GRAFT_DS_CLUSTER").contains("1")) Map.empty
-        else Map(
-          "web_sales" -> ("ws_order_number", Seq("ws_order_number", "ws_item_sk")),
-          "web_returns" -> ("wr_order_number", Seq("wr_order_number", "wr_item_sk")),
-          "catalog_sales" -> ("cs_order_number", Seq("cs_order_number", "cs_item_sk")),
-          "catalog_returns" -> ("cr_order_number", Seq("cr_order_number", "cr_item_sk")),
-          "store_sales" -> ("ss_ticket_number", Seq("ss_ticket_number", "ss_item_sk")),
-          "store_returns" -> ("sr_ticket_number", Seq("sr_ticket_number", "sr_item_sk")))
-      import org.apache.spark.sql.functions.col
       graft.sources.TpcdsFixture.tables.foreach { t =>
-        clusterKeys.get(t) match {
-          case Some((pk, sk)) =>
-            spark.read.parquet(s"$dir/$t.parquet")
-              .repartition(32, col(pk))
-              .sortWithinPartitions(sk.map(col): _*)
-              .cache().createOrReplaceTempView(t)
-          case None => spark.catalog.cacheTable(t)
-        }
+        spark.catalog.cacheTable(t)
         spark.table(t).count()
       }
     }

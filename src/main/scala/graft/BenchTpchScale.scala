@@ -19,6 +19,23 @@ import org.apache.spark.sql.SparkSession
   * Usage: SPARK_GRAFT_TPCH_FACTOR=100 sbt "runMain graft.BenchTpchScale [thqNN ...]"
   */
 object BenchTpchScale {
+  /** Registers the fixture tables in `dir` as temp views. `cached` is the
+    * warm-engine protocol (the state the repo's other sf1 pairings run
+    * in, and the warehouse buffer-pool state BASELINE.md measures DuckDB
+    * in): the tables go through Tables() — hash-clustered + sorted
+    * columnar cache with day-range/ndv statistics metadata. Otherwise
+    * the views re-read parquet cold.
+    */
+  def register(spark: SparkSession, dir: String, cached: Boolean): Unit =
+    graft.sources.TpchFixture.tables.foreach { t =>
+      if (cached) {
+        Tables.cacheMode = true
+        Tables(spark, dir, t).createOrReplaceTempView(t)
+      } else {
+        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_TPCH_FACTOR", "100").toLong
     val names = if (args.nonEmpty) args.toSeq
@@ -66,40 +83,14 @@ object BenchTpchScale {
         }.sorted; t(t.length / 2) }
       }
     }
-    // warm-engine protocol (the state the repo's other sf1 pairings run
-    // in, and the warehouse buffer-pool state BASELINE.md measures DuckDB
-    // in): route the fixture tables through Tables() — hash-clustered +
-    // sorted columnar cache with day-range/ndv statistics metadata — and
-    // register the temp views off those DataFrames. GRAFT_DS_CACHE=0
-    // for the cold-parquet arm.
-    if (!sys.env.get("GRAFT_DS_CACHE").contains("0")) {
-      Tables.cacheMode = true
-      graft.sources.TpchFixture.tables.foreach { t =>
-        Tables(spark, dir, t).createOrReplaceTempView(t)
-      }
-    } else {
-      graft.sources.TpchFixture.tables.foreach { t =>
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-      }
-    }
+    // GRAFT_DS_CACHE=0 for the cold-parquet arm
+    register(spark, dir, cached = !sys.env.get("GRAFT_DS_CACHE").contains("0"))
     println(f"probe_job_ms_before=${probeMs()}%.1f")
 
     def med(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
-    // materialized-CTE arm (BenchTpcdsScale convention), DEFAULT OFF for
-    // TPC-H: thq15's `revenue` CTE is inlined twice (main join + max()
-    // scalar subquery), but it covers only ~4% of lineitem, and the r14
-    // interleaved check measured the persist/count/unpersist roundtrip a
-    // wash-to-loss (509 vs 545 ms) — unlike TPC-DS's year_total towers
-    // where the same arm wins 1.3-1.7x. GRAFT_TH_CTE=1 opts in.
-    val cteArm = sys.env.get("GRAFT_TH_CTE").contains("1")
     names.foreach { name =>
       val sql = queries.TpchVerbatim.texts(name)
-      def once(): Unit =
-        if (cteArm)
-          graft.plans.CteMaterializer.withMaterializedCtes(spark, sql) {
-            spark.sql(sql).collect(): Unit
-          }
-        else spark.sql(sql).collect(): Unit
+      def once(): Unit = spark.sql(sql).collect(): Unit
       (1 to 2).foreach(_ => once())
       val ts = (1 to 5).map { _ =>
         val t0 = System.nanoTime()

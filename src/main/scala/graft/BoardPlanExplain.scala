@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * Usage: runMain graft.BoardPlanExplain <outDir> <tag> <query...>
   * Query names decide the board (h2o_* → H2oFixture, cb_* → HitsFixture).
   * Env: SPARK_GRAFT_H2O_FACTOR / SPARK_GRAFT_HITS_FACTOR (default 10/20),
-  * plus the per-rule GRAFT_NO_* hatches for "before" plans.
+  * plus `-Dspark.graft.disabled=<rule,...>` (see GraftConf) for "before"
+  * plans.
   */
 object BoardPlanExplain {
   def main(args: Array[String]): Unit = {

@@ -22,6 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, name)
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftConf.register()
     def inject(name: String, builder: Seq[Expression] => Expression): Unit =
       e.injectFunction((FunctionIdentifier(name), info(name), builder))
     inject("cosine_similarity", a => CosineSimilarity(a(0), a(1)))
@@ -79,10 +80,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // key pair; implied equalities become cheap filters. FIRST so the
     // downstream join rules see the narrowed single-key joins
     e.injectQueryStagePrepRule(_ => graft.rules.DedupJoinKeys)
-    // consecutive single-int-key broadcast inner joins fuse into one
-    // probe pass (plans/IntChainJoin.scala — the JOB deep-join lane);
-    // BEFORE the string rule so chains claim whole spines first
-    e.injectQueryStagePrepRule(_ => graft.rules.IntChainJoinRule)
     // single-string-key broadcast inner joins probe the columnar cache
     // dictionary-first (plans/StringBcastJoin.scala)
     e.injectQueryStagePrepRule(_ => graft.rules.StringBcastJoinRule)
@@ -107,6 +104,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // warm-mode cross-execution broadcast cache under AQE (no-op
     // otherwise; the non-AQE wrap lives in InsertCacheColumnarToRow)
     e.injectQueryStagePrepRule(_ => graft.plans.CachedBroadcastPrep)
+    // exchanges above radix/packed partials report no runtime row count
+    // (one record per state blob, not per group); after every rule that
+    // builds or copies them
+    e.injectQueryStagePrepRule(_ => graft.plans.BlobShufflePrep)
     // root ORDER BY → per-task sorted runs merged on the driver at
     // collect (no range-sampling job). LAST, so it sees the plan every
     // rule above left

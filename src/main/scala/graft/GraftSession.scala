@@ -61,8 +61,7 @@ object GraftSession {
     // (measured 160 ns/row; the hash path is the reference's behavior —
     // DuckDB never sorts for quantile grouping). 128k keeps the safety
     // valve for genuinely huge group counts.
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "131072"))
+    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
     // Never take the bypass-merge shuffle writer: with numPartitions ≤
     // 200 (bench local mode sizes reducers to cores or below) it creates
     // ONE FILE PER REDUCER PER MAP TASK and concatenates — measured
@@ -72,10 +71,9 @@ object GraftSession {
     // Threshold 0 routes every exchange through the Unsafe/sort writer —
     // one spill file per task — which is ALSO the only path a real
     // cluster ever takes (reducers > 200 skip bypass by construction),
-    // so local bench behavior now matches warehouse behavior.
-    // GRAFT_SHUFFLE_BYPASS restores a custom threshold for A/Bs.
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("GRAFT_SHUFFLE_BYPASS", "0"))
+    // so local bench behavior now matches warehouse behavior. Both
+    // settings are plain Spark confs: a caller's later .config wins.
+    .config("spark.shuffle.sort.bypassMergeThreshold", "0")
     .config("spark.local.dir", sys.env.getOrElse("GRAFT_LOCAL_DIR", {
       val shm = java.nio.file.Paths.get("/dev/shm")
       val headroom =

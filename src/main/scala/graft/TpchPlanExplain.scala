@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * optimization evidence for plans/rNN/. Not part of the driver protocol.
   *
   * Usage: runMain graft.TpchPlanExplain <outDir> <tag> <thqNN...>
-  * Env: SPARK_GRAFT_TPCH_FACTOR (default 100) + GRAFT_NO_* rule hatches.
+  * Env: SPARK_GRAFT_TPCH_FACTOR (default 100); `-Dspark.graft.disabled=`
+  * (see GraftConf) for "before" plans.
   */
 object TpchPlanExplain {
   def main(args: Array[String]): Unit = {

@@ -56,7 +56,11 @@ final case class SingleDistinctPartial(
     copy(child = c)
 }
 
-object SingleDistinctPartial {
+object SingleDistinctPartial extends org.apache.spark.internal.Logging {
+  /** Per-partition rows, loop time and distinct keys of the columnar
+    * partial, at DEBUG. */
+  private[plans] def debug(msg: => String): Unit = logDebug(msg)
+
   val KindCountStar = "count_star"
   val KindCount = "count"
   val KindSum = "sum"
@@ -289,7 +293,6 @@ final case class SingleDistinctPartialExec(
         case (a: Attribute, _) => child.output.indexWhere(_.exprId == a.exprId)
         case _ => -1
       }
-      val debug = sys.env.get("GRAFT_DISTINCT_DEBUG").contains("1")
       child.executeColumnar().mapPartitions { batches =>
         val t0 = System.nanoTime()
         var nRows = 0L
@@ -395,17 +398,12 @@ final case class SingleDistinctPartialExec(
             i += 1
           }
         }
-        val t1 = System.nanoTime()
-        val out = emit(acc, valueTypes)
-        if (debug) {
-          val buffered = out.toArray
-          System.err.println(f"[distinct-partial] rows=$nRows batches=$nBatches " +
-            f"loopMs=${(t1 - t0) / 1e6}%.1f emitMs=${(System.nanoTime() - t1) / 1e6}%.1f " +
-            f"keys=${acc.sets.map(_.size).sum +
-              (if (acc.bitmap == null) 0L
-               else acc.bitmap.map(java.lang.Long.bitCount(_).toLong).sum)}")
-          buffered.iterator
-        } else out
+        SingleDistinctPartial.debug(f"rows=$nRows batches=$nBatches " +
+          f"loopMs=${(System.nanoTime() - t0) / 1e6}%.1f " +
+          f"keys=${acc.sets.map(_.size).sum +
+            (if (acc.bitmap == null) 0L
+             else acc.bitmap.map(java.lang.Long.bitCount(_).toLong).sum)}")
+        emit(acc, valueTypes)
       }
     } else {
       val boundD = BindReferences.bindReference(distinct, child.output)

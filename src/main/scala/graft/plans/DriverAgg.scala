@@ -2,6 +2,8 @@ package graft.plans
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.GraftConf
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -124,49 +126,36 @@ object DriverAgg {
     */
   private[plans] val maxDistinctCap = 1 << 16
 
-  /** Dense direct-index partial for single calendar-bucket keys — the
-    * perfect-hash aggregate proper (reference:
-    * physical_perfecthash_aggregate.cpp direct-indexes group state by
-    * the proven key range). Escape hatch for A/B + differential specs.
+  /** Arms of the batch partial a [[DriverGroupAggExec]] freezes at
+    * planning time (each a `spark.graft.disabled` name, see
+    * [[graft.GraftConf]]):
+    *  - `denseCalendar` (`DriverAgg.denseCalendar`): dense direct-index
+    *    partial for single calendar-bucket keys — the perfect-hash
+    *    aggregate proper (reference: physical_perfecthash_aggregate.cpp
+    *    direct-indexes group state by the proven key range);
+    *  - `directStringKey` (`DriverAgg.directStringKey`): dense
+    *    single-string-key grouping indexed by intern id (no per-row hash
+    *    probe) — the perfect-hash group-by over the interned domain;
+    *  - `dictKeys` (`DriverAgg.dictKeys`): when a string key column is
+    *    served dictionary-encoded by the cache, per-batch dictionary ids
+    *    remap to task-level intern ids once per batch and rows key by an
+    *    int-array read — the reference's DICTIONARY-vector aggregation
+    *    (reference: src/include/duckdb/common/enums/vector_type.hpp:15-21,
+    *    physical_hash_aggregate.cpp over dictionary vectors);
+    *  - `exprVec` (`DriverAgg.exprVec`): compiled double-expression
+    *    inputs (the q1 disc_price/charge shape): {col, lit, +, -, ×,
+    *    cast-to-double} trees evaluate straight off the vectors in the
+    *    plan's exact shape (bit-identical IEEE result), instead of routing
+    *    EVERY input through the per-row UnsafeProjection when any one
+    *    input is an expression.
     */
-  @volatile var denseCalendarEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_DENSE_CAL").contains("1")
+  final case class Arms(denseCalendar: Boolean, directStringKey: Boolean,
+      dictKeys: Boolean, exprVec: Boolean)
 
-  /** Dict-id group keys in the batch partial: when a string key column
-    * is served dictionary-encoded by the cache, per-batch dictionary ids
-    * remap to task-level intern ids once per batch and rows key by an
-    * int-array read — the reference's DICTIONARY-vector aggregation
-    * (reference: src/include/duckdb/common/enums/vector_type.hpp:15-21,
-    * physical_hash_aggregate.cpp over dictionary vectors). Escape hatch
-    * for A/B + differential specs.
-    */
-  /** Dense single-string-key grouping: index groups directly by intern id
-    * (no per-row hash probe) — the perfect-hash group-by applied to the
-    * interned string domain. Escape hatch: GRAFT_NO_DIRECT_STR_KEY=1.
-    */
-  @volatile var directStringArm: Boolean =
-    !sys.env.get("GRAFT_NO_DIRECT_STR_KEY").contains("1")
-
-  @volatile var dictKeysEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_DICT_KEYS").contains("1")
-
-  /** Compiled double-expression aggregate inputs in the batch partial
-    * (the q1 disc_price/charge shape): {col, lit, +, -, ×, cast-to-
-    * double} trees evaluate straight off the vectors in the plan's
-    * exact shape (bit-identical IEEE result), instead of routing EVERY
-    * input through the per-row UnsafeProjection when any one input is
-    * an expression. Escape hatch for A/B + differential specs.
-    */
-  @volatile var exprVecEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_EXPR_VEC").contains("1")
-
-  /** Filter fold into the batch partial ([[graft.rules
-    * .InsertCacheColumnarToRow]] replaces Filter-over-cache-scan children
-    * with a per-batch [[DictSelection]] inside the partial loop — the
-    * selection-pushed scan the reference's table scan performs).
-    */
-  @volatile var aggSelectionEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_AGG_SELECTION").contains("1")
+  /** The active session's [[Arms]]. */
+  def arms(): Arms = Arms(GraftConf.enabled("DriverAgg.denseCalendar"),
+    GraftConf.enabled("DriverAgg.directStringKey"), GraftConf.enabled("DriverAgg.dictKeys"),
+    GraftConf.enabled("DriverAgg.exprVec"))
 
   // ---- vector-direct aggregate-input plans ---------------------------
   /** Per-input access plan for the batch partial: DirectIn reads the
@@ -605,7 +594,7 @@ object DriverAggStrategy extends SparkStrategy {
     case p: DriverGroupAggPlan =>
       DriverGroupAggExec(p.groupExprs, p.aggInputs, p.slots, p.aggTypes,
         p.finalExprs, p.sortOrder, p.limit, p.maxGroups, p.nL, p.nD, p.nF, p.nS, p.nO,
-        p.output, planLater(p.child), p.fallback, p.ansi) :: Nil
+        p.output, planLater(p.child), p.fallback, p.ansi, DriverAgg.arms()) :: Nil
     case _ => Nil
   }
 }
@@ -628,6 +617,7 @@ final case class DriverGroupAggExec(
     // analyzed LogicalPlan holds non-serializable file indexes.
     @transient fallback: LogicalPlan,
     ansi: Boolean,
+    arms: DriverAgg.Arms,
     // batch-direct partial (InsertCacheColumnarToRow peels the transition
     // when the keys columnar-translate — see DriverAgg.colKeyParts)
     columnarChild: Boolean = false,
@@ -672,7 +662,7 @@ final case class DriverGroupAggExec(
   private def denseCalendarSpec: Option[(DriverAgg.CalendarKeyPart, Array[Int])] = {
     // a folded selection routes through the generic batch partial (whose
     // loop evaluates it); the dense arm stays filter-free
-    if (!DriverAgg.denseCalendarEnabled || nS != 0 || nO != 0 ||
+    if (!arms.denseCalendar || nS != 0 || nO != 0 ||
       selection.nonEmpty) return None
     DriverAgg.colKeyParts(groupExprs, child.output) match {
       case Some(Seq(c: DriverAgg.CalendarKeyPart)) =>
@@ -815,14 +805,15 @@ final case class DriverGroupAggExec(
     val keyTypes = groupExprs.map(_.dataType).toArray
     val selPreds: Array[Expression] =
       if (selection.nonEmpty) selection.toArray else null
-    val dictKeys = DriverAgg.dictKeysEnabled
+    val dictKeys = arms.dictKeys
+    val directStringKey = arms.directStringKey
     // per-input access plans: direct column or compiled double tree; the
     // vector arm engages only when every input has one (else the rows go
     // through the value projection)
     val inPlans: Array[DriverAgg.InPlan] = iExprs.map {
       case a: AttributeReference if childOut.exists(_.exprId == a.exprId) =>
         DriverAgg.DirectIn(childOut.indexWhere(_.exprId == a.exprId))
-      case e if DriverAgg.exprVecEnabled =>
+      case e if arms.exprVec =>
         DriverAgg.compileDouble(e, childOut).orNull
       case _ => null
     }.toArray
@@ -879,7 +870,7 @@ final case class DriverGroupAggExec(
         idx
       }
       // dense single-string-key arm state (see the directArm loop below)
-      val directArm = DriverAgg.directStringArm &&
+      val directArm = directStringKey &&
         nParts == 1 && partsSpec(0).isInstanceOf[DriverAgg.StringKeyPart]
       var directIdx: Array[Int] = if (directArm) Array.fill(1 << 12)(-1) else null
       var nullGroup = -1

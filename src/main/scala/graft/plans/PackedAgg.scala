@@ -38,7 +38,7 @@ import scala.collection.mutable.ArrayBuffer
   * O(buckets × partitions) rows; reducers own disjoint hash slices and
   * merge blobs into a dense map.
   *
-  * Scale posture: map memory is bounded by [[RadixAgg.FlushCap]] groups
+  * Scale posture: map memory is bounded by `Tuning.flushGroups` groups
   * and [[PackedAgg.PoolFlushBytes]] of interned string bytes — past
   * either, the map flushes as blobs and resets (blob merge is
   * associative). Reducer state is total-groups/buckets; `buckets`
@@ -57,14 +57,19 @@ object PackedAgg {
   /** Interned-string pool bytes per map before a flush-and-reset. */
   val PoolFlushBytes: Int = 64 << 20
 
-  /** Dict-id key fast path in the columnar partial (per-batch entry
-    * hashing over dictionary-served string keys). Escape hatch:
-    * GRAFT_NO_PACKED_DICT_KEYS=1.
-    */
-  @volatile var dictKeysEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_PACKED_DICT_KEYS").contains("1")
-
-  /** 2-key pair→slot memo in the columnar partial: string keys served
+  /** Settings a packed partial freezes at planning time (see
+    * [[graft.GraftConf]]):
+    *  - `flushGroups`: the map flushes as blobs and resets past this
+    *    many groups (`spark.graft.agg.flushGroups`);
+    *  - `checkRows`: rows before the adaptive partial skip decides
+    *    (below; `spark.graft.agg.passThroughCheckRows`);
+    *  - `dictKeys`: dict-id key fast path in the columnar partial
+    *    (per-batch entry hashing over dictionary-served string keys;
+    *    arm `PackedAgg.dictKeys`);
+    *  - `pairKeys`: the 2-key pair→slot memo (below; arm
+    *    `PackedAgg.pairKeys`).
+    *
+    * The pair memo: string keys served
     * from a batch dictionary are interned into a per-task global id
     * space (DictStore ids are per-batch, so cross-batch pair identity
     * needs the translation), long keys pair by value, and the composite
@@ -72,11 +77,34 @@ object PackedAgg {
     * skip the staged hash + byte-compare probe entirely (the reference
     * engine's dictionary-vector grouping resolves each distinct entry
     * once per vector, src/common/types/vector.cpp). Slots move on map
-    * growth/reset, so memos are generation-checked. Escape hatch:
-    * GRAFT_NO_PACKED_PAIR_KEYS=1.
+    * growth/reset, so memos are generation-checked.
+    *
+    * Adaptive partial skip — DuckDB's no-reduction bailout (reference:
+    * radix_partitioned_hashtable.cpp abandons local aggregation when the
+    * observed group/row ratio shows the hash phase reduces nothing).
+    * After `checkRows` rows, if the map holds more than
+    * [[PassThroughGroupRatio]] × rows groups, the partial emits what it
+    * has and switches to PASS-THROUGH: each further row appends straight
+    * to its bucket's blob builder as a one-row group fragment (the state
+    * block is the singleton accumulator), skipping the map probe the
+    * groups≈rows regime wastes. Blob merge is associative, so map-phase and
+    * pass-through fragments coexist.
     */
-  @volatile var pairKeysEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_PACKED_PAIR_KEYS").contains("1")
+  final case class Tuning(flushGroups: Int, checkRows: Int,
+      dictKeys: Boolean, pairKeys: Boolean)
+
+  /** Groups per row read above which the partial skip passes rows
+    * through (see [[Tuning]]). */
+  val PassThroughGroupRatio: Double = 0.75
+
+  /** The active session's [[Tuning]]. */
+  def tuning(): Tuning = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    Tuning(conf.getConf(graft.GraftConf.FlushGroups),
+      conf.getConf(graft.GraftConf.PassThroughCheckRows),
+      graft.GraftConf.enabled("PackedAgg.dictKeys"),
+      graft.GraftConf.enabled("PackedAgg.pairKeys"))
+  }
 
   /** Pair-key intern budget per string key: past this many distinct
     * values the task has proved cross-batch reuse is low (every batch
@@ -87,40 +115,7 @@ object PackedAgg {
     * surviving row references (e.g. under a selective folded filter), so
     * the budget can trip on values that are never grouped.
     */
-  @volatile var pairInternCap: Int = 1 << 15
-
-  /** CacheFilter fold into the packed partial's batch loop (per-batch
-    * DictSelection instead of row-at-a-time filter + projection).
-    * Escape hatch: GRAFT_NO_PACKED_SELECTION=1.
-    */
-  @volatile var selectionFoldEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_PACKED_SELECTION").contains("1")
-
-  /** Test hook: when > 0, overrides the group-count flush threshold
-    * ([[RadixAgg.FlushCap]]) of the packed AND radix partials so specs
-    * can exercise the multi-blob merge path without 2M-group inputs.
-    */
-  @volatile var flushCapOverride: Int = 0
-
-  private[plans] def flushCap: Int =
-    if (flushCapOverride > 0) flushCapOverride else RadixAgg.FlushCap
-
-  /** Adaptive partial skip — DuckDB's no-reduction bailout (reference:
-    * radix_partitioned_hashtable.cpp abandons local aggregation when the
-    * observed group/row ratio shows the hash phase reduces nothing).
-    * After [[passThroughCheckRows]] rows, if the map holds more than
-    * [[passThroughGroupRatio]] × rows groups, the partial emits what it
-    * has and switches to PASS-THROUGH: each further row appends straight
-    * to its bucket's blob builder as a one-row group fragment (the state
-    * block is the singleton accumulator), skipping the map probe the
-    * groups≈rows regime wastes. Blob merge is associative, so map-phase
-    * and pass-through fragments coexist. GRAFT_NO_PACKED_PASSTHROUGH=1
-    * disables (A/B hatch).
-    */
-  @volatile var passThroughEnabled: Boolean =
-    !sys.env.get("GRAFT_NO_PACKED_PASSTHROUGH").contains("1")
-  @volatile var passThroughCheckRows: Int = 1 << 16
-  @volatile var passThroughGroupRatio: Double = 0.75
+  val PairInternCap: Int = 1 << 15
 
   /** Pass-through blob builder emit threshold (record + string bytes). */
   private[plans] val BuilderEmitBytes: Int = 256 << 10
@@ -522,7 +517,8 @@ final case class PackedPartialAggExec(
     ansi: Boolean,
     // folded CacheFilter conjuncts, evaluated per batch through
     // DictSelection (columnar path only) — set by InsertCacheColumnarToRow
-    selection: Seq[Expression] = Nil) extends UnaryExecNode {
+    selection: Seq[Expression] = Nil,
+    tuning: PackedAgg.Tuning) extends UnaryExecNode {
   import PackedAgg._
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -673,9 +669,9 @@ final case class PackedPartialAggExec(
     val theSub = subIdx
     val (kLK, kSK, kN) = (nLK, nSK, nKeys)
     val (recB, blockB, nBuckets) = (recBytes, blockBytes, buckets)
-    val ptEnabled = passThroughEnabled
-    val ptCheckRows = passThroughCheckRows.toLong
-    val ptRatio = passThroughGroupRatio
+    val ptCheckRows = tuning.checkRows.toLong
+    val ptRatio = PackedAgg.PassThroughGroupRatio
+    val flushCap = tuning.flushGroups
     if (columnarChild) {
       val kOrds = keyExprs.map { case a: Attribute =>
         childOut.indexWhere(_.exprId == a.exprId) }.toArray
@@ -693,17 +689,17 @@ final case class PackedPartialAggExec(
         case _ => false
       }.toArray
       val selPreds = if (selection.isEmpty) null else selection.toArray
-      val dictKeys = PackedAgg.dictKeysEnabled
-      val pairKeys = PackedAgg.pairKeysEnabled && kN == 2 && kSK >= 1 && dictKeys
+      val dictKeys = tuning.dictKeys
+      val pairKeys = tuning.pairKeys && kN == 2 && kSK >= 1 && dictKeys
       child.executeColumnar().mapPartitions { batches =>
         val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
-        // pair-key fast path state (see PackedAgg.pairKeysEnabled):
+        // pair-key fast path state (see PackedAgg.Tuning):
         // per-task interns per STRING key position, slot memo, and
         // per-batch local-id → global-id translation arrays
         val interns = if (pairKeys) Array.fill(math.max(kSK, 1))(new StrIntern) else null
         val pairs = if (pairKeys) new PairSlotCache else null
         val gmaps = new Array[Array[Int]](kN)
-        val internCap = PackedAgg.pairInternCap
+        val internCap = PackedAgg.PairInternCap
         var pairDead = false // intern budget blown — low cross-batch reuse
         val vecs = new Array[ColumnVector](ords.length)
         val kvecs = new Array[ColumnVector](kOrds.length)
@@ -720,10 +716,10 @@ final case class PackedPartialAggExec(
         val dictHash = new Array[Array[Long]](kOrds.length)
         // emissions produced while consuming the CURRENT batch only —
         // drained to the shuffle writer before the next batch is read,
-        // so task heap stays at the documented FlushCap/PoolFlushBytes
+        // so task heap stays at the documented flushGroups/PoolFlushBytes
         // bound instead of accumulating every flush for the partition
         val flushed = ArrayBuffer.empty[InternalRow]
-        // adaptive partial skip (see PackedAgg.passThroughEnabled)
+        // adaptive partial skip (see PackedAgg.Tuning)
         var rowsSeen = 0L
         var passThrough = false
         var builders: Array[BucketBuilder] = null
@@ -830,7 +826,7 @@ final case class PackedPartialAggExec(
               val s = m.slotOf(h)
               k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
               rowsSeen += 1
-              if (ptEnabled && rowsSeen == ptCheckRows &&
+              if (rowsSeen == ptCheckRows &&
                   m.size >= rowsSeen * ptRatio) {
                 flushed ++= emitRows(k, m); m.reset()
                 passThrough = true
@@ -858,7 +854,7 @@ final case class PackedPartialAggExec(
                 var e = 0
                 while (e < es.length) { gm(e) = it.gidOf(es(e), eh(e)); e += 1 }
                 // every entry counts toward the budget, referenced by a
-                // surviving row or not (see PackedAgg.pairInternCap)
+                // surviving row or not (see PackedAgg.PairInternCap)
                 if (it.n > internCap) { pairDead = true; pairOk = false }
               }
               j += 1
@@ -902,7 +898,7 @@ final case class PackedPartialAggExec(
                 }
                 k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
                 rowsSeen += 1
-                if (ptEnabled && rowsSeen == ptCheckRows &&
+                if (rowsSeen == ptCheckRows &&
                     m.size >= rowsSeen * ptRatio) {
                   flushed ++= emitRows(k, m); m.reset()
                   passThrough = true
@@ -1035,7 +1031,7 @@ final case class PackedPartialAggExec(
             val s = m.slotOf(h)
             k.updateRow(v, m.longs, m.doubles, m.flags, s)
             rowsSeen += 1
-            if (ptEnabled && rowsSeen == ptCheckRows &&
+            if (rowsSeen == ptCheckRows &&
                 m.size >= rowsSeen * ptRatio) {
               flushed ++= emitRows(k, m); m.reset()
               passThrough = true
@@ -1054,7 +1050,7 @@ final case class PackedPartialAggExec(
               if (rows.hasNext) {
                 flushed.clear()
                 // consume until an emission happens (rare: one per
-                // FlushCap/PoolFlushBytes/BuilderEmitBytes) or input ends
+                // flushGroups/PoolFlushBytes/BuilderEmitBytes) or input ends
                 while (flushed.isEmpty && rows.hasNext) processRow(rows.next())
                 // snapshot: the buffer is cleared next round while this
                 // iterator object may still be probed by the writer

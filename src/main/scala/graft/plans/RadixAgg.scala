@@ -34,7 +34,9 @@ import scala.collection.mutable.ArrayBuffer
   * merge blobs into a dense map, then evaluate the final-aggregate
   * result expressions per group.
   *
-  * Scale posture: partial memory is bounded by [[RadixAgg.FlushCap]] —
+  * Scale posture: partial memory is bounded by `flushGroups` groups
+  * (`spark.graft.agg.flushGroups`, frozen into the partial at planning;
+  * ~(8·nL + 8·nD + nF + 9) B per group plus open-addressing slack) —
   * when a partition exceeds it the map is flushed as blobs and reset
   * (multiple blobs per bucket merge associatively downstream), the same
   * emit-partial-state valve a native engine's radix table uses. Reducer
@@ -50,12 +52,10 @@ import scala.collection.mutable.ArrayBuffer
   * else keeps Spark's plan. Slot semantics, including the state blocks'
   * encoding, are [[SlotKernel]]'s.
   */
-object RadixAgg {
+object RadixAgg extends org.apache.spark.internal.Logging {
 
-  /** Partial-map group cap before a flush-and-reset (bounds task memory:
-    * ~(8·nL + 8·nD + nF + 9) B per group plus open-addressing slack).
-    */
-  val FlushCap: Int = 1 << 21
+  /** Per-partition loop/emit split of the columnar partial, at DEBUG. */
+  private[plans] def debug(msg: => String): Unit = logDebug(msg)
 
   /** Key domains that widen losslessly to long (and back). */
   def supportedKey(dt: DataType): Boolean = dt match {
@@ -257,6 +257,8 @@ final case class RadixPartialAggExec(
     child: SparkPlan,
     columnarChild: Boolean,
     ansi: Boolean,
+    // partial-map group cap before a flush-and-reset
+    flushGroups: Int,
     // emit-time per-partition key prune (top-N-through-aggregate pushdown)
     topN: Option[RadixTopN] = None) extends UnaryExecNode {
   import RadixAgg._
@@ -352,14 +354,14 @@ final case class RadixPartialAggExec(
     val (aL, aD, aF) = (nL, nD, nF)
     val childOut = child.output
     val k = new SlotKernel(slots, iExprs.map(_.dataType), Nil, nL, nD, nF, ansi)
-    val flushAt = PackedAgg.flushCap
+    val flushAt = flushGroups
     // top-N early reject: once the map has been pruned to its top
     // `limit` keys, `thr` is the worst retained key and any worse row is
     // dropped with one compare — its group already has `limit` distinct
     // keys ahead of it IN THIS PARTITION, so it can't reach the global
     // top-`limit` (the emit-time prune's argument, applied per row).
     // thr starts at the always-pass extreme; pruning keeps the map
-    // bounded at ~2×limit so FlushCap never triggers alongside.
+    // bounded at ~2×limit so flushGroups never triggers alongside.
     val tnDesc = topN.exists(_.desc)
     val tnLimit = topN.map(_.limit).getOrElse(0)
     val pruneTrigger = topN.map(t => math.max(2 * t.limit, 1024))
@@ -388,8 +390,6 @@ final case class RadixPartialAggExec(
         val vecs = new Array[ColumnVector](ords.length)
         val kIsLong = isKeyLongRead(kT)
         val flushed = ArrayBuffer.empty[InternalRow]
-        val dbg = sys.env.contains("GRAFT_RADIX_DEBUG") &&
-          org.apache.spark.TaskContext.getPartitionId() == 0
         val t0 = System.nanoTime()
         var nRows = 0L
         batches.foreach { batch =>
@@ -415,13 +415,12 @@ final case class RadixPartialAggExec(
           }
           if (m.size >= flushAt) { flushed ++= emitRows(k, m, null); m.reset() }
         }
-        if (dbg) {
-          val t1 = System.nanoTime()
-          val r = emitRows(k, m, nullM)
-          System.err.println(s"[radix] part0 rows=$nRows groups=${m.size} " +
-            s"loop=${(t1 - t0) / 1000000}ms emit=${(System.nanoTime() - t1) / 1000000}ms")
-          (flushed.iterator ++ r).map { row => numOut.add(1); row }
-        } else (flushed.iterator ++ emitRows(k, m, nullM)).map { row => numOut.add(1); row }
+        val t1 = System.nanoTime()
+        val r = emitRows(k, m, nullM)
+        RadixAgg.debug(s"partition ${org.apache.spark.TaskContext.getPartitionId()} " +
+          s"rows=$nRows groups=${m.size} loop=${(t1 - t0) / 1000000}ms " +
+          s"emit=${(System.nanoTime() - t1) / 1000000}ms")
+        (flushed.iterator ++ r).map { row => numOut.add(1); row }
       }
     } else {
       child.execute().mapPartitions { rows =>

@@ -65,7 +65,6 @@ case class StreamingWindowExec(
       childOutput.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))
     val winSchema = org.apache.spark.sql.types.StructType(
       wexprs.map(e => org.apache.spark.sql.types.StructField(e.name, e.dataType, e.nullable)))
-    val rawJoin = StreamingWindowExec.emitRawJoinedRow // dev valve, see companion
     child.execute().mapPartitions { it =>
       val partProj = UnsafeProjection.create(pspec, childOutput)
       val evals = wexprs.map(StreamingWindowExec.evaluator(_, childOutput)).toArray
@@ -99,8 +98,7 @@ case class StreamingWindowExec(
           }
           var j = 0
           while (j < n) { winRow.update(j, evals(j).next(row)); j += 1 }
-          if (rawJoin) joined(row, winRow)
-          else row match {
+          row match {
             case u: UnsafeRow => joiner.join(u, winProj(winRow))
             case _ => fullProj(joined(row, winRow))
           }
@@ -114,14 +112,6 @@ case class StreamingWindowExec(
 }
 
 object StreamingWindowExec {
-
-  /** DEV-ONLY measurement valve (BenchABWindow): emit the raw JoinedRow
-    * without the UnsafeRow result projection — the round-3 behavior whose
-    * missing projection was an ADVICE-confirmed bug (SortExec parents
-    * ClassCastException). Exists solely to quantify the projection's cost
-    * in an interleaved A/B; never set outside the harness.
-    */
-  @volatile private[graft] var emitRawJoinedRow = false
 
   /** Per-window-expression streaming evaluator: `next(row)` is called
     * exactly once per input row, in order, and returns the row's value.

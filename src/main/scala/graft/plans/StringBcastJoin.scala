@@ -38,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * build side is a broadcast the planner already proved small; the
   * probe is embarrassingly parallel per batch.
   *
-  * Escape hatch: GRAFT_NO_STR_BCAST_JOIN=1 (rules/StringBcastJoinRule).
+  * Escape hatch: `spark.graft.disabled=StringBcastJoinRule`.
   */
 final case class StringBcastJoinExec(
     streamedKeyOrd: Int,

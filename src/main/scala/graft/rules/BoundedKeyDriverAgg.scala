@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.{GraftConf, GraftRule}
 import graft.functions.{UtcCalendarTrunc, UtcMicrosToDate, UtcNtzReinterpret}
 import graft.plans.DriverAgg
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Sort}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, DateType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    cache build — the zone-map/catalog stats a warehouse table carries):
   *    `date_trunc('month'|'quarter'|'year'|'week', col)` and `year(col)`
   *    then bound to the spanned buckets.
-  * The product over all grouping keys must stay ≤ [[maxBound]].
+  * The product over all grouping keys must stay ≤ [[MaxBound]].
   *
   * Scale posture: the estimate only has to be RIGHT-ISH — the exec's
   * runtime `maxGroups` valve (64k) re-runs the retained shuffled plan if
@@ -40,20 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * buckets are intrinsically scale-safe: 100 TB of events still spans
   * physical time, not more months.
   */
-object BoundedKeyDriverAgg extends Rule[LogicalPlan] {
-  /** dev escape hatch for A/B + differential specs */
-  @volatile var enabled = !sys.env.get("GRAFT_NO_BOUNDED_DRIVER_AGG").contains("1")
-
-  /** Root UNGROUPED aggregates route to the driver-finalized single-job
-    * form (one Acc per partition, driver merge of P states) — the fused
-    * scan→ungrouped-aggregate every native engine runs (reference:
-    * physical_ungrouped_aggregate.cpp). Escape hatch for A/B + specs.
-    */
-  @volatile var ungroupedEnabled =
-    !sys.env.get("GRAFT_NO_UNGROUPED_DRIVER_AGG").contains("1")
+object BoundedKeyDriverAgg extends GraftRule[LogicalPlan] {
   /** fire only when the estimated group-domain product is ≤ this */
-  @volatile var maxBound: Long =
-    sys.env.get("GRAFT_BOUNDED_AGG_MAX").map(_.toLong).getOrElse(4096L)
+  val MaxBound: Long = 4096L
 
   private val MIN_DAY = "graft.minDay"
   private val MAX_DAY = "graft.maxDay"
@@ -231,8 +220,13 @@ object BoundedKeyDriverAgg extends Rule[LogicalPlan] {
       ansi = conf.ansiEnabled)).getOrElse(agg)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled || DriverAgg.replanning.get()) return plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
+    if (DriverAgg.replanning.get()) return plan
+    // Root UNGROUPED aggregates route to the driver-finalized single-job
+    // form (one Acc per partition, driver merge of P states) — the fused
+    // scan→ungrouped-aggregate every native engine runs (reference:
+    // physical_ungrouped_aggregate.cpp)
+    val ungroupedEnabled = GraftConf.enabled("DriverAgg.ungrouped")
     val routedRoot = plan match {
       case agg: Aggregate
           if ungroupedEnabled && agg.groupingExpressions.isEmpty =>
@@ -311,16 +305,15 @@ object BoundedKeyDriverAgg extends Rule[LogicalPlan] {
                 case a: AttributeReference if aliasMap.contains(a.exprId) =>
                   aliasMap(a.exprId)
               }
-              groupBound(sub).exists(_ <= maxBound)
+              groupBound(sub).exists(_ <= MaxBound)
             case _ => false
           })
         }
-        if (sys.env.contains("GRAFT_BOUNDED_DEBUG"))
-          System.err.println(s"[bounded] keys=$keys bounds=$bounds product=$product " +
-            s"distinctOk=$distinctOk maxBound=$maxBound grounded=$grounded")
+        logDebug(s"keys=$keys bounds=$bounds product=$product " +
+          s"distinctOk=$distinctOk maxBound=$MaxBound grounded=$grounded")
         product match {
           case _ if !distinctOk => s
-          case Some(b) if b > 0 && b <= maxBound =>
+          case Some(b) if b > 0 && b <= MaxBound =>
             // re-inline the pulled-out Project: with the group chain back
             // in the aggregate and the exec sitting directly on the cache
             // scan, the batch-direct partial (colKeyParts, incl. the

@@ -1,7 +1,8 @@
 package graft.rules
 
+import graft.GraftRule
+
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final, Partial}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 
@@ -31,13 +32,9 @@ import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAg
   * the exchange-free shape in both AQE and non-AQE sessions; idempotent —
   * the collapsed node is Complete-mode and cannot rematch.
   */
-object CollapsePartialAggregate extends Rule[SparkPlan] {
-  // dev escape hatch for A/B timing (GRAFT_NO_COLLAPSE_AGG=1 disables)
-  @volatile var enabled = !sys.env.get("GRAFT_NO_COLLAPSE_AGG").contains("1")
-
-  override def apply(plan: SparkPlan): SparkPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+object CollapsePartialAggregate extends GraftRule[SparkPlan] {
+  protected def rewrite(plan: SparkPlan): SparkPlan =
+    plan.transformUp {
       case fin @ HashAggregateExec(_, false, _, gF, aggsF, _, _, _,
             part @ HashAggregateExec(_, false, _, gP, aggsP, _, _, _, grandchild))
           if aggsF.forall(_.mode == Final) && aggsP.forall(_.mode == Partial) &&

@@ -1,11 +1,12 @@
 package graft.rules
 
+import graft.GraftRule
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, EnsureRequirements}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -32,14 +33,10 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   * peeled (its HashedRelationBroadcastMode carries the OLD key list) and
   * EnsureRequirements re-derives the correct one.
   *
-  * Escape hatch: GRAFT_NO_DEDUP_JOIN_KEYS=1.
+  * Escape hatch: `spark.graft.disabled=DedupJoinKeys`.
   */
-object DedupJoinKeys extends Rule[SparkPlan] {
-  @volatile var enabled: Boolean =
-    !sys.env.get("GRAFT_NO_DEDUP_JOIN_KEYS").contains("1")
-
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+object DedupJoinKeys extends GraftRule[SparkPlan] {
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     var changed = false
     val rewritten = plan.transformUp {
       case j: BroadcastHashJoinExec

@@ -1,5 +1,6 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.plans.CacheFilterExec
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -23,10 +24,7 @@ import org.apache.spark.sql.types.StringType
   * batch-direct aggregate rewrites that follow see the same child kinds
   * they always did.
   */
-object DictFilterScan extends PredicateHelper {
-  // dev escape hatch for A/B timing (GRAFT_NO_DICT_FILTER=1 disables)
-  @volatile var enabled = !sys.env.get("GRAFT_NO_DICT_FILTER").contains("1")
-
+object DictFilterScan extends GraftRule[SparkPlan] with PredicateHelper {
   private def eligible(cond: Expression, scan: InMemoryTableScanExec): Option[Seq[Expression]] = {
     val conjuncts = splitConjunctivePredicates(cond)
     val ok = conjuncts.forall { c =>
@@ -60,10 +58,9 @@ object DictFilterScan extends PredicateHelper {
     }
   }
 
-  def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     // top-down so the pruning-Project fold wins over the bare-Filter arm
-    else plan.transformDown {
+    plan.transformDown {
       case p @ ProjectExec(projectList, FilterExec(cond, CacheScan(child, scan))) =>
         (eligible(cond, scan), pruningOnly(projectList)) match {
           case (Some(conjuncts), Some(attrs)) => CacheFilterExec(attrs, conjuncts, child)

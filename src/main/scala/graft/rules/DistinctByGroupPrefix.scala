@@ -1,9 +1,10 @@
 package graft.rules
 
+import graft.{GraftConf, GraftRule}
+
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, ExprId}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -50,15 +51,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * state (a non-distinct agg riding along plans PartialMerge buffers
   * the Complete conversion can't honor — decline).
   *
-  * GRAFT_NO_DISTINCT_PREFIX=1 disables (A/B hatch; differential spec
-  * `DistinctByGroupPrefixSpec`).
+  * `spark.graft.disabled=DistinctByGroupPrefix` disables (A/B;
+  * differential spec `DistinctByGroupPrefixSpec`).
   */
-object DistinctByGroupPrefix extends Rule[SparkPlan] {
-  @volatile var enabled = !sys.env.get("GRAFT_NO_DISTINCT_PREFIX").contains("1")
-  /** required NDV(G-product) / shuffle-partition multiple (skew guard) */
-  @volatile var minKeyFactor: Long =
-    sys.env.get("GRAFT_DISTINCT_PREFIX_KEYS").map(_.toLong).getOrElse(64L)
-
+object DistinctByGroupPrefix extends GraftRule[SparkPlan] {
   /** NDV(G) lower-bound product from warm-cache column metadata; None if
     * any column lacks the sketch (then we cannot rule out skew).
     */
@@ -74,10 +70,8 @@ object DistinctByGroupPrefix extends Rule[SparkPlan] {
     if (ok && gs.nonEmpty) Some(prod) else None
   }
 
-  /** env-gated decline tracing (GRAFT_DISTINCT_PREFIX_DEBUG=1) */
-  private val debug = sys.env.get("GRAFT_DISTINCT_PREFIX_DEBUG").contains("1")
   private def declined(reason: => String): Boolean = {
-    if (debug) println(s"[dpfx] decline: $reason")
+    logDebug(s"decline: $reason")
     false
   }
 
@@ -109,7 +103,9 @@ object DistinctByGroupPrefix extends Rule[SparkPlan] {
     if (gIds.isEmpty || !gIds.subsetOf(dedupIds.toSet) ||
         dedupIds.length <= gIds.size)
       return declined("G not a strict prefix of dedup keys")
-    // skew guard: proved key spread over the shuffle width
+    // skew guard: proved key spread over the shuffle width, at least
+    // `spark.graft.distinctPrefix.minKeyFactor` x the partition count
+    val minKeyFactor = conf.getConf(GraftConf.DistinctPrefixKeyFactor)
     val gExprs = dedupP.groupingExpressions
       .filter(g => gIds.contains(g.toAttribute.exprId))
       .map { case al: org.apache.spark.sql.catalyst.expressions.Alias => al.child; case x => x }
@@ -121,8 +117,7 @@ object DistinctByGroupPrefix extends Rule[SparkPlan] {
     }
   }
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     plan.transformUp {
       case fin @ HashAggregateExec(_, false, _, _, aggsF, aggAttrs, _, resultExprs,
             ShuffleExchangeExec(HashPartitioning(_, _),

@@ -1,9 +1,10 @@
 package graft.rules
 
+import graft.GraftRule
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,12 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scope guards: pattern is a literal, default-collation string, starts
   * and ends with `%`, contains no `_` and no escape character, and has
   * ≥2 non-empty segments (single-segment forms are already Contains).
-  * GRAFT_NO_FAST_LIKE=1 disables (A/B + differential spec).
+  * `spark.graft.disabled=FastLikeChain` disables (A/B + differential spec).
   */
-object FastLikeChain extends Rule[LogicalPlan] {
-  @volatile var enabled: Boolean =
-    !sys.env.get("GRAFT_NO_FAST_LIKE").contains("1")
-
+object FastLikeChain extends GraftRule[LogicalPlan] {
   /** %-only multi-segment split; None = not this shape. */
   private[graft] def segments(pattern: String, escapeChar: Char): Option[Seq[String]] = {
     if (pattern.isEmpty || pattern.head != '%' || pattern.last != '%') return None
@@ -41,8 +39,7 @@ object FastLikeChain extends Rule[LogicalPlan] {
     if (segs.length >= 2) Some(segs) else None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
     plan.transformAllExpressions {
       case l @ Like(input, Literal(p: UTF8String, StringType), esc)
           if input.dataType == StringType =>

@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.functions.FastPercentileAgg
 
 import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -18,10 +18,7 @@ import org.apache.spark.sql.types._
   * PERF.md r13). Non-literal percentages, frequency ≠ 1, or interval
   * types keep Spark's expression.
   */
-object FastPercentileRule extends Rule[LogicalPlan] {
-  // dev escape hatch for A/B timing + differential specs
-  @volatile var enabled = !sys.env.get("GRAFT_NO_FAST_PERCENTILE").contains("1")
-
+object FastPercentileRule extends GraftRule[LogicalPlan] {
   private def numericChild(e: Expression): Boolean = e.dataType match {
     case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
     case _: DecimalType => true
@@ -40,9 +37,8 @@ object FastPercentileRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformAllExpressions {
+  protected def rewrite(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressions {
       case ae @ AggregateExpression(
             Percentile(child, pct, Literal(1L, LongType), _, _, false), _, _, _, _)
           if numericChild(child) =>

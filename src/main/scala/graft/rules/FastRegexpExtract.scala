@@ -1,10 +1,10 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.functions.{LiteralPrefixExtract, PrefixExtractKernel}
 
 import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpExtract}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,13 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * outside [[PrefixExtractKernel.compile]]'s surface keep Spark's
   * expression unchanged.
   */
-object FastRegexpExtract extends Rule[LogicalPlan] {
-  // dev escape hatch for A/B timing + differential specs
-  @volatile var enabled = !sys.env.get("GRAFT_NO_FAST_REGEX").contains("1")
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformAllExpressions {
+object FastRegexpExtract extends GraftRule[LogicalPlan] {
+  protected def rewrite(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressions {
       case e @ RegExpExtract(subject, Literal(p: UTF8String, StringType),
             Literal(1, IntegerType)) =>
         PrefixExtractKernel.compile(p.toString) match {

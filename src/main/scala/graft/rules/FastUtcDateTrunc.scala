@@ -1,8 +1,9 @@
 package graft.rules
 
+import graft.GraftRule
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,10 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[graft.functions.DateTruncKernel]]) instead of the per-row
   * java.time localization (~320 → ~10 ns/row).
   */
-object FastUtcDateTrunc extends Rule[LogicalPlan] {
-  // dev escape hatch for A/B + the differential specs
-  @volatile var enabled = !sys.env.get("GRAFT_NO_FAST_DATETIME").contains("1")
-
+object FastUtcDateTrunc extends GraftRule[LogicalPlan] {
   private val unitMicros: Map[String, Long] = Map(
     "second" -> 1000000L,
     "minute" -> 60000000L,
@@ -47,8 +45,8 @@ object FastUtcDateTrunc extends Rule[LogicalPlan] {
 
   private val utcNames = Set("UTC", "Etc/UTC", "Z", "GMT", "+00:00")
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled || !utcNames.contains(conf.sessionLocalTimeZone)) plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
+    if (!utcNames.contains(conf.sessionLocalTimeZone)) plan
     else plan.transformAllExpressions {
       case TruncTimestamp(Literal(fmt: UTF8String, StringType), ts, tz)
           if ts.dataType == TimestampType &&

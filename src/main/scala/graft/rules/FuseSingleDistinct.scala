@@ -1,12 +1,12 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.functions.BitChunkCount
 import graft.plans.SingleDistinctPartial
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
@@ -33,15 +33,13 @@ import scala.collection.mutable.ArrayBuffer
   * no FILTER clauses; piggyback aggregates limited to
   * count(*) / count(col) / sum / avg / min / max over int-family or
   * float/double inputs; deterministic expressions; batch plans only.
-  * `GRAFT_NO_FUSE_DISTINCT=1` disables (A/B + differential specs).
+  * `spark.graft.disabled=FuseSingleDistinct` disables (A/B + differential specs).
   */
-object FuseSingleDistinct extends Rule[LogicalPlan] {
+object FuseSingleDistinct extends GraftRule[LogicalPlan] {
   import SingleDistinctPartial._
 
-  @volatile var enabled = !sys.env.get("GRAFT_NO_FUSE_DISTINCT").contains("1")
   /** decline the fuse above this estimated total chunk-blob footprint */
-  @volatile var maxFuseBytes: Long =
-    sys.env.get("GRAFT_FUSE_DISTINCT_MAX_BYTES").map(_.toLong).getOrElse(32L << 20)
+  val MaxFuseBytes: Long = 32L << 20
 
   private def intFamily(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | DateType => true
@@ -63,8 +61,7 @@ object FuseSingleDistinct extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
     plan.transformUp {
       case a: Aggregate
           if a.resolved && a.groupingExpressions.isEmpty && !a.child.isStreaming =>
@@ -103,7 +100,7 @@ object FuseSingleDistinct extends Rule[LogicalPlan] {
     // to the stock two-phase distinct (ClickBench count(DISTINCT UserID)
     // over 10M ~unique users: fused 1.32 s vs stock 0.42 s, same hour).
     // When the cache's NDV sketch + value range (graft.ndvLow/minVal/
-    // maxVal) bound the footprint above maxFuseBytes, decline and keep
+    // maxVal) bound the footprint above MaxFuseBytes, decline and keep
     // Spark's plan. No stats → fuse, the status quo.
     distinctExpr match {
       case attr: AttributeReference if attr.metadata.contains("graft.ndvLow") =>
@@ -114,7 +111,7 @@ object FuseSingleDistinct extends Rule[LogicalPlan] {
               BigInt(attr.metadata.getLong("graft.minVal")) / 64 + 1
             ndvEst.min(span)
           } else ndvEst
-        if (wordsUpper * 16 > maxFuseBytes) return None
+        if (wordsUpper * 16 > MaxFuseBytes) return None
       case _ =>
     }
     // every output column must be an alias over supported pieces

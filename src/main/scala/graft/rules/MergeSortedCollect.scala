@@ -24,11 +24,12 @@ import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExch
   *  - an AQE re-optimization (a query stage below the sort): only the
   *    initial adaptive plan is rewritten. A re-planned root sort can come
   *    from AQE's EliminateLimits dropping a LIMIT on the strength of a
-  *    stage's row count, and graft's radix/packed partials shuffle one
-  *    record per state blob, not per group, so that count can be far
-  *    below the real one. With the range exchange in place such a re-plan
-  *    costs one more shuffle than the current plan and AQE rejects it;
-  *    rewritten here it would cost the same and be adopted, limit lost.
+  *    stage's row count. Should that count fall below the real one (an
+  *    exchange over an operator that writes one record per several
+  *    rows; see [[graft.plans.BlobShuffleExchangeExec]]), the range
+  *    exchange keeps such a re-plan one shuffle costlier than the current
+  *    plan, so AQE rejects it; rewritten here it would cost the same and
+  *    be adopted, limit lost.
   *
   * Registered LAST among the query-stage-prep rules (after
   * CachedBroadcastPrep, so it sees the plan PackedShuffleAgg and friends

@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.plans.{DriverAgg, PackedAgg, PackedFinalAggExec, PackedPartialAggExec, RadixAgg}
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Count, Final, Min, Max, Partial, PartialMerge, Sum}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExchangeExec}
@@ -42,10 +42,7 @@ import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExcha
   * partitioning gets a compensating exchange instead of silently wrong
   * co-partitioning.
   */
-object PackedShuffleAgg extends Rule[SparkPlan] {
-  // dev escape hatch for A/B timing (GRAFT_NO_PACKED_AGG=1 disables)
-  @volatile var enabled = !sys.env.get("GRAFT_NO_PACKED_AGG").contains("1")
-
+object PackedShuffleAgg extends GraftRule[SparkPlan] {
   private def strip(e: Expression): Expression = e match {
     case a: Alias => a.child
     case x => x
@@ -97,8 +94,8 @@ object PackedShuffleAgg extends Rule[SparkPlan] {
     SinglePhaseAgg.provedHighCardinality(gPs) &&
       SinglePhaseAgg.rowPreservingScanChain(gchild)
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
+    val tuning = graft.plans.PackedAgg.tuning()
     // Final-arm parent pre-scan: a TakeOrderedAndProject sorting by an
     // aggregate output (not a grouping prefix — TopNThroughAgg already
     // claimed those) drains every group through its heap; with the
@@ -142,7 +139,7 @@ object PackedShuffleAgg extends Rule[SparkPlan] {
               lay.nL, lay.nD, lay.nF,
               buckets = 4 * math.max(n, 1),
               PackedPartialAggExec.freshOutput(), gchild, columnarChild = false,
-              ansi = conf.ansiEnabled)
+              ansi = conf.ansiEnabled, tuning = tuning)
             val fin2 = PackedFinalAggExec(gAttrs, lay.slots, lay.aggTypes,
               lay.nL, lay.nD, lay.nF, aggAttrs, resultExprs, fin.output, partial,
               ansi = conf.ansiEnabled)
@@ -180,7 +177,7 @@ object PackedShuffleAgg extends Rule[SparkPlan] {
               lay.nL, lay.nD, lay.nF,
               buckets = 4 * math.max(n, 1),
               PackedPartialAggExec.freshOutput(), gchild, columnarChild = false,
-              ansi = conf.ansiEnabled)
+              ansi = conf.ansiEnabled, tuning = tuning)
             val bufAttrs = aggsF.flatMap(_.aggregateFunction.inputAggBufferAttributes)
             val bufTypes = aggsF.map(_.aggregateFunction.inputAggBufferAttributes.head.dataType)
             val fin2 = PackedFinalAggExec(gAttrs, lay.slots, bufTypes,

@@ -1,10 +1,11 @@
 package graft.rules
 
+import graft.{GraftConf, GraftRule}
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Max, Min}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** Self-join pair-existence → grouped min/max aggregate, inside set-wise
@@ -57,12 +58,9 @@ import org.apache.spark.sql.types._
   * pair (EqualTo, or exactly one Not(EqualTo)), at least one equi pair,
   * and the inequality column is not also an equi key.
   *
-  * Escape hatch: GRAFT_NO_PAIR_EXISTS_AGG=1.
+  * Escape hatch: `spark.graft.disabled=PairExistsToAgg`.
   */
-object PairExistsToAgg extends Rule[LogicalPlan] {
-  @volatile var enabled: Boolean =
-    !sys.env.get("GRAFT_NO_PAIR_EXISTS_AGG").contains("1")
-
+object PairExistsToAgg extends GraftRule[LogicalPlan] {
   private def orderableNonFloat(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | DateType |
          TimestampType | TimestampNTZType | StringType | BooleanType => true
@@ -101,7 +99,7 @@ object PairExistsToAgg extends Rule[LogicalPlan] {
     * the pair expansion with one reusable aggregate, strictly cheaper
     * than computing and buffering every matching pair.
     */
-  def pairShape(p: LogicalPlan): Boolean = enabled && (p match {
+  def pairShape(p: LogicalPlan): Boolean = GraftConf.enabled(name) && (p match {
     // optimized form: condition on the join
     case j @ Join(_, _, Inner, Some(cond), _) => shapeOk(j, cond)
     // analyzed form (what CteMaterializer sees): predicate still in a
@@ -202,8 +200,7 @@ object PairExistsToAgg extends Rule[LogicalPlan] {
     }
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
     plan.transformAllExpressions {
       case lq: ListQuery if !lq.isCorrelated =>
         val n = rewriteSetPlan(lq.plan)

@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.plans.{DriverAgg, RadixAgg, RadixFinalAggExec, RadixPartialAggExec}
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Count, Final, Min, Max, Partial, PartialMerge, Sum}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExchangeExec}
@@ -44,10 +44,7 @@ import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExcha
   * sessions. Idempotent: rewritten nodes are custom execs that cannot
   * rematch.
   */
-object RadixShuffleAgg extends Rule[SparkPlan] {
-  // dev escape hatch for A/B timing (GRAFT_NO_RADIX_AGG=1 disables)
-  @volatile var enabled = !sys.env.get("GRAFT_NO_RADIX_AGG").contains("1")
-
+object RadixShuffleAgg extends GraftRule[SparkPlan] {
   private def strip(e: Expression): Expression = e match {
     case a: Alias => a.child
     case x => x
@@ -90,8 +87,8 @@ object RadixShuffleAgg extends Rule[SparkPlan] {
       aggs: Seq[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression]) =
     scala.util.Try(DriverAgg.layout(aggs)).toOption.filter(_.flat)
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
+    val flushGroups = conf.getConf(graft.GraftConf.FlushGroups)
     var changed = false
     val rewritten = plan.transformUp {
       case fin @ HashAggregateExec(_, false, _, Seq(gAttr: Attribute), aggsF, aggAttrs, _,
@@ -110,7 +107,7 @@ object RadixShuffleAgg extends Rule[SparkPlan] {
               lay.inputs, lay.slots, lay.nL, lay.nD, lay.nF,
               buckets = 4 * math.max(n, 1),
               RadixPartialAggExec.freshOutput(), gchild, columnarChild = false,
-              ansi = conf.ansiEnabled)
+              ansi = conf.ansiEnabled, flushGroups = flushGroups)
             val fin2 = RadixFinalAggExec(lay.slots, lay.aggTypes, lay.nL, lay.nD, lay.nF,
               gAttr, aggAttrs, resultExprs, fin.output, partial,
               ansi = conf.ansiEnabled)
@@ -157,7 +154,7 @@ object RadixShuffleAgg extends Rule[SparkPlan] {
               lay.inputs, lay.slots, lay.nL, lay.nD, lay.nF,
               buckets = 4 * math.max(n, 1),
               RadixPartialAggExec.freshOutput(), gchild, columnarChild = false,
-              ansi = conf.ansiEnabled)
+              ansi = conf.ansiEnabled, flushGroups = flushGroups)
             val bufAttrs = aggsF.flatMap(_.aggregateFunction.inputAggBufferAttributes)
             val bufTypes = aggsF.map(_.aggregateFunction.inputAggBufferAttributes.head.dataType)
             val fin2 = RadixFinalAggExec(lay.slots, bufTypes, lay.nL, lay.nD, lay.nF,

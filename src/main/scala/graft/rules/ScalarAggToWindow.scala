@@ -1,10 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DecimalType
 
 /** Uncorrelated scalar-aggregate subqueries over a relation the outer
@@ -62,17 +63,13 @@ import org.apache.spark.sql.types.DecimalType
   * 100 TB the saved scan dominates by the fact/group ratio; the window
   * input is the grouped/filtered result, not the base relation.
   *
-  * Escape hatch: GRAFT_NO_SCALAR_AGG_WINDOW=1.
+  * Escape hatch: `spark.graft.disabled=ScalarAggToWindow`.
   */
-object ScalarAggToWindow extends Rule[LogicalPlan] {
-  @volatile var enabled: Boolean =
-    !sys.env.get("GRAFT_NO_SCALAR_AGG_WINDOW").contains("1")
-
+object ScalarAggToWindow extends GraftRule[LogicalPlan] {
   private val wholePartition = WindowSpecDefinition(Nil, Nil,
     SpecifiedWindowFrame(RowFrame, UnboundedPreceding, UnboundedFollowing))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
     // CTE definitions, for resolving CTERelationRef in the funnel guard
     // (q15's shared revenue node reaches the Filter as a ref)
     val cteDefs: Map[Long, LogicalPlan] = plan.collect {

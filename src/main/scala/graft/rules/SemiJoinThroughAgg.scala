@@ -1,9 +1,10 @@
 package graft.rules
 
+import graft.GraftRule
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Magic-set pushdown: when a join's one side is a grouped aggregate
   * over a BIG child and the join equi-keys hit the aggregate's grouping
@@ -51,12 +52,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * precisely the selective-dimension case where the saved fact
   * aggregation dominates; a non-selective key side declines.
   *
-  * Escape hatch: GRAFT_NO_SEMI_THROUGH_AGG=1.
+  * Escape hatch: `spark.graft.disabled=SemiJoinThroughAgg`.
   */
-object SemiJoinThroughAgg extends Rule[LogicalPlan] {
-  @volatile var enabled: Boolean =
-    !sys.env.get("GRAFT_NO_SEMI_THROUGH_AGG").contains("1")
-
+object SemiJoinThroughAgg extends GraftRule[LogicalPlan] {
   private val MARK = "_graft_semiagg_k"
 
   /** The Aggregate under pass-through wrappers (Project/Filter), plus a
@@ -218,8 +216,7 @@ object SemiJoinThroughAgg extends Rule[LogicalPlan] {
     go(root)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: LogicalPlan): LogicalPlan = {
     val threshold = conf.autoBroadcastJoinThreshold
     if (threshold <= 0) return plan
     plan.transformUp {
@@ -238,10 +235,9 @@ object SemiJoinThroughAgg extends Rule[LogicalPlan] {
                   if leftOut.contains(a) && groupOf.contains(b.exprId) =>
                 (a, groupOf(b.exprId))
             }
-            if (sys.env.contains("GRAFT_SEMIAGG_DEBUG"))
-              System.err.println(s"[semiagg] join match: pairs=$pairs " +
-                s"leftStats=${left.stats.sizeInBytes} " +
-                s"aggChildStats=${agg.child.stats.sizeInBytes}")
+            logDebug(s"join match: pairs=$pairs " +
+              s"leftStats=${left.stats.sizeInBytes} " +
+              s"aggChildStats=${agg.child.stats.sizeInBytes}")
             if (pairs.isEmpty) j
             else keySide(left, pairs.map(_._1.exprId), threshold)
               .flatMap { case (kt, kAttrs) =>
@@ -252,10 +248,9 @@ object SemiJoinThroughAgg extends Rule[LogicalPlan] {
                 attrsOf(site, siteIds) match {
                   case Some(siteAttrs)
                       if {
-                        if (sys.env.contains("GRAFT_SEMIAGG_DEBUG"))
-                          System.err.println(s"[semiagg] site=${site.nodeName} " +
-                            s"siteStats=${site.stats.sizeInBytes} " +
-                            s"keyStats=${keyTree.stats.sizeInBytes}")
+                        logDebug(s"site=${site.nodeName} " +
+                          s"siteStats=${site.stats.sizeInBytes} " +
+                          s"keyStats=${keyTree.stats.sizeInBytes}")
                         site.stats.sizeInBytes > keyTree.stats.sizeInBytes * 2 &&
                         siteAttrs.map(_.dataType) == keyAttrs.map(_.dataType)
                       } =>

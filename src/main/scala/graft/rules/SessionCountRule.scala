@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.plans.{SessionCountExec, StreamingWindowExec}
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 
@@ -27,11 +27,9 @@ import org.apache.spark.sql.execution.aggregate.HashAggregateExec
   * Tiebreak order columns beyond ts don't affect the count (equal-ts
   * neighbors have gap 0) and are accepted. Runs in
   * `InsertCacheColumnarToRow` after the streaming-window rewrite.
-  * Escape hatch GRAFT_NO_SESSION_FUSE=1 for A/B + differential specs.
+  * `spark.graft.disabled=SessionCountRule` for A/B + differential specs.
   */
-object SessionCountRule extends Rule[SparkPlan] {
-  @volatile var enabled = !sys.env.get("GRAFT_NO_SESSION_FUSE").contains("1")
-
+object SessionCountRule extends GraftRule[SparkPlan] {
   private def countStar(a: AggregateExpression): Boolean = a.aggregateFunction match {
     case Count(Seq(Literal(_, _))) => a.mode == Complete && !a.isDistinct
     case _ => false
@@ -83,9 +81,8 @@ object SessionCountRule extends Rule[SparkPlan] {
     }
   }
 
-  override def apply(plan: SparkPlan): SparkPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+  protected def rewrite(plan: SparkPlan): SparkPlan =
+    plan.transformUp {
       case agg @ HashAggregateExec(_, false, _, Seq(p: Attribute), Seq(cnt), aggAttrs, _,
             resultExprs, aggChild) if countStar(cnt) =>
         val inner = aggChild match {

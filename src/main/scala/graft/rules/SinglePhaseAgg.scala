@@ -1,9 +1,10 @@
 package graft.rules
 
+import graft.GraftRule
+
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -24,8 +25,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * engine can often PROVE it at plan time from the warm cache's NDV
   * sketches (`graft.ndvLow` column metadata, an HLL-backed lower bound
   * attached by [[graft.Tables]]): for any single grouping column c,
-  * groups ≥ ndv(c), so ndvLow(c) ≥ minRatio × rowCount proves the
-  * partial can reduce by at most 1/minRatio.
+  * groups ≥ ndv(c), so ndvLow(c) ≥ MinRatio × rowCount proves the
+  * partial can reduce by at most 1/MinRatio.
   *
   * Rewrite: `final(keys) ← exchange(keyAttrs) ← partial(keys, child)`
   * becomes `complete(keys) ← exchange(keyExprs) ← child` — one hash
@@ -44,13 +45,11 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * no-reduction hash pass over every row of a fact table — scales with
   * the data. When stats DON'T prove high cardinality the rule declines
   * and the stock map-side combine stays, which is always the right
-  * plan at low cardinality. GRAFT_NO_SINGLE_PHASE_AGG=1 disables (A/B
-  * hatch); `minRatio` 0.5 = skip only when reduction is provably <2×.
+  * plan at low cardinality. `spark.graft.disabled=SinglePhaseAgg` disables
+  * (A/B); `MinRatio` 0.5 = skip only when reduction is provably <2×.
   */
-object SinglePhaseAgg extends Rule[SparkPlan] {
-  @volatile var enabled = !sys.env.get("GRAFT_NO_SINGLE_PHASE_AGG").contains("1")
-  @volatile var minRatio: Double =
-    sys.env.get("GRAFT_SINGLE_PHASE_MIN_RATIO").map(_.toDouble).getOrElse(0.5)
+object SinglePhaseAgg extends GraftRule[SparkPlan] {
+  val MinRatio: Double = 0.5
 
   private def strip(e: Expression): Expression = e match {
     case a: Alias => a.child
@@ -74,19 +73,18 @@ object SinglePhaseAgg extends Rule[SparkPlan] {
   }
 
   /** groups ≥ ndv(c) for any grouping column c — proved high-cardinality
-    * when some column's HLL lower bound covers minRatio of the table.
+    * when some column's HLL lower bound covers MinRatio of the table.
     */
   private[rules] def provedHighCardinality(groups: Seq[Expression]): Boolean =
     groups.map(strip).exists {
       case a: AttributeReference if a.metadata.contains("graft.ndvLow") &&
           a.metadata.contains("graft.rowCount") =>
         val rows = a.metadata.getLong("graft.rowCount")
-        rows > 0 && a.metadata.getLong("graft.ndvLow") >= minRatio * rows
+        rows > 0 && a.metadata.getLong("graft.ndvLow") >= MinRatio * rows
       case _ => false
     }
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     plan.transformUp {
       case fin @ HashAggregateExec(_, false, _, _, aggsF, aggAttrs, _, resultExprs,
             ShuffleExchangeExec(HashPartitioning(_, n),

@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.{GraftConf, GraftRule}
 import graft.plans.{DriverAgg, RadixAgg, SortedRunAggExec}
 
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.Complete
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 
@@ -23,12 +23,7 @@ import org.apache.spark.sql.execution.aggregate.HashAggregateExec
   * `InsertCacheColumnarToRow` after the collapse (AQE per-stage and
   * non-AQE); idempotent — the replacement is a custom exec.
   */
-object SortedRunAggRule extends Rule[SparkPlan] {
-  // dev escape hatch for A/B timing + differential specs
-  @volatile var enabled = !sys.env.get("GRAFT_NO_SORTED_RUN_AGG").contains("1")
-  // separate hatch for the fused top-n (A/B the heap against the plain
-  // drain + TakeOrderedAndProject pair)
-  @volatile var topNEnabled = !sys.env.get("GRAFT_NO_SRA_TOPN").contains("1")
+object SortedRunAggRule extends GraftRule[SparkPlan] {
 
   /** Fuse a TakeOrderedAndProject above a direct-loop [[SortedRunAggExec]]
     * into its drain (see [[SortedRunAggExec.TopNSpec]]). Conditions:
@@ -40,7 +35,7 @@ object SortedRunAggRule extends Rule[SparkPlan] {
     * TakeOrderedAndProject stays for the cross-partition merge.
     */
   def fuseTopN(plan: SparkPlan): SparkPlan =
-    if (!enabled || !topNEnabled) plan
+    if (!GraftConf.enabled(name) || !GraftConf.enabled("SortedRunAgg.topN")) plan
     else plan.transformUp {
       case t @ org.apache.spark.sql.execution.TakeOrderedAndProjectExec(
             limit, sortOrder, _, s: SortedRunAggExec, _)
@@ -96,9 +91,8 @@ object SortedRunAggRule extends Rule[SparkPlan] {
       order.map(_.nullOrdering == NullsFirst)))
   }
 
-  override def apply(plan: SparkPlan): SparkPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+  protected def rewrite(plan: SparkPlan): SparkPlan =
+    plan.transformUp {
       case agg @ HashAggregateExec(_, false, _, groupExprs, aggs, aggAttrs, _,
             resultExprs, child)
           if aggs.forall(_.mode == Complete) && groupExprs.nonEmpty &&

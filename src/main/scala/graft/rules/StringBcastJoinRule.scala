@@ -1,10 +1,10 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.plans.StringBcastJoinExec
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, IsNotNull}
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, HashedRelationBroadcastMode}
@@ -21,12 +21,9 @@ import org.apache.spark.sql.types.StringType
   * probe skips NULL keys itself, and removing it exposes the columnar
   * scan the batch probe needs.
   *
-  * Escape hatch: GRAFT_NO_STR_BCAST_JOIN=1.
+  * Escape hatch: `spark.graft.disabled=StringBcastJoinRule`.
   */
-object StringBcastJoinRule extends Rule[SparkPlan] {
-  @volatile var enabled: Boolean =
-    !sys.env.get("GRAFT_NO_STR_BCAST_JOIN").contains("1")
-
+object StringBcastJoinRule extends GraftRule[SparkPlan] {
   /** The streamed side as a columnar plan: peel a redundant
     * IsNotNull(key) filter and/or a ColumnarToRow transition.
     */
@@ -41,8 +38,7 @@ object StringBcastJoinRule extends Rule[SparkPlan] {
     if (s.supportsColumnar) Some(s) else None
   }
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     plan.transformUp {
       case j @ BroadcastHashJoinExec(Seq(lk: AttributeReference),
           Seq(rk: AttributeReference), Inner, BuildRight, None, streamed,

@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.plans.{PartialTopNExec, RadixFinalAggExec, RadixPartialAggExec, RadixTopN, SortedPrefixLimitExec}
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Descending, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -41,10 +41,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * because TakeOrderedAndProjectExec's `limit` already includes them
   * (it takes `limit` rows, then drops `offset`).
   */
-object TopNThroughAgg extends Rule[SparkPlan] {
-  // dev escape hatch for A/B timing + differential specs
-  @volatile var enabled = !sys.env.get("GRAFT_NO_TOPN_AGG").contains("1")
-
+object TopNThroughAgg extends GraftRule[SparkPlan] {
   /** Per-task retained rows/keys bound — above this the exchange saving
     * no longer outweighs partial-side selection state.
     */
@@ -69,8 +66,7 @@ object TopNThroughAgg extends Rule[SparkPlan] {
           al.child.asInstanceOf[Attribute].exprId == g.exprId => al.toAttribute
     }
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     plan.transformUp {
       // radix pair: ORDER BY must be exactly the single grouping key
       case t @ TakeOrderedAndProjectExec(limit, Seq(so), _,

@@ -1,5 +1,6 @@
 package graft.rules
 
+import graft.GraftConf
 import graft.plans.CachedBroadcastExec
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -30,17 +31,13 @@ private object DriverAggFold
     splitConjunctivePredicates(cond)
 }
 
+/** The physical rewrites that must see the plan after transitions are
+  * inserted. `spark.graft.disabled` arms read here (once per application):
+  * `VectorizedCacheRead`, `StreamingWindow` (lag-only windows as
+  * plans/StreamingWindow), `DriverAgg.columnar` (batch-direct driver-agg
+  * partial) with `DriverAgg.selectionFold`, and `PackedAgg.selectionFold`.
+  */
 object InsertCacheColumnarToRow extends Rule[SparkPlan] {
-  // dev escape hatch for A/B timing (GRAFT_NO_VECTOR_READ=1 disables)
-  @volatile var enabled = !sys.env.get("GRAFT_NO_VECTOR_READ").contains("1")
-  // streaming lag-window specialization (plans/StreamingWindow.scala);
-  // GRAFT_NO_STREAM_WINDOW=1 reverts to WindowExec for A/B + differential specs
-  @volatile var streamWindowEnabled =
-    !sys.env.get("GRAFT_NO_STREAM_WINDOW").contains("1")
-  // driver-agg batch-direct partial (GRAFT_NO_DRIVERAGG_COLUMNAR=1
-  // reverts to the row partial for A/B + differential specs)
-  @volatile var driverAggColumnarEnabled =
-    !sys.env.get("GRAFT_NO_DRIVERAGG_COLUMNAR").contains("1")
   /** Wrap columnar-capable cache scans, skipping scans already under a
     * ColumnarToRowExec (AQE stage re-preparation or a second application
     * of this rule would otherwise double-wrap: the outer transition's
@@ -62,6 +59,9 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
   }
 
   override def apply(plan: SparkPlan): SparkPlan = {
+    val packedFold = GraftConf.enabled("PackedAgg.selectionFold")
+    val driverColumnar = GraftConf.enabled("DriverAgg.columnar")
+    val driverFold = GraftConf.enabled("DriverAgg.selectionFold")
     // single-pass aggregation where the exchange was elided (clustered
     // cache / bucketed input) — see CollapsePartialAggregate
     val collapsed = CollapsePartialAggregate(plan)
@@ -80,11 +80,9 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
     // aggregation pairs are left with a stats proof
     // string-key broadcast joins re-route before the agg rules (under
     // AQE this ran as a query-stage-prep rule already)
-    // int-key chains fuse FIRST (they claim whole spines of consecutive
-    // joins); string-key joins then route the remaining singles
     val strJoined =
       if (conf.adaptiveExecutionEnabled) collapsed
-      else StringBcastJoinRule(IntChainJoinRule(collapsed))
+      else StringBcastJoinRule(collapsed)
     // grouped-distinct prefix re-key must see the stock 4-level tower
     // BEFORE radix/packed claim its dedup pair (same order as the AQE
     // query-stage-prep registration in GraftExtensions)
@@ -100,7 +98,7 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
     // lag-only windows evaluate streaming (runs after EnsureRequirements,
     // so the child's clustering/ordering are already window-correct)
     val windowed =
-      if (!streamWindowEnabled) runAgged
+      if (!GraftConf.enabled("StreamingWindow")) runAgged
       else runAgged.transformUp {
         case w: org.apache.spark.sql.execution.window.WindowExec
             if graft.plans.StreamingWindowExec.supports(w) =>
@@ -111,7 +109,7 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
     // after the streaming-window rewrite it matches on)
     val sessionFused = SessionCountRule(windowed)
     val vectorized =
-      if (!enabled) sessionFused
+      if (!GraftConf.enabled("VectorizedCacheRead")) sessionFused
       else DictFilterScan(insertTransitions(sessionFused))
     // fused-distinct partial stage consumes the cache's batches directly:
     // peel the just-inserted ColumnarToRow so the update loop runs over
@@ -139,7 +137,7 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
       case r: graft.plans.PackedPartialAggExec if !r.columnarChild =>
         r.child match {
           case graft.plans.CacheFilterExec(_, conjuncts, c)
-              if graft.plans.PackedAgg.selectionFoldEnabled &&
+              if packedFold &&
                 c.supportsColumnar && r.columnarEligible(c) =>
             r.copy(child = c, columnarChild = true, selection = conjuncts)
           case ColumnarToRowExec(c) if c.supportsColumnar && r.columnarEligible(c) =>
@@ -162,15 +160,6 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
           case c if c.supportsColumnar && s.columnarEligible(c) =>
             s.copy(columnarChild = true)
           case _ => s
-        }
-      // int-key chain join: batch-direct probe when the base is
-      // columnar-capable (same peel contract)
-      case c: graft.plans.IntChainJoinExec if !c.columnarChild =>
-        c.base match {
-          case ColumnarToRowExec(x) if x.supportsColumnar =>
-            c.copy(base = x, columnarChild = true)
-          case x if x.supportsColumnar => c.copy(columnarChild = true)
-          case _ => c
         }
       // string-key broadcast join: batch-direct probe when the streamed
       // side is columnar-capable (same peel contract)
@@ -198,17 +187,17 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
       // materialization between scan and aggregate (the reference's
       // selection-vector path through its table scan into the aggregate).
       case d: graft.plans.DriverGroupAggExec
-          if driverAggColumnarEnabled && !d.columnarChild =>
+          if driverColumnar && !d.columnarChild =>
         import org.apache.spark.sql.execution.FilterExec
         def foldable(cond: org.apache.spark.sql.catalyst.expressions.Expression,
             c: SparkPlan): Boolean =
-          graft.plans.DriverAgg.aggSelectionEnabled && cond.deterministic &&
+          driverFold && cond.deterministic &&
             !cond.exists(_.isInstanceOf[
               org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]) &&
             cond.references.subsetOf(c.outputSet)
         d.child match {
           case graft.plans.CacheFilterExec(_, conjuncts, c)
-              if graft.plans.DriverAgg.aggSelectionEnabled &&
+              if driverFold &&
                 c.supportsColumnar && d.columnarEligible(c) =>
             d.copy(child = c, columnarChild = true, selection = conjuncts)
           case FilterExec(cond, ColumnarToRowExec(c))

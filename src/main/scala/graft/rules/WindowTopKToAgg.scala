@@ -1,11 +1,11 @@
 package graft.rules
 
+import graft.GraftRule
 import graft.functions.TopKRowsAgg
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete}
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Rewrite the grouped top-k pattern
@@ -63,17 +63,17 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * argument — a wrong skip ships the filtered raw rows, which is never
   * more bytes than the partial's buffers would have been, while a right
   * skip deletes the storm. Low-cardinality keys (h2o id1, K=100) keep
-  * the reductive partial. GRAFT_NO_TOPK_SINGLE_PHASE=1 disables.
+  * the reductive partial. `spark.graft.disabled=TopKSinglePhase`
+  * disables.
   */
 object TopKSinglePhase
-    extends Rule[org.apache.spark.sql.execution.SparkPlan] {
+    extends GraftRule[org.apache.spark.sql.execution.SparkPlan] {
   import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
   import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
   import org.apache.spark.sql.execution.SparkPlan
   import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
   import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-  @volatile var enabled = !sys.env.get("GRAFT_NO_TOPK_SINGLE_PHASE").contains("1")
   val SkipRatio = 0.3
 
   private def strip(e: Expression): Expression = e match {
@@ -101,8 +101,7 @@ object TopKSinglePhase
       case _ => false
     }
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    if (!enabled) return plan
+  protected def rewrite(plan: SparkPlan): SparkPlan = {
     plan.transformUp {
       case fin @ ObjectHashAggregateExec(_, false, _, _, aggsF, aggAttrs, _,
             resultExprs,
@@ -144,10 +143,7 @@ object TopKSinglePhase
   }
 }
 
-object WindowTopKToAgg extends Rule[LogicalPlan] {
-  // dev escape hatch for A/B timing + differential specs
-  @volatile var enabled = !sys.env.get("GRAFT_NO_WINDOW_TOPK").contains("1")
-
+object WindowTopKToAgg extends GraftRule[LogicalPlan] {
   val MaxK = 128
   val MaxPayloadWidth = 24
 
@@ -173,9 +169,8 @@ object WindowTopKToAgg extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+  protected def rewrite(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
       case f @ Filter(cond,
           w @ Window(Seq(alias @ Alias(WindowExpression(_: RowNumber, _), _)),
             parts, orders, wchild0, _))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.DriverGroupAggPlan
-import graft.rules.BoundedKeyDriverAgg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
@@ -25,11 +24,8 @@ class BoundedDriverAggSpec extends AnyFunSuite {
       case p: DriverGroupAggPlan => p
     }.nonEmpty
 
-  private def offRows(df: => DataFrame): Seq[String] = {
-    BoundedKeyDriverAgg.enabled = false
-    try df.collect().toSeq.map(_.toString)
-    finally BoundedKeyDriverAgg.enabled = true
-  }
+  private def offRows(df: => DataFrame): Seq[String] =
+    withGraft("BoundedKeyDriverAgg" -> false)(df.collect().toSeq.map(_.toString))
 
   // ~26 months of hourly-ish timestamps, some NULLs
   private lazy val facts: DataFrame = spark.range(0, 20000)

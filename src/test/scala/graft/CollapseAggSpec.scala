@@ -65,9 +65,7 @@ class CollapseAggSpec extends AnyFunSuite {
         .collect().toSeq
     }
     val on = run()
-    graft.rules.CollapsePartialAggregate.enabled = false
-    val off = try run()
-    finally graft.rules.CollapsePartialAggregate.enabled = true
+    val off = withGraft("CollapsePartialAggregate" -> false)(run())
     assert(on == off)
     // filters really filtered: a FILTER'd count must undercut the plain one
     assert(on.exists(r => r.getLong(r.length - 1) < r.getLong(1).max(1L)) ||
@@ -81,10 +79,7 @@ class CollapseAggSpec extends AnyFunSuite {
     // RadixShuffleAgg is off here: this test pins that the COLLAPSE rule
     // does not touch cross-exchange pairs (the radix rule handling them
     // is RadixAggSpec's subject).
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.rules.RadixShuffleAgg.enabled = false
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") { withGraft("RadixShuffleAgg" -> false) {
       val df = spark.read.parquet(s"$sf/lineitem.parquet")
         .repartition(4) // round-robin: satisfies no grouping distribution
         .groupBy(col("l_partkey"))
@@ -95,9 +90,6 @@ class CollapseAggSpec extends AnyFunSuite {
         _.mode == org.apache.spark.sql.catalyst.expressions.aggregate.Partial)))
       assert(df.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeExec => e }.nonEmpty)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      graft.rules.RadixShuffleAgg.enabled = true
-    }
+    } }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.rules.DedupJoinKeys
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,10 +40,8 @@ class DedupJoinKeysSpec extends AnyFunSuite {
   private def bag(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted
 
-  private def offBag(df: => DataFrame): Seq[String] = {
-    DedupJoinKeys.enabled = false
-    try bag(df) finally DedupJoinKeys.enabled = true
-  }
+  private def offBag(df: => DataFrame): Seq[String] =
+    withGraft("DedupJoinKeys" -> false)(bag(df))
 
   // fact: 60k rows; a==b except every 7th row; every 11th a is NULL
   private lazy val fact: DataFrame = spark.range(0, 60000).select(

@@ -14,11 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class DenseCalendarAggSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withDense[A](on: Boolean)(f: => A): A = {
-    val prev = graft.plans.DriverAgg.denseCalendarEnabled
-    graft.plans.DriverAgg.denseCalendarEnabled = on
-    try f finally graft.plans.DriverAgg.denseCalendarEnabled = prev
-  }
+  private def withDense[A](on: Boolean)(f: => A): A =
+    withGraft("DriverAgg.denseCalendar" -> on)(f)
 
   // cached clustered table with: NULL ts rows, a pre-1900 day and a
   // post-2100 day (overflow path), NULL measure values, negative values

@@ -29,13 +29,11 @@ class DictFilterSpec extends AnyFunSuite {
       (col("id") % 7).cast("double").as("v"))
   }
 
-  private def results(df: DataFrame, cond: String, dict: Boolean): Seq[String] = {
-    val prev = graft.rules.DictFilterScan.enabled
-    graft.rules.DictFilterScan.enabled = dict
-    try df.filter(cond).selectExpr("id", "flag", "uid", "v")
-      .collect().map(_.mkString("|")).sorted.toSeq
-    finally graft.rules.DictFilterScan.enabled = prev
-  }
+  private def results(df: DataFrame, cond: String, dict: Boolean): Seq[String] =
+    withGraft("DictFilterScan" -> dict) {
+      df.filter(cond).selectExpr("id", "flag", "uid", "v")
+        .collect().map(_.mkString("|")).sorted.toSeq
+    }
 
   test("dict filter ≡ stock filter across the predicate families, nulls and spill included") {
     val df = fixture().cache()

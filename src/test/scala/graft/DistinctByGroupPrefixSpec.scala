@@ -22,11 +22,7 @@ class DistinctByGroupPrefixSpec extends AnyFunSuite {
 
   // keep the packed/radix claims out of the declined shapes so the
   // exchange-count assertions pin THIS rule's behavior
-  private def withOthersOff[A](f: => A): A = {
-    val prevP = graft.rules.PackedShuffleAgg.enabled
-    graft.rules.PackedShuffleAgg.enabled = false
-    try f finally graft.rules.PackedShuffleAgg.enabled = prevP
-  }
+  private def withOthersOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 
   private val n = 8000L
 
@@ -88,28 +84,24 @@ class DistinctByGroupPrefixSpec extends AnyFunSuite {
 
   test("differential: results identical with the hatch off") {
     val on = q(annotated).collect().map(_.toSeq).sortBy(_.mkString("|"))
-    DistinctByGroupPrefix.enabled = false
-    try {
+    withGraft("DistinctByGroupPrefix" -> false) {
       assert(shuffles(q(annotated)).length >= 2, "hatch must restore the stock tower")
       val off = q(annotated).collect().map(_.toSeq).sortBy(_.mkString("|"))
       assert(on.toSeq == off.toSeq)
-    } finally DistinctByGroupPrefix.enabled = true
+    }
   }
 
   test("multi-column distinct fires and matches the stock result") {
     def q2(src: DataFrame) =
       src.groupBy(col("g1")).agg(countDistinct(col("d"), col("d2")).as("cd"))
     // g1 alone: ndv 40 < 64*4 → guard declines; widen with relaxed factor
-    val prev = DistinctByGroupPrefix.minKeyFactor
-    DistinctByGroupPrefix.minKeyFactor = 8L
-    try {
+    withConf("spark.graft.distinctPrefix.minKeyFactor" -> "8") {
       assert(shuffles(q2(annotated)).length == 1)
       val on = q2(annotated).collect().map(_.toSeq).sortBy(_.mkString("|"))
-      DistinctByGroupPrefix.enabled = false
-      val off = try q2(annotated).collect().map(_.toSeq).sortBy(_.mkString("|"))
-        finally DistinctByGroupPrefix.enabled = true
+      val off = withGraft("DistinctByGroupPrefix" -> false)(
+        q2(annotated).collect().map(_.toSeq).sortBy(_.mkString("|")))
       assert(on.toSeq == off.toSeq)
-    } finally DistinctByGroupPrefix.minKeyFactor = prev
+    }
   }
 
   test("declines without NDV metadata (skew unprovable)") { withOthersOff {
@@ -135,9 +127,8 @@ class DistinctByGroupPrefixSpec extends AnyFunSuite {
       "dedup levels carry PartialMerge state → decline")
     // and the result is still correct through the stock path
     val on = mixed.collect().map(_.toSeq).sortBy(_.mkString("|"))
-    DistinctByGroupPrefix.enabled = false
-    val off = try mixed.collect().map(_.toSeq).sortBy(_.mkString("|"))
-      finally DistinctByGroupPrefix.enabled = true
+    val off = withGraft("DistinctByGroupPrefix" -> false)(
+      mixed.collect().map(_.toSeq).sortBy(_.mkString("|")))
     assert(on.toSeq == off.toSeq)
   } }
 }

@@ -190,19 +190,12 @@ class DriverAggSpec extends AnyFunSuite {
         (df.groupBy(date_trunc("hour", col("ts")).as("b"), col("sk"))
           .agg(count(lit(1)).as("n"), round(avg(col("v")), 4).as("a")),
           Seq(col("b"), col("sk").asc_nulls_first)))
-      val flag = graft.rules.InsertCacheColumnarToRow.driverAggColumnarEnabled
-      try {
-        shapes(t).foreach { case (g, s) =>
-          graft.rules.InsertCacheColumnarToRow.driverAggColumnarEnabled = true
-          val colRows = rows(DriverAgg.lowCard(g, s))
-          graft.rules.InsertCacheColumnarToRow.driverAggColumnarEnabled = false
-          val rowRows = rows(DriverAgg.lowCard(g, s))
-          val expected = rows(g.orderBy(s: _*))
-          assert(colRows == expected)
-          assert(rowRows == expected)
-        }
-      } finally {
-        graft.rules.InsertCacheColumnarToRow.driverAggColumnarEnabled = flag
+      shapes(t).foreach { case (g, s) =>
+        val colRows = withGraft("DriverAgg.columnar" -> true)(rows(DriverAgg.lowCard(g, s)))
+        val rowRows = withGraft("DriverAgg.columnar" -> false)(rows(DriverAgg.lowCard(g, s)))
+        val expected = rows(g.orderBy(s: _*))
+        assert(colRows == expected)
+        assert(rowRows == expected)
       }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -53,11 +53,6 @@ class DriverAggVectorSpec extends AnyFunSuite {
 
   private val sort = Seq(col("flag").asc_nulls_first, col("status").asc_nulls_first)
 
-  private def withFlag[A](get: => Boolean, set: Boolean => Unit, v: Boolean)(f: => A): A = {
-    val prev = get; set(v)
-    try f finally set(prev)
-  }
-
   private def findExec(df: DataFrame): Option[DriverGroupAggExec] = {
     df.collect()
     def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[DriverGroupAggExec] = {
@@ -92,13 +87,13 @@ class DriverAggVectorSpec extends AnyFunSuite {
     val expected = rows(agg(cachedT).orderBy(sort: _*))
     def run(): Seq[String] = rows(DriverAgg.lowCard(agg(cachedT), sort))
     assert(run() == expected) // all arms on
-    withFlag(DriverAgg.dictKeysEnabled, DriverAgg.dictKeysEnabled = _, false) {
+    withGraft("DriverAgg.dictKeys" -> false) {
       assert(run() == expected, "dict keys off")
     }
-    withFlag(DriverAgg.exprVecEnabled, DriverAgg.exprVecEnabled = _, false) {
+    withGraft("DriverAgg.exprVec" -> false) {
       assert(run() == expected, "expr vec off")
     }
-    withFlag(DriverAgg.aggSelectionEnabled, DriverAgg.aggSelectionEnabled = _, false) {
+    withGraft("DriverAgg.selectionFold" -> false) {
       val df = DriverAgg.lowCard(agg(cachedT), sort)
       assert(rows(df) == expected, "selection fold off")
       val d = findExec(df)

@@ -36,9 +36,7 @@ class FastLikeChainSpec extends AnyFunSuite {
 
   private def differential(q: String): Unit = {
     val on = rows(q)
-    FastLikeChain.enabled = false
-    try assert(on == rows(q), s"differential failed for: $q")
-    finally FastLikeChain.enabled = true
+    withGraft("FastLikeChain" -> false)(assert(on == rows(q), s"differential failed for: $q"))
   }
 
   test("rewrite fires: plan holds the chain, not a Like") {

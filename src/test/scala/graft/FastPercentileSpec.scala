@@ -18,13 +18,8 @@ class FastPercentileSpec extends AnyFunSuite {
     "CASE WHEN id % 11 = 0 THEN NULL ELSE CAST(id % 523 AS DOUBLE) - 50 END AS v",
     "CASE WHEN id % 13 = 0 THEN NULL ELSE CAST(id % 37 AS INT) END AS vi")
 
-  private def ab[A](q: => A): (A, A) = {
-    rules.FastPercentileRule.enabled = true
-    val fast = q
-    rules.FastPercentileRule.enabled = false
-    val stock = try q finally rules.FastPercentileRule.enabled = true
-    (fast, stock)
-  }
+  private def ab[A](q: => A): (A, A) =
+    (withGraft("FastPercentileRule" -> true)(q), withGraft("FastPercentileRule" -> false)(q))
 
   test("grouped percentile: fast kernel routes and matches stock exactly") {
     val df = fixture()
@@ -34,8 +29,7 @@ class FastPercentileSpec extends AnyFunSuite {
         |  percentile(v, array(0.0, 0.37, 1.0)) AS qs
         |FROM fp_src GROUP BY g ORDER BY g""".stripMargin)
     // rule fires
-    rules.FastPercentileRule.enabled = true
-    val plan = q().queryExecution.optimizedPlan.toString
+    val plan = withGraft("FastPercentileRule" -> true)(q().queryExecution.optimizedPlan.toString)
     assert(plan.contains("fast_percentile"), plan.take(1500))
     val (fast, stock) = ab(q().collect().map(_.toString).toSeq)
     assert(fast == stock)

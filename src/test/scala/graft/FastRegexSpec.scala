@@ -76,9 +76,7 @@ class FastRegexSpec extends AnyFunSuite {
         case _: graft.functions.LiteralPrefixExtract => true; case _ => false
       }.isDefined) => n }.nonEmpty, plan.toString.take(1500))
     val on = q().collect().toSeq
-    graft.rules.FastRegexpExtract.enabled = false
-    val off = try q().collect().toSeq
-    finally graft.rules.FastRegexpExtract.enabled = true
+    val off = withGraft("FastRegexpExtract" -> false)(q().collect().toSeq)
     assert(on == off)
     assert(on.size > 2)
   }

@@ -86,8 +86,7 @@ class FastUtcDateTruncSpec extends AnyFunSuite {
       "CAST(ntz AS TIMESTAMP) AS a", "CAST(ts AS DATE) AS b")
       .collect().map(r => (r.get(0), r.get(1))).toSeq
     val fast = run()
-    graft.rules.FastUtcDateTrunc.enabled = false
-    val slow = try run() finally graft.rules.FastUtcDateTrunc.enabled = true
+    val slow = withGraft("FastUtcDateTrunc" -> false)(run())
     assert(fast == slow, s"first diff: ${
       fast.zip(slow).find { case (a, b) => a != b }}")
     // plan pins — the synthetic ntz above round-trips through a cast
@@ -110,8 +109,7 @@ class FastUtcDateTruncSpec extends AnyFunSuite {
       .selectExpr("CAST(o_orderdate AS TIMESTAMP) AS a").limit(2000)
       .collect().map(_.get(0)).toSeq
     val fastNtz = runNtz()
-    graft.rules.FastUtcDateTrunc.enabled = false
-    val slowNtz = try runNtz() finally graft.rules.FastUtcDateTrunc.enabled = true
+    val slowNtz = withGraft("FastUtcDateTrunc" -> false)(runNtz())
     assert(fastNtz == slowNtz)
   }
 }

@@ -16,11 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FuseDistinctSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withRule[A](on: Boolean)(f: => A): A = {
-    val prev = FuseSingleDistinct.enabled
-    FuseSingleDistinct.enabled = on
-    try f finally FuseSingleDistinct.enabled = prev
-  }
+  private def withRule[A](on: Boolean)(f: => A): A = withGraft("FuseSingleDistinct" -> on)(f)
 
   private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)

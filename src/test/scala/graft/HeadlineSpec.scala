@@ -7,6 +7,19 @@ object SparkTestSession {
   // one tuned session shared across suites (local[4] keeps test startup fast)
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `f` with the named graft rules and arms switched on (true) or
+    * off (false) in `spark.graft.disabled`, restoring the list after. */
+  def withGraft[A](arms: (String, Boolean)*)(f: => A): A = {
+    val prior = spark.conf.getOption("spark.graft.disabled")
+      .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val next = arms.foldLeft(prior) { case (d, (n, on)) =>
+      if (on) d.filterNot(_ == n) else (d :+ n).distinct }
+    withConf("spark.graft.disabled" -> next.mkString(","))(f)
+  }
+
+  /** Runs `f` with session confs set, restoring the prior values after. */
+  def withConf[A](kv: (String, String)*)(f: => A): A = BenchAB.withArm(spark, kv)(f)
 }
 
 class HeadlineSpec extends AnyFunSuite {

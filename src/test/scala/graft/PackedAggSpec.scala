@@ -39,10 +39,7 @@ class PackedAggSpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  private def packedOff[A](f: => A): A = {
-    graft.rules.PackedShuffleAgg.enabled = false
-    try f finally graft.rules.PackedShuffleAgg.enabled = true
-  }
+  private def packedOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 
   test("(long, string) keys plan the packed aggregate, no HashAggregate pair") {
     withAqe(false) {
@@ -129,16 +126,13 @@ class PackedAggSpec extends AnyFunSuite {
   }
 
   test("flush path: multi-blob fragments merge to the same result") {
-    val prev = graft.plans.PackedAgg.flushCapOverride
-    graft.plans.PackedAgg.flushCapOverride = 64
-    try withAqe(false) {
-      val on = query()
-        .orderBy(col("k").asc_nulls_first, col("s").asc_nulls_first).collect().toSeq
-      graft.plans.PackedAgg.flushCapOverride = prev
+    withAqe(false) {
+      val on = withConf("spark.graft.agg.flushGroups" -> "64")(query()
+        .orderBy(col("k").asc_nulls_first, col("s").asc_nulls_first).collect().toSeq)
       val off = packedOff(query()
         .orderBy(col("k").asc_nulls_first, col("s").asc_nulls_first).collect().toSeq)
       assert(on == off)
-    } finally graft.plans.PackedAgg.flushCapOverride = prev
+    }
   }
 
   test("adaptive pass-through: no-reduction input switches mid-partition, results identical") {
@@ -146,10 +140,7 @@ class PackedAggSpec extends AnyFunSuite {
     // lowered check point; mixed with the map-phase prefix the reducer
     // merges map blobs AND one-row pass-through fragments of the SAME
     // groups (each id value appears twice → real cross-fragment merges)
-    val (prevCheck, prevRatio) = (graft.plans.PackedAgg.passThroughCheckRows,
-      graft.plans.PackedAgg.passThroughGroupRatio)
-    graft.plans.PackedAgg.passThroughCheckRows = 256
-    try withAqe(false) {
+    withAqe(false) {
       def src() = spark.range(40000).selectExpr(
         "CAST(id % 20000 AS LONG) AS k",
         "CASE WHEN id % 37 = 0 THEN NULL ELSE concat('u_', id % 20000) END AS s",
@@ -157,18 +148,16 @@ class PackedAggSpec extends AnyFunSuite {
       def q() = src().groupBy("k", "s").agg(
         count(lit(1)).as("n"), sum(col("v")).as("sv"),
         avg(col("v")).as("av"), min(col("v")).as("mn"), max(col("v")).as("mx"))
-      assert(q().queryExecution.executedPlan.collect {
-        case p: graft.plans.PackedFinalAggExec => p }.nonEmpty)
-      val on = q().orderBy(col("k"), col("s").asc_nulls_first).collect().toSeq
-      graft.plans.PackedAgg.passThroughCheckRows = prevCheck
+      val on = withConf("spark.graft.agg.passThroughCheckRows" -> "256") {
+        assert(q().queryExecution.executedPlan.collect {
+          case p: graft.plans.PackedFinalAggExec => p }.nonEmpty)
+        q().orderBy(col("k"), col("s").asc_nulls_first).collect().toSeq
+      }
       val off = packedOff(
         q().orderBy(col("k"), col("s").asc_nulls_first).collect().toSeq)
       assert(on.size == off.size && on == off,
         s"sizes ${on.size}/${off.size}; first diff: ${
           on.zip(off).find { case (a, b) => a != b }}")
-    } finally {
-      graft.plans.PackedAgg.passThroughCheckRows = prevCheck
-      graft.plans.PackedAgg.passThroughGroupRatio = prevRatio
     }
   }
 
@@ -254,13 +243,9 @@ class PackedAggSpec extends AnyFunSuite {
           q().queryExecution.executedPlan.toString.take(2000))
         val folded = q().collect().toSeq
         // fold off: row-path packed through the CacheFilter iterator
-        graft.plans.PackedAgg.selectionFoldEnabled = false
-        val unfolded = try q().collect().toSeq
-          finally graft.plans.PackedAgg.selectionFoldEnabled = true
+        val unfolded = withGraft("PackedAgg.selectionFold" -> false)(q().collect().toSeq)
         // dict-id keys off: per-row string hashing in the batch loop
-        graft.plans.PackedAgg.dictKeysEnabled = false
-        val noDict = try q().collect().toSeq
-          finally graft.plans.PackedAgg.dictKeysEnabled = true
+        val noDict = withGraft("PackedAgg.dictKeys" -> false)(q().collect().toSeq)
         val stock = packedOff(q().collect().toSeq)
         assert(folded == stock)
         assert(unfolded == stock)
@@ -286,9 +271,7 @@ class PackedAggSpec extends AnyFunSuite {
         assert(q().queryExecution.executedPlan.collect {
           case d: graft.plans.DriverGroupAggExec => d }.nonEmpty)
         val direct = q().collect().toSeq
-        graft.plans.DriverAgg.directStringArm = false
-        val probed = try q().collect().toSeq
-          finally graft.plans.DriverAgg.directStringArm = true
+        val probed = withGraft("DriverAgg.directStringKey" -> false)(q().collect().toSeq)
         assert(direct == probed)
       } finally spark.sql("UNCACHE TABLE direct_cache")
     }

@@ -21,10 +21,7 @@ class PackedMomentSpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  private def packedOff[A](f: => A): A = {
-    graft.rules.PackedShuffleAgg.enabled = false
-    try f finally graft.rules.PackedShuffleAgg.enabled = true
-  }
+  private def packedOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 
   /** v1/v2: ints with NULLs across (37 × 5) groups, plus appended edge
     * groups: a single-row group, an all-NULL-v1 group, and a group where

@@ -22,15 +22,9 @@ class PackedPairKeySpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  private def packedOff[A](f: => A): A = {
-    graft.rules.PackedShuffleAgg.enabled = false
-    try f finally graft.rules.PackedShuffleAgg.enabled = true
-  }
+  private def packedOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 
-  private def pairOff[A](f: => A): A = {
-    graft.plans.PackedAgg.pairKeysEnabled = false
-    try f finally graft.plans.PackedAgg.pairKeysEnabled = true
-  }
+  private def pairOff[A](f: => A): A = withGraft("PackedAgg.pairKeys" -> false)(f)
 
   /** Cache a source so the packed partial takes the columnar branch (the
     * only place the pair path lives), run the query three ways, compare.
@@ -83,9 +77,7 @@ class PackedPairKeySpec extends AnyFunSuite {
   }
 
   test("flush path: mid-stream map resets invalidate memoized slots") {
-    val prev = graft.plans.PackedAgg.flushCapOverride
-    graft.plans.PackedAgg.flushCapOverride = 64
-    try withAqe(false) {
+    withConf("spark.graft.agg.flushGroups" -> "64") { withAqe(false) {
       // >64 groups per partition forces emit+reset between (and within)
       // batches — a stale slot memo would corrupt groups after the reset
       threeWay("pair_flush", spark.range(50000).selectExpr(
@@ -96,13 +88,11 @@ class PackedPairKeySpec extends AnyFunSuite {
           count(lit(1)).as("n"), sum(col("v")).as("sv"))
           .orderBy("s1", "s2")
       }
-    } finally graft.plans.PackedAgg.flushCapOverride = prev
+    } }
   }
 
   test("pass-through switch mid-partition with pair path on") {
-    val prevCheck = graft.plans.PackedAgg.passThroughCheckRows
-    graft.plans.PackedAgg.passThroughCheckRows = 256
-    try withAqe(false) {
+    withConf("spark.graft.agg.passThroughCheckRows" -> "256") { withAqe(false) {
       // near-unique pairs trip the 0.75 group/row ratio at the lowered
       // check point; each pair appears twice → real cross-fragment merges
       threeWay("pair_pt", spark.range(40000).selectExpr(
@@ -113,7 +103,7 @@ class PackedPairKeySpec extends AnyFunSuite {
           count(lit(1)).as("n"), sum(col("v")).as("sv"), max(col("v")).as("mx"))
           .orderBy(col("s1"), col("s2").asc_nulls_first)
       }
-    } finally graft.plans.PackedAgg.passThroughCheckRows = prevCheck
+    } }
   }
 
   test("hash-colliding distinct strings do not merge in the intern") {
@@ -137,7 +127,7 @@ class PackedPairKeySpec extends AnyFunSuite {
     // memoized pair hits inside one batch. Two partitions so each task
     // sees ~22k groups (20k unique NULL-key groups force repeated grows,
     // 2k repeated pairs keep hitting the memo across them). No
-    // flushCapOverride: the grow, not a flush/reset, must bump generation.
+    // flushGroups setting: the grow, not a flush/reset, must bump generation.
     withAqe(false) {
       threeWay("pair_grow", spark.range(200000).repartition(2).selectExpr(
         "CASE WHEN id % 5 = 0 THEN NULL ELSE concat('a', id % 50) END AS s1",

@@ -34,24 +34,18 @@ class PairExistsToAggSpec extends AnyFunSuite {
 
   private def onOff(sql: String): (Seq[Row], Seq[Row]) = {
     fixture
-    val prev = PairExistsToAgg.enabled
     def run(): Seq[Row] = spark.sql(sql).collect().toSeq
       .sortBy(_.toString)
-    PairExistsToAgg.enabled = true
-    val on = run()
-    PairExistsToAgg.enabled = false
-    val off = run()
-    PairExistsToAgg.enabled = prev
+    val on = withGraft("PairExistsToAgg" -> true)(run())
+    val off = withGraft("PairExistsToAgg" -> false)(run())
     (on, off)
   }
 
   private def firedPlan(sql: String): Boolean = {
     fixture
-    val prev = PairExistsToAgg.enabled
-    PairExistsToAgg.enabled = true
-    try spark.sql(sql).queryExecution.optimizedPlan.toString
-      .contains("_graft_pairmin")
-    finally PairExistsToAgg.enabled = prev
+    withGraft("PairExistsToAgg" -> true) {
+      spark.sql(sql).queryExecution.optimizedPlan.toString.contains("_graft_pairmin")
+    }
   }
 
   test("IN over a pair-existence self-join: identical results, rule fires") {

@@ -49,8 +49,7 @@ class RadixAggSpec extends AnyFunSuite {
       query().orderBy(col("k").asc_nulls_first).collect().toSeq
     for (aqe <- Seq(true, false)) withAqe(aqe) {
       val on = run()
-      graft.rules.RadixShuffleAgg.enabled = false
-      val off = try run() finally graft.rules.RadixShuffleAgg.enabled = true
+      val off = withGraft("RadixShuffleAgg" -> false)(run())
       assert(on.size == 1000 + 1) // 0..999 plus the NULL-key group
       assert(on == off, s"aqe=$aqe first diff: ${
         on.zip(off).find { case (a, b) => a != b }}")
@@ -102,13 +101,10 @@ class RadixAggSpec extends AnyFunSuite {
     // disable it here so Spark's two-level distinct plan (the radix
     // rule's PartialMerge target, still the path for GROUPED single
     // distincts) stays exercised
-    val prevFuse = graft.rules.FuseSingleDistinct.enabled
-    graft.rules.FuseSingleDistinct.enabled = false
-    try {
+    withGraft("FuseSingleDistinct" -> false) {
       for (aqe <- Seq(true, false)) withAqe(aqe) {
         val on = q().collect().toSeq
-        graft.rules.RadixShuffleAgg.enabled = false
-        val off = try q().collect().toSeq finally graft.rules.RadixShuffleAgg.enabled = true
+        val off = withGraft("RadixShuffleAgg" -> false)(q().collect().toSeq)
         assert(on == off, s"aqe=$aqe on=$on off=$off")
       }
       withAqe(false) {
@@ -116,7 +112,7 @@ class RadixAggSpec extends AnyFunSuite {
         assert(plan.collect { case r: graft.plans.RadixFinalAggExec if r.bufferMode => r }.nonEmpty,
           plan.toString.take(2000))
       }
-    } finally graft.rules.FuseSingleDistinct.enabled = prevFuse
+    }
   }
 
   test("date key and flush-path blobs merge correctly") {
@@ -128,8 +124,7 @@ class RadixAggSpec extends AnyFunSuite {
         d.groupBy("dt").agg(sum(col("v")).as("sv"), max(col("v")).as("mx"))
           .orderBy("dt").collect().toSeq
       val on = run()
-      graft.rules.RadixShuffleAgg.enabled = false
-      val off = try run() finally graft.rules.RadixShuffleAgg.enabled = true
+      val off = withGraft("RadixShuffleAgg" -> false)(run())
       assert(on.size == 400 && on == off)
     }
   }

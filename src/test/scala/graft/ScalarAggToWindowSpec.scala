@@ -29,11 +29,8 @@ class ScalarAggToWindowSpec extends AnyFunSuite {
           if w.windowExpressions.exists(_.name.startsWith("_graft_wscalar")) => w
     }.nonEmpty
 
-  private def offRows(sql: String): Seq[String] = {
-    ScalarAggToWindow.enabled = false
-    try spark.sql(sql).collect().toSeq.map(_.toString)
-    finally ScalarAggToWindow.enabled = true
-  }
+  private def offRows(sql: String): Seq[String] =
+    withGraft("ScalarAggToWindow" -> false)(spark.sql(sql).collect().toSeq.map(_.toString))
 
   private val q11 = """
     SELECT ps_partkey, sum(ps_supplycost * ps_availqty) AS value

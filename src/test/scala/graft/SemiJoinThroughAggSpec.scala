@@ -24,11 +24,8 @@ class SemiJoinThroughAggSpec extends AnyFunSuite {
             j.right.output.exists(_.name.startsWith("_graft_semiagg_k")) => j
     }.nonEmpty
 
-  private def offRows(sql: String): Seq[String] = {
-    SemiJoinThroughAgg.enabled = false
-    try spark.sql(sql).collect().toSeq.map(_.toString)
-    finally SemiJoinThroughAgg.enabled = true
-  }
+  private def offRows(sql: String): Seq[String] =
+    withGraft("SemiJoinThroughAgg" -> false)(spark.sql(sql).collect().toSeq.map(_.toString))
 
   private val q17 = """
     SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly

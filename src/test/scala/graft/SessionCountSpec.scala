@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionCountSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withFuse[A](on: Boolean)(f: => A): A = {
-    val prev = graft.rules.SessionCountRule.enabled
-    graft.rules.SessionCountRule.enabled = on
-    try f finally graft.rules.SessionCountRule.enabled = prev
-  }
+  private def withFuse[A](on: Boolean)(f: => A): A = withGraft("SessionCountRule" -> on)(f)
   private def withAqe[A](on: Boolean)(f: => A): A = {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", on.toString)

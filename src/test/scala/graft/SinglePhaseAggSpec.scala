@@ -21,11 +21,7 @@ class SinglePhaseAggSpec extends AnyFunSuite {
   // pairs this spec builds; disable it here so the single-phase rule's
   // own mechanics stay pinned (it remains the route for pairs packed
   // declines: unsupported agg types, >64 keys, decimal sums)
-  private def withPackedOff[A](f: => A): A = {
-    val prev = graft.rules.PackedShuffleAgg.enabled
-    graft.rules.PackedShuffleAgg.enabled = false
-    try f finally graft.rules.PackedShuffleAgg.enabled = prev
-  }
+  private def withPackedOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 
   private val n = 20000L
 
@@ -77,13 +73,12 @@ class SinglePhaseAggSpec extends AnyFunSuite {
 
   test("results identical with the rule disabled (differential)") { withPackedOff {
     val on = grouped(annotated).orderBy("k", "s").collect()
-    SinglePhaseAgg.enabled = false
-    try {
+    withGraft("SinglePhaseAgg" -> false) {
       val aggs = aggNodes(grouped(annotated))
       assert(aggs.length == 2, "hatch must restore the two-phase plan")
       val off = grouped(annotated).orderBy("k", "s").collect()
       assert(on.toSeq == off.toSeq)
-    } finally SinglePhaseAgg.enabled = true
+    }
   } }
 
   test("declines without the NDV proof") { withPackedOff {
@@ -105,9 +100,8 @@ class SinglePhaseAggSpec extends AnyFunSuite {
     assert(aggs.length == 2, "filtered input → full-table NDV proof is void")
     // and the filtered results still match the hatch-off plan
     val on = grouped(filtered).orderBy("k", "s").collect()
-    SinglePhaseAgg.enabled = false
-    try assert(on.toSeq == grouped(filtered).orderBy("k", "s").collect().toSeq)
-    finally SinglePhaseAgg.enabled = true
+    withGraft("SinglePhaseAgg" -> false)(
+      assert(on.toSeq == grouped(filtered).orderBy("k", "s").collect().toSeq))
   } }
 
   test("low-ndv grouping keeps the map-side combine") {

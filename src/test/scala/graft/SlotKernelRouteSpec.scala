@@ -61,23 +61,10 @@ class SlotKernelRouteSpec extends AnyFunSuite {
   }
 
   /** Stock Spark: every graft aggregate route off. */
-  private def stock[A](f: => A): A = {
-    import graft.rules._
-    val prev = (RadixShuffleAgg.enabled, PackedShuffleAgg.enabled,
-      SortedRunAggRule.enabled, BoundedKeyDriverAgg.enabled)
-    RadixShuffleAgg.enabled = false; PackedShuffleAgg.enabled = false
-    SortedRunAggRule.enabled = false; BoundedKeyDriverAgg.enabled = false
-    try f finally {
-      RadixShuffleAgg.enabled = prev._1; PackedShuffleAgg.enabled = prev._2
-      SortedRunAggRule.enabled = prev._3; BoundedKeyDriverAgg.enabled = prev._4
-    }
-  }
+  private def stock[A](f: => A): A = withGraft("RadixShuffleAgg" -> false,
+    "PackedShuffleAgg" -> false, "SortedRunAggRule" -> false, "BoundedKeyDriverAgg" -> false)(f)
 
-  private def withSmallFlush[A](f: => A): A = {
-    val prev = graft.plans.PackedAgg.flushCapOverride
-    graft.plans.PackedAgg.flushCapOverride = 8
-    try f finally graft.plans.PackedAgg.flushCapOverride = prev
-  }
+  private def withSmallFlush[A](f: => A): A = withConf("spark.graft.agg.flushGroups" -> "8")(f)
 
   private final case class Route(name: String, keys: Seq[String],
       present: SparkPlan => Boolean) {

@@ -20,11 +20,7 @@ class SortedRunAggSpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  private def withRule[A](on: Boolean)(f: => A): A = {
-    val prev = graft.rules.SortedRunAggRule.enabled
-    graft.rules.SortedRunAggRule.enabled = on
-    try f finally graft.rules.SortedRunAggRule.enabled = prev
-  }
+  private def withRule[A](on: Boolean)(f: => A): A = withGraft("SortedRunAggRule" -> on)(f)
 
   // run-clustered: partitioned AND sorted by `a` (nulls included), with
   // NULL run keys in `b` and NULL agg inputs in `d`. CACHED — like the
@@ -100,11 +96,7 @@ class SortedRunAggSpec extends AnyFunSuite {
     }
   }
 
-  private def withTopN[A](on: Boolean)(f: => A): A = {
-    val prev = graft.rules.SortedRunAggRule.topNEnabled
-    graft.rules.SortedRunAggRule.topNEnabled = on
-    try f finally graft.rules.SortedRunAggRule.topNEnabled = prev
-  }
+  private def withTopN[A](on: Boolean)(f: => A): A = withGraft("SortedRunAgg.topN" -> on)(f)
 
   test("fused top-n drain matches the unfused TakeOrdered pair (total orders)") {
     withAqe(false) {

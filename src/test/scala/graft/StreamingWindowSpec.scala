@@ -1,6 +1,5 @@
 package graft
 
-import graft.rules.InsertCacheColumnarToRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingWindowSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withRule[T](on: Boolean)(body: => T): T = {
-    val prev = InsertCacheColumnarToRow.streamWindowEnabled
-    InsertCacheColumnarToRow.streamWindowEnabled = on
-    try body finally InsertCacheColumnarToRow.streamWindowEnabled = prev
-  }
+  private def withRule[T](on: Boolean)(body: => T): T = withGraft("StreamingWindow" -> on)(body)
 
   private lazy val df = {
     import spark.implicits._
@@ -86,14 +81,12 @@ class StreamingWindowSpec extends AnyFunSuite {
       SparkEntry.queries("events_sessionize_lag")(spark, sf).queryExecution.executedPlan))
     assert(fused.collect {
       case s: graft.plans.SessionCountExec => s }.nonEmpty, fused.toString.take(1500))
-    val prev = graft.rules.SessionCountRule.enabled
-    graft.rules.SessionCountRule.enabled = false
-    try {
+    withGraft("SessionCountRule" -> false) {
       val unfused = withAqeOff(withRule(on = true)(
         SparkEntry.queries("events_sessionize_lag")(spark, sf).queryExecution.executedPlan))
       assert(unfused.collect {
         case s: graft.plans.StreamingWindowExec => s }.nonEmpty, unfused.toString.take(1500))
-    } finally graft.rules.SessionCountRule.enabled = prev
+    }
   }
 
   test("object-typed running aggregates are correct over reused cache rows") {

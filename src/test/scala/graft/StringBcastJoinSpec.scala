@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.StringBcastJoinExec
-import graft.rules.StringBcastJoinRule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,11 +19,8 @@ class StringBcastJoinSpec extends AnyFunSuite {
   private def fired(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("StringBcastJoin")
 
-  private def offRows(df: => DataFrame): Set[String] = {
-    StringBcastJoinRule.enabled = false
-    try df.collect().toSet.map((r: org.apache.spark.sql.Row) => r.toString)
-    finally StringBcastJoinRule.enabled = true
-  }
+  private def offRows(df: => DataFrame): Set[String] = withGraft("StringBcastJoinRule" -> false)(
+    df.collect().toSet.map((r: org.apache.spark.sql.Row) => r.toString))
 
   // probe: 40k rows over a 300-key string domain (dict-encodes per
   // batch) + some NULL keys; build: 300 keys with DUPLICATES + a NULL

@@ -20,11 +20,7 @@ class TopNAggSpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  private def withRule[A](on: Boolean)(f: => A): A = {
-    val prev = graft.rules.TopNThroughAgg.enabled
-    graft.rules.TopNThroughAgg.enabled = on
-    try f finally graft.rules.TopNThroughAgg.enabled = prev
-  }
+  private def withRule[A](on: Boolean)(f: => A): A = withGraft("TopNThroughAgg" -> on)(f)
 
   // high-cardinality single int key (radix arm) with NULL keys + NULL inputs
   private def single(): DataFrame = spark.range(60000).selectExpr(
@@ -198,6 +194,31 @@ class TopNAggSpec extends AnyFunSuite {
       assert(plan.collect { case p: graft.plans.PartialTopNExec => p }.isEmpty)
       assert(plan.collect { case p: graft.plans.RadixPartialAggExec => p }
         .forall(_.topN.isEmpty))
+    }
+  }
+
+  test("AQE keeps a LIMIT over blob-shuffled aggregates (radix and packed routes)") {
+    // the radix/packed partials shuffle one record per state blob, not per
+    // group: AQE must not read that record count as the stage's row count
+    // and drop the LIMIT (EliminateLimits) or an ORDER BY (OptimizeOneRowPlan).
+    // Both rules stay on: the exchange, not the session, carries the fix
+    assert(spark.conf.getOption("spark.sql.adaptive.optimizer.excludedRules")
+      .forall(r => !r.contains("EliminateLimits") && !r.contains("OptimizeOneRowPlan")))
+    single().selectExpr("k", "CAST(k AS STRING) AS ks", "l")
+      .createOrReplaceTempView("topn_single")
+    for ((key, exec) <- Seq("k" -> "RadixFinalAggExec", "ks" -> "PackedFinalAggExec");
+         order <- Seq("", s"ORDER BY $key")) withRule(false) {
+      val sql = s"SELECT $key AS k, sum(l) AS s FROM topn_single GROUP BY $key $order LIMIT 137"
+      val groups = spark.sql(s"SELECT $key, sum(l) FROM topn_single GROUP BY $key")
+        .collect().map(r => r.get(0) -> r.get(1)).toMap
+      val (df, rows) = withAqe(true) { val d = spark.sql(sql); (d, d.collect().toSeq) }
+      val plan = MergeSortedCollectSpec.nodes(df.queryExecution.executedPlan)
+      assert(plan.exists(_.getClass.getSimpleName == exec), plan.head.toString.take(2000))
+      assert(plan.exists(_.isInstanceOf[graft.plans.BlobShuffleExchangeExec]),
+        plan.head.toString.take(2000))
+      assert(rows.length == 137, s"$sql: ${rows.length} rows")
+      rows.foreach(r => assert(groups(r.get(0)) == r.get(1), s"$sql: $r"))
+      if (order.nonEmpty) assert(rows == withAqe(false)(spark.sql(sql).collect().toSeq), sql)
     }
   }
 }

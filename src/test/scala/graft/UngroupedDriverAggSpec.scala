@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.DriverGroupAggPlan
-import graft.rules.BoundedKeyDriverAgg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,11 +20,8 @@ class UngroupedDriverAggSpec extends AnyFunSuite {
       case p: DriverGroupAggPlan => p
     }.nonEmpty
 
-  private def offRows(df: => DataFrame): Seq[String] = {
-    BoundedKeyDriverAgg.ungroupedEnabled = false
-    try df.collect().toSeq.map(_.toString)
-    finally BoundedKeyDriverAgg.ungroupedEnabled = true
-  }
+  private def offRows(df: => DataFrame): Seq[String] =
+    withGraft("DriverAgg.ungrouped" -> false)(df.collect().toSeq.map(_.toString))
 
   private lazy val facts: DataFrame = spark.range(0, 9973)
     .select(
@@ -118,8 +114,7 @@ class UngroupedDriverAggSpec extends AnyFunSuite {
     // the WinMagic rewrite declines. On this exact shape ScalarAggToWindow
     // outranks it (the subquery becomes a window and no scalar subquery
     // survives to route), so pin the arm with WinMagic off.
-    graft.rules.ScalarAggToWindow.enabled = false
-    try {
+    withGraft("ScalarAggToWindow" -> false) {
       val df = spark.sql(sql)
       val routed = df.queryExecution.optimizedPlan.collectWithSubqueries {
         case p: DriverGroupAggPlan => p
@@ -127,7 +122,7 @@ class UngroupedDriverAggSpec extends AnyFunSuite {
       assert(routed.nonEmpty, df.queryExecution.optimizedPlan.toString)
       val expect = offRows(spark.sql(sql))
       assert(df.collect().toSeq.map(_.toString) == expect)
-    } finally graft.rules.ScalarAggToWindow.enabled = true
+    }
   }
 
   test("thq15 subquery shape under WinMagic: window rewrite wins, results exact") {
@@ -139,9 +134,7 @@ class UngroupedDriverAggSpec extends AnyFunSuite {
     val df = spark.sql(sql)
     // differential: default stack (WinMagic claims the shape) vs both
     // rewrites disabled
-    graft.rules.ScalarAggToWindow.enabled = false
-    val expect = try offRows(spark.sql(sql))
-      finally graft.rules.ScalarAggToWindow.enabled = true
+    val expect = withGraft("ScalarAggToWindow" -> false)(offRows(spark.sql(sql)))
     assert(df.collect().toSeq.map(_.toString) == expect)
   }
 

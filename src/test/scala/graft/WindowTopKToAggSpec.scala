@@ -22,11 +22,8 @@ class WindowTopKToAggSpec extends AnyFunSuite {
           }.nonEmpty) => a
     }.nonEmpty
 
-  private def offRows(sql: String): Seq[String] = {
-    WindowTopKToAgg.enabled = false
-    try spark.sql(sql).collect().toSeq.map(_.toString).sorted
-    finally WindowTopKToAgg.enabled = true
-  }
+  private def offRows(sql: String): Seq[String] = withGraft("WindowTopKToAgg" -> false)(
+    spark.sql(sql).collect().toSeq.map(_.toString).sorted)
 
   private def onRows(sql: String): Seq[String] =
     spark.sql(sql).collect().toSeq.map(_.toString).sorted
