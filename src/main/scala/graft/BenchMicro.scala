@@ -48,8 +48,8 @@ object BenchMicro {
   private def shapes: Seq[(String, String, String, String)] = Seq(
     ("vector_read", "VectorizedCacheRead",
       "q1_pricing_summary", null),
-    ("radix_agg", "RadixShuffleAgg",
-      "h2o_range_agg", "RadixPartialAgg"),
+    ("packed_long_key", "PackedShuffleAgg",
+      "h2o_range_agg", "PackedPartialAgg"),
     ("packed_agg", "PackedShuffleAgg",
       "cb_count_distinct_pairs", "PackedPartialAgg"),
     ("packed_selection", "PackedAgg.selectionFold",

@@ -23,7 +23,7 @@ object GraftConf {
     "DictFilterScan", "DistinctByGroupPrefix", "FastLikeChain",
     "FastPercentileRule", "FastRegexpExtract", "FastUtcDateTrunc",
     "FuseSingleDistinct", "PackedShuffleAgg", "PairExistsToAgg",
-    "RadixShuffleAgg", "ScalarAggToWindow", "SemiJoinThroughAgg",
+    "ScalarAggToWindow", "SemiJoinThroughAgg",
     "SessionCountRule", "SinglePhaseAgg", "SortedRunAggRule",
     "StringBcastJoinRule", "TopKSinglePhase", "TopNThroughAgg",
     "WindowTopKToAgg")
@@ -63,7 +63,7 @@ object GraftConf {
     .createWithDefault(Nil)
 
   val FlushGroups = SQLConf.buildConf("spark.graft.agg.flushGroups")
-    .doc("Groups a radix or packed partial holds before it flushes its map " +
+    .doc("Groups a packed partial holds before it flushes its map " +
       "as blobs and starts over.")
     .intConf
     .checkValue(_ > 0, "must be positive")

@@ -85,15 +85,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectQueryStagePrepRule(_ => graft.rules.StringBcastJoinRule)
     // grouped-distinct towers: re-key the dedup exchange onto the
     // grouping prefix so the count level is exchange-free (TPC-H q16).
-    // BEFORE Radix/PackedShuffleAgg so it sees the stock 4-level tower
+    // BEFORE PackedShuffleAgg so it sees the stock 4-level tower
     e.injectQueryStagePrepRule(_ => graft.rules.DistinctByGroupPrefix)
-    e.injectQueryStagePrepRule(_ => graft.rules.RadixShuffleAgg)
-    // after RadixShuffleAgg (matches the radix pair it emits); BEFORE
-    // PackedShuffleAgg so its generic arm still sees the stock
+    // BEFORE PackedShuffleAgg so its generic arm still sees the stock
     // partial/final pair for ORDER-BY-grouping-prefix LIMIT pruning
     e.injectQueryStagePrepRule(_ => graft.rules.TopNThroughAgg)
-    // multi-key / string-key packed-payload shapes (radix keeps the
-    // single int/long-key surface; TopN kept its pruned pairs)
+    // packed-payload shuffle aggregation over long-widenable and string
+    // keys (TopN kept its pruned pairs; packed prunes one-long-key ones)
     e.injectQueryStagePrepRule(_ => graft.rules.PackedShuffleAgg)
     // stats-proved partial skip for whatever aggregation pairs remain
     e.injectQueryStagePrepRule(_ => graft.rules.SinglePhaseAgg)
@@ -104,7 +102,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // warm-mode cross-execution broadcast cache under AQE (no-op
     // otherwise; the non-AQE wrap lives in InsertCacheColumnarToRow)
     e.injectQueryStagePrepRule(_ => graft.plans.CachedBroadcastPrep)
-    // exchanges above radix/packed partials report no runtime row count
+    // exchanges above packed partials report no runtime row count
     // (one record per state blob, not per group); after every rule that
     // builds or copies them
     e.injectQueryStagePrepRule(_ => graft.plans.BlobShufflePrep)

@@ -6,10 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Dev profiler for the OLAP aggregation shapes: per stage, prints task
   * count, run/cpu/GC/deserialize time and shuffle read/write volume+time,
   * to attribute wall-clock between the aggregation loop, the state
-  * shuffle, and the dispatch floor (PERF.md round-6 radix notes). DEBUG
-  * logging for graft.plans.RadixAgg adds the radix partial's
-  * per-partition loop/emit split. Not part of the driver protocol — a
-  * diagnostic main.
+  * shuffle, and the dispatch floor (PERF.md round-6 notes). Not part
+  * of the driver protocol — a diagnostic main.
   */
 object ProfOlap {
   def main(args: Array[String]): Unit = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleOrigin}
 
-/** The exchange above a radix or packed partial aggregate.
+/** The exchange above a packed partial aggregate.
   *
   * Those partials write one shuffle record per state blob, not per
   * group, so the stock exchange's runtime row count (its records
@@ -44,13 +44,13 @@ class BlobShuffleExchangeExec(
 }
 
 /** Puts a [[BlobShuffleExchangeExec]] in place of every exchange whose
-  * child is a radix or packed partial. A query-stage-prep rule,
-  * registered after every rule that builds or copies those exchanges
-  * (RadixShuffleAgg, PackedShuffleAgg, TopNThroughAgg). Only AQE reads
+  * child is a packed partial. A query-stage-prep rule, registered
+  * after every rule that builds or copies those exchanges
+  * (PackedShuffleAgg, TopNThroughAgg). Only AQE reads
   * runtime statistics, so the non-AQE path needs no counterpart. */
 object BlobShufflePrep extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
-    case e @ ShuffleExchangeExec(p, c @ (_: RadixPartialAggExec | _: PackedPartialAggExec), o, a)
+    case e @ ShuffleExchangeExec(p, c: PackedPartialAggExec, o, a)
         if !e.isInstanceOf[BlobShuffleExchangeExec] =>
       new BlobShuffleExchangeExec(p, c, o, a)
   }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.types._
   * Piggyback kinds cover the aggregates a summary query mixes with a
   * distinct count: count(*) / count(col) / sum / avg / min / max over
   * int, long, float, double. Long sums follow the session's ANSI mode
-  * (wrap by default, error when ansi — same policy as [[RadixAgg]]).
+  * (wrap by default, error when ansi — same policy as [[SlotKernel]]).
   */
 final case class SingleDistinctPartial(
     distinct: Expression,

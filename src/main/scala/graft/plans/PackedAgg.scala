@@ -18,12 +18,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Multi-key packed-payload shuffle aggregation — [[RadixAgg]] generalized
-  * to composite grouping keys over the long-widenable domain PLUS strings
-  * (the ClickBench `GROUP BY UserID, SearchPhrase[, minute]` class, and
-  * the inner dedup exchange of `count(DISTINCT string)` rewrites).
+/** Packed-payload shuffle aggregation over grouping keys in the
+  * long-widenable domain PLUS strings — one operator for every key
+  * shape: a single int/long/date/timestamp key (h2oai `GROUP BY id`),
+  * composite keys (the ClickBench `GROUP BY UserID, SearchPhrase[,
+  * minute]` class), and the inner dedup exchange of `count(DISTINCT
+  * string)` rewrites.
   *
-  * Why a second operator: in the groups≈rows regime Spark's
+  * Why: in the groups≈rows regime Spark's
   * partial→exchange→final serializes ONE UnsafeRow per (partition, group)
   * through the shuffle — for a 10M-group string-keyed aggregate that is
   * 10M rows of per-row shuffle-writer work on both sides of the wire.
@@ -49,8 +51,9 @@ import scala.collection.mutable.ArrayBuffer
   * Routed by [[graft.rules.PackedShuffleAgg]] for the Final/Partial and
   * PartialMerge/Partial (distinct-rewrite inner dedup) pairs whose keys
   * fit the domain and whose aggregates compile to [[DriverAgg.layout]]
-  * slots; single int/long-keyed shapes keep the earlier [[RadixAgg]]
-  * route.
+  * slots. One long key (no string key) probes the map in place
+  * ([[MultiKeyMap.slotOfLong]]) and may carry the `ORDER BY k LIMIT n`
+  * key prune ([[KeyTopN]]).
   */
 object PackedAgg {
 
@@ -88,7 +91,8 @@ object PackedAgg {
     * to its bucket's blob builder as a one-row group fragment (the state
     * block is the singleton accumulator), skipping the map probe the
     * groups≈rows regime wastes. Blob merge is associative, so map-phase and
-    * pass-through fragments coexist.
+    * pass-through fragments coexist. A lone long key never switches (see
+    * the partial's `ptCheckRows`).
     */
   final case class Tuning(flushGroups: Int, checkRows: Int,
       dictKeys: Boolean, pairKeys: Boolean)
@@ -201,7 +205,75 @@ object PackedAgg {
   }
 
   def supportedKey(dt: DataType): Boolean =
-    RadixAgg.supportedKey(dt) || dt == StringType
+    SortedRunAggExec.supportedKey(dt) || dt == StringType
+
+  /** `ORDER BY k LIMIT limit` (`desc`) over the one long key `k` of a
+    * packed pair: the partial ships only each map's `limit` best keys.
+    * Sound because the long key order IS the group order for every
+    * long-widenable key type (lossless signed widening), keys are unique
+    * per map (no ties), and the NULL group is never pruned (all its
+    * fragments survive, so its merged aggregate stays complete).
+    */
+  final case class KeyTopN(limit: Int, desc: Boolean)
+
+  /** A partial task's [[KeyTopN]] state. Once the map holds `at` groups
+    * (2×limit, at least 1024) it is cut to its `limit` best non-null
+    * keys, and the worst kept key becomes the threshold: a later row
+    * whose key is worse is dropped with one compare — its group already
+    * has `limit` distinct keys ahead of it in this partition, so it
+    * cannot reach the global top `limit`. Every emitted map is cut the
+    * same way first.
+    */
+  private[plans] final class KeyPrune(tn: KeyTopN) {
+    val at: Int = math.max(2 * tn.limit, 1024)
+    // the always-pass extreme until the first cut
+    private var thr = if (tn.desc) Long.MinValue else Long.MaxValue
+
+    def keeps(key: Long): Boolean = if (tn.desc) key >= thr else key <= thr
+
+    def prune(m: MultiKeyMap): Unit = {
+      val heap = new BoundedLongHeap(tn.limit, max = !tn.desc)
+      m.foreachSlot(s => if (m.maskAt(s) == 0L) heap.offer(m.longKeyAt(s, 0)))
+      if (heap.full) {
+        thr = heap.threshold
+        m.retain(s => m.maskAt(s) != 0L || keeps(m.longKeyAt(s, 0)))
+      }
+    }
+  }
+
+  /** Bounded selection heap over primitive longs: retains the `cap`
+    * smallest (`max = true` → max-heap root is the retention threshold)
+    * or largest values offered. Keys are unique, so after `cap` offers
+    * the keep predicate `k <= threshold` (asc) / `k >= threshold` (desc)
+    * selects exactly the retained set.
+    */
+  private final class BoundedLongHeap(cap: Int, max: Boolean) {
+    private val arr = new Array[Long](cap)
+    private var n = 0
+    private def worse(a: Long, b: Long): Boolean = if (max) a > b else a < b
+    def full: Boolean = n == cap
+    def threshold: Long = arr(0)
+    def offer(k: Long): Unit = {
+      if (n < cap) {
+        var i = n; arr(i) = k; n += 1
+        while (i > 0 && worse(arr(i), arr((i - 1) >> 1))) {
+          val p = (i - 1) >> 1; val t = arr(i); arr(i) = arr(p); arr(p) = t; i = p
+        }
+      } else if (worse(arr(0), k)) {
+        arr(0) = k
+        var i = 0
+        var go = true
+        while (go) {
+          val l = 2 * i + 1; val r = l + 1
+          var m = i
+          if (l < n && worse(arr(l), arr(m))) m = l
+          if (r < n && worse(arr(r), arr(m))) m = r
+          if (m == i) go = false
+          else { val t = arr(i); arr(i) = arr(m); arr(m) = t; i = m }
+        }
+      }
+    }
+  }
 
   /** Key kinds: widened-to-long vs interned string. */
   final val KindLong = 0
@@ -356,7 +428,7 @@ object PackedAgg {
     var longs = new Array[Long](cap * nL)
     var doubles = new Array[Double](cap * nD)
     var flags = new Array[Boolean](cap * nF)
-    private var pool = new Array[Byte](1 << 16)
+    private var pool = new Array[Byte](if (nSK == 0) 0 else 1 << 16)
     var poolLen = 0
 
     // probe staging (filled by the caller before slotOf)
@@ -426,13 +498,38 @@ object PackedAgg {
       i
     }
 
-    private def grow(): Unit = {
+    /** [[slotOf]] for a lone non-null long key (one long key, no
+      * string key) under `h = mix(hashSeed, key)`. That hash is a
+      * bijection of the key, so a probe compares hashes only: the one
+      * other entry that can hold `h` is the NULL group (`mixNull`), and
+      * only when `key` is the null mix constant (0). */
+    def slotOfLong(h: Long, key: Long): Int = {
+      var i = (h & mask).toInt
+      while (used(i) && (hashes(i) != h || (key == NullMix && nullMasks(i) != 0L)))
+        i = (i + 1) & mask
+      if (!used(i)) {
+        if (size >= cap - (cap >> 2)) { grow(); return slotOfLong(h, key) }
+        used(i) = true; hashes(i) = h; nullMasks(i) = 0L; lkeys(i) = key
+        size += 1
+      }
+      i
+    }
+
+    private def grow(): Unit = rehash(cap << 1, null)
+
+    /** Drop every group whose slot fails `keep` (the pool keeps its
+      * bytes until the next reset). */
+    def retain(keep: Int => Boolean): Unit = rehash(cap, keep)
+
+    private def rehash(newCap: Int, keep: Int => Boolean): Unit = {
       generation += 1
       val oc = cap
-      val oh = hashes; val ou = used; val olk = lkeys
+      // decided over the old arrays, before they are replaced
+      val kept = if (keep == null) used else Array.tabulate(cap)(i => used(i) && keep(i))
+      val oh = hashes; val olk = lkeys
       val oso = soffs; val osl = slens; val onm = nullMasks
       val oL = longs; val oD = doubles; val oF = flags
-      cap <<= 1; mask = cap - 1
+      cap = newCap; mask = cap - 1
       hashes = new Array[Long](cap); used = new Array[Boolean](cap)
       lkeys = new Array[Long](cap * nLK)
       soffs = new Array[Int](cap * nSK); slens = new Array[Int](cap * nSK)
@@ -440,9 +537,10 @@ object PackedAgg {
       longs = new Array[Long](cap * nL)
       doubles = new Array[Double](cap * nD)
       flags = new Array[Boolean](cap * nF)
+      size = 0
       var i = 0
       while (i < oc) {
-        if (ou(i)) {
+        if (kept(i)) {
           var j = (oh(i) & mask).toInt
           while (used(j)) j = (j + 1) & mask
           used(j) = true; hashes(j) = oh(i); nullMasks(j) = onm(i)
@@ -452,6 +550,7 @@ object PackedAgg {
           System.arraycopy(oL, i * nL, longs, j * nL, nL)
           System.arraycopy(oD, i * nD, doubles, j * nD, nD)
           System.arraycopy(oF, i * nF, flags, j * nF, nF)
+          size += 1
         }
         i += 1
       }
@@ -502,7 +601,11 @@ object PackedPartialAggExec {
   *
   * Keys blob layout (LE): [n:int][per group: hash:long, nullmask:long,
   * longKeys:8×nLK, strLens:4×nSK][string bytes, group-major]. State blob:
-  * n × (8·nL + 8·nD + nF) as in [[RadixAgg]].
+  * n × (8·nL + 8·nD + nF), [[SlotKernel]]'s block encoding.
+  *
+  * `topN` (one long key only, set by [[graft.rules.PackedShuffleAgg]]
+  * under `ORDER BY k LIMIT n`) prunes the map to its top-`limit` keys —
+  * see [[PackedAgg.KeyPrune]].
   */
 final case class PackedPartialAggExec(
     keyExprs: Seq[Expression],
@@ -518,7 +621,8 @@ final case class PackedPartialAggExec(
     // folded CacheFilter conjuncts, evaluated per batch through
     // DictSelection (columnar path only) — set by InsertCacheColumnarToRow
     selection: Seq[Expression] = Nil,
-    tuning: PackedAgg.Tuning) extends UnaryExecNode {
+    tuning: PackedAgg.Tuning,
+    topN: Option[PackedAgg.KeyTopN] = None) extends UnaryExecNode {
   import PackedAgg._
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -669,9 +773,16 @@ final case class PackedPartialAggExec(
     val theSub = subIdx
     val (kLK, kSK, kN) = (nLK, nSK, nKeys)
     val (recB, blockB, nBuckets) = (recBytes, blockBytes, buckets)
-    val ptCheckRows = tuning.checkRows.toLong
+    val oneLong = kN == 1 && kLK == 1
+    // never pass through with one long key: its in-place probe costs
+    // about what a pass-through append does, and a partition whose
+    // first rows look unique still reduces later (GROUP BY l_partkey
+    // over TPC-H SF1: 1.98× the radix partial with the switch, 1.23×
+    // without)
+    val ptCheckRows = if (oneLong) -1L else tuning.checkRows.toLong
     val ptRatio = PackedAgg.PassThroughGroupRatio
     val flushCap = tuning.flushGroups
+    val tn = topN
     if (columnarChild) {
       val kOrds = keyExprs.map { case a: Attribute =>
         childOut.indexWhere(_.exprId == a.exprId) }.toArray
@@ -693,6 +804,7 @@ final case class PackedPartialAggExec(
       val pairKeys = tuning.pairKeys && kN == 2 && kSK >= 1 && dictKeys
       child.executeColumnar().mapPartitions { batches =>
         val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
+        val pr = tn.map(new KeyPrune(_)).orNull
         // pair-key fast path state (see PackedAgg.Tuning):
         // per-task interns per STRING key position, slot memo, and
         // per-batch local-id → global-id translation arrays
@@ -724,13 +836,27 @@ final case class PackedPartialAggExec(
         var passThrough = false
         var builders: Array[BucketBuilder] = null
         val scratch = k.newAcc() // singleton-block staging state
-        val passProj = UnsafeProjection.create(Array[DataType](
+        lazy val passProj = UnsafeProjection.create(Array[DataType](
           IntegerType, BinaryType, BinaryType))
         val passRow = new GenericInternalRow(3)
         def emitBuilder(bk: Int): InternalRow = {
           val (kb, sb) = builders(bk).emitBlobs()
           passRow.update(0, bk); passRow.update(1, kb); passRow.update(2, sb)
           passProj(passRow).copy()
+        }
+        def emitMap(): Iterator[InternalRow] = {
+          if (pr != null) pr.prune(m)
+          val out = emitRows(k, m); m.reset(); out
+        }
+        // after a map update: the adaptive skip's check point, the key prune
+        def updated(): Unit = {
+          rowsSeen += 1
+          if (rowsSeen == ptCheckRows && m.size >= rowsSeen * ptRatio) {
+            flushed ++= emitMap()
+            passThrough = true
+            builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
+          }
+          if (pr != null && m.size >= pr.at) pr.prune(m)
         }
         def appendPass(h: Long, msk: Long, r: Int): Unit = {
           val bk = bucketOf(h, nBuckets)
@@ -758,6 +884,30 @@ final case class PackedPartialAggExec(
           k.writeSingletonCol(vecs, r, scratch, bb.state, soff)
           bb.nRecs += 1
           if (bb.bytes >= BuilderEmitBytes) flushed += emitBuilder(bk)
+        }
+        // one long key: probe in place, the NULL group through the staged
+        // probe. Its own method, so the JIT compiles the loop on its own
+        def oneLongRows(kv: ColumnVector, n: Int): Unit = {
+          val isLong = kLongRead(0)
+          var r = 0
+          while (r < n) {
+            if (sel == null || sel.passes(r)) {
+              if (kv.isNullAt(r)) {
+                m.stageLongs(0) = 0L; m.stageMask = 1L
+                val s = m.slotOf(mixNull(hashSeed))
+                k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+                updated()
+              } else {
+                val key = if (isLong) kv.getLong(r) else kv.getInt(r).toLong
+                if (pr == null || pr.keeps(key)) {
+                  val s = m.slotOfLong(mix(hashSeed, key), key)
+                  k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+                  updated()
+                }
+              }
+            }
+            r += 1
+          }
         }
         def processBatch(batch: org.apache.spark.sql.vectorized.ColumnarBatch): Unit = {
           var i = 0
@@ -825,13 +975,7 @@ final case class PackedPartialAggExec(
             else {
               val s = m.slotOf(h)
               k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
-              rowsSeen += 1
-              if (rowsSeen == ptCheckRows &&
-                  m.size >= rowsSeen * ptRatio) {
-                flushed ++= emitRows(k, m); m.reset()
-                passThrough = true
-                builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
-              }
+              updated()
             }
           }
           // pair-key fast path, engaged per batch: every string key must
@@ -860,7 +1004,8 @@ final case class PackedPartialAggExec(
               j += 1
             }
           }
-          if (pairOk) {
+          if (oneLong) oneLongRows(kvecs(0), n)
+          else if (pairOk) {
             pairs.sync(m.generation)
             val v0 = kvecs(0); val v1 = kvecs(1)
             var r = 0
@@ -897,13 +1042,7 @@ final case class PackedPartialAggExec(
                   pairs.put(a, b, s)
                 }
                 k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
-                rowsSeen += 1
-                if (rowsSeen == ptCheckRows &&
-                    m.size >= rowsSeen * ptRatio) {
-                  flushed ++= emitRows(k, m); m.reset()
-                  passThrough = true
-                  builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
-                }
+                updated()
                 r += 1
               }
             }
@@ -915,7 +1054,7 @@ final case class PackedPartialAggExec(
             }
           }
           if (!passThrough && (m.size >= flushCap || m.poolLen >= PoolFlushBytes)) {
-            flushed ++= emitRows(k, m); m.reset()
+            flushed ++= emitMap()
           }
         }
         // lazy drain: interleave batch consumption with emission so the
@@ -937,7 +1076,7 @@ final case class PackedPartialAggExec(
                   if (builders == null) Iterator.empty
                   else (0 until nBuckets).iterator
                     .filter(bk => builders(bk).nRecs > 0).map(emitBuilder)
-                pending = emitRows(k, m) ++ tail
+                pending = emitMap() ++ tail
               }
             }
           }
@@ -953,6 +1092,7 @@ final case class PackedPartialAggExec(
         val valProj = UnsafeProjection.create(iExprs, childOut)
         val k = kernel(iExprs.map(_.dataType))
         val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
+        val pr = tn.map(new KeyPrune(_)).orNull
         val readLong: Array[InternalRow => Long] = kTypes.zipWithIndex.map {
           case (ByteType, i) => (r: InternalRow) => r.getByte(i).toLong
           case (ShortType, i) => (r: InternalRow) => r.getShort(i).toLong
@@ -967,13 +1107,29 @@ final case class PackedPartialAggExec(
         var passThrough = false
         var builders: Array[BucketBuilder] = null
         val scratch = k.newAcc() // singleton-block staging state
-        val passProj = UnsafeProjection.create(Array[DataType](
+        lazy val passProj = UnsafeProjection.create(Array[DataType](
           IntegerType, BinaryType, BinaryType))
         val passRow = new GenericInternalRow(3)
         def emitBuilder(bk: Int): InternalRow = {
           val (kb, sb) = builders(bk).emitBlobs()
           passRow.update(0, bk); passRow.update(1, kb); passRow.update(2, sb)
           passProj(passRow).copy()
+        }
+        def emitMap(): Iterator[InternalRow] = {
+          if (pr != null) pr.prune(m)
+          val out = emitRows(k, m); m.reset(); out
+        }
+        // after a map update: the adaptive skip's check point, the key
+        // prune, the flush cap
+        def updated(): Unit = {
+          rowsSeen += 1
+          if (rowsSeen == ptCheckRows && m.size >= rowsSeen * ptRatio) {
+            flushed ++= emitMap()
+            passThrough = true
+            builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
+          }
+          if (pr != null && m.size >= pr.at) pr.prune(m)
+          if (m.size >= flushCap || m.poolLen >= PoolFlushBytes) flushed ++= emitMap()
         }
         def appendPass(h: Long, msk: Long, v: InternalRow): Unit = {
           val bk = bucketOf(h, nBuckets)
@@ -1005,6 +1161,16 @@ final case class PackedPartialAggExec(
         def processRow(row: InternalRow): Unit = {
           val kr = keyProj(row)
           val v = valProj(row)
+          if (oneLong && !kr.isNullAt(0)) {
+            // one long key: probe in place (see the columnar path)
+            val key = readLong(0)(kr)
+            if (pr == null || pr.keeps(key)) {
+              val s = m.slotOfLong(mix(hashSeed, key), key)
+              k.updateRow(v, m.longs, m.doubles, m.flags, s)
+              updated()
+            }
+            return
+          }
           var h = hashSeed
           var msk = 0L
           var j = 0
@@ -1030,16 +1196,7 @@ final case class PackedPartialAggExec(
           else {
             val s = m.slotOf(h)
             k.updateRow(v, m.longs, m.doubles, m.flags, s)
-            rowsSeen += 1
-            if (rowsSeen == ptCheckRows &&
-                m.size >= rowsSeen * ptRatio) {
-              flushed ++= emitRows(k, m); m.reset()
-              passThrough = true
-              builders = Array.fill(nBuckets)(new BucketBuilder(recB, blockB))
-            }
-            if (m.size >= flushCap || m.poolLen >= PoolFlushBytes) {
-              flushed ++= emitRows(k, m); m.reset()
-            }
+            updated()
           }
         }
         new Iterator[InternalRow] {
@@ -1061,7 +1218,7 @@ final case class PackedPartialAggExec(
                   if (builders == null) Iterator.empty
                   else (0 until nBuckets).iterator
                     .filter(bk => builders(bk).nRecs > 0).map(emitBuilder)
-                pending = emitRows(k, m) ++ tail
+                pending = emitMap() ++ tail
               }
             }
           }
@@ -1146,6 +1303,7 @@ final case class PackedFinalAggExec(
     val buffered = bufferMode
     val theTopK = topK
     val theOutput = output
+    val oneLong = kN == 1 && kLK == 1
     child.execute().mapPartitions { rows =>
       val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
       rows.foreach { r =>
@@ -1176,7 +1334,7 @@ final case class PackedFinalAggExec(
             j += 1
           }
           m.stageMask = msk
-          val s = m.slotOf(h)
+          val s = if (oneLong && msk == 0L) m.slotOfLong(h, m.stageLongs(0)) else m.slotOf(h)
           k.mergeBlob(m.longs, m.doubles, m.flags, s, state,
             Platform.BYTE_ARRAY_OFFSET + g.toLong * block)
           g += 1

@@ -11,15 +11,15 @@ import DriverAgg.{Acc, GroupCardinalityExceeded}
 /** The one implementation of every aggregate slot kind — row update,
   * column update, state-to-state merge, blob decode+merge, singleton
   * block write, typed final write — shared by the driver-finalized
-  * ([[DriverGroupAggExec]]), radix ([[RadixAgg]]), packed ([[PackedAgg]])
-  * and sorted-run ([[SortedRunAggExec]]) aggregates. The reference runs
+  * ([[DriverGroupAggExec]]), packed ([[PackedAgg]]) and sorted-run
+  * ([[SortedRunAggExec]]) aggregates. The reference runs
   * every aggregate through one table the same way
   * (radix_partitioned_hashtable.cpp); MorphStore (VLDB'20) argues for one
   * processing model rather than one operator variant per format.
   *
   * State shape: flat `longs`/`doubles`/`flags` arrays and a GROUP index
   * `g` — group g's slots live at `g·nL`, `g·nD`, `g·nF`. That is the
-  * layout of [[RadixAgg.LongKeyMap]], [[PackedAgg.MultiKeyMap]], the
+  * layout of [[SortedRunAggExec.LongKeyMap]], [[PackedAgg.MultiKeyMap]], the
   * driver aggregate's dense bucket arrays and an [[DriverAgg.Acc]]
   * (g = 0), so every route calls the same code. Slots compile once to an
   * opcode program; the per-row loops are an int switch over primitive

@@ -1,11 +1,13 @@
 package graft.plans
 
+import graft.functions.DistinctWithHll
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -34,10 +36,101 @@ import scala.collection.mutable.ArrayBuffer
   * Created by [[graft.rules.SortedRunAggRule]] from a collapsed
   * Complete-mode HashAggregate; aggregates compile to
   * [[DriverAgg.layout]] slots, the remaining key widens losslessly to
-  * long ([[RadixAgg.supportedKey]]), NULL run keys ride a side
+  * long ([[SortedRunAggExec.supportedKey]]), NULL run keys ride a side
   * accumulator per run.
   */
 object SortedRunAggExec {
+  /** Key domains that widen losslessly to long (and back). */
+  def supportedKey(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | DateType | LongType |
+         TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** Open-addressing long→slot map with flat per-slot state arrays — the
+    * per-run group map. Zero-initialized state is exactly the
+    * fresh-accumulator state (longs 0, doubles 0, flags false), so
+    * insertion needs no init pass. An insertion-ordered slot list makes
+    * reset and iteration O(size) instead of O(cap): millions of tiny
+    * runs would otherwise each pay a full-capacity clear.
+    */
+  final class LongKeyMap(nL: Int, nD: Int, nF: Int, initCap: Int) {
+    private var cap = Integer.highestOneBit(math.max(initCap, 16))
+    private var mask = cap - 1
+    private var keys = new Array[Long](cap)
+    private var used = new Array[Boolean](cap)
+    var size = 0
+    var longs = new Array[Long](cap * nL)
+    var doubles = new Array[Double](cap * nD)
+    var flags = new Array[Boolean](cap * nF)
+    private var occ = new Array[Int](cap)
+
+    def slotOf(k: Long): Int = {
+      var i = (DistinctWithHll.scramble(k) & mask).toInt
+      while (used(i) && keys(i) != k) i = (i + 1) & mask
+      if (!used(i)) {
+        if (size >= cap - (cap >> 2)) { grow(); return slotOf(k) }
+        used(i) = true; keys(i) = k
+        occ(size) = i
+        size += 1
+      }
+      i
+    }
+
+    private def grow(): Unit = {
+      val oc = cap; val ok = keys; val ou = used
+      val oL = longs; val oD = doubles; val oF = flags
+      cap <<= 1; mask = cap - 1
+      keys = new Array[Long](cap); used = new Array[Boolean](cap)
+      longs = new Array[Long](cap * nL)
+      doubles = new Array[Double](cap * nD)
+      flags = new Array[Boolean](cap * nF)
+      occ = new Array[Int](cap)
+      var n = 0
+      var i = 0
+      while (i < oc) {
+        if (ou(i)) {
+          val k = ok(i)
+          var j = (DistinctWithHll.scramble(k) & mask).toInt
+          while (used(j)) j = (j + 1) & mask
+          used(j) = true; keys(j) = k
+          occ(n) = j; n += 1
+          System.arraycopy(oL, i * nL, longs, j * nL, nL)
+          System.arraycopy(oD, i * nD, doubles, j * nD, nD)
+          System.arraycopy(oF, i * nF, flags, j * nF, nF)
+        }
+        i += 1
+      }
+    }
+
+    /** O(size) clear via the occupied list. */
+    def resetOccupied(): Unit = {
+      var i = 0
+      while (i < size) {
+        val s = occ(i)
+        used(s) = false
+        java.util.Arrays.fill(longs, s * nL, s * nL + nL, 0L)
+        java.util.Arrays.fill(doubles, s * nD, s * nD + nD, 0.0)
+        java.util.Arrays.fill(flags, s * nF, s * nF + nF, false)
+        i += 1
+      }
+      size = 0
+    }
+
+    /** O(size) slot iteration via the occupied list. */
+    def foreachOccupied(f: Int => Unit): Unit = {
+      var i = 0
+      while (i < size) { f(occ(i)); i += 1 }
+    }
+
+    /** i-th occupied slot, insertion order — lets the drain emit groups
+      * lazily without a closure.
+      */
+    def occAt(i: Int): Int = occ(i)
+
+    def keyAt(slot: Int): Long = keys(slot)
+  }
+
   /** Where a fused top-n sort key reads from at drain time. */
   sealed trait TopKeySrc extends Serializable
   final case class PrefixTopKey(i: Int) extends TopKeySrc
@@ -172,7 +265,7 @@ object SortedRunAggExec {
       k: SlotKernel,
       exprs: Seq[NamedExpression], schema: Seq[Attribute],
       pfxTypes: Array[DataType], hasKey: Boolean, kInt: Boolean,
-      m: RadixAgg.LongKeyMap, nullM: RadixAgg.LongKeyMap,
+      m: LongKeyMap, nullM: LongKeyMap,
       curP: Array[Long], curNull: Array[Boolean]) {
     private val tSrcs = spec.srcs.toArray
     // whether each sort key is a double-valued slot (else compares long)
@@ -195,7 +288,7 @@ object SortedRunAggExec {
     var sawNull = false
 
     // candidate tuple straight off the map's flat state — no Acc copy
-    private def fillCand(src: RadixAgg.LongKeyMap, s: Int, key: Long,
+    private def fillCand(src: LongKeyMap, s: Int, key: Long,
         keyNull: Boolean): Unit = {
       var d = 0
       while (d < tSrcs.length) {
@@ -214,7 +307,7 @@ object SortedRunAggExec {
       */
     def drainRunToHeap(): Unit = {
       var wrotePrefix = false
-      def materialize(src: RadixAgg.LongKeyMap, s: Int, keyNull: Boolean): Unit = {
+      def materialize(src: LongKeyMap, s: Int, keyNull: Boolean): Unit = {
         if (!wrotePrefix) {
           var i = 0
           while (i < nP) {
@@ -263,7 +356,7 @@ final case class SortedRunAggExec(
     child: SparkPlan,
     ansi: Boolean,
     // batch-direct loop over a columnar child (set by the cache-read
-    // rewire in rules/VectorizedCacheRead, like the radix partial)
+    // rewire in rules/VectorizedCacheRead, like the packed partial)
     columnarChild: Boolean = false,
     // selection pushed through from a folded CacheFilterExec: evaluated
     // per batch via dictionary-id tables (plans/DictFilter.DictSelection)
@@ -271,7 +364,7 @@ final case class SortedRunAggExec(
     selection: Seq[Expression] = Nil,
     // fused partition-local TakeOrderedAndProject (see companion)
     topN: Option[SortedRunAggExec.TopNSpec] = None) extends UnaryExecNode {
-  import RadixAgg._
+  import SortedRunAggExec.LongKeyMap
 
   private def numericRead(dt: DataType): Boolean = dt match {
     case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.DateType |
@@ -352,8 +445,8 @@ final case class SortedRunAggExec(
       val prefixProj = UnsafeProjection.create(pfx, childOut)
       val keyProj = rk.map(e => UnsafeProjection.create(Seq(e), childOut))
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
-      val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
+      val m = new LongKeyMap(aL, aD, aF, 64)
+      val nullM = new LongKeyMap(aL, aD, aF, 16)
       val readKey: InternalRow => Long = kT match {
         case org.apache.spark.sql.types.ByteType => r => r.getByte(0).toLong
         case org.apache.spark.sql.types.ShortType => r => r.getShort(0).toLong
@@ -462,8 +555,8 @@ final case class SortedRunAggExec(
     }
     child.execute().mapPartitions { rows =>
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
-      val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
+      val m = new LongKeyMap(aL, aD, aF, 64)
+      val nullM = new LongKeyMap(aL, aD, aF, 16)
       val proj = UnsafeProjection.create(exprs, schema)
       // typed mutable row: see the batch loop — one write per field per
       // GROUP, primitive setters keep the drain allocation-free
@@ -645,8 +738,8 @@ final case class SortedRunAggExec(
     child.executeColumnar().mapPartitions { batches =>
       val sel = if (selPreds.isEmpty) null else new DictSelection(selPreds, childOut)
       val vecs = new Array[org.apache.spark.sql.vectorized.ColumnVector](ords.length)
-      val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
-      val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
+      val m = new LongKeyMap(aL, aD, aF, 64)
+      val nullM = new LongKeyMap(aL, aD, aF, 16)
       val proj = UnsafeProjection.create(exprs, schema)
       // typed mutable row + primitive setters: the drain runs once per
       // GROUP — on groups≈rows shapes a boxed update(Any) per field is
@@ -864,8 +957,8 @@ final case class SortedRunAggExec(
     child.executeColumnar().mapPartitions { batches =>
       val sel = if (selPreds.isEmpty) null else new DictSelection(selPreds, childOut)
       val vecs = new Array[org.apache.spark.sql.vectorized.ColumnVector](ords.length)
-      val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
-      val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
+      val m = new LongKeyMap(aL, aD, aF, 64)
+      val nullM = new LongKeyMap(aL, aD, aF, 16)
       val nP = pOrds.length
       val curP = new Array[Long](nP)
       val curNull = new Array[Boolean](nP)
@@ -966,8 +1059,8 @@ final case class SortedRunAggExec(
     }
     child.execute().mapPartitions { rows =>
       val valProj = UnsafeProjection.create(iExprs, childOut)
-      val m = new LongKeyMap(aL, aD, aF, 64, trackOccupied = true)
-      val nullM = new LongKeyMap(aL, aD, aF, 16, trackOccupied = true)
+      val m = new LongKeyMap(aL, aD, aF, 64)
+      val nullM = new LongKeyMap(aL, aD, aF, 16)
       val nP = pOrds.length
       val curP = new Array[Long](nP)
       val curNull = new Array[Boolean](nP)

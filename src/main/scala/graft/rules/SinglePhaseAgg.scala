@@ -111,7 +111,7 @@ object SinglePhaseAgg extends GraftRule[SparkPlan] {
           resultExpressions = resultExprs,
           child = ex2)
         // cover the whole rewritten pair for AQE replan substitution
-        // (same threading as RadixShuffleAgg)
+        // (same threading as PackedShuffleAgg)
         fin.logicalLink.foreach { link =>
           ex2.setLogicalLink(link)
           complete.setLogicalLink(link)

@@ -1,7 +1,7 @@
 package graft.rules
 
 import graft.{GraftConf, GraftRule}
-import graft.plans.{DriverAgg, RadixAgg, SortedRunAggExec}
+import graft.plans.{DriverAgg, SortedRunAggExec}
 
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.Complete
@@ -115,7 +115,7 @@ object SortedRunAggRule extends GraftRule[SparkPlan] {
           val prefixIds = prefix.map(_.exprId).toSet
           val remainder = groupAttrs.filterNot(a => prefixIds.contains(a.exprId))
           if (prefix.isEmpty || remainder.size > 1 ||
-            !remainder.forall(a => RadixAgg.supportedKey(a.dataType) ||
+            !remainder.forall(a => SortedRunAggExec.supportedKey(a.dataType) ||
               a.dataType == org.apache.spark.sql.types.StringType)) agg
           else scala.util.Try(DriverAgg.layout(aggs)).toOption.filter(_.flat) match {
             case Some(lay) =>

@@ -1,9 +1,9 @@
 package graft.rules
 
 import graft.GraftRule
-import graft.plans.{PartialTopNExec, RadixFinalAggExec, RadixPartialAggExec, RadixTopN, SortedPrefixLimitExec}
+import graft.plans.{PartialTopNExec, SortedPrefixLimitExec}
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Descending, NamedExpression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
@@ -27,15 +27,18 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * partially-merged group is never emitted. Ties cannot split a group
   * across the boundary because T contains the full grouping key.
   *
-  * Two match arms, both post-[[RadixShuffleAgg]] (registered after it in
-  * the query-stage-prep list and chained after it in
-  * `InsertCacheColumnarToRow` for non-AQE):
-  *  - radix pair (single int/long key): set the partial's emit-time key
-  *    prune ([[RadixTopN]]; key order = group order, null group never
-  *    pruned, ORDER BY already total) — no plan-shape change;
-  *  - generic Final ← exchange ← Partial HashAggregate (multi-key):
-  *    insert [[PartialTopNExec]] under the exchange and refine the
-  *    TakeOrderedAndProject's sort with the grouping-key tie-break.
+  * Two arms here, registered before [[PackedShuffleAgg]] in the
+  * query-stage-prep list (and chained before it in
+  * `InsertCacheColumnarToRow` for non-AQE) so they see Spark's pairs:
+  *  - generic Final ← exchange ← Partial HashAggregate: insert
+  *    [[PartialTopNExec]] under the exchange and refine the
+  *    TakeOrderedAndProject's sort with the grouping-key tie-break —
+  *    except for the one-long-key `ORDER BY k LIMIT n` pairs packed
+  *    claims with its own key prune ([[PackedShuffleAgg.keyTopN]]: key
+  *    order = group order, null group never pruned, no plan-shape
+  *    change beyond the partial's prune and a narrow exchange);
+  *  - sorted input: a collapsed Complete-mode aggregate over clustered
+  *    storage cuts its input at the limit-th prefix value.
   *
   * The `limit` valve bounds per-task retained state; offsets ride along
   * because TakeOrderedAndProjectExec's `limit` already includes them
@@ -50,7 +53,7 @@ object TopNThroughAgg extends GraftRule[SparkPlan] {
   /** The result expression producing output attribute `a`, stripped to
     * its underlying attribute when it is a bare or aliased column.
     */
-  private def underlying(resultExprs: Seq[NamedExpression], a: Attribute): Option[Attribute] =
+  private[rules] def underlying(resultExprs: Seq[NamedExpression], a: Attribute): Option[Attribute] =
     resultExprs.collectFirst {
       case al: Alias if al.toAttribute.exprId == a.exprId => al.child
       case at: Attribute if at.exprId == a.exprId => at
@@ -68,36 +71,6 @@ object TopNThroughAgg extends GraftRule[SparkPlan] {
 
   protected def rewrite(plan: SparkPlan): SparkPlan = {
     plan.transformUp {
-      // radix pair: ORDER BY must be exactly the single grouping key
-      case t @ TakeOrderedAndProjectExec(limit, Seq(so), _,
-            fin @ RadixFinalAggExec(_, _, _, _, _, groupAttr, _, resultExprs, _,
-              ex @ ShuffleExchangeExec(_, part: RadixPartialAggExec, _, _),
-              false, _), _)
-          if limit > 0 && limit <= MaxLimit && part.topN.isEmpty &&
-            so.child.isInstanceOf[Attribute] &&
-            underlying(resultExprs, so.child.asInstanceOf[Attribute])
-              .exists(_.exprId == groupAttr.exprId) =>
-        // transformUp only copies tags onto the node the rule RETURNS —
-        // every rebuilt inner node must carry its original's logicalLink
-        // explicitly, or AQE re-optimization substitutes the stage with
-        // the wrong logical subtree (see RadixShuffleAgg's link threading)
-        val pruned = part.copy(topN = Some(RadixTopN(limit, so.direction == Descending)))
-        part.logicalLink.foreach(pruned.setLogicalLink)
-        // ≤ limit keys survive per map task, so a wide exchange costs
-        // more in per-task stream opens (bypass-merge writes one stream
-        // per reduce partition) than the reduce side could ever win —
-        // shrink it; the final merge is O(partitions × limit) rows
-        val ex2 = (ex.outputPartitioning match {
-          case hp: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-              if hp.numPartitions > 4 =>
-            ex.copy(outputPartitioning = hp.copy(numPartitions = 4), child = pruned)
-          case _ => ex.withNewChildren(Seq(pruned))
-        }).asInstanceOf[ShuffleExchangeExec]
-        ex.logicalLink.foreach(ex2.setLogicalLink)
-        val fin2 = fin.copy(child = ex2)
-        fin.logicalLink.foreach(fin2.setLogicalLink)
-        t.withNewChildren(Seq(fin2))
-
       // sorted-input arm: a collapsed Complete-mode aggregate over
       // clustered+sorted storage (graft's columnar cache) — cut the
       // INPUT at the limit-th distinct value of the longest common
@@ -170,7 +143,8 @@ object TopNThroughAgg extends GraftRule[SparkPlan] {
           if limit > 0 && limit <= MaxLimit &&
             aggsF.forall(_.mode == Final) && aggsP.forall(_.mode == Partial) &&
             groupExprs.nonEmpty &&
-            gP.map(_.toAttribute.exprId).toSet == groupExprs.map(_.toAttribute.exprId).toSet =>
+            gP.map(_.toAttribute.exprId).toSet == groupExprs.map(_.toAttribute.exprId).toSet &&
+            PackedShuffleAgg.keyTopN(t).isEmpty =>
         val groupAttrs = groupExprs.map(_.toAttribute)
         val mapped = sortOrder.map { so =>
           so.child match {
@@ -197,8 +171,8 @@ object TopNThroughAgg extends GraftRule[SparkPlan] {
             else {
               val prunedChild = PartialTopNExec(limit, partialOrder, part)
               part.logicalLink.foreach(prunedChild.setLogicalLink)
-              // same stream-open economics as the radix arm: ≤ limit
-              // rows per map task make a wide exchange pure overhead
+              // ≤ limit rows per map task make a wide exchange pure
+              // overhead (the same narrowing as packed's key prune)
               val ex2 = (ex.outputPartitioning match {
                 case hp: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
                     if hp.numPartitions > 4 =>

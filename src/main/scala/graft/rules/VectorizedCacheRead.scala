@@ -65,36 +65,36 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
     // single-pass aggregation where the exchange was elided (clustered
     // cache / bucketed input) — see CollapsePartialAggregate
     val collapsed = CollapsePartialAggregate(plan)
-    // high-cardinality single-key aggregation: radix-bucketed packed-state
-    // shuffle (rules/RadixShuffleAgg). Under AQE this rule runs as a
-    // query-stage-prep rule instead (here we only ever see single-stage
-    // fragments whose exchanges are already stage boundaries).
+    // shuffled aggregation pairs: packed-state shuffle
+    // (rules/PackedShuffleAgg). Under AQE it runs as a query-stage-prep
+    // rule instead (here we only ever see single-stage fragments whose
+    // exchanges are already stage boundaries).
     // under AQE only TopNThroughAgg's sorted-input arm can act here (a
-    // stage fragment holds no raw exchanges; the radix/generic arms ran
-    // as query-stage-prep rules) — it must run HERE because the
+    // stage fragment holds no raw exchanges; the generic arm ran as a
+    // query-stage-prep rule) — it must run HERE because the
     // Complete-mode aggregate it matches is created by the collapse above
-    // rule order: radix claims single int/long-key pairs; TopNThroughAgg
-    // then prunes ORDER-BY-grouping-prefix LIMIT pairs (its generic arm
-    // must see the stock pair BEFORE packed consumes it); packed claims
-    // the remaining multi/string-key pairs; single-phase takes whatever
-    // aggregation pairs are left with a stats proof
+    // rule order: TopNThroughAgg prunes ORDER-BY-grouping-prefix LIMIT
+    // pairs (its generic arm must see the stock pair BEFORE packed
+    // consumes it); packed claims the remaining pairs it can carry;
+    // single-phase takes whatever aggregation pairs are left with a
+    // stats proof
     // string-key broadcast joins re-route before the agg rules (under
     // AQE this ran as a query-stage-prep rule already)
     val strJoined =
       if (conf.adaptiveExecutionEnabled) collapsed
       else StringBcastJoinRule(collapsed)
     // grouped-distinct prefix re-key must see the stock 4-level tower
-    // BEFORE radix/packed claim its dedup pair (same order as the AQE
+    // BEFORE packed claims its dedup pair (same order as the AQE
     // query-stage-prep registration in GraftExtensions)
-    val radixed =
+    val aggRouted =
       if (conf.adaptiveExecutionEnabled) TopNThroughAgg(strJoined)
       else TopKSinglePhase(
-        SinglePhaseAgg(PackedShuffleAgg(TopNThroughAgg(RadixShuffleAgg(
-          DistinctByGroupPrefix(strJoined))))))
+        SinglePhaseAgg(PackedShuffleAgg(TopNThroughAgg(
+          DistinctByGroupPrefix(strJoined)))))
     // run-clustered Complete aggregates (created by the collapse above)
     // stream per sorted-prefix run instead of building the whole
     // partition's group map (plans/SortedRunAgg.scala)
-    val runAgged = SortedRunAggRule(radixed)
+    val runAgged = SortedRunAggRule(aggRouted)
     // lag-only windows evaluate streaming (runs after EnsureRequirements,
     // so the child's clustering/ordering are already window-correct)
     val windowed =
@@ -118,22 +118,12 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
       case f @ graft.plans.FusedDistinctPartialExec(
             _, _, _, _, ColumnarToRowExec(c), false) if c.supportsColumnar =>
         f.copy(child = c, columnarChild = true)
-      // radix partial consumes batches directly when key + inputs are
-      // plain columns of a columnar-capable child — a cache scan under
-      // the ColumnarToRow just inserted above, or (AQE) the
-      // TableCacheQueryStageExec wrapping one (plans/RadixAgg.scala)
-      case r: graft.plans.RadixPartialAggExec if !r.columnarChild =>
-        r.child match {
-          case ColumnarToRowExec(c) if c.supportsColumnar && r.columnarEligible(c) =>
-            r.copy(child = c, columnarChild = true)
-          case c if c.supportsColumnar && r.columnarEligible(c) =>
-            r.copy(columnarChild = true)
-          case _ => r
-        }
-      // packed multi-key partial: same batch-direct rewire when every
-      // key and input is a plain column of a columnar-capable child; a
-      // CacheFilter child folds INTO the batch loop as a per-batch
-      // DictSelection (no row materialization between filter and partial)
+      // packed partial consumes batches directly when every key and
+      // input is a plain column of a columnar-capable child — a cache
+      // scan under the ColumnarToRow just inserted above, or (AQE) the
+      // TableCacheQueryStageExec wrapping one; a CacheFilter child folds
+      // INTO the batch loop as a per-batch DictSelection (no row
+      // materialization between filter and partial)
       case r: graft.plans.PackedPartialAggExec if !r.columnarChild =>
         r.child match {
           case graft.plans.CacheFilterExec(_, conjuncts, c)

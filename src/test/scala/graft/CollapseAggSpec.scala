@@ -76,10 +76,10 @@ class CollapseAggSpec extends AnyFunSuite {
     // cold path: the parquet scan carries no useful partitioning, so the
     // exchange stays and with it the partial→final pair (at sf0.001 the
     // warm cache is a single partition, where collapsing IS correct).
-    // RadixShuffleAgg is off here: this test pins that the COLLAPSE rule
-    // does not touch cross-exchange pairs (the radix rule handling them
-    // is RadixAggSpec's subject).
-    withConf("spark.sql.adaptive.enabled" -> "false") { withGraft("RadixShuffleAgg" -> false) {
+    // PackedShuffleAgg is off here: this test pins that the COLLAPSE rule
+    // does not touch cross-exchange pairs (the packed rule handling them
+    // is PackedAggSpec's subject).
+    withConf("spark.sql.adaptive.enabled" -> "false") { withGraft("PackedShuffleAgg" -> false) {
       val df = spark.read.parquet(s"$sf/lineitem.parquet")
         .repartition(4) // round-robin: satisfies no grouping distribution
         .groupBy(col("l_partkey"))

@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DistinctByGroupPrefixSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  // keep the packed/radix claims out of the declined shapes so the
+  // keep the packed claims out of the declined shapes so the
   // exchange-count assertions pin THIS rule's behavior
   private def withOthersOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 

@@ -78,7 +78,7 @@ class GraftConfSpec extends AnyFunSuite {
       """(?m)^\s*(?:private\S*\s+)?(?:case\s+)?object\s+(\w+)""".r
         .findAllMatchIn(Files.readString(p)).map(_.group(1))
     }.toSet
-    assert(objects.contains("PackedAgg") && objects.contains("RadixShuffleAgg"))
+    assert(objects.contains("PackedAgg") && objects.contains("PackedShuffleAgg"))
     // a statement `[pkg.]Object.field = v` (not `==`, `=>` or a type)
     val assign = """(?:^|[;{]|\bfinally\b|\btry\b|=>)\s*(?:\w+\.)*(\w+)\.\w+\s*=(?![=>])""".r
     assert(assign.findFirstMatchIn("    graft.plans.PackedAgg.flushCap = 64").map(_.group(1))

@@ -20,6 +20,9 @@ object SparkTestSession {
 
   /** Runs `f` with session confs set, restoring the prior values after. */
   def withConf[A](kv: (String, String)*)(f: => A): A = BenchAB.withArm(spark, kv)(f)
+
+  /** Runs `f` with adaptive execution on or off. */
+  def withAqe[A](on: Boolean)(f: => A): A = withConf("spark.sql.adaptive.enabled" -> on.toString)(f)
 }
 
 class HeadlineSpec extends AnyFunSuite {

@@ -64,15 +64,6 @@ class MergeSortedCollectSpec extends AnyFunSuite {
   import MergeSortedCollectSpec._
   import SparkTestSession._
 
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def bothAqe(f: Boolean => Unit): Unit =
     for (aqe <- Seq(false, true))
       withConf("spark.sql.adaptive.enabled" -> aqe.toString)(f(aqe))
@@ -256,7 +247,7 @@ class MergeSortedCollectSpec extends AnyFunSuite {
   }
 
   test("declines under AQE re-optimization: ORDER BY ... LIMIT keeps its limit") {
-    // 20k groups shuffle as a few radix state blobs; AQE's EliminateLimits
+    // 20k groups shuffle as a few packed state blobs; AQE's EliminateLimits
     // reads that record count as the row count and drops the LIMIT from
     // the re-planned root sort, which must then stay costlier than the
     // current TakeOrderedAndProject plan

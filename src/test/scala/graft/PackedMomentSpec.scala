@@ -15,12 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class PackedMomentSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withAqe[A](on: Boolean)(f: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
   private def packedOff[A](f: => A): A = withGraft("PackedShuffleAgg" -> false)(f)
 
   /** v1/v2: ints with NULLs across (37 × 5) groups, plus appended edge

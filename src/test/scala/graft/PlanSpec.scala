@@ -83,13 +83,13 @@ class PlanSpec extends AnyFunSuite {
     // q13 groups by a HIGH-cardinality key (custkey) — the shuffled
     // aggregate is the right plan there and must stay two-phase
     val e = explain(SparkEntry.queries("q13_customer_distribution")(spark, sf))
-    // either Spark's partial+final HashAggregate pair, or (single int/long
-    // key) the radix packed-state pair that replaces it — both are the
-    // two-phase map-side-combine shape this test pins
+    // either Spark's partial+final HashAggregate pair, or the
+    // packed-state pair that replaces it — both are the two-phase
+    // map-side-combine shape this test pins
     val hashAggs = "HashAggregate".r.findAllIn(e).length
-    val radixPair = e.contains("RadixPartialAgg") && e.contains("RadixFinalAgg")
-    assert(hashAggs >= 2 || radixPair,
-      s"expected partial+final (hash or radix) aggregate pair, got $hashAggs:\n$e")
+    val packedPair = e.contains("PackedPartialAgg") && e.contains("PackedFinalAgg")
+    assert(hashAggs >= 2 || packedPair,
+      s"expected partial+final (hash or packed) aggregate pair, got $hashAggs:\n$e")
   }
 
   test("low-cardinality headline aggregates are single-job driver-finalized") {

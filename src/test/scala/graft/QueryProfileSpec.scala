@@ -15,7 +15,7 @@ class QueryProfileSpec extends AnyFunSuite {
 
     assert(prof.nonEmpty)
     // the engine's rule stack may plan its own aggregate operators
-    // (RadixPartialAgg/RadixFinalAgg) in place of HashAggregate — the
+    // (PackedPartialAgg/PackedFinalAgg) in place of HashAggregate — the
     // profile must surface whichever actually ran
     val ops = prof.map(_.getString(1)).toSet
     assert(ops.exists(_.toLowerCase.contains("agg")), ops)

@@ -14,11 +14,6 @@ class SessionCountSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def withFuse[A](on: Boolean)(f: => A): A = withGraft("SessionCountRule" -> on)(f)
-  private def withAqe[A](on: Boolean)(f: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
 
   // gap = 100 micros; NULL ts rows, NULL users, exact-boundary gaps,
   // ties on ts; clustered + sorted like the warm cache

@@ -108,7 +108,7 @@ class SinglePhaseAggSpec extends AnyFunSuite {
     val aggs = aggNodes(
       annotated.groupBy(col("s")).agg(sum(col("v")).as("sv")))
     assert(aggs.length >= 2 ||
-      aggs.isEmpty, // radix/driver routes may claim the single-key shape
+      aggs.isEmpty, // packed/driver routes may claim the single-key shape
       aggs.map(_.nodeName).toString)
   }
 }

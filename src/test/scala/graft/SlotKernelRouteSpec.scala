@@ -9,11 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * 0/1/2 null-checked inputs, long and double sums, avg, long/double
   * min/max incl. NaN and -0.0, the four variance/stddev kinds incl. n==1
   * groups, both covariances, a FILTER fold, ANSI long-sum overflow) runs
-  * through the driver-finalized, radix, sorted-run and packed aggregates.
+  * through the driver-finalized, sorted-run and packed aggregates; the
+  * packed route twice, over one long key ("radix", the radix-partitioned
+  * single-key case) and over a (long, string) key ("packed").
   * Each case asserts the route's exec is in the executed plan and that
   * its rows equal stock Spark's with the graft aggregate routes off.
-  * The radix and packed cases run with a small flush cap, so every
-  * partition ships several blobs per group and the blob merge runs.
+  * The packed cases run with a small flush cap, so every partition
+  * ships several blobs per group and the blob merge runs.
   */
 class SlotKernelRouteSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -51,18 +53,9 @@ class SlotKernelRouteSpec extends AnyFunSuite {
     df
   }
 
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val prev = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
-    kv.foreach { case (key, v) => spark.conf.set(key, v) }
-    try f finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
-
   /** Stock Spark: every graft aggregate route off. */
-  private def stock[A](f: => A): A = withGraft("RadixShuffleAgg" -> false,
-    "PackedShuffleAgg" -> false, "SortedRunAggRule" -> false, "BoundedKeyDriverAgg" -> false)(f)
+  private def stock[A](f: => A): A = withGraft("PackedShuffleAgg" -> false,
+    "SortedRunAggRule" -> false, "BoundedKeyDriverAgg" -> false)(f)
 
   private def withSmallFlush[A](f: => A): A = withConf("spark.graft.agg.flushGroups" -> "8")(f)
 
@@ -81,7 +74,7 @@ class SlotKernelRouteSpec extends AnyFunSuite {
     Route("driver", Seq("g"),
       _.collect { case e: graft.plans.DriverGroupAggExec => e }.nonEmpty),
     Route("radix", Seq("g"),
-      _.collect { case e: graft.plans.RadixFinalAggExec => e }.nonEmpty),
+      _.collect { case e: graft.plans.PackedFinalAggExec if e.keyAttrs.length == 1 => e }.nonEmpty),
     Route("sorted-run", Seq("k", "g"),
       _.collect { case e: graft.plans.SortedRunAggExec => e }.nonEmpty),
     Route("packed", Seq("g", "s"),
@@ -106,13 +99,12 @@ class SlotKernelRouteSpec extends AnyFunSuite {
   }
 
   /** Routed rows equal stock rows, and the route's exec is planned. */
-  private def check(route: Route, aggs: Seq[Column], expectRouted: Boolean = true,
+  private def check(route: Route, aggs: Seq[Column],
       t: => DataFrame = table): Unit = withConf("spark.sql.adaptive.enabled" -> "false") {
     withSmallFlush {
       val q = route.routed(t, aggs)
       val plan = q.queryExecution.executedPlan
-      assert(route.present(plan) == expectRouted,
-        s"${route.name} routed=${!expectRouted}:\n${plan.toString.take(3000)}")
+      assert(route.present(plan), s"${route.name} not routed:\n${plan.toString.take(3000)}")
       assertSameRows(sortedRows(q), stock(sortedRows(route.grouped(t, aggs))), route.name)
     }
   }
@@ -137,11 +129,7 @@ class SlotKernelRouteSpec extends AnyFunSuite {
       expr("stddev(d) FILTER (WHERE e IS NOT NULL)").as("sdf")))
 
   for (route <- routes; (name, aggs) <- cases) {
-    test(s"${route.name}: $name") {
-      // the radix route declines FILTER folds (RadixShuffleAgg.noFilter);
-      // the stock plan must still produce the rows
-      check(route, aggs, expectRouted = !(route.name == "radix" && name == "FILTER fold"))
-    }
+    test(s"${route.name}: $name")(check(route, aggs))
   }
 
   for (route <- routes) {

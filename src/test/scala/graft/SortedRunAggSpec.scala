@@ -14,12 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SortedRunAggSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withAqe[A](on: Boolean)(f: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
   private def withRule[A](on: Boolean)(f: => A): A = withGraft("SortedRunAggRule" -> on)(f)
 
   // run-clustered: partitioned AND sorted by `a` (nulls included), with

@@ -3,26 +3,22 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** rules/TopNThroughAgg + plans/PartialTopN + the radix emit prune:
-  * `GROUP BY k ... ORDER BY (grouping prefix) LIMIT n` prunes group
-  * fragments BEFORE the aggregate exchange, result-identical to the
-  * unpruned plan — radix single-key arm and generic multi-key arm, asc
-  * and desc, NULL keys, AQE on and off, and tie-heavy sort prefixes
-  * where several groups share the ORDER BY tuple across the LIMIT
-  * boundary (the case the grouping-key tie-break refinement exists for).
+/** rules/TopNThroughAgg + plans/PartialTopN + the packed partial's key
+  * prune: `GROUP BY k ... ORDER BY (grouping prefix) LIMIT n` prunes
+  * group fragments BEFORE the aggregate exchange, result-identical to
+  * the unpruned plan — single long key arm (named "radix arm", for the
+  * radix-partitioned packed aggregate that carries it) and generic
+  * multi-key arm, asc and desc, NULL keys, AQE on and off, and
+  * tie-heavy sort prefixes where several groups share the ORDER BY
+  * tuple across the LIMIT boundary (the case the grouping-key tie-break
+  * refinement exists for).
   */
 class TopNAggSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def withAqe[A](on: Boolean)(f: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
   private def withRule[A](on: Boolean)(f: => A): A = withGraft("TopNThroughAgg" -> on)(f)
 
-  // high-cardinality single int key (radix arm) with NULL keys + NULL inputs
+  // high-cardinality single int key (key-prune arm) with NULL keys + NULL inputs
   private def single(): DataFrame = spark.range(60000).selectExpr(
     "CASE WHEN id % 997 = 0 THEN NULL ELSE CAST(id % 20000 AS INT) END AS k",
     "CASE WHEN id % 13 = 0 THEN NULL ELSE CAST(id % 7 AS DOUBLE) END AS d",
@@ -61,7 +57,7 @@ class TopNAggSpec extends AnyFunSuite {
       assert(on.size == 137)
       if (!aqe) withRule(true) {
         val parts = singleQ(desc).queryExecution.executedPlan.collect {
-          case p: graft.plans.RadixPartialAggExec => p }
+          case p: graft.plans.PackedPartialAggExec => p }
         assert(parts.nonEmpty && parts.forall(_.topN.isDefined),
           singleQ(desc).queryExecution.executedPlan.toString.take(2000))
       }
@@ -179,7 +175,7 @@ class TopNAggSpec extends AnyFunSuite {
           |GROUP BY a, b ORDER BY sv DESC LIMIT 10""".stripMargin)
       val plan = withRule(true)(q.queryExecution.executedPlan)
       assert(plan.collect { case p: graft.plans.PartialTopNExec => p }.isEmpty)
-      assert(plan.collect { case p: graft.plans.RadixPartialAggExec => p }
+      assert(plan.collect { case p: graft.plans.PackedPartialAggExec => p }
         .forall(_.topN.isEmpty))
     }
   }
@@ -192,13 +188,13 @@ class TopNAggSpec extends AnyFunSuite {
            |ORDER BY k LIMIT ${graft.rules.TopNThroughAgg.MaxLimit + 1}""".stripMargin)
       val plan = withRule(true)(q.queryExecution.executedPlan)
       assert(plan.collect { case p: graft.plans.PartialTopNExec => p }.isEmpty)
-      assert(plan.collect { case p: graft.plans.RadixPartialAggExec => p }
+      assert(plan.collect { case p: graft.plans.PackedPartialAggExec => p }
         .forall(_.topN.isEmpty))
     }
   }
 
   test("AQE keeps a LIMIT over blob-shuffled aggregates (radix and packed routes)") {
-    // the radix/packed partials shuffle one record per state blob, not per
+    // the packed partials shuffle one record per state blob, not per
     // group: AQE must not read that record count as the stage's row count
     // and drop the LIMIT (EliminateLimits) or an ORDER BY (OptimizeOneRowPlan).
     // Both rules stay on: the exchange, not the session, carries the fix
@@ -206,7 +202,7 @@ class TopNAggSpec extends AnyFunSuite {
       .forall(r => !r.contains("EliminateLimits") && !r.contains("OptimizeOneRowPlan")))
     single().selectExpr("k", "CAST(k AS STRING) AS ks", "l")
       .createOrReplaceTempView("topn_single")
-    for ((key, exec) <- Seq("k" -> "RadixFinalAggExec", "ks" -> "PackedFinalAggExec");
+    for ((key, exec) <- Seq("k" -> "PackedFinalAggExec", "ks" -> "PackedFinalAggExec");
          order <- Seq("", s"ORDER BY $key")) withRule(false) {
       val sql = s"SELECT $key AS k, sum(l) AS s FROM topn_single GROUP BY $key $order LIMIT 137"
       val groups = spark.sql(s"SELECT $key, sum(l) FROM topn_single GROUP BY $key")
