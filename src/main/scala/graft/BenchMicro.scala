@@ -58,12 +58,8 @@ object BenchMicro {
       "cb_filter_multi_agg", "SortedRunAgg"),
     ("bounded_driver_agg", "BoundedKeyDriverAgg",
       "cb_date_histogram", "DriverGroupAgg"),
-    ("driveragg_columnar", "DriverAgg.columnar",
-      "cb_date_histogram", null),
-    ("dict_keys", "DriverAgg.dictKeys",
+    ("dict_keys", "PackedAgg.dictKeys",
       "thq01", null),
-    ("direct_str_key", "DriverAgg.directStringKey",
-      "cb_q13", null),
     ("fused_distinct", "FuseSingleDistinct",
       "h2o_count_distinct", "Distinct"),
     ("topn_through_agg", "TopNThroughAgg",

@@ -32,25 +32,18 @@ object GraftConf {
     *  - `VectorizedCacheRead`: columnar reads of the graft cache
     *    (rules/VectorizedCacheRead);
     *  - `StreamingWindow`: lag-only windows as plans/StreamingWindow;
-    *  - `DriverAgg.columnar`: the batch-direct driver-agg partial;
-    *  - `DriverAgg.selectionFold`: filters folded into that partial;
-    *  - `DriverAgg.dictKeys`: dictionary-id string keys in it;
-    *  - `DriverAgg.exprVec`: compiled double-expression inputs in it;
-    *  - `DriverAgg.denseCalendar`: the dense calendar-bucket partial;
-    *  - `DriverAgg.directStringKey`: intern-id indexed single string key;
     *  - `DriverAgg.ungrouped`: ungrouped aggregates on the driver agg;
     *  - `PackedAgg.dictKeys`, `PackedAgg.pairKeys`,
     *    `PackedAgg.selectionFold`: the packed partial's dictionary-id
-    *    keys, 2-key pair memo and folded filter;
+    *    keys, 2-key pair memo and folded filter — on both of its sinks,
+    *    the shuffle and the driver-final aggregate;
     *  - `SortedRunAgg.topN`: the top-n heap fused into the sorted-run
     *    drain.
     */
   val Arms: Seq[String] = Seq(
-    "VectorizedCacheRead", "StreamingWindow", "DriverAgg.columnar",
-    "DriverAgg.selectionFold", "DriverAgg.dictKeys", "DriverAgg.exprVec",
-    "DriverAgg.denseCalendar", "DriverAgg.directStringKey",
-    "DriverAgg.ungrouped", "PackedAgg.dictKeys", "PackedAgg.pairKeys",
-    "PackedAgg.selectionFold", "SortedRunAgg.topN")
+    "VectorizedCacheRead", "StreamingWindow", "DriverAgg.ungrouped",
+    "PackedAgg.dictKeys", "PackedAgg.pairKeys", "PackedAgg.selectionFold",
+    "SortedRunAgg.topN")
 
   private val names: Set[String] = (Rules ++ Arms).toSet
 

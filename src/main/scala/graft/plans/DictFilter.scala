@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-batch dictionary-or-fallback evaluator for a conjunction of
   * predicates — the shared core of [[CacheFilterExec]] and the
   * selection-pushed batch loops ([[SortedRunAggExec]],
-  * [[DriverGroupAggExec]]). Instantiate once per task, `reset` per
+  * [[PackedPartialAggExec]]). Instantiate once per task, `reset` per
   * batch, then `passes(r)` per row.
   *
   * Four evaluation tiers per (conjunct, batch):

@@ -2,15 +2,14 @@ package graft.plans
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.GraftConf
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, UnaryNode}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
 /** Low-cardinality grouped aggregation finalized on the DRIVER — the
@@ -22,13 +21,15 @@ import org.apache.spark.sql.types._
   * shuffle exchange + second stage + separate sort job costs more than
   * the whole aggregation does.
   *
-  * Shape: ONE distributed job computes per-partition partial states
-  * (codegen'd key/value projections feeding a hash map); the task results
-  * — O(groups) per task, the same payload a `collect()` of the shuffled
-  * aggregate's output would move — merge on the driver, where the final
-  * result expressions, sort and limit evaluate over the handful of
-  * groups. This is the coordinator-merge every native engine performs for
-  * low-cardinality aggregation; Spark's task-result path is its
+  * Shape: ONE distributed job runs the packed partial
+  * ([[PackedPartialAggExec]] in driver mode, one bucket); its blobs —
+  * O(groups) per task, the same payload a `collect()` of the shuffled
+  * aggregate's output would move — return as task results and merge on
+  * the driver with the packed reducer's merge, where the final result
+  * expressions, sort and limit evaluate over the handful of groups.
+  * One partial, two sinks: the shuffle to [[PackedFinalAggExec]] or
+  * this driver merge (Dremel VLDB'20 runs one leaf partial and merges it
+  * at the root of its serving tree). Spark's task-result path is the
   * transport, and the partial stage keeps ordinary map-side-combine
   * semantics (each input row read once, in parallel).
   *
@@ -42,7 +43,8 @@ import org.apache.spark.sql.types._
   *
   * All unsupported surface (DISTINCT outside count, non-deterministic
   * FILTER, decimals, aggregates beyond Count/Sum/Avg/Min/Max and the
-  * variance/stddev/covariance moments) throws at PLAN time in
+  * variance/stddev/covariance moments, group keys outside the packed
+  * key domain) throws at PLAN time in
   * [[DriverAgg.lowCard]]; slot semantics live in [[SlotKernel]];
   * the logical node itself carries only pre-compiled slot specs and
   * BoundReference-based final expressions, so nothing unresolvable ever
@@ -77,12 +79,13 @@ object DriverAgg {
   final case class MinMaxDSlot(di: Int, fi: Int, in: Int, isMin: Boolean) extends Slot
   /** Exact per-group distinct set for `count(DISTINCT x)` over a child
     * whose value domain is statistics-bounded. OPT-IN via
-    * `layout(allowDistinct = true)` — ONLY the driver-finalized exec can
-    * carry it (set state has no blob encoding; see [[Layout.flat]]).
+    * `layout(allowDistinct = true)` — ONLY the driver-finalized route can
+    * carry it (set state has no blob encoding; it rides the partial's
+    * [[ObjState]] side array, see [[Layout.flat]]).
     */
   final case class CountDistinctSlot(si: Int, in: Int) extends Slot
-  /** min/max over strings — state is a detached UTF8String in the Acc's
-    * object array (strings have no long/double encoding).
+  /** min/max over strings — state is a detached UTF8String in the
+    * group's [[ObjState]] (strings have no long/double encoding).
     */
   final case class MinMaxSSlot(oi: Int, in: Int, isMin: Boolean) extends Slot
   /** Central-moment state for stddev/variance — Spark's CentralMomentAgg
@@ -113,11 +116,17 @@ object DriverAgg {
     def flat: Boolean = nS == 0 && nO == 0
   }
 
-  /** Mutable per-group state (serializable: it is the task-result payload). */
+  /** One group's flat state outside a map: the packed partial's
+    * singleton-block staging (pass-through fragments).
+    */
   final class Acc(val longs: Array[Long], val doubles: Array[Double],
-                  val flags: Array[Boolean],
-                  val sets: Array[java.util.HashSet[AnyRef]] = null,
-                  val objs: Array[AnyRef] = null)
+                  val flags: Array[Boolean])
+
+  /** One group's object state (distinct sets, string min/max): the side
+    * array entry the packed partial carries next to its state blob in
+    * driver mode (serializable: it rides the task result).
+    */
+  final class ObjState(val sets: Array[java.util.HashSet[AnyRef]], val objs: Array[AnyRef])
     extends Serializable
 
   /** Distinct sets are driver-merged task state: cap each one like the
@@ -125,246 +134,6 @@ object DriverAgg {
     * OOMs the driver.
     */
   private[plans] val maxDistinctCap = 1 << 16
-
-  /** Arms of the batch partial a [[DriverGroupAggExec]] freezes at
-    * planning time (each a `spark.graft.disabled` name, see
-    * [[graft.GraftConf]]):
-    *  - `denseCalendar` (`DriverAgg.denseCalendar`): dense direct-index
-    *    partial for single calendar-bucket keys — the perfect-hash
-    *    aggregate proper (reference: physical_perfecthash_aggregate.cpp
-    *    direct-indexes group state by the proven key range);
-    *  - `directStringKey` (`DriverAgg.directStringKey`): dense
-    *    single-string-key grouping indexed by intern id (no per-row hash
-    *    probe) — the perfect-hash group-by over the interned domain;
-    *  - `dictKeys` (`DriverAgg.dictKeys`): when a string key column is
-    *    served dictionary-encoded by the cache, per-batch dictionary ids
-    *    remap to task-level intern ids once per batch and rows key by an
-    *    int-array read — the reference's DICTIONARY-vector aggregation
-    *    (reference: src/include/duckdb/common/enums/vector_type.hpp:15-21,
-    *    physical_hash_aggregate.cpp over dictionary vectors);
-    *  - `exprVec` (`DriverAgg.exprVec`): compiled double-expression
-    *    inputs (the q1 disc_price/charge shape): {col, lit, +, -, ×,
-    *    cast-to-double} trees evaluate straight off the vectors in the
-    *    plan's exact shape (bit-identical IEEE result), instead of routing
-    *    EVERY input through the per-row UnsafeProjection when any one
-    *    input is an expression.
-    */
-  final case class Arms(denseCalendar: Boolean, directStringKey: Boolean,
-      dictKeys: Boolean, exprVec: Boolean)
-
-  /** The active session's [[Arms]]. */
-  def arms(): Arms = Arms(GraftConf.enabled("DriverAgg.denseCalendar"),
-    GraftConf.enabled("DriverAgg.directStringKey"), GraftConf.enabled("DriverAgg.dictKeys"),
-    GraftConf.enabled("DriverAgg.exprVec"))
-
-  // ---- vector-direct aggregate-input plans ---------------------------
-  /** Per-input access plan for the batch partial: DirectIn reads the
-    * column; CompiledIn evaluates a compiled double tree over the
-    * batch's vectors (null iff any referenced column is null — the
-    * null semantics of +/-/× over nullable inputs).
-    */
-  private[plans] sealed trait InPlan extends Serializable
-  private[plans] final case class DirectIn(ord: Int) extends InPlan
-  private[plans] final case class CompiledIn(prog: DProg, ords: Array[Int]) extends InPlan
-
-  /** Double-expression program node. Walked in the analyzed plan's
-    * exact tree shape — same IEEE operation order as codegen, so
-    * results are bit-identical. Doubles cannot overflow-throw, so ANSI
-    * and legacy eval modes agree on every node compiled here.
-    */
-  private[plans] sealed trait DProg extends Serializable {
-    def eval(cols: Array[org.apache.spark.sql.vectorized.ColumnVector], r: Int): Double
-  }
-  private[plans] final case class DCol(ord: Int, tc: Int) extends DProg {
-    def eval(cols: Array[org.apache.spark.sql.vectorized.ColumnVector], r: Int): Double =
-      tc match {
-        case 0 => cols(ord).getByte(r).toDouble
-        case 1 => cols(ord).getShort(r).toDouble
-        case 2 => cols(ord).getInt(r).toDouble
-        case 3 => cols(ord).getLong(r).toDouble
-        case 4 => cols(ord).getFloat(r).toDouble
-        case _ => cols(ord).getDouble(r)
-      }
-  }
-  private[plans] final case class DLit(v: Double) extends DProg {
-    def eval(cols: Array[org.apache.spark.sql.vectorized.ColumnVector], r: Int): Double = v
-  }
-  private[plans] final case class DAdd(l: DProg, rp: DProg) extends DProg {
-    def eval(cols: Array[org.apache.spark.sql.vectorized.ColumnVector], r: Int): Double =
-      l.eval(cols, r) + rp.eval(cols, r)
-  }
-  private[plans] final case class DSub(l: DProg, rp: DProg) extends DProg {
-    def eval(cols: Array[org.apache.spark.sql.vectorized.ColumnVector], r: Int): Double =
-      l.eval(cols, r) - rp.eval(cols, r)
-  }
-  private[plans] final case class DMul(l: DProg, rp: DProg) extends DProg {
-    def eval(cols: Array[org.apache.spark.sql.vectorized.ColumnVector], r: Int): Double =
-      l.eval(cols, r) * rp.eval(cols, r)
-  }
-
-  private def dTypeCode(dt: DataType): Int = dt match {
-    case ByteType => 0
-    case ShortType => 1
-    case IntegerType => 2
-    case LongType => 3
-    case FloatType => 4
-    case DoubleType => 5
-    case _ => -1
-  }
-
-  /** Compile a DoubleType expression over direct columns, or None. Only
-    * node kinds whose double semantics are mode-independent and
-    * null-iff-any-input-null are admitted: attribute reads, non-null
-    * literals, numeric→double casts of attributes, +, -, ×.
-    */
-  private[plans] def compileDouble(e: Expression,
-      childOut: Seq[Attribute]): Option[CompiledIn] = {
-    val ords = ArrayBuffer.empty[Int]
-    def ordOf(a: Attribute): Option[Int] = {
-      val i = childOut.indexWhere(_.exprId == a.exprId)
-      if (i < 0) None else { if (!ords.contains(i)) ords += i; Some(i) }
-    }
-    def go(x: Expression): Option[DProg] = x match {
-      case a: AttributeReference if a.dataType == DoubleType =>
-        ordOf(a).map(DCol(_, 5))
-      case c: Cast if c.dataType == DoubleType => c.child match {
-        case a: AttributeReference if dTypeCode(a.dataType) >= 0 =>
-          ordOf(a).map(DCol(_, dTypeCode(a.dataType)))
-        case _ => None
-      }
-      case Literal(v: Double, DoubleType) => Some(DLit(v))
-      case Literal(v: Float, FloatType) => Some(DLit(v.toDouble))
-      case a: Add if a.dataType == DoubleType =>
-        for (l <- go(a.left); r <- go(a.right)) yield DAdd(l, r)
-      case s: Subtract if s.dataType == DoubleType =>
-        for (l <- go(s.left); r <- go(s.right)) yield DSub(l, r)
-      case m: Multiply if m.dataType == DoubleType =>
-        for (l <- go(m.left); r <- go(m.right)) yield DMul(l, r)
-      case _ => None
-    }
-    if (e.isInstanceOf[AttributeReference]) None // DirectIn handles those
-    else go(e).map(p => CompiledIn(p, ords.toArray))
-  }
-
-  /** A compiled double input as a batch column: NULL iff any referenced
-    * column is NULL (the null semantics of +/-/× over nullable inputs),
-    * value = the program evaluated at the row. Lets the slot kernel read
-    * compiled and direct inputs alike.
-    */
-  private[plans] final class CompiledDoubleVector(prog: DProg, ords: Array[Int],
-      cols: Array[org.apache.spark.sql.vectorized.ColumnVector])
-    extends org.apache.spark.sql.vectorized.ColumnVector(DoubleType) {
-    override def isNullAt(r: Int): Boolean = {
-      var i = 0
-      while (i < ords.length) { if (cols(ords(i)).isNullAt(r)) return true; i += 1 }
-      false
-    }
-    override def hasNull: Boolean = ords.exists(o => cols(o).hasNull)
-    override def getDouble(r: Int): Double = prog.eval(cols, r)
-    override def numNulls(): Int = unsupported
-    override def getBoolean(r: Int): Boolean = unsupported
-    override def getByte(r: Int): Byte = unsupported
-    override def getShort(r: Int): Short = unsupported
-    override def getInt(r: Int): Int = unsupported
-    override def getLong(r: Int): Long = unsupported
-    override def getFloat(r: Int): Float = unsupported
-    override def getArray(r: Int): org.apache.spark.sql.vectorized.ColumnarArray = unsupported
-    override def getMap(r: Int): org.apache.spark.sql.vectorized.ColumnarMap = unsupported
-    override def getDecimal(r: Int, p: Int, s: Int): Decimal = unsupported
-    override def getUTF8String(r: Int): org.apache.spark.unsafe.types.UTF8String = unsupported
-    override def getBinary(r: Int): Array[Byte] = unsupported
-    override def getChild(i: Int): org.apache.spark.sql.vectorized.ColumnVector = unsupported
-    override def close(): Unit = ()
-    private def unsupported: Nothing =
-      throw new UnsupportedOperationException("compiled input reads as double only")
-  }
-
-  // ---- columnar key extraction --------------------------------------
-  // The partial's row path pays ~250 ns/row at bench scale: a
-  // column-to-row materialization, two UnsafeProjections, and an
-  // UnsafeRow-keyed HashMap probe per input row. The gated shapes group
-  // by at most two parts, each a plain column or an hour-bucket — the
-  // reference's perfect-hash aggregate reads those straight off vectors
-  // (physical_perfecthash_aggregate.cpp). These specs describe group
-  // exprs a batch loop can evaluate without any row projection; string
-  // parts intern to small task-local ids, so the per-row key is one or
-  // two longs probed against an open-addressing table.
-  sealed trait ColKeyPart extends Serializable { def ord: Int }
-  final case class LongKeyPart(ord: Int, intWidth: Boolean, dt: DataType) extends ColKeyPart
-  final case class TruncKeyPart(ord: Int, unit: Long) extends ColKeyPart
-  final case class StringKeyPart(ord: Int) extends ColKeyPart
-  /** Calendar (non-fixed-width) trunc of a micros column via the codegen
-    * kernels; `asDate` additionally floors micros → epoch days (the
-    * `CAST(date_trunc(..) AS DATE)` histogram shape).
-    */
-  final case class CalendarKeyPart(ord: Int, kernel: String, asDate: Boolean)
-      extends ColKeyPart {
-    @transient private lazy val fn: Long => Long = kernel match {
-      case "truncWeek" => graft.functions.DateTruncKernel.truncWeek
-      case "truncMonth" => graft.functions.DateTruncKernel.truncMonth
-      case "truncQuarter" => graft.functions.DateTruncKernel.truncQuarter
-      case "truncYear" => graft.functions.DateTruncKernel.truncYear
-    }
-    def eval(us: Long): Long = {
-      val t = fn(us)
-      if (asDate) Math.floorDiv(t, 86400000000L) else t
-    }
-  }
-
-  /** Columnar-translatable group keys: direct int/long/date/timestamp or
-    * string attributes, or the FastUtcDateTrunc arithmetic shape
-    * (`micros_to_timestamp(micros - pmod(micros, unit))`) over a direct
-    * timestamp column. At most 2 parts — the gated call sites' shapes.
-    */
-  private[plans] def colKeyParts(groupExprs: Seq[Expression],
-      childOut: Seq[Attribute]): Option[Seq[ColKeyPart]] = {
-    // UNGROUPED: trivially columnar-translatable (no key to extract) —
-    // the batch partial runs its dedicated single-acc loop
-    if (groupExprs.isEmpty) return Some(Nil)
-    if (groupExprs.length > 2) return None
-    def ordOf(a: Attribute): Int = childOut.indexWhere(_.exprId == a.exprId)
-    // the micros source of a calendar trunc: a timestamp column, or an
-    // NTZ column through the UTC reinterpret (both store micros longs in
-    // the column vector)
-    def calSrcAttr(src: Expression): Option[AttributeReference] = src match {
-      case a: AttributeReference
-          if a.dataType == TimestampType || a.dataType == TimestampNTZType => Some(a)
-      case graft.functions.UtcNtzReinterpret(a: AttributeReference)
-          if a.dataType == TimestampNTZType => Some(a)
-      case _ => None
-    }
-    val parts: Seq[Option[ColKeyPart]] = groupExprs.map { g =>
-      val e = g match { case a: Alias => a.child; case x => x }
-      e match {
-        case a: AttributeReference if ordOf(a) >= 0 => a.dataType match {
-          case IntegerType | DateType =>
-            Some(LongKeyPart(ordOf(a), intWidth = true, a.dataType))
-          case LongType | TimestampType | TimestampNTZType =>
-            Some(LongKeyPart(ordOf(a), intWidth = false, a.dataType))
-          case StringType => Some(StringKeyPart(ordOf(a)))
-          case _ => None
-        }
-        case graft.functions.UtcMicrosToDate(graft.functions.UtcCalendarTrunc(src, k)) =>
-          calSrcAttr(src).filter(a => ordOf(a) >= 0)
-            .map(a => CalendarKeyPart(ordOf(a), k, asDate = true))
-        case graft.functions.UtcCalendarTrunc(src, k) =>
-          calSrcAttr(src).filter(a => ordOf(a) >= 0)
-            .map(a => CalendarKeyPart(ordOf(a), k, asDate = false))
-        case MicrosToTimestamp(sub: Subtract) => (sub.left, sub.right) match {
-          case (UnixMicros(a: AttributeReference), p: Pmod) =>
-            (p.left, p.right) match {
-              case (UnixMicros(a2: AttributeReference), Literal(u: Long, LongType))
-                  if a.exprId == a2.exprId && ordOf(a) >= 0 && u > 0 =>
-                Some(TruncKeyPart(ordOf(a), u))
-              case _ => None
-            }
-          case _ => None
-        }
-        case _ => None
-      }
-    }
-    if (parts.forall(_.isDefined)) Some(parts.map(_.get)) else None
-  }
 
   private def isLongIsh(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | DateType |
@@ -511,13 +280,16 @@ object DriverAgg {
   /** Plan-level core of [[lowCard]]: convert an analyzed/optimized bare
     * Aggregate (plus a resolved total order and optional limit) into a
     * [[DriverGroupAggPlan]]. Throws for any aggregate outside the slot
-    * surface (DISTINCT/decimals/exotic functions) — callers that
+    * surface (DISTINCT/decimals/exotic functions) or a key outside
+    * [[PackedAgg.supportedKey]] — callers that
     * must not fail (the auto-routing rule) wrap in Try.
     */
   private[graft] def fromAggregate(agg: Aggregate, order: Seq[SortOrder],
       limit: Int, maxGroups: Int, fallback: LogicalPlan,
       ansi: Boolean, allowDistinct: Boolean = false): DriverGroupAggPlan = {
     val groupExprs = agg.groupingExpressions
+    require(groupExprs.length <= 64 && groupExprs.forall(g => PackedAgg.supportedKey(g.dataType)),
+      s"driver agg: group keys outside the packed key domain: ${groupExprs.map(_.sql)}")
     val resultExprs = agg.aggregateExpressions
     val out = resultExprs.map(_.toAttribute)
 
@@ -557,7 +329,7 @@ object DriverAgg {
 
     DriverGroupAggPlan(groupExprs, lay.inputs, lay.slots, lay.aggTypes,
       finalExprs, order, limit, maxGroups,
-      lay.nL, lay.nD, lay.nF, lay.nS, lay.nO, agg.child, out, fallback, ansi)
+      lay.nL, lay.nD, lay.nF, agg.child, out, fallback, ansi)
   }
 }
 
@@ -570,7 +342,7 @@ final case class DriverGroupAggPlan(
     sortOrder: Seq[SortOrder],
     limit: Int,
     maxGroups: Int,
-    nL: Int, nD: Int, nF: Int, nS: Int, nO: Int,
+    nL: Int, nD: Int, nF: Int,
     child: LogicalPlan,
     output: Seq[Attribute],
     // NOT a child: the analyzed shuffled groupBy→orderBy→limit plan the
@@ -592,541 +364,83 @@ final case class DriverGroupAggPlan(
 object DriverAggStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: DriverGroupAggPlan =>
-      DriverGroupAggExec(p.groupExprs, p.aggInputs, p.slots, p.aggTypes,
-        p.finalExprs, p.sortOrder, p.limit, p.maxGroups, p.nL, p.nD, p.nF, p.nS, p.nO,
-        p.output, planLater(p.child), p.fallback, p.ansi, DriverAgg.arms()) :: Nil
+      val keyTypes = p.groupExprs.map(_.dataType)
+      val partial = PackedPartialAggExec(
+        p.groupExprs.map { case a: Alias => a.child; case e => e }, keyTypes,
+        p.aggInputs, p.slots, p.nL, p.nD, p.nF, buckets = 1,
+        PackedPartialAggExec.freshOutput(), planLater(p.child), columnarChild = false,
+        ansi = p.ansi, tuning = PackedAgg.tuning(),
+        driverFinal = Some(PackedAgg.DriverFinal(p.maxGroups)))
+      DriverGroupAggExec(keyTypes, p.slots, p.aggTypes, p.nL, p.nD, p.nF,
+        p.finalExprs, p.sortOrder, p.limit, p.maxGroups, p.output, partial,
+        p.fallback, p.ansi) :: Nil
     case _ => Nil
   }
 }
 
+/** The driver sink of the packed partial: its one job collects the
+  * partial's blobs (plus the object-state side arrays) as task results,
+  * merges them on the driver with the reducer's merge
+  * ([[PackedAgg.KeyLayout.mergeBlob]]), then evaluates the final
+  * expressions, sort and limit over the merged groups.
+  *
+  * Metrics: `numOutputRows`, `mergedGroups` (groups after the driver
+  * merge) and `valveFallbacks` (1 when the `maxGroups` valve re-ran the
+  * retained plan).
+  */
 final case class DriverGroupAggExec(
-    groupExprs: Seq[Expression],
-    aggInputs: Seq[Expression],
+    keyTypes: Seq[DataType],
     slots: Seq[DriverAgg.Slot],
     aggTypes: Seq[DataType],
+    nL: Int, nD: Int, nF: Int,
     finalExprs: Seq[NamedExpression],
     sortOrder: Seq[SortOrder],
     limit: Int,
     maxGroups: Int,
-    nL: Int, nD: Int, nF: Int, nS: Int, nO: Int,
     output: Seq[Attribute],
+    // the packed partial in driver mode (see DriverAggStrategy)
     child: SparkPlan,
     // driver-side only (the valve fallback). MUST be @transient: when
     // this exec runs inside a ScalarSubquery, the enclosing stage's
     // task closure serializes the subquery expression tree — and an
     // analyzed LogicalPlan holds non-serializable file indexes.
     @transient fallback: LogicalPlan,
-    ansi: Boolean,
-    arms: DriverAgg.Arms,
-    // batch-direct partial (InsertCacheColumnarToRow peels the transition
-    // when the keys columnar-translate — see DriverAgg.colKeyParts)
-    columnarChild: Boolean = false,
-    // filter conjuncts folded INTO the batch partial (the rule replaces a
-    // Filter/CacheFilterExec child with this selection, evaluated per
-    // batch by DictSelection's dict/prim/row tiers — the selection-pushed
-    // scan). Only ever non-empty together with columnarChild.
-    selection: Seq[Expression] = Nil) extends UnaryExecNode {
+    ansi: Boolean) extends UnaryExecNode {
 
-  require(selection.isEmpty || columnarChild,
-    "selection fold requires the batch-direct partial")
-
-  import DriverAgg._
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "mergedGroups" -> SQLMetrics.createMetric(sparkContext, "groups merged on the driver"),
+    "valveFallbacks" -> SQLMetrics.createMetric(sparkContext, "maxGroups valve fallbacks"))
 
   override def producedAttributes: AttributeSet = AttributeSet(output)
   override protected def withNewChildInternal(c: SparkPlan): DriverGroupAggExec =
     copy(child = c)
 
-  /** Batch-direct partial eligibility against a columnar child: every
-    * group key columnar-translates and the value projection's inputs
-    * resolve in the child's output (they always do — same attrs as the
-    * peeled transition's).
-    */
-  def columnarEligible(c: SparkPlan): Boolean =
-    DriverAgg.colKeyParts(groupExprs, c.output).isDefined &&
-      aggInputs.forall(_.references.subsetOf(c.outputSet))
-
-  /** Slot semantics for this aggregate's layout (inputs read with their
-    * own types: value-projection rows, direct columns, or compiled double
-    * vectors).
-    */
-  private def kernel = new SlotKernel(slots, aggInputs.map(_.dataType), aggTypes,
-    nL, nD, nF, ansi, nS, nO)
-
-  /** Dense direct-index eligibility: ONE calendar-bucket key, every
-    * aggregate input a direct primitive column, and only flat-array
-    * state (no distinct sets, no string min/max). The bucket domain is
-    * the fixed 1900-2100 calendar window — out-of-window rows take a
-    * per-row overflow map inside the arm, so eligibility never depends
-    * on (possibly lying) statistics.
-    */
-  private def denseCalendarSpec: Option[(DriverAgg.CalendarKeyPart, Array[Int])] = {
-    // a folded selection routes through the generic batch partial (whose
-    // loop evaluates it); the dense arm stays filter-free
-    if (!arms.denseCalendar || nS != 0 || nO != 0 ||
-      selection.nonEmpty) return None
-    DriverAgg.colKeyParts(groupExprs, child.output) match {
-      case Some(Seq(c: DriverAgg.CalendarKeyPart)) =>
-        val inputsOk = aggInputs.forall {
-          case a: AttributeReference =>
-            SlotKernel.typeCode(a.dataType) >= 0 &&
-              child.output.exists(_.exprId == a.exprId)
-          case _ => false
-        }
-        if (inputsOk)
-          Some((c, aggInputs.map(e => child.output.indexWhere(
-            _.exprId == e.asInstanceOf[AttributeReference].exprId)).toArray))
-        else None
-      case _ => None
-    }
-  }
-
-  /** Dense direct-index partial — the perfect-hash aggregate proper.
-    * For a single calendar key the key is one LUT read off the micros
-    * vector and group state is the kernel's flat primitive arrays
-    * indexed by bucket ordinal — no hash probe, no per-group object.
-    * Out-of-window days (outside 1900-2100) fall into a per-row
-    * overflow hash map — slower rows, never a wrong answer. Emits the
-    * same (key-row bytes, Acc) payload, so the driver merge is shared.
-    */
-  private def runDenseCalendarPartials(
-      key: DriverAgg.CalendarKeyPart,
-      dirOrds: Array[Int]): Array[Array[(Array[Byte], Acc)]] = {
-    import graft.functions.DateTruncKernel
-    val kCode = DateTruncKernel.kernelCode(key.kernel)
-    val nBuck = DateTruncKernel.denseBuckets(key.kernel) + 1 // 0 = NULL key
-    val asDate = key.asDate
-    val keyOrd = key.ord
-    val keyTypes = groupExprs.map(_.dataType).toArray
-    val k = kernel
-    val cap = maxGroups
-    sparkContext.runJob(child.executeColumnar(),
-        (batches: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]) => {
-      val (aL, aD, aF) = (k.nL, k.nD, k.nF)
-      val longsA = new Array[Long](nBuck * aL)
-      val doublesA = new Array[Double](nBuck * aD)
-      val flagsA = new Array[Boolean](nBuck * aF)
-      val touched = new Array[Boolean](nBuck)
-      // in-window dense buckets count toward maxGroups exactly like the
-      // generic partial's per-partition group cap — without this, a
-      // caller-supplied cap below the bucket count would silently pass
-      // here while the generic arm throws GroupCardinalityExceeded
-      var touchedCount = 0
-      // out-of-window rows (truncated key value -> Acc), built lazily
-      var ovf: java.util.HashMap[java.lang.Long, Acc] = null
-      batches.foreach { batch =>
-        val v0 = batch.column(keyOrd)
-        val inVecs = dirOrds.map(batch.column)
-        val n = batch.numRows()
-        var r = 0
-        while (r < n) {
-          var b = 0
-          var acc: Acc = null
-          if (!v0.isNullAt(r)) {
-            val us = v0.getLong(r)
-            val o = DateTruncKernel.denseOrd(kCode,
-              Math.floorDiv(us, 86400000000L))
-            if (o >= 0) b = o + 1
-            else {
-              if (ovf == null) ovf = new java.util.HashMap()
-              val kv = java.lang.Long.valueOf(key.eval(us))
-              acc = ovf.get(kv)
-              if (acc == null) {
-                if (touchedCount + ovf.size() >= cap) throw new GroupCardinalityExceeded(
-                  s"driver agg: dense overflow exceeded maxGroups=$cap")
-                acc = k.newAcc()
-                ovf.put(kv, acc)
-              }
-            }
-          }
-          if (acc != null) k.updateCol(inVecs, r, acc.longs, acc.doubles, acc.flags, 0)
-          else {
-            if (!touched(b)) {
-              val ovfSize = if (ovf == null) 0 else ovf.size()
-              if (touchedCount + ovfSize >= cap) throw new GroupCardinalityExceeded(
-                s"driver agg: dense buckets exceeded maxGroups=$cap")
-              touched(b) = true
-              touchedCount += 1
-            }
-            k.updateCol(inVecs, r, longsA, doublesA, flagsA, b)
-          }
-          r += 1
-        }
-      }
-      // same payload as the hashed path: exact-layout key rows + state
-      val keyProj = UnsafeProjection.create(keyTypes)
-      val krow = new GenericInternalRow(1)
-      val out = new ArrayBuffer[(Array[Byte], Acc)]()
-      var b = 0
-      while (b < nBuck) {
-        if (touched(b)) {
-          if (b == 0) krow.update(0, null)
-          else {
-            val sd = DateTruncKernel.denseStartDay(kCode, b - 1)
-            krow.update(0,
-              if (asDate) sd.toInt else java.lang.Long.valueOf(sd * 86400000000L))
-          }
-          val acc = new Acc(
-            java.util.Arrays.copyOfRange(longsA, b * aL, b * aL + aL),
-            java.util.Arrays.copyOfRange(doublesA, b * aD, b * aD + aD),
-            java.util.Arrays.copyOfRange(flagsA, b * aF, b * aF + aF))
-          out += ((keyProj(krow).copy().getBytes, acc))
-        }
-        b += 1
-      }
-      if (ovf != null) {
-        val it = ovf.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          krow.update(0,
-            if (asDate) e.getKey.longValue().toInt else e.getKey)
-          out += ((keyProj(krow).copy().getBytes, e.getValue))
-        }
-      }
-      out.toArray
-    })
-  }
-
-  /** Batch-direct partial: specialized key extraction off column vectors
-    * (long reads, hour-bucket arithmetic, string interning to task-local
-    * ids) into an open-addressing composite-long table; aggregate inputs
-    * read straight off the batch's vectors (direct columns, or compiled
-    * double trees over them), falling back to the ordinary value
-    * projection over the batch's row VIEW (no column-to-row
-    * materialization). Emits the same (key-row bytes, Acc) payload as
-    * the row path, so the driver merge is shared. Measured ~250 → ~70
-    * ns/row on the sf1 tumbling partial (PERF.md r7).
-    */
-  private def runColumnarPartials(): Array[Array[(Array[Byte], Acc)]] = {
-    val partsSpec = DriverAgg.colKeyParts(groupExprs, child.output).get.toArray
-    val iExprs = aggInputs
-    val childOut = child.output
-    val cap = maxGroups
-    val k = kernel
-    val keyTypes = groupExprs.map(_.dataType).toArray
-    val selPreds: Array[Expression] =
-      if (selection.nonEmpty) selection.toArray else null
-    val dictKeys = arms.dictKeys
-    val directStringKey = arms.directStringKey
-    // per-input access plans: direct column or compiled double tree; the
-    // vector arm engages only when every input has one (else the rows go
-    // through the value projection)
-    val inPlans: Array[DriverAgg.InPlan] = iExprs.map {
-      case a: AttributeReference if childOut.exists(_.exprId == a.exprId) =>
-        DriverAgg.DirectIn(childOut.indexWhere(_.exprId == a.exprId))
-      case e if arms.exprVec =>
-        DriverAgg.compileDouble(e, childOut).orNull
-      case _ => null
-    }.toArray
-    val vectorArm = inPlans.forall(_ != null)
-    sparkContext.runJob(child.executeColumnar(),
-        (batches: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]) => {
-      import graft.functions.DistinctWithHll.scramble
-      val valProj = UnsafeProjection.create(iExprs, childOut)
-      val nParts = partsSpec.length
-      val interns = new Array[java.util.HashMap[
-        org.apache.spark.unsafe.types.UTF8String, Integer]](nParts)
-      val internVals = new Array[ArrayBuffer[
-        org.apache.spark.unsafe.types.UTF8String]](nParts)
-      var c0 = 0
-      while (c0 < nParts) {
-        if (partsSpec(c0).isInstanceOf[DriverAgg.StringKeyPart]) {
-          interns(c0) = new java.util.HashMap()
-          internVals(c0) = new ArrayBuffer()
-        }
-        c0 += 1
-      }
-      // (k1, k2, nullBits) -> dense group index, open addressing
-      var mask = (1 << 10) - 1
-      var table = Array.fill(mask + 1)(-1)
-      var gk1 = new Array[Long](512)
-      var gk2 = new Array[Long](512)
-      var gnull = new Array[Byte](512)
-      val accs = new ArrayBuffer[Acc]()
-      def hashOf(k1: Long, k2: Long, nb: Int): Long =
-        scramble(k1 ^ (k2 * 0x9E3779B97F4A7C15L) ^ nb.toLong)
-      def growTable(): Unit = {
-        mask = mask * 2 + 1
-        table = Array.fill(mask + 1)(-1)
-        var g = 0
-        while (g < accs.length) {
-          var p = (hashOf(gk1(g), gk2(g), gnull(g)) & mask).toInt
-          while (table(p) != -1) p = (p + 1) & mask
-          table(p) = g
-          g += 1
-        }
-      }
-      def newGroup(k1: Long, nb: Int, k2: Long = 0L): Int = {
-        if (accs.length >= cap) throw new GroupCardinalityExceeded(
-          s"driver agg: group count exceeded maxGroups=$cap in one partition — " +
-            "key is not low-cardinality; falling back to the shuffled aggregate")
-        val idx = accs.length
-        if (idx >= gk1.length) {
-          gk1 = java.util.Arrays.copyOf(gk1, gk1.length * 2)
-          gk2 = java.util.Arrays.copyOf(gk2, gk2.length * 2)
-          gnull = java.util.Arrays.copyOf(gnull, gnull.length * 2)
-        }
-        gk1(idx) = k1; gk2(idx) = k2; gnull(idx) = nb.toByte
-        accs += k.newAcc()
-        idx
-      }
-      // dense single-string-key arm state (see the directArm loop below)
-      val directArm = directStringKey &&
-        nParts == 1 && partsSpec(0).isInstanceOf[DriverAgg.StringKeyPart]
-      var directIdx: Array[Int] = if (directArm) Array.fill(1 << 12)(-1) else null
-      var nullGroup = -1
-      // ungrouped arm state: the partition's single Acc
-      var acc0: Acc = null
-      def intern(ci: Int,
-          s: org.apache.spark.unsafe.types.UTF8String): Int = {
-        val boxed = interns(ci).get(s)
-        if (boxed != null) boxed.intValue()
-        else {
-          val copy = s.clone()
-          val id = internVals(ci).length
-          interns(ci).put(copy, Integer.valueOf(id))
-          internVals(ci) += copy
-          id
-        }
-      }
-      def extract(spec: DriverAgg.ColKeyPart, ci: Int,
-          vec: org.apache.spark.sql.vectorized.ColumnVector, r: Int): Long =
-        spec match {
-          case DriverAgg.LongKeyPart(_, true, _) => vec.getInt(r).toLong
-          case DriverAgg.LongKeyPart(_, false, _) => vec.getLong(r)
-          case DriverAgg.TruncKeyPart(_, u) =>
-            val m = vec.getLong(r); m - Math.floorMod(m, u)
-          case c: DriverAgg.CalendarKeyPart => c.eval(vec.getLong(r))
-          case _: DriverAgg.StringKeyPart => intern(ci, vec.getUTF8String(r)).toLong
-        }
-      // selection: the folded filter's conjuncts, classified per batch
-      // into DictSelection's dict/prim/row tiers
-      val sel = if (selPreds == null) null else new DictSelection(selPreds, childOut)
-      // dict-id fast keys: per-batch dictionary ids remapped to task
-      // intern ids once per batch (≤ entries probes), rows key by an
-      // int-array read instead of a per-row UTF8String hash probe
-      val dictIdArr = new Array[Array[Int]](nParts)
-      val dictRemap = new Array[Array[Int]](nParts)
-      batches.foreach { batch =>
-        val v0 = if (nParts == 0) null else batch.column(partsSpec(0).ord)
-        val v1 = if (nParts > 1) batch.column(partsSpec(1).ord) else null
-        var c1 = 0
-        while (c1 < nParts) {
-          dictIdArr(c1) = null
-          if (dictKeys && partsSpec(c1).isInstanceOf[DriverAgg.StringKeyPart]) {
-            (if (c1 == 0) v0 else v1) match {
-              case g: GraftColumnVector => g.store match {
-                case d: GraftCacheSerializer.DictStore =>
-                  val remap = new Array[Int](d.entries)
-                  var e = 0
-                  while (e < d.entries) {
-                    remap(e) = intern(c1, org.apache.spark.unsafe.types.UTF8String
-                      .fromBytes(d.dict, d.dictOffsets(e),
-                        d.dictOffsets(e + 1) - d.dictOffsets(e)))
-                    e += 1
-                  }
-                  dictIdArr(c1) = d.ids
-                  dictRemap(c1) = remap
-                case _ =>
-              }
-              case _ =>
-            }
-          }
-          c1 += 1
-        }
-        if (sel != null) sel.reset(batch)
-        val inVecs: Array[org.apache.spark.sql.vectorized.ColumnVector] =
-          if (!vectorArm) null
-          else {
-            val cols =
-              if (inPlans.exists(_.isInstanceOf[DriverAgg.CompiledIn]))
-                Array.tabulate(batch.numCols())(batch.column)
-              else null
-            inPlans.map {
-              case DriverAgg.DirectIn(o) => batch.column(o)
-              case DriverAgg.CompiledIn(p, ords) =>
-                new DriverAgg.CompiledDoubleVector(p, ords, cols)
-            }
-          }
-        def update(r: Int, acc: Acc): Unit =
-          if (inVecs != null) {
-            k.updateCol(inVecs, r, acc.longs, acc.doubles, acc.flags, 0)
-            if (k.hasObj) k.updateColObj(inVecs, r, acc)
-          } else {
-            val v = valProj(batch.getRow(r))
-            k.updateRow(v, acc.longs, acc.doubles, acc.flags, 0)
-            if (k.hasObj) k.updateRowObj(v, acc)
-          }
-        val n = batch.numRows()
-        var r = 0
-        if (nParts == 0) {
-          // UNGROUPED: one Acc per partition and no key work at all —
-          // the fused scan→ungrouped-aggregate (reference:
-          // src/execution/operator/aggregate/
-          // physical_ungrouped_aggregate.cpp). With vector inputs, flat
-          // state and no selection the update runs COLUMN-MAJOR (one
-          // sequential pass per slot); otherwise row by row with the
-          // selection in front.
-          if (acc0 == null) acc0 = accs(newGroup(0L, 0))
-          if (sel == null && inVecs != null && !k.hasObj)
-            k.updateColumnMajor(inVecs, n, acc0.longs, acc0.doubles, acc0.flags, 0)
-          else while (r < n) {
-            if (sel == null || sel.passes(r)) update(r, acc0)
-            r += 1
-          }
-        } else if (directArm) {
-          // dense single-string-key arm: the intern id IS dense (0..N in
-          // first-intern order), so groups index DIRECTLY by it — no hash,
-          // no probe loop, no key compare per row. This is the reference's
-          // perfect-hash group-by over dictionary ids
-          // (physical_perfect_hash_aggregate.cpp) applied to the interned
-          // string domain.
-          while (r < n) {
-            if (sel == null || sel.passes(r)) {
-              var idx = -1
-              if (v0.isNullAt(r)) {
-                if (nullGroup == -1) nullGroup = newGroup(0L, 1)
-                idx = nullGroup
-              } else {
-                val k1i = if (dictIdArr(0) != null) dictRemap(0)(dictIdArr(0)(r))
-                  else extract(partsSpec(0), 0, v0, r).toInt
-                if (k1i >= directIdx.length) {
-                  val grown = new Array[Int](math.max(directIdx.length * 2, k1i + 1))
-                  java.util.Arrays.fill(grown, directIdx.length, grown.length, -1)
-                  System.arraycopy(directIdx, 0, grown, 0, directIdx.length)
-                  directIdx = grown
-                }
-                idx = directIdx(k1i)
-                if (idx == -1) { idx = newGroup(k1i.toLong, 0); directIdx(k1i) = idx }
-              }
-              update(r, accs(idx))
-            }
-            r += 1
-          }
-        } else {
-          while (r < n) {
-            if (sel == null || sel.passes(r)) {
-              var nb = 0
-              var k1 = 0L
-              var k2 = 0L
-              if (v0.isNullAt(r)) nb |= 1
-              else k1 = if (dictIdArr(0) != null) dictRemap(0)(dictIdArr(0)(r)).toLong
-                else extract(partsSpec(0), 0, v0, r)
-              if (v1 != null) {
-                if (v1.isNullAt(r)) nb |= 2
-                else k2 = if (dictIdArr(1) != null) dictRemap(1)(dictIdArr(1)(r)).toLong
-                  else extract(partsSpec(1), 1, v1, r)
-              }
-              var p = (hashOf(k1, k2, nb) & mask).toInt
-              var idx = table(p)
-              while (idx != -1 &&
-                  !(gk1(idx) == k1 && gk2(idx) == k2 && gnull(idx) == nb.toByte)) {
-                p = (p + 1) & mask
-                idx = table(p)
-              }
-              if (idx == -1) {
-                idx = newGroup(k1, nb, k2)
-                table(p) = idx
-                if (accs.length * 2 > mask) growTable()
-              }
-              update(r, accs(idx))
-            }
-            r += 1
-          }
-        }
-      }
-      // same payload as the row path: exact-layout key rows + state
-      val keyProj = UnsafeProjection.create(keyTypes)
-      val krow = new GenericInternalRow(nParts)
-      val out = new Array[(Array[Byte], Acc)](accs.length)
-      var g = 0
-      while (g < accs.length) {
-        var ci = 0
-        while (ci < nParts) {
-          val isNull = ((gnull(g) >> ci) & 1) == 1
-          val kv = if (ci == 0) gk1(g) else gk2(g)
-          krow.update(ci,
-            if (isNull) null
-            else partsSpec(ci) match {
-              case DriverAgg.LongKeyPart(_, _, IntegerType | DateType) => kv.toInt
-              case DriverAgg.CalendarKeyPart(_, _, true) => kv.toInt
-              case _: DriverAgg.StringKeyPart => internVals(ci)(kv.toInt)
-              case _ => kv
-            })
-          ci += 1
-        }
-        out(g) = (keyProj(krow).copy().getBytes, accs(g))
-        g += 1
-      }
-      out
-    })
-  }
-
-  /** The single distributed job + driver finalize. */
+  /** The single distributed job + driver merge and finalize. */
   private def finalRows(): Array[InternalRow] = {
-    val gExprs = groupExprs
-    val iExprs = aggInputs
-    val childOut = child.output
-    val cap = maxGroups
-    val k = kernel
-
-    val parts: Array[Array[(Array[Byte], Acc)]] =
-      if (columnarChild) denseCalendarSpec match {
-        case Some((key, dirOrds)) => runDenseCalendarPartials(key, dirOrds)
-        case None => runColumnarPartials()
-      }
-      else sparkContext.runJob(child.execute(), (rows: Iterator[InternalRow]) => {
-        val keyProj = UnsafeProjection.create(gExprs, childOut)
-        val valProj = UnsafeProjection.create(iExprs, childOut)
-        val m = new java.util.HashMap[UnsafeRow, Acc]()
-        while (rows.hasNext) {
-          val row = rows.next()
-          val key = keyProj(row)
-          var acc = m.get(key)
-          if (acc == null) {
-            if (m.size() >= cap) throw new GroupCardinalityExceeded(
-              s"driver agg: group count exceeded maxGroups=$cap in one partition — " +
-                "key is not low-cardinality; falling back to the shuffled aggregate")
-            acc = k.newAcc()
-            m.put(key.copy(), acc)
-          }
-          val v = valProj(row)
-          k.updateRow(v, acc.longs, acc.doubles, acc.flags, 0)
-          if (k.hasObj) k.updateRowObj(v, acc)
-        }
-        val out = new Array[(Array[Byte], Acc)](m.size())
-        var i = 0
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next(); out(i) = (e.getKey.getBytes, e.getValue); i += 1
-        }
-        out
-      })
-
-    val nKeys = groupExprs.length
-    val merged = new java.util.LinkedHashMap[UnsafeRow, Acc]()
-    parts.foreach(_.foreach { case (bytes, acc) =>
-      val key = new UnsafeRow(nKeys)
-      key.pointTo(bytes, bytes.length)
-      val cur = merged.get(key)
-      if (cur == null) {
-        if (merged.size() >= maxGroups) throw new GroupCardinalityExceeded(
-          s"driver agg: merged group count exceeded maxGroups=$maxGroups")
-        merged.put(key, acc)
-      } else k.mergeAcc(cur, acc)
+    val partial = child.asInstanceOf[PackedPartialAggExec]
+    val blobs = sparkContext.runJob(partial.executeBlobs(),
+      (it: Iterator[PackedAgg.Blob]) => it.toArray)
+    val k = new SlotKernel(slots, Nil, aggTypes, nL, nD, nF, ansi)
+    val kl = PackedAgg.KeyLayout(keyTypes)
+    val m = new PackedAgg.MultiKeyMap(kl.nLK, kl.nSK, nL, nD, nF, hasObjs = k.hasObj)
+    blobs.foreach(_.foreach { b =>
+      kl.mergeBlob(m, k, b.keys, b.state, b.objs)
+      if (m.size > maxGroups) throw new DriverAgg.GroupCardinalityExceeded(
+        s"driver agg: merged group count exceeded maxGroups=$maxGroups")
     })
     // a GLOBAL aggregate over empty input still yields one (empty) group
-    if (nKeys == 0 && merged.isEmpty)
-      merged.put(UnsafeProjection.create(Seq.empty[Expression], Seq.empty)(
-        InternalRow.empty).copy(), k.newAcc())
+    if (kl.n == 0 && m.size == 0) { m.stageMask = 0L; m.slotOf(PackedAgg.hashSeed) }
+    longMetric("mergedGroups") += m.size
 
     val proj = UnsafeProjection.create(finalExprs)
-    val keyTypes = groupExprs.map(_.dataType)
     val evalRow = new SpecificInternalRow(keyTypes ++ aggTypes)
-    val rows = new ArrayBuffer[InternalRow](merged.size())
-    merged.forEach { (key, acc) =>
-      var i = 0
-      while (i < nKeys) { evalRow.update(i, key.get(i, keyTypes(i))); i += 1 }
-      k.writeFinals(acc, evalRow, nKeys)
+    val writeKeys = kl.keyWriter(m, evalRow)
+    val rows = new ArrayBuffer[InternalRow](m.size)
+    m.foreachSlot { s =>
+      writeKeys(s)
+      k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, kl.n,
+        obj = if (m.objs == null) null else m.objs(s))
       rows += proj(evalRow).copy()
     }
     val sorted =
@@ -1155,25 +469,32 @@ final case class DriverGroupAggExec(
     * ordinary partial→exchange→final aggregate + sort + limit. Costs one
     * aborted scan; never a wrong answer.
     */
-  private def rowsWithFallback(): Array[InternalRow] =
-    try {
-      // finalExprs may hold ExecSubqueryExpressions (the thq15-class
-      // scalar-subquery routing): executeCollect bypasses executeQuery's
-      // wrapper, so materialize this node's subqueries explicitly before
-      // any driver-side eval — ScalarSubquery.eval throws otherwise
-      // (idempotent on the doExecute path, which already prepared)
-      prepare()
-      waitForSubqueries()
-      finalRows()
-    } catch {
-      case t: Throwable if cardinalityExceeded(t) =>
-        logWarning(s"DriverAgg maxGroups=$maxGroups exceeded; re-running the " +
-          "retained shuffled aggregate plan")
-        DriverAgg.replanning.set(java.lang.Boolean.TRUE)
-        try org.apache.spark.sql.graft.bridge.ofRows(session, fallback)
-          .queryExecution.executedPlan.executeCollect()
-        finally DriverAgg.replanning.set(java.lang.Boolean.FALSE)
-    }
+  private def rowsWithFallback(): Array[InternalRow] = {
+    val rows =
+      try {
+        // finalExprs may hold ExecSubqueryExpressions (the thq15-class
+        // scalar-subquery routing): executeCollect bypasses executeQuery's
+        // wrapper, so materialize this node's subqueries explicitly before
+        // any driver-side eval — ScalarSubquery.eval throws otherwise
+        // (idempotent on the doExecute path, which already prepared)
+        prepare()
+        waitForSubqueries()
+        finalRows()
+      } catch {
+        case t: Throwable if cardinalityExceeded(t) =>
+          logWarning(s"DriverAgg maxGroups=$maxGroups exceeded; re-running the " +
+            "retained shuffled aggregate plan")
+          longMetric("valveFallbacks") += 1
+          DriverAgg.replanning.set(java.lang.Boolean.TRUE)
+          try org.apache.spark.sql.graft.bridge.ofRows(session, fallback)
+            .queryExecution.executedPlan.executeCollect()
+          finally DriverAgg.replanning.set(java.lang.Boolean.FALSE)
+      }
+    longMetric("numOutputRows") += rows.length
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+    rows
+  }
 
   override def executeCollect(): Array[InternalRow] = rowsWithFallback()
 

@@ -54,6 +54,11 @@ import scala.collection.mutable.ArrayBuffer
   * slots. One long key (no string key) probes the map in place
   * ([[MultiKeyMap.slotOfLong]]) and may carry the `ORDER BY k LIMIT n`
   * key prune ([[KeyTopN]]).
+  *
+  * The same partial is the driver-final aggregate's ([[DriverFinal]]):
+  * one partial, two sinks — the bucket shuffle to [[PackedFinalAggExec]],
+  * or the task results [[DriverGroupAggExec]] merges on the driver, both
+  * through [[KeyLayout.mergeBlob]].
   */
 object PackedAgg {
 
@@ -67,8 +72,9 @@ object PackedAgg {
     *  - `checkRows`: rows before the adaptive partial skip decides
     *    (below; `spark.graft.agg.passThroughCheckRows`);
     *  - `dictKeys`: dict-id key fast path in the columnar partial
-    *    (per-batch entry hashing over dictionary-served string keys;
-    *    arm `PackedAgg.dictKeys`);
+    *    (per-batch entry hashing over dictionary-served string keys, and
+    *    for a lone string key a per-batch entry → slot memo; arm
+    *    `PackedAgg.dictKeys`);
     *  - `pairKeys`: the 2-key pair→slot memo (below; arm
     *    `PackedAgg.pairKeys`).
     *
@@ -96,6 +102,29 @@ object PackedAgg {
     */
   final case class Tuning(flushGroups: Int, checkRows: Int,
       dictKeys: Boolean, pairKeys: Boolean)
+
+  /** The driver sink of a packed partial ([[DriverGroupAggExec]]): its
+    * blobs return as task results and merge on the driver instead of
+    * crossing a shuffle. In this mode the partial
+    *  - never passes rows through (the driver merges every fragment);
+    *  - carries object-state slots (bounded `count(DISTINCT)`, string
+    *    min/max) in a per-group [[DriverAgg.ObjState]] side array next to
+    *    the state blob ([[Blob.objs]]);
+    *  - reads inputs that [[PackedPartialAggExec.columnarEligible]] cannot
+    *    resolve to a column through the value projection over the batch's
+    *    row view, keys still off the vectors;
+    *  - folds a deterministic `FilterExec` over `ColumnarToRow` into its
+    *    selection (rules/VectorizedCacheRead);
+    *  - trips the `maxGroups` valve when one map outgrows it.
+    */
+  final case class DriverFinal(maxGroups: Int)
+
+  /** One emitted packed fragment: the key-hash `bucket`, the keys and
+    * state blobs (layouts in [[PackedPartialAggExec]]), and in driver
+    * mode the groups' object state in record order (else null).
+    */
+  final case class Blob(bucket: Int, keys: Array[Byte], state: Array[Byte],
+      objs: Array[DriverAgg.ObjState])
 
   /** Groups per row read above which the partial skip passes rows
     * through (see [[Tuning]]). */
@@ -415,7 +444,7 @@ object PackedAgg {
     * its bytes). Zero-initialized state is the fresh accumulator.
     */
   final class MultiKeyMap(nLK: Int, nSK: Int, nL: Int, nD: Int, nF: Int,
-      initCap: Int = 1 << 12) {
+      initCap: Int = 1 << 12, hasObjs: Boolean = false) {
     private var cap = Integer.highestOneBit(math.max(initCap, 16))
     private var mask = cap - 1
     private var hashes = new Array[Long](cap)
@@ -428,6 +457,17 @@ object PackedAgg {
     var longs = new Array[Long](cap * nL)
     var doubles = new Array[Double](cap * nD)
     var flags = new Array[Boolean](cap * nF)
+    /** Per-slot object state (driver mode's side array), else null. A
+      * slot's entry is null until its group first updates an object slot. */
+    var objs: Array[DriverAgg.ObjState] =
+      if (hasObjs) new Array[DriverAgg.ObjState](cap) else null
+
+    /** Slot s's object state, made by `k` on first use. */
+    def objAt(s: Int, k: SlotKernel): DriverAgg.ObjState = {
+      var o = objs(s)
+      if (o == null) { o = k.newObj(); objs(s) = o }
+      o
+    }
     private var pool = new Array[Byte](if (nSK == 0) 0 else 1 << 16)
     var poolLen = 0
 
@@ -528,7 +568,7 @@ object PackedAgg {
       val kept = if (keep == null) used else Array.tabulate(cap)(i => used(i) && keep(i))
       val oh = hashes; val olk = lkeys
       val oso = soffs; val osl = slens; val onm = nullMasks
-      val oL = longs; val oD = doubles; val oF = flags
+      val oL = longs; val oD = doubles; val oF = flags; val oO = objs
       cap = newCap; mask = cap - 1
       hashes = new Array[Long](cap); used = new Array[Boolean](cap)
       lkeys = new Array[Long](cap * nLK)
@@ -537,6 +577,7 @@ object PackedAgg {
       longs = new Array[Long](cap * nL)
       doubles = new Array[Double](cap * nD)
       flags = new Array[Boolean](cap * nF)
+      if (oO != null) objs = new Array[DriverAgg.ObjState](cap)
       size = 0
       var i = 0
       while (i < oc) {
@@ -550,6 +591,7 @@ object PackedAgg {
           System.arraycopy(oL, i * nL, longs, j * nL, nL)
           System.arraycopy(oD, i * nD, doubles, j * nD, nD)
           System.arraycopy(oF, i * nF, flags, j * nF, nF)
+          if (oO != null) objs(j) = oO(i)
           size += 1
         }
         i += 1
@@ -583,9 +625,180 @@ object PackedAgg {
       java.util.Arrays.fill(longs, 0L)
       java.util.Arrays.fill(doubles, 0.0)
       java.util.Arrays.fill(flags, false)
+      if (objs != null) java.util.Arrays.fill(objs.asInstanceOf[Array[AnyRef]], null)
       size = 0
       poolLen = 0
     }
+  }
+
+  /** Key shape of a packed aggregate: each key's kind (widened long or
+    * interned string) and index into its kind's block, and the bytes of
+    * one key record [hash, null mask, long keys, string lengths]. The
+    * partial encodes with it; [[mergeBlob]] and [[keyWriter]] are the
+    * reducer's decode, shared by the shuffle final and the driver sink.
+    */
+  final case class KeyLayout(keyTypes: Seq[DataType]) {
+    val n: Int = keyTypes.length
+    val kinds: Array[Int] = keyTypes.map(kindOf).toArray
+    val subIdx: Array[Int] = {
+      var li = 0; var si = 0
+      kinds.map { k => if (k == KindLong) { li += 1; li - 1 } else { si += 1; si - 1 } }
+    }
+    val nLK: Int = kinds.count(_ == KindLong)
+    val nSK: Int = kinds.count(_ == KindStr)
+    val recBytes: Int = 16 + 8 * nLK + 4 * nSK
+    /** One long key, no string key: probed in place ([[MultiKeyMap.slotOfLong]]). */
+    val oneLong: Boolean = n == 1 && nLK == 1
+
+    /** Merge every group of one blob into `m`; `objs` (driver mode) is
+      * the blob's object-state side array, in record order. */
+    def mergeBlob(m: MultiKeyMap, k: SlotKernel, keys: Array[Byte], state: Array[Byte],
+        objs: Array[DriverAgg.ObjState]): Unit = {
+      val nRec = Platform.getInt(keys, Platform.BYTE_ARRAY_OFFSET)
+      var cursor = 4 + nRec * recBytes
+      var g = 0
+      while (g < nRec) {
+        var p = Platform.BYTE_ARRAY_OFFSET + 4 + g * recBytes
+        val h = Platform.getLong(keys, p); p += 8
+        val msk = Platform.getLong(keys, p); p += 8
+        var j = 0
+        while (j < nLK) { m.stageLongs(j) = Platform.getLong(keys, p); p += 8; j += 1 }
+        j = 0
+        while (j < nSK) {
+          val len = Platform.getInt(keys, p); p += 4
+          // a zero-length slice is "" — the mask decides null below
+          m.stageStrs(j) = UTF8String.fromBytes(keys, cursor, len)
+          cursor += len
+          j += 1
+        }
+        // null components: clear the staged string (mask carries null-ness)
+        j = 0
+        while (j < n) {
+          if ((msk & (1L << j)) != 0 && kinds(j) == KindStr) m.stageStrs(subIdx(j)) = null
+          j += 1
+        }
+        m.stageMask = msk
+        val s = if (oneLong && msk == 0L) m.slotOfLong(h, m.stageLongs(0)) else m.slotOf(h)
+        k.mergeBlob(m.longs, m.doubles, m.flags, s, state,
+          Platform.BYTE_ARRAY_OFFSET + g.toLong * k.blockBytes)
+        if (objs != null && objs(g) != null) {
+          if (m.objs(s) == null) m.objs(s) = objs(g) else k.mergeObj(m.objs(s), objs(g))
+        }
+        g += 1
+      }
+    }
+
+    /** Writes slot s's keys into fields 0 until n of `row` with typed
+      * setters (allocation-free over a SpecificInternalRow). */
+    def keyWriter(m: MultiKeyMap, row: InternalRow): Int => Unit = {
+      val ws: Array[Int => Unit] = Array.tabulate(n) { j =>
+        val bit = 1L << j
+        if (kinds(j) == KindStr) {
+          val si = subIdx(j)
+          (s: Int) =>
+            if ((m.maskAt(s) & bit) != 0) row.setNullAt(j)
+            else row.update(j,
+              UTF8String.fromBytes(m.poolArray, m.strOffAt(s, si), m.strLenAt(s, si)))
+        } else {
+          val li = subIdx(j)
+          keyTypes(j) match {
+            case ByteType => (s: Int) =>
+              if ((m.maskAt(s) & bit) != 0) row.setNullAt(j)
+              else row.setByte(j, m.longKeyAt(s, li).toByte)
+            case ShortType => (s: Int) =>
+              if ((m.maskAt(s) & bit) != 0) row.setNullAt(j)
+              else row.setShort(j, m.longKeyAt(s, li).toShort)
+            case IntegerType | DateType => (s: Int) =>
+              if ((m.maskAt(s) & bit) != 0) row.setNullAt(j)
+              else row.setInt(j, m.longKeyAt(s, li).toInt)
+            case _ => (s: Int) =>
+              if ((m.maskAt(s) & bit) != 0) row.setNullAt(j)
+              else row.setLong(j, m.longKeyAt(s, li))
+          }
+        }
+      }
+      (s: Int) => { var j = 0; while (j < n) { ws(j)(s); j += 1 } }
+    }
+  }
+
+  // ---- columnar key extraction --------------------------------------
+  // The keys the batch loop reads straight off the vectors, with no row
+  // projection: plain int/long/date/timestamp and string columns, plus
+  // calendar and fixed-width (hour/day) truncs of a micros column, read
+  // as long keys — the reference's perfect-hash aggregate reads those
+  // the same way (physical_perfecthash_aggregate.cpp).
+  sealed trait ColKeyPart extends Serializable { def ord: Int }
+  final case class LongKeyPart(ord: Int, intWidth: Boolean) extends ColKeyPart
+  final case class TruncKeyPart(ord: Int, unit: Long) extends ColKeyPart
+  final case class StringKeyPart(ord: Int) extends ColKeyPart
+  /** Calendar (non-fixed-width) trunc of a micros column via the codegen
+    * kernels; `asDate` additionally floors micros → epoch days (the
+    * `CAST(date_trunc(..) AS DATE)` histogram shape).
+    */
+  final case class CalendarKeyPart(ord: Int, kernel: String, asDate: Boolean)
+      extends ColKeyPart {
+    @transient private lazy val fn: Long => Long = kernel match {
+      case "truncWeek" => graft.functions.DateTruncKernel.truncWeek
+      case "truncMonth" => graft.functions.DateTruncKernel.truncMonth
+      case "truncQuarter" => graft.functions.DateTruncKernel.truncQuarter
+      case "truncYear" => graft.functions.DateTruncKernel.truncYear
+    }
+    def eval(us: Long): Long = {
+      val t = fn(us)
+      if (asDate) Math.floorDiv(t, 86400000000L) else t
+    }
+  }
+
+  /** Columnar-translatable group keys: direct int/long/date/timestamp or
+    * string attributes, or the FastUtcDateTrunc arithmetic shape
+    * (`micros_to_timestamp(micros - pmod(micros, unit))`) over a direct
+    * timestamp column. No keys (an ungrouped aggregate) is trivially
+    * translatable.
+    */
+  private[plans] def colKeyParts(groupExprs: Seq[Expression],
+      childOut: Seq[Attribute]): Option[Seq[ColKeyPart]] = {
+    def ordOf(a: Attribute): Int = childOut.indexWhere(_.exprId == a.exprId)
+    // the micros source of a calendar trunc: a timestamp column, or an
+    // NTZ column through the UTC reinterpret (both store micros longs in
+    // the column vector)
+    def calSrcAttr(src: Expression): Option[AttributeReference] = src match {
+      case a: AttributeReference
+          if a.dataType == TimestampType || a.dataType == TimestampNTZType => Some(a)
+      case graft.functions.UtcNtzReinterpret(a: AttributeReference)
+          if a.dataType == TimestampNTZType => Some(a)
+      case _ => None
+    }
+    val parts: Seq[Option[ColKeyPart]] = groupExprs.map { g =>
+      val e = g match { case a: Alias => a.child; case x => x }
+      e match {
+        case a: AttributeReference if ordOf(a) >= 0 => a.dataType match {
+          case IntegerType | DateType =>
+            Some(LongKeyPart(ordOf(a), intWidth = true))
+          case LongType | TimestampType | TimestampNTZType =>
+            Some(LongKeyPart(ordOf(a), intWidth = false))
+          case StringType => Some(StringKeyPart(ordOf(a)))
+          case _ => None
+        }
+        case graft.functions.UtcMicrosToDate(graft.functions.UtcCalendarTrunc(src, k)) =>
+          calSrcAttr(src).filter(a => ordOf(a) >= 0)
+            .map(a => CalendarKeyPart(ordOf(a), k, asDate = true))
+        case graft.functions.UtcCalendarTrunc(src, k) =>
+          calSrcAttr(src).filter(a => ordOf(a) >= 0)
+            .map(a => CalendarKeyPart(ordOf(a), k, asDate = false))
+        case MicrosToTimestamp(sub: Subtract) => (sub.left, sub.right) match {
+          case (UnixMicros(a: AttributeReference), p: Pmod) =>
+            (p.left, p.right) match {
+              case (UnixMicros(a2: AttributeReference), Literal(u: Long, LongType))
+                  if a.exprId == a2.exprId && ordOf(a) >= 0 && u > 0 =>
+                Some(TruncKeyPart(ordOf(a), u))
+              case _ => None
+            }
+          case _ => None
+        }
+        case _ => None
+      }
+    }
+    if (parts.forall(_.isDefined)) Some(parts.map(_.get)) else None
   }
 }
 
@@ -602,6 +815,11 @@ object PackedPartialAggExec {
   * Keys blob layout (LE): [n:int][per group: hash:long, nullmask:long,
   * longKeys:8×nLK, strLens:4×nSK][string bytes, group-major]. State blob:
   * n × (8·nL + 8·nD + nF), [[SlotKernel]]'s block encoding.
+  *
+  * Two sinks: the blobs go as rows through a bucket shuffle to
+  * [[PackedFinalAggExec]], or (`driverFinal`, one bucket) as task
+  * results to [[DriverGroupAggExec]]'s driver merge
+  * ([[executeBlobs]]; see [[PackedAgg.DriverFinal]]).
   *
   * `topN` (one long key only, set by [[graft.rules.PackedShuffleAgg]]
   * under `ORDER BY k LIMIT n`) prunes the map to its top-`limit` keys —
@@ -622,7 +840,8 @@ final case class PackedPartialAggExec(
     // DictSelection (columnar path only) — set by InsertCacheColumnarToRow
     selection: Seq[Expression] = Nil,
     tuning: PackedAgg.Tuning,
-    topN: Option[PackedAgg.KeyTopN] = None) extends UnaryExecNode {
+    topN: Option[PackedAgg.KeyTopN] = None,
+    driverFinal: Option[PackedAgg.DriverFinal] = None) extends UnaryExecNode {
   import PackedAgg._
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -632,17 +851,8 @@ final case class PackedPartialAggExec(
   override protected def withNewChildInternal(c: SparkPlan): PackedPartialAggExec =
     copy(child = c)
 
-  private val nKeys = keyExprs.length
-  private val kinds: Array[Int] = keyTypes.map(kindOf).toArray
-  // per-key index into the long-key block / string-key block
-  private val subIdx: Array[Int] = {
-    var li = 0; var si = 0
-    kinds.map { k => if (k == KindLong) { li += 1; li - 1 } else { si += 1; si - 1 } }
-  }
-  private val nLK = kinds.count(_ == KindLong)
-  private val nSK = kinds.count(_ == KindStr)
+  private val kl = KeyLayout(keyTypes)
   private val blockBytes = 8 * nL + 8 * nD + nF
-  private val recBytes = 16 + 8 * nLK + 4 * nSK
 
   /** Batch-direct input resolution: the (source attribute, null-guard
     * attributes) pair when the expression reads, per row, exactly as:
@@ -683,28 +893,20 @@ final case class PackedPartialAggExec(
     }
   }
 
-  /** All key exprs are direct columns and every agg input batch-resolves
-    * ([[resolveIn]]) against `scan`, with batch-readable types
-    * (int/long-width numerics, dates/timestamps, strings) — the batch
-    * loop can run.
+  /** Every key reads off the vectors ([[PackedAgg.colKeyParts]]) and
+    * every agg input batch-resolves ([[resolveIn]]) against `scan` — the
+    * batch loop can run. In driver mode an input that does not resolve
+    * is evaluated through the value projection over the batch's row view.
     */
-  def columnarEligible(scan: SparkPlan): Boolean = {
-    def direct(e: Expression): Boolean = e match {
-      case a: Attribute => scan.output.exists(_.exprId == a.exprId)
-      case _ => false
-    }
-    val typesOk = keyTypes.forall {
-      case IntegerType | DateType | LongType | TimestampType | TimestampNTZType |
-           StringType => true
-      case _ => false
-    }
-    typesOk && keyExprs.forall(direct) &&
-      aggInputs.forall(e => resolveIn(e, scan.output).isDefined)
-  }
+  def columnarEligible(scan: SparkPlan): Boolean =
+    colKeyParts(keyExprs, scan.output).isDefined &&
+      aggInputs.forall(e => resolveIn(e, scan.output).isDefined ||
+        driverFinal.isDefined && e.references.subsetOf(scan.outputSet))
 
-  /** Emit the map as packed bucket rows (one row per non-empty bucket). */
-  private def emitRows(k: SlotKernel, m: MultiKeyMap): Iterator[InternalRow] = {
+  /** Emit the map as packed blobs (one per non-empty bucket). */
+  private def emitBlobs(k: SlotKernel, m: MultiKeyMap): Iterator[Blob] = {
     val nBuckets = buckets
+    val (nLK, nSK, recBytes) = (kl.nLK, kl.nSK, kl.recBytes)
     val counts = new Array[Int](nBuckets)
     val strBytes = new Array[Long](nBuckets)
     m.foreachSlot { s =>
@@ -715,14 +917,17 @@ final case class PackedPartialAggExec(
     }
     val keyArrs = new Array[Array[Byte]](nBuckets)
     val stateArrs = new Array[Array[Byte]](nBuckets)
+    val objArrs = new Array[Array[DriverAgg.ObjState]](nBuckets)
     val recPos = new Array[Int](nBuckets)   // next record write offset
     val bytePos = new Array[Int](nBuckets)  // next string-byte write offset
     val statePos = new Array[Int](nBuckets)
+    val groupPos = new Array[Int](nBuckets)
     var b = 0
     while (b < nBuckets) {
       if (counts(b) > 0) {
         keyArrs(b) = new Array[Byte](4 + counts(b) * recBytes + strBytes(b).toInt)
         stateArrs(b) = new Array[Byte](counts(b) * blockBytes)
+        if (m.objs != null) objArrs(b) = new Array[DriverAgg.ObjState](counts(b))
         // record count header
         Platform.putInt(keyArrs(b), Platform.BYTE_ARRAY_OFFSET, counts(b))
         recPos(b) = 4
@@ -751,66 +956,107 @@ final case class PackedPartialAggExec(
       k.writeBlock(m.longs, m.doubles, m.flags, s, stateArrs(bk),
         Platform.BYTE_ARRAY_OFFSET + statePos(bk))
       statePos(bk) += blockBytes
+      if (m.objs != null) objArrs(bk)(groupPos(bk)) = m.objs(s)
+      groupPos(bk) += 1
     }
-    val proj = UnsafeProjection.create(Array[DataType](IntegerType, BinaryType, BinaryType))
-    val row = new GenericInternalRow(3)
-    (0 until nBuckets).iterator.filter(b => keyArrs(b) != null).map { b =>
-      row.update(0, b)
-      row.update(1, keyArrs(b))
-      row.update(2, stateArrs(b))
-      proj(row).copy()
-    }
+    (0 until nBuckets).iterator.filter(b => keyArrs(b) != null)
+      .map(b => Blob(b, keyArrs(b), stateArrs(b), objArrs(b)))
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
+  /** The partial's blobs, for the driver sink ([[DriverGroupAggExec]]):
+    * the same job as [[execute]], without the row encoding. */
+  def executeBlobs(): RDD[Blob] = executeQuery(blobs())
+
+  override protected def doExecute(): RDD[InternalRow] =
+    blobs().mapPartitions { it =>
+      val proj = UnsafeProjection.create(Array[DataType](IntegerType, BinaryType, BinaryType))
+      val row = new GenericInternalRow(3)
+      it.map { b =>
+        row.update(0, b.bucket); row.update(1, b.keys); row.update(2, b.state)
+        proj(row).copy()
+      }
+    }
+
+  /** The partial's job: per partition, the map's blobs (see the class
+    * doc), flushed as it goes. */
+  private def blobs(): RDD[Blob] = {
     val numOut = longMetric("numOutputRows")
-    val (kTypes, iExprs) = (keyTypes, aggInputs)
+    val iExprs = aggInputs
     val (aL, aD, aF) = (nL, nD, nF)
     val childOut = child.output
     def kernel(inTypes: Seq[DataType]) =
       new SlotKernel(slots, inTypes, Nil, nL, nD, nF, ansi)
-    val theKinds = kinds
-    val theSub = subIdx
-    val (kLK, kSK, kN) = (nLK, nSK, nKeys)
-    val (recB, blockB, nBuckets) = (recBytes, blockBytes, buckets)
-    val oneLong = kN == 1 && kLK == 1
+    val theKinds = kl.kinds
+    val theSub = kl.subIdx
+    val (kLK, kSK, kN) = (kl.nLK, kl.nSK, kl.n)
+    val (recB, blockB, nBuckets) = (kl.recBytes, blockBytes, buckets)
+    val oneLong = kl.oneLong
     // never pass through with one long key: its in-place probe costs
     // about what a pass-through append does, and a partition whose
     // first rows look unique still reduces later (GROUP BY l_partkey
     // over TPC-H SF1: 1.98× the radix partial with the switch, 1.23×
-    // without)
-    val ptCheckRows = if (oneLong) -1L else tuning.checkRows.toLong
+    // without); nor in driver mode, whose merge takes every fragment
+    val ptCheckRows =
+      if (oneLong || driverFinal.isDefined) -1L else tuning.checkRows.toLong
     val ptRatio = PackedAgg.PassThroughGroupRatio
     val flushCap = tuning.flushGroups
+    // the maxGroups valve (driver mode): one map past it aborts the job
+    val groupCap = driverFinal.fold(Int.MaxValue)(_.maxGroups)
+    def checkCap(m: MultiKeyMap): Unit =
+      if (m.size > groupCap) throw new DriverAgg.GroupCardinalityExceeded(
+        s"driver agg: group count exceeded maxGroups=$groupCap in one partition — " +
+          "key is not low-cardinality; falling back to the shuffled aggregate")
     val tn = topN
     if (columnarChild) {
-      val kOrds = keyExprs.map { case a: Attribute =>
-        childOut.indexWhere(_.exprId == a.exprId) }.toArray
-      val resolvedIn = iExprs.map(e => resolveIn(e, childOut).getOrElse(
-        throw new IllegalStateException(s"packed agg: unresolvable input $e")))
-      val ords = resolvedIn.map { case (a, _) =>
-        childOut.indexWhere(_.exprId == a.exprId) }.toArray
-      val guardOrds: Array[Array[Int]] = resolvedIn.map { case (_, gs) =>
+      val keyParts = colKeyParts(keyExprs, childOut).getOrElse(
+        throw new IllegalStateException(s"packed agg: key not readable off the batch: $keyExprs"))
+      val kOrds = keyParts.map(_.ord).toArray
+      // long-key read per key: 0 int, 1 long, 2 fixed-width trunc, 3 calendar
+      val kCode: Array[Int] = keyParts.map {
+        case LongKeyPart(_, true) => 0
+        case _: TruncKeyPart => 2
+        case _: CalendarKeyPart => 3
+        case _ => 1
+      }.toArray
+      val kUnit: Array[Long] = keyParts.map {
+        case TruncKeyPart(_, u) => u
+        case _ => 0L
+      }.toArray
+      val kCal: Array[CalendarKeyPart] = keyParts.map {
+        case c: CalendarKeyPart => c
+        case _ => null
+      }.toArray
+      val resolvedIn = iExprs.map(e => resolveIn(e, childOut))
+      // driver mode only (columnarEligible): some input is no column
+      // read, so every input goes through the value projection over the
+      // batch's row view
+      val rowIn = resolvedIn.exists(_.isEmpty)
+      val colIn = if (rowIn) Nil else resolvedIn.flatten
+      val ords = colIn.map { case (a, _) => childOut.indexWhere(_.exprId == a.exprId) }.toArray
+      val guardOrds: Array[Array[Int]] = colIn.map { case (_, gs) =>
         gs.map(g => childOut.indexWhere(_.exprId == g.exprId)).toArray }.toArray
       // batch reads use the SOURCE column's type (a cast-to-double input
       // reads its int/long column and widens in the kernel's double read)
-      val k = kernel(resolvedIn.map(_._1.dataType))
-      val kLongRead: Array[Boolean] = kTypes.map {
-        case LongType | TimestampType | TimestampNTZType => true
-        case _ => false
-      }.toArray
+      val k =
+        if (rowIn) kernel(iExprs.map(_.dataType))
+        else kernel(colIn.map(_._1.dataType))
       val selPreds = if (selection.isEmpty) null else selection.toArray
       val dictKeys = tuning.dictKeys
       val pairKeys = tuning.pairKeys && kN == 2 && kSK >= 1 && dictKeys
       child.executeColumnar().mapPartitions { batches =>
-        val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
+        val m = new MultiKeyMap(kLK, kSK, aL, aD, aF, hasObjs = k.hasObj)
         val pr = tn.map(new KeyPrune(_)).orNull
+        val valProj = if (rowIn) UnsafeProjection.create(iExprs, childOut) else null
         // pair-key fast path state (see PackedAgg.Tuning):
         // per-task interns per STRING key position, slot memo, and
         // per-batch local-id → global-id translation arrays
         val interns = if (pairKeys) Array.fill(math.max(kSK, 1))(new StrIntern) else null
         val pairs = if (pairKeys) new PairSlotCache else null
         val gmaps = new Array[Array[Int]](kN)
+        // one string key served dictionary-encoded: batch entry id → slot
+        // memo, valid for one map generation (see processBatch)
+        val oneStr = kN == 1 && kSK == 1 && dictKeys
+        var entrySlots = new Array[Int](0)
         val internCap = PackedAgg.PairInternCap
         var pairDead = false // intern budget blown — low cross-batch reuse
         val vecs = new Array[ColumnVector](ords.length)
@@ -830,26 +1076,42 @@ final case class PackedPartialAggExec(
         // drained to the shuffle writer before the next batch is read,
         // so task heap stays at the documented flushGroups/PoolFlushBytes
         // bound instead of accumulating every flush for the partition
-        val flushed = ArrayBuffer.empty[InternalRow]
+        val flushed = ArrayBuffer.empty[Blob]
         // adaptive partial skip (see PackedAgg.Tuning)
         var rowsSeen = 0L
         var passThrough = false
         var builders: Array[BucketBuilder] = null
         val scratch = k.newAcc() // singleton-block staging state
-        lazy val passProj = UnsafeProjection.create(Array[DataType](
-          IntegerType, BinaryType, BinaryType))
-        val passRow = new GenericInternalRow(3)
-        def emitBuilder(bk: Int): InternalRow = {
+        def emitBuilder(bk: Int): Blob = {
           val (kb, sb) = builders(bk).emitBlobs()
-          passRow.update(0, bk); passRow.update(1, kb); passRow.update(2, sb)
-          passProj(passRow).copy()
+          Blob(bk, kb, sb, null)
         }
-        def emitMap(): Iterator[InternalRow] = {
+        def emitMap(): Iterator[Blob] = {
           if (pr != null) pr.prune(m)
-          val out = emitRows(k, m); m.reset(); out
+          val out = emitBlobs(k, m); m.reset(); out
         }
-        // after a map update: the adaptive skip's check point, the key prune
+        var batch: org.apache.spark.sql.vectorized.ColumnarBatch = null
+        // fold row r into slot s: inputs off the vectors, or through the
+        // value projection over the row view
+        def upd(r: Int, s: Int): Unit =
+          if (valProj == null) {
+            k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+            if (k.hasObj) k.updateColObj(vecs, r, m.objAt(s, k))
+          } else {
+            val v = valProj(batch.getRow(r))
+            k.updateRow(v, m.longs, m.doubles, m.flags, s)
+            if (k.hasObj) k.updateRowObj(v, m.objAt(s, k))
+          }
+        def longKey(j: Int, v: ColumnVector, r: Int): Long = (kCode(j): @annotation.switch) match {
+          case 0 => v.getInt(r).toLong
+          case 1 => v.getLong(r)
+          case 2 => val us = v.getLong(r); us - Math.floorMod(us, kUnit(j))
+          case _ => kCal(j).eval(v.getLong(r))
+        }
+        // after a map update: the valve, the adaptive skip's check point,
+        // the key prune
         def updated(): Unit = {
+          checkCap(m)
           rowsSeen += 1
           if (rowsSeen == ptCheckRows && m.size >= rowsSeen * ptRatio) {
             flushed ++= emitMap()
@@ -888,20 +1150,19 @@ final case class PackedPartialAggExec(
         // one long key: probe in place, the NULL group through the staged
         // probe. Its own method, so the JIT compiles the loop on its own
         def oneLongRows(kv: ColumnVector, n: Int): Unit = {
-          val isLong = kLongRead(0)
           var r = 0
           while (r < n) {
             if (sel == null || sel.passes(r)) {
               if (kv.isNullAt(r)) {
                 m.stageLongs(0) = 0L; m.stageMask = 1L
                 val s = m.slotOf(mixNull(hashSeed))
-                k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+                upd(r, s)
                 updated()
               } else {
-                val key = if (isLong) kv.getLong(r) else kv.getInt(r).toLong
+                val key = longKey(0, kv, r)
                 if (pr == null || pr.keeps(key)) {
                   val s = m.slotOfLong(mix(hashSeed, key), key)
-                  k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+                  upd(r, s)
                   updated()
                 }
               }
@@ -909,7 +1170,7 @@ final case class PackedPartialAggExec(
             r += 1
           }
         }
-        def processBatch(batch: org.apache.spark.sql.vectorized.ColumnarBatch): Unit = {
+        def processBatch(): Unit = {
           var i = 0
           while (i < ords.length) {
             val base = batch.column(ords(i))
@@ -956,7 +1217,7 @@ final case class PackedPartialAggExec(
                 if (theKinds(j) == KindStr) m.stageStrs(theSub(j)) = null
                 else m.stageLongs(theSub(j)) = 0L
               } else if (theKinds(j) == KindLong) {
-                val k = if (kLongRead(j)) v.getLong(r) else v.getInt(r).toLong
+                val k = longKey(j, v, r)
                 m.stageLongs(theSub(j)) = k
                 h = mix(h, k)
               } else if (dictIds(j) != null) {
@@ -973,8 +1234,7 @@ final case class PackedPartialAggExec(
             m.stageMask = msk
             if (passThrough) appendPass(h, msk, r)
             else {
-              val s = m.slotOf(h)
-              k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+              upd(r, m.slotOf(h))
               updated()
             }
           }
@@ -1004,8 +1264,48 @@ final case class PackedPartialAggExec(
               j += 1
             }
           }
-          if (oneLong) oneLongRows(kvecs(0), n)
-          else if (pairOk) {
+          if (kN == 0 && sel == null && valProj == null && !k.hasObj) {
+            // ungrouped: one slot, updated column-major (one sequential
+            // pass per aggregate over its vector)
+            m.stageMask = 0L
+            k.updateColumnMajor(vecs, n, m.longs, m.doubles, m.flags, m.slotOf(hashSeed))
+            checkCap(m)
+          } else if (oneLong) oneLongRows(kvecs(0), n)
+          else if (oneStr && dictIds(0) != null) {
+            // one dictionary-served string key: each batch entry probes
+            // the map once, later rows of the entry read its memoized slot
+            // (slots move when the map grows, flushes or prunes — a new
+            // generation clears the memo)
+            val ids = dictIds(0); val es = dictStrs(0); val eh = dictHash(0)
+            if (entrySlots.length < es.length) entrySlots = new Array[Int](es.length)
+            java.util.Arrays.fill(entrySlots, 0, es.length, -1)
+            var gen = m.generation
+            val v0 = kvecs(0)
+            var r = 0
+            while (r < n) {
+              if (sel == null || sel.passes(r)) {
+                if (passThrough || v0.isNullAt(r)) genericRow(r)
+                else {
+                  if (m.generation != gen) {
+                    java.util.Arrays.fill(entrySlots, 0, es.length, -1); gen = m.generation
+                  }
+                  val id = ids(r)
+                  var s = entrySlots(id)
+                  if (s < 0) {
+                    m.stageStrs(0) = es(id); m.stageMask = 0L
+                    s = m.slotOf(mix(hashSeed, eh(id)))
+                    if (m.generation != gen) {
+                      java.util.Arrays.fill(entrySlots, 0, es.length, -1); gen = m.generation
+                    }
+                    entrySlots(id) = s
+                  }
+                  upd(r, s)
+                  updated()
+                }
+              }
+              r += 1
+            }
+          } else if (pairOk) {
             pairs.sync(m.generation)
             val v0 = kvecs(0); val v1 = kvecs(1)
             var r = 0
@@ -1018,9 +1318,9 @@ final case class PackedPartialAggExec(
                 genericRow(r); pairs.sync(m.generation); r += 1
               } else {
                 val a = if (theKinds(0) == KindStr) gmaps(0)(dictIds(0)(r)).toLong
-                        else if (kLongRead(0)) v0.getLong(r) else v0.getInt(r).toLong
+                        else longKey(0, v0, r)
                 val b = if (theKinds(1) == KindStr) gmaps(1)(dictIds(1)(r)).toLong
-                        else if (kLongRead(1)) v1.getLong(r) else v1.getInt(r).toLong
+                        else longKey(1, v1, r)
                 var s = pairs.find(a, b)
                 if (s < 0) {
                   // first sighting this generation: full staged probe,
@@ -1041,7 +1341,7 @@ final case class PackedPartialAggExec(
                   pairs.sync(m.generation) // slotOf may have grown the map
                   pairs.put(a, b, s)
                 }
-                k.updateCol(vecs, r, m.longs, m.doubles, m.flags, s)
+                upd(r, s)
                 updated()
                 r += 1
               }
@@ -1059,14 +1359,15 @@ final case class PackedPartialAggExec(
         }
         // lazy drain: interleave batch consumption with emission so the
         // shuffle writer absorbs each flush before the next batch loads
-        new Iterator[InternalRow] {
-          private var pending: Iterator[InternalRow] = Iterator.empty
+        new Iterator[Blob] {
+          private var pending: Iterator[Blob] = Iterator.empty
           private var finished = false
           private def advance(): Unit = {
             while (!pending.hasNext && !finished) {
               if (batches.hasNext) {
                 flushed.clear()
-                processBatch(batches.next())
+                batch = batches.next()
+                processBatch()
                 // snapshot: the buffer is cleared next round while this
                 // iterator object may still be probed by the writer
                 if (flushed.nonEmpty) pending = flushed.toArray.iterator
@@ -1081,7 +1382,7 @@ final case class PackedPartialAggExec(
             }
           }
           override def hasNext: Boolean = { advance(); pending.hasNext }
-          override def next(): InternalRow = {
+          override def next(): Blob = {
             advance(); numOut.add(1); pending.next()
           }
         }
@@ -1091,9 +1392,9 @@ final case class PackedPartialAggExec(
         val keyProj = UnsafeProjection.create(keyExprs, childOut)
         val valProj = UnsafeProjection.create(iExprs, childOut)
         val k = kernel(iExprs.map(_.dataType))
-        val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
+        val m = new MultiKeyMap(kLK, kSK, aL, aD, aF, hasObjs = k.hasObj)
         val pr = tn.map(new KeyPrune(_)).orNull
-        val readLong: Array[InternalRow => Long] = kTypes.zipWithIndex.map {
+        val readLong: Array[InternalRow => Long] = keyTypes.zipWithIndex.map {
           case (ByteType, i) => (r: InternalRow) => r.getByte(i).toLong
           case (ShortType, i) => (r: InternalRow) => r.getShort(i).toLong
           case (IntegerType | DateType, i) => (r: InternalRow) => r.getInt(i).toLong
@@ -1101,27 +1402,28 @@ final case class PackedPartialAggExec(
         }.toArray
         // emissions since the last drain — bounded by one flush (see the
         // columnar branch note); drained lazily between input rows
-        val flushed = ArrayBuffer.empty[InternalRow]
+        val flushed = ArrayBuffer.empty[Blob]
         // adaptive partial skip — row-path twin of the columnar branch
         var rowsSeen = 0L
         var passThrough = false
         var builders: Array[BucketBuilder] = null
         val scratch = k.newAcc() // singleton-block staging state
-        lazy val passProj = UnsafeProjection.create(Array[DataType](
-          IntegerType, BinaryType, BinaryType))
-        val passRow = new GenericInternalRow(3)
-        def emitBuilder(bk: Int): InternalRow = {
+        def emitBuilder(bk: Int): Blob = {
           val (kb, sb) = builders(bk).emitBlobs()
-          passRow.update(0, bk); passRow.update(1, kb); passRow.update(2, sb)
-          passProj(passRow).copy()
+          Blob(bk, kb, sb, null)
         }
-        def emitMap(): Iterator[InternalRow] = {
+        def emitMap(): Iterator[Blob] = {
           if (pr != null) pr.prune(m)
-          val out = emitRows(k, m); m.reset(); out
+          val out = emitBlobs(k, m); m.reset(); out
         }
-        // after a map update: the adaptive skip's check point, the key
-        // prune, the flush cap
+        def upd(v: InternalRow, s: Int): Unit = {
+          k.updateRow(v, m.longs, m.doubles, m.flags, s)
+          if (k.hasObj) k.updateRowObj(v, m.objAt(s, k))
+        }
+        // after a map update: the valve, the adaptive skip's check point,
+        // the key prune, the flush cap
         def updated(): Unit = {
+          checkCap(m)
           rowsSeen += 1
           if (rowsSeen == ptCheckRows && m.size >= rowsSeen * ptRatio) {
             flushed ++= emitMap()
@@ -1165,8 +1467,7 @@ final case class PackedPartialAggExec(
             // one long key: probe in place (see the columnar path)
             val key = readLong(0)(kr)
             if (pr == null || pr.keeps(key)) {
-              val s = m.slotOfLong(mix(hashSeed, key), key)
-              k.updateRow(v, m.longs, m.doubles, m.flags, s)
+              upd(v, m.slotOfLong(mix(hashSeed, key), key))
               updated()
             }
             return
@@ -1194,13 +1495,12 @@ final case class PackedPartialAggExec(
           m.stageMask = msk
           if (passThrough) appendPass(h, msk, v)
           else {
-            val s = m.slotOf(h)
-            k.updateRow(v, m.longs, m.doubles, m.flags, s)
+            upd(v, m.slotOf(h))
             updated()
           }
         }
-        new Iterator[InternalRow] {
-          private var pending: Iterator[InternalRow] = Iterator.empty
+        new Iterator[Blob] {
+          private var pending: Iterator[Blob] = Iterator.empty
           private var finished = false
           private def advance(): Unit = {
             while (!pending.hasNext && !finished) {
@@ -1223,7 +1523,7 @@ final case class PackedPartialAggExec(
             }
           }
           override def hasNext: Boolean = { advance(); pending.hasNext }
-          override def next(): InternalRow = {
+          override def next(): Blob = {
             advance(); numOut.add(1); pending.next()
           }
         }
@@ -1278,106 +1578,31 @@ final case class PackedFinalAggExec(
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(child.output.head)) :: Nil
 
-  private val nKeys = keyAttrs.length
-  private val kinds: Array[Int] = keyAttrs.map(a => kindOf(a.dataType)).toArray
-  private val subIdx: Array[Int] = {
-    var li = 0; var si = 0
-    kinds.map { k => if (k == KindLong) { li += 1; li - 1 } else { si += 1; si - 1 } }
-  }
-  private val nLK = kinds.count(_ == KindLong)
-  private val nSK = kinds.count(_ == KindStr)
-  private val blockBytes = 8 * nL + 8 * nD + nF
-  private val recBytes = 16 + 8 * nLK + 4 * nSK
-
   override protected def doExecute(): RDD[InternalRow] = {
     val numOut = longMetric("numOutputRows")
     val k = new SlotKernel(slots, Nil, aggTypes, nL, nD, nF, ansi)
     val (aL, aD, aF) = (nL, nD, nF)
-    val keyDts = keyAttrs.map(_.dataType).toArray
+    val kl = KeyLayout(keyAttrs.map(_.dataType))
     val evalSchema = keyAttrs ++ aggAttrs
     val exprs = resultExprs
-    val theKinds = kinds
-    val theSub = subIdx
-    val (kLK, kSK, kN) = (nLK, nSK, nKeys)
-    val (rec, block) = (recBytes, blockBytes)
     val buffered = bufferMode
     val theTopK = topK
     val theOutput = output
-    val oneLong = kN == 1 && kLK == 1
     child.execute().mapPartitions { rows =>
-      val m = new MultiKeyMap(kLK, kSK, aL, aD, aF)
-      rows.foreach { r =>
-        val keys = r.getBinary(1)
-        val state = r.getBinary(2)
-        val n = Platform.getInt(keys, Platform.BYTE_ARRAY_OFFSET)
-        var cursor = 4 + n * rec
-        var g = 0
-        while (g < n) {
-          var p = Platform.BYTE_ARRAY_OFFSET + 4 + g * rec
-          val h = Platform.getLong(keys, p); p += 8
-          val msk = Platform.getLong(keys, p); p += 8
-          var j = 0
-          while (j < kLK) { m.stageLongs(j) = Platform.getLong(keys, p); p += 8; j += 1 }
-          j = 0
-          while (j < kSK) {
-            val len = Platform.getInt(keys, p); p += 4
-            // a zero-length slice is "" — the mask decides null below
-            m.stageStrs(j) = UTF8String.fromBytes(keys, cursor, len)
-            cursor += len
-            j += 1
-          }
-          // null components: clear the staged string (mask carries null-ness)
-          j = 0
-          while (j < kN) {
-            if ((msk & (1L << j)) != 0 && theKinds(j) == KindStr)
-              m.stageStrs(theSub(j)) = null
-            j += 1
-          }
-          m.stageMask = msk
-          val s = if (oneLong && msk == 0L) m.slotOfLong(h, m.stageLongs(0)) else m.slotOf(h)
-          k.mergeBlob(m.longs, m.doubles, m.flags, s, state,
-            Platform.BYTE_ARRAY_OFFSET + g.toLong * block)
-          g += 1
-        }
-      }
+      val m = new MultiKeyMap(kl.nLK, kl.nSK, aL, aD, aF)
+      rows.foreach(r => kl.mergeBlob(m, k, r.getBinary(1), r.getBinary(2), null))
       val proj = UnsafeProjection.create(exprs, evalSchema)
       // typed drain (SlotKernel.writeFinal): SpecificInternalRow +
       // primitive setters — a boxed GenericInternalRow path costs a box
       // per key/aggregate per group, tens of millions of objects on the
       // groups≈rows shapes this operator exists for
       val evalRow = new SpecificInternalRow(evalSchema.map(_.dataType))
-      // compiled per-key writers (slot → evalRow field j)
-      val keyWriters: Array[Int => Unit] = Array.tabulate(kN) { j =>
-        if (theKinds(j) == KindStr) {
-          val si = theSub(j)
-          (s: Int) =>
-            if ((m.maskAt(s) & (1L << j)) != 0) evalRow.setNullAt(j)
-            else evalRow.update(j,
-              UTF8String.fromBytes(m.poolArray, m.strOffAt(s, si), m.strLenAt(s, si)))
-        } else {
-          val li = theSub(j)
-          keyDts(j) match {
-            case ByteType => (s: Int) =>
-              if ((m.maskAt(s) & (1L << j)) != 0) evalRow.setNullAt(j)
-              else evalRow.setByte(j, m.longKeyAt(s, li).toByte)
-            case ShortType => (s: Int) =>
-              if ((m.maskAt(s) & (1L << j)) != 0) evalRow.setNullAt(j)
-              else evalRow.setShort(j, m.longKeyAt(s, li).toShort)
-            case IntegerType | DateType => (s: Int) =>
-              if ((m.maskAt(s) & (1L << j)) != 0) evalRow.setNullAt(j)
-              else evalRow.setInt(j, m.longKeyAt(s, li).toInt)
-            case _ => (s: Int) =>
-              if ((m.maskAt(s) & (1L << j)) != 0) evalRow.setNullAt(j)
-              else evalRow.setLong(j, m.longKeyAt(s, li))
-          }
-        }
-      }
+      val writeKeys = kl.keyWriter(m, evalRow)
       // STREAM emission — the projection's output row is reused, as
       // Spark's own aggregate iterators do
       val emitted = m.slotIterator.map { s =>
-        var j = 0
-        while (j < kN) { keyWriters(j)(s); j += 1 }
-        k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, kN, buffered)
+        writeKeys(s)
+        k.writeOutputs(m.longs, m.doubles, m.flags, s, evalRow, kl.n, buffered)
         numOut.add(1)
         proj(evalRow)
       }

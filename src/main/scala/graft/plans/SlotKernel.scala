@@ -6,32 +6,34 @@ import org.apache.spark.sql.vectorized.ColumnVector
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import DriverAgg.{Acc, GroupCardinalityExceeded}
+import DriverAgg.{Acc, GroupCardinalityExceeded, ObjState}
 
 /** The one implementation of every aggregate slot kind — row update,
   * column update, state-to-state merge, blob decode+merge, singleton
-  * block write, typed final write — shared by the driver-finalized
-  * ([[DriverGroupAggExec]]), packed ([[PackedAgg]]) and sorted-run
-  * ([[SortedRunAggExec]]) aggregates. The reference runs
+  * block write, typed final write — shared by the packed partial (both
+  * of its sinks: the shuffle to [[PackedFinalAggExec]] and the driver
+  * merge of [[DriverGroupAggExec]]) and the sorted-run
+  * ([[SortedRunAggExec]]) aggregate. The reference runs
   * every aggregate through one table the same way
   * (radix_partitioned_hashtable.cpp); MorphStore (VLDB'20) argues for one
   * processing model rather than one operator variant per format.
   *
   * State shape: flat `longs`/`doubles`/`flags` arrays and a GROUP index
   * `g` — group g's slots live at `g·nL`, `g·nD`, `g·nF`. That is the
-  * layout of [[SortedRunAggExec.LongKeyMap]], [[PackedAgg.MultiKeyMap]], the
-  * driver aggregate's dense bucket arrays and an [[DriverAgg.Acc]]
-  * (g = 0), so every route calls the same code. Slots compile once to an
-  * opcode program; the per-row loops are an int switch over primitive
-  * arrays — no per-row allocation, no ADT or dataType dispatch.
+  * layout of [[SortedRunAggExec.LongKeyMap]], [[PackedAgg.MultiKeyMap]] and
+  * an [[DriverAgg.Acc]] (g = 0), so every route calls the same code.
+  * Slots compile once to an opcode program; the per-row loops are an int
+  * switch over primitive arrays — no per-row allocation, no ADT or
+  * dataType dispatch.
   *
   * Blob block layout (one group, native byte order):
   * longs[nL] ++ doubles[nD] ++ flags[nF].
   *
   * Object-state slots ([[DriverAgg.CountDistinctSlot]],
   * [[DriverAgg.MinMaxSSlot]]) have no fixed-width encoding: they update
-  * and merge only through an [[DriverAgg.Acc]] (`*Obj` / `mergeAcc`), so
-  * only the driver-finalized route accepts them ([[DriverAgg.Layout.flat]]).
+  * and merge only through a per-group [[DriverAgg.ObjState]] (`*Obj`),
+  * the side array the packed partial carries next to its state blob in
+  * driver mode only ([[DriverAgg.Layout.flat]]).
   *
   * Moment slots replicate Spark's CentralMomentAgg / Covariance
   * recurrences operation for operation, so a single-partition result is
@@ -47,8 +49,7 @@ final class SlotKernel(
     inTypes: Seq[DataType],
     aggTypes: Seq[DataType],
     val nL: Int, val nD: Int, val nF: Int,
-    ansi: Boolean,
-    nS: Int = 0, nO: Int = 0) extends Serializable {
+    ansi: Boolean) extends Serializable {
   import SlotKernel._
 
   private val n = slots.length
@@ -93,14 +94,18 @@ final class SlotKernel(
 
   /** True when some slot keeps object state (driver-only). */
   val hasObj: Boolean = op.exists(_ >= Distinct)
+  private val nS = op.count(_ == Distinct)
+  private val nO = op.count(_ > Distinct)
 
   /** Bytes of one group's state block. */
   val blockBytes: Int = 8 * nL + 8 * nD + nF
 
   def newAcc(): Acc = new Acc(new Array[Long](nL), new Array[Double](nD),
-    new Array[Boolean](nF),
-    if (nS == 0) null else Array.fill(nS)(new java.util.HashSet[AnyRef]()),
-    if (nO == 0) null else new Array[AnyRef](nO))
+    new Array[Boolean](nF))
+
+  /** Fresh object state of one group (only when [[hasObj]]). */
+  def newObj(): ObjState = new ObjState(
+    Array.fill(nS)(new java.util.HashSet[AnyRef]()), new Array[AnyRef](nO))
 
   // ---- primitive reads -------------------------------------------------
   private def rowL(v: InternalRow, i: Int): Long = (inTc(i): @annotation.switch) match {
@@ -323,7 +328,7 @@ final class SlotKernel(
   }
 
   /** Object-slot half of [[updateRow]] (driver route only). */
-  def updateRowObj(v: InternalRow, acc: Acc): Unit = {
+  def updateRowObj(v: InternalRow, acc: ObjState): Unit = {
     var j = 0
     while (j < n) {
       val in = in1(j)
@@ -336,7 +341,7 @@ final class SlotKernel(
   }
 
   /** Object-slot half of [[updateCol]] (driver route only). */
-  def updateColObj(vecs: Array[ColumnVector], r: Int, acc: Acc): Unit = {
+  def updateColObj(vecs: Array[ColumnVector], r: Int, acc: ObjState): Unit = {
     var j = 0
     while (j < n) {
       val in = in1(j)
@@ -371,46 +376,20 @@ final class SlotKernel(
     * table, so a false ndv bound aborts into the fallback plan instead of
     * exhausting the driver.
     */
-  private def addDistinct(acc: Acc, j: Int, x: AnyRef): Unit = {
+  private def addDistinct(acc: ObjState, j: Int, x: AnyRef): Unit = {
     val s = acc.sets(a1(j))
     if (s.add(x) && s.size() > DriverAgg.maxDistinctCap) throw new GroupCardinalityExceeded(
       s"driver agg: distinct set exceeded ${DriverAgg.maxDistinctCap} in one group — " +
         "child is not low-cardinality; falling back")
   }
 
-  private def minMaxS(acc: Acc, j: Int, x: UTF8String): Unit = {
+  private def minMaxS(acc: ObjState, j: Int, x: UTF8String): Unit = {
     val cur = acc.objs(a1(j)).asInstanceOf[UTF8String]
     if (cur == null || (if (op(j) == MinS) x.compareTo(cur) < 0 else x.compareTo(cur) > 0))
       acc.objs(a1(j)) = x.clone()
   }
 
   // ---- merges --------------------------------------------------------------
-  /** Merge group g2 of (L2, D2, F2) into group g of (L, D, F). */
-  def mergeState(L: Array[Long], D: Array[Double], F: Array[Boolean], g: Int,
-      L2: Array[Long], D2: Array[Double], F2: Array[Boolean], g2: Int): Unit = {
-    val lb = g * nL; val db = g * nD; val fb = g * nF
-    val lb2 = g2 * nL; val db2 = g2 * nD; val fb2 = g2 * nF
-    var j = 0
-    while (j < n) {
-      val x = a1(j); val y = a2(j)
-      (op(j): @annotation.switch) match {
-        case Count0 | Count1 | CountN => L(lb + x) += L2(lb2 + x)
-        case SumL => if (F2(fb2 + y)) sumL(L, lb + x, F, fb + y, L2(lb2 + x))
-        case SumD => if (F2(fb2 + y)) sumD(D, db + x, F, fb + y, D2(db2 + x))
-        case Avg => D(db + x) += D2(db2 + x); L(lb + y) += L2(lb2 + y)
-        case MinL | MaxL =>
-          if (F2(fb2 + y)) minMaxL(L, lb + x, F, fb + y, L2(lb2 + x), op(j) == MinL)
-        case MinD | MaxD =>
-          if (F2(fb2 + y)) minMaxD(D, db + x, F, fb + y, D2(db2 + x), op(j) == MinD)
-        case Var => varMerge(L, lb + y, D, db + x, L2(lb2 + y), D2(db2 + x), D2(db2 + x + 1))
-        case Covar => covarMerge(L, lb + y, D, db + x, L2(lb2 + y),
-          D2(db2 + x), D2(db2 + x + 1), D2(db2 + x + 2))
-        case _ => // object slot: mergeAcc
-      }
-      j += 1
-    }
-  }
-
   /** Merge the state block at Platform offset `off` of `blob` into group g. */
   def mergeBlob(L: Array[Long], D: Array[Double], F: Array[Boolean], g: Int,
       blob: Array[Byte], off: Long): Unit = {
@@ -432,30 +411,27 @@ final class SlotKernel(
         case MinD | MaxD => if (bf(y)) minMaxD(D, db + x, F, fb + y, bd(x), op(j) == MinD)
         case Var => varMerge(L, lb + y, D, db + x, bl(y), bd(x), bd(x + 1))
         case Covar => covarMerge(L, lb + y, D, db + x, bl(y), bd(x), bd(x + 1), bd(x + 2))
-        case _ => throw new IllegalStateException("object slot has no blob encoding")
+        case _ => // object slot: no blob encoding, its side array merges (mergeObj)
       }
       j += 1
     }
   }
 
-  /** Merge one partial accumulator into another (driver route). */
-  def mergeAcc(cur: Acc, in: Acc): Unit = {
-    mergeState(cur.longs, cur.doubles, cur.flags, 0, in.longs, in.doubles, in.flags, 0)
-    if (hasObj) {
-      var j = 0
-      while (j < n) {
-        if (op(j) == Distinct) {
-          val s = cur.sets(a1(j))
-          s.addAll(in.sets(a1(j)))
-          if (s.size() > DriverAgg.maxDistinctCap) throw new GroupCardinalityExceeded(
-            s"driver agg: merged distinct set exceeded ${DriverAgg.maxDistinctCap} — " +
-              "child is not low-cardinality; falling back")
-        } else if (op(j) > Distinct) {
-          val x = in.objs(a1(j)).asInstanceOf[UTF8String]
-          if (x != null) minMaxS(cur, j, x)
-        }
-        j += 1
+  /** Merge one group's object state into another's (driver route). */
+  def mergeObj(cur: ObjState, in: ObjState): Unit = {
+    var j = 0
+    while (j < n) {
+      if (op(j) == Distinct) {
+        val s = cur.sets(a1(j))
+        s.addAll(in.sets(a1(j)))
+        if (s.size() > DriverAgg.maxDistinctCap) throw new GroupCardinalityExceeded(
+          s"driver agg: merged distinct set exceeded ${DriverAgg.maxDistinctCap} — " +
+            "child is not low-cardinality; falling back")
+      } else if (op(j) > Distinct) {
+        val x = in.objs(a1(j)).asInstanceOf[UTF8String]
+        if (x != null) minMaxS(cur, j, x)
       }
+      j += 1
     }
   }
 
@@ -545,17 +521,18 @@ final class SlotKernel(
         else if (cnt == 1) {
           if (nullOnDiv(j)) row.setNullAt(pos) else row.setDouble(pos, Double.NaN)
         } else row.setDouble(pos, ck / (cnt - 1))
-      case _ => throw new IllegalStateException("object slot final needs an Acc")
+      case _ => throw new IllegalStateException("object slot final needs its ObjState")
     }
   }
 
   /** Every aggregate's output for group g from `pos0` on. `buffer`: emit
     * Spark's aggregation BUFFER instead of the final value (a replaced
     * PartialMerge) — avg widens to its [sum, count] pair; count/sum/min/max
-    * buffers equal their finals.
+    * buffers equal their finals. Object slots read the group's `obj`
+    * (null: the group saw no row — an empty set, a NULL min/max).
     */
   def writeOutputs(L: Array[Long], D: Array[Double], F: Array[Boolean], g: Int,
-      row: InternalRow, pos0: Int, buffer: Boolean = false): Unit = {
+      row: InternalRow, pos0: Int, buffer: Boolean = false, obj: ObjState = null): Unit = {
     var c = pos0
     var j = 0
     while (j < n) {
@@ -564,25 +541,14 @@ final class SlotKernel(
         row.setLong(c + 1, L(g * nL + a2(j)))
         c += 2
       } else {
-        writeFinal(j, L, D, F, g, row, c)
+        if (op(j) == Distinct)
+          row.setLong(c, if (obj == null) 0L else obj.sets(a1(j)).size().toLong)
+        else if (op(j) > Distinct) {
+          val s = if (obj == null) null else obj.objs(a1(j))
+          if (s == null) row.setNullAt(c) else row.update(c, s)
+        } else writeFinal(j, L, D, F, g, row, c)
         c += 1
       }
-      j += 1
-    }
-  }
-
-  /** Every aggregate's final value from an accumulator, object slots
-    * included (driver route).
-    */
-  def writeFinals(acc: Acc, row: InternalRow, pos0: Int): Unit = {
-    var j = 0
-    while (j < n) {
-      val pos = pos0 + j
-      if (op(j) == Distinct) row.setLong(pos, acc.sets(a1(j)).size().toLong)
-      else if (op(j) > Distinct) {
-        val s = acc.objs(a1(j))
-        if (s == null) row.setNullAt(pos) else row.update(pos, s)
-      } else writeFinal(j, acc.longs, acc.doubles, acc.flags, 0, row, pos)
       j += 1
     }
   }
@@ -648,13 +614,6 @@ object SlotKernel {
     case DoubleType => 5
     case _ => -1
   }
-
-  /** Kernel over a [[DriverAgg.Layout]] whose inputs are read with their
-    * own types (value-projection rows, or direct columns of those types).
-    */
-  def apply(lay: DriverAgg.Layout, ansi: Boolean): SlotKernel =
-    new SlotKernel(lay.slots, lay.inputs.map(_.dataType), lay.aggTypes,
-      lay.nL, lay.nD, lay.nF, ansi, lay.nS, lay.nO)
 
   /** Slots whose final value the sorted-run top-n drain can compare
     * straight off the flat state.

@@ -316,9 +316,9 @@ object BoundedKeyDriverAgg extends GraftRule[LogicalPlan] {
           case Some(b) if b > 0 && b <= MaxBound =>
             // re-inline the pulled-out Project: with the group chain back
             // in the aggregate and the exec sitting directly on the cache
-            // scan, the batch-direct partial (colKeyParts, incl. the
-            // CalendarKeyPart trunc kernels) applies instead of the
-            // row-at-a-time path
+            // scan, the packed partial's batch loop (PackedAgg.colKeyParts,
+            // incl. the CalendarKeyPart trunc kernels) applies instead of
+            // the row-at-a-time path
             val aggInlined = agg0.child match {
               case p: org.apache.spark.sql.catalyst.plans.logical.Project
                   if aliasMap.values.forall(_.deterministic) =>

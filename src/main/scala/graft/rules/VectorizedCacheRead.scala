@@ -2,10 +2,11 @@ package graft.rules
 
 import graft.GraftConf
 import graft.plans.CachedBroadcastExec
+import org.apache.spark.sql.catalyst.expressions.{Expression, PlanExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-import org.apache.spark.sql.execution.{ColumnarRule, ColumnarToRowExec, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarRule, ColumnarToRowExec, FilterExec, SparkPlan}
 
 /** Prefer vectorized reads of the in-memory columnar cache.
   *
@@ -24,20 +25,12 @@ object VectorizedCacheRead extends ColumnarRule {
   override def postColumnarTransitions: Rule[SparkPlan] = InsertCacheColumnarToRow
 }
 
-private object DriverAggFold
-    extends org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-  def conjuncts(cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    splitConjunctivePredicates(cond)
-}
-
 /** The physical rewrites that must see the plan after transitions are
   * inserted. `spark.graft.disabled` arms read here (once per application):
   * `VectorizedCacheRead`, `StreamingWindow` (lag-only windows as
-  * plans/StreamingWindow), `DriverAgg.columnar` (batch-direct driver-agg
-  * partial) with `DriverAgg.selectionFold`, and `PackedAgg.selectionFold`.
+  * plans/StreamingWindow) and `PackedAgg.selectionFold`.
   */
-object InsertCacheColumnarToRow extends Rule[SparkPlan] {
+object InsertCacheColumnarToRow extends Rule[SparkPlan] with PredicateHelper {
   /** Wrap columnar-capable cache scans, skipping scans already under a
     * ColumnarToRowExec (AQE stage re-preparation or a second application
     * of this rule would otherwise double-wrap: the outer transition's
@@ -60,8 +53,10 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan = {
     val packedFold = GraftConf.enabled("PackedAgg.selectionFold")
-    val driverColumnar = GraftConf.enabled("DriverAgg.columnar")
-    val driverFold = GraftConf.enabled("DriverAgg.selectionFold")
+    // a Filter the driver-mode partial can evaluate per batch
+    def foldable(cond: Expression, c: SparkPlan): Boolean =
+      packedFold && cond.deterministic && !cond.exists(_.isInstanceOf[PlanExpression[_]]) &&
+        cond.references.subsetOf(c.outputSet)
     // single-pass aggregation where the exchange was elided (clustered
     // cache / bucketed input) — see CollapsePartialAggregate
     val collapsed = CollapsePartialAggregate(plan)
@@ -119,17 +114,25 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
             _, _, _, _, ColumnarToRowExec(c), false) if c.supportsColumnar =>
         f.copy(child = c, columnarChild = true)
       // packed partial consumes batches directly when every key and
-      // input is a plain column of a columnar-capable child — a cache
+      // input reads off the vectors of a columnar-capable child — a cache
       // scan under the ColumnarToRow just inserted above, or (AQE) the
       // TableCacheQueryStageExec wrapping one; a CacheFilter child folds
       // INTO the batch loop as a per-batch DictSelection (no row
-      // materialization between filter and partial)
+      // materialization between filter and partial), and in driver mode
+      // so does a deterministic Filter over the transition (the
+      // reference's selection-vector path from its scan into the
+      // aggregate)
       case r: graft.plans.PackedPartialAggExec if !r.columnarChild =>
         r.child match {
           case graft.plans.CacheFilterExec(_, conjuncts, c)
               if packedFold &&
                 c.supportsColumnar && r.columnarEligible(c) =>
             r.copy(child = c, columnarChild = true, selection = conjuncts)
+          case FilterExec(cond, ColumnarToRowExec(c))
+              if r.driverFinal.isDefined && c.supportsColumnar &&
+                r.columnarEligible(c) && foldable(cond, c) =>
+            r.copy(child = c, columnarChild = true,
+              selection = splitConjunctivePredicates(cond))
           case ColumnarToRowExec(c) if c.supportsColumnar && r.columnarEligible(c) =>
             r.copy(child = c, columnarChild = true)
           case c if c.supportsColumnar && r.columnarEligible(c) =>
@@ -168,37 +171,6 @@ object InsertCacheColumnarToRow extends Rule[SparkPlan] {
           case c if c.supportsColumnar && s.columnarEligible(c) =>
             s.copy(columnarChild = true)
           case _ => s
-        }
-      // driver-finalized low-card aggregate: batch-direct partial when the
-      // group keys columnar-translate (plans/DriverAgg.colKeyParts). A
-      // Filter (or dict-filter) child over the cache scan folds INTO the
-      // partial as a per-batch selection — the loop then filters,
-      // dict-keys, and accumulates in one pass with no row
-      // materialization between scan and aggregate (the reference's
-      // selection-vector path through its table scan into the aggregate).
-      case d: graft.plans.DriverGroupAggExec
-          if driverColumnar && !d.columnarChild =>
-        import org.apache.spark.sql.execution.FilterExec
-        def foldable(cond: org.apache.spark.sql.catalyst.expressions.Expression,
-            c: SparkPlan): Boolean =
-          driverFold && cond.deterministic &&
-            !cond.exists(_.isInstanceOf[
-              org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]) &&
-            cond.references.subsetOf(c.outputSet)
-        d.child match {
-          case graft.plans.CacheFilterExec(_, conjuncts, c)
-              if driverFold &&
-                c.supportsColumnar && d.columnarEligible(c) =>
-            d.copy(child = c, columnarChild = true, selection = conjuncts)
-          case FilterExec(cond, ColumnarToRowExec(c))
-              if c.supportsColumnar && d.columnarEligible(c) && foldable(cond, c) =>
-            d.copy(child = c, columnarChild = true,
-              selection = DriverAggFold.conjuncts(cond))
-          case ColumnarToRowExec(c) if c.supportsColumnar && d.columnarEligible(c) =>
-            d.copy(child = c, columnarChild = true)
-          case c if c.supportsColumnar && d.columnarEligible(c) =>
-            d.copy(columnarChild = true)
-          case _ => d
         }
     }
     // a TakeOrderedAndProject directly above a direct-loop sorted-run

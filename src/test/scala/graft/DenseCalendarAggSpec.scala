@@ -4,18 +4,20 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** plans/DriverAgg dense calendar arm: the direct-indexed (perfect-hash)
-  * partial for single calendar-bucket keys must be result-identical to
-  * the generic open-addressing partial — NULL key rows, out-of-window
-  * days (the per-row overflow map), every supported slot opcode
+/** Calendar-bucket keys on the driver-final aggregate: the packed
+  * partial reads a single calendar trunc key off the micros vector as a
+  * long key, and the routed plan must be result-identical to the stock
+  * plan (`BoundedKeyDriverAgg` off) — NULL key rows, out-of-window
+  * days (before 1900, after 2100), every supported slot opcode
   * (count(*), count(col) with NULLs, sum long/double, avg, min/max
   * long/double), and month/quarter/year/week kernels.
   */
 class DenseCalendarAggSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** `on`: the routed driver-final aggregate; off: the stock plan. */
   private def withDense[A](on: Boolean)(f: => A): A =
-    withGraft("DriverAgg.denseCalendar" -> on)(f)
+    withGraft("BoundedKeyDriverAgg" -> on)(f)
 
   // cached clustered table with: NULL ts rows, a pre-1900 day and a
   // post-2100 day (overflow path), NULL measure values, negative values

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.DriverAgg
+import graft.plans.{DriverAgg, DriverGroupAggExec, PackedPartialAggExec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -147,10 +147,10 @@ class DriverAggSpec extends AnyFunSuite {
   }
 
   test("dense calendar arm honors maxGroups like the generic partial") {
-    // 200 distinct day buckets with maxGroups=16: the dense direct-index
-    // arm must count TOUCHED in-window buckets toward the cap (not just
-    // overflow-map entries), trip GroupCardinalityExceeded, and fall back
-    // to the shuffled plan — same rows as cap-free execution.
+    // 200 distinct day buckets with maxGroups=16: the partial's valve
+    // must count every trunc-key group toward the cap, trip
+    // GroupCardinalityExceeded, and fall back to the shuffled plan —
+    // same rows as cap-free execution.
     val dir = java.nio.file.Files.createTempDirectory("graft_dacap").toString
     try {
       spark.range(0, 4000).selectExpr(
@@ -169,11 +169,17 @@ class DriverAggSpec extends AnyFunSuite {
   }
 
   test("columnar partial equals the row partial, including null keys") {
-    // parquet scans are columnar-capable, so lowCard over a bare scan
-    // takes the batch-direct partial; flipping the rule flag pins the
-    // row partial — both must match the shuffled plan AND each other.
-    // Null string / int keys exercise the nullBits slot of the
-    // composite-key table, the trunc key the hour-bucket arithmetic.
+    // warm: the table cached, which the packed partial reads batch-
+    // direct; cold: the parquet file read with the vectorized reader off,
+    // so the partial runs its row loop — both must match the shuffled
+    // plan AND each other. Null string / int keys exercise the null mask
+    // of the composite key, the trunc key the hour-bucket arithmetic.
+    def batchPartial(df: DataFrame): Boolean = {
+      df.collect()
+      df.queryExecution.executedPlan.collect {
+        case p: graft.plans.PackedPartialAggExec => p.columnarChild
+      } == Seq(true)
+    }
     val dir = java.nio.file.Files.createTempDirectory("graft_dacol").toString
     try {
       spark.range(0, 5000).selectExpr(
@@ -190,15 +196,136 @@ class DriverAggSpec extends AnyFunSuite {
         (df.groupBy(date_trunc("hour", col("ts")).as("b"), col("sk"))
           .agg(count(lit(1)).as("n"), round(avg(col("v")), 4).as("a")),
           Seq(col("b"), col("sk").asc_nulls_first)))
-      shapes(t).foreach { case (g, s) =>
-        val colRows = withGraft("DriverAgg.columnar" -> true)(rows(DriverAgg.lowCard(g, s)))
-        val rowRows = withGraft("DriverAgg.columnar" -> false)(rows(DriverAgg.lowCard(g, s)))
-        val expected = rows(g.orderBy(s: _*))
-        assert(colRows == expected)
-        assert(rowRows == expected)
+      val expected = shapes(t).map { case (g, s) => rows(g.orderBy(s: _*)) }
+      // warm first, then the cache goes and the same reads run cold
+      t.cache().count()
+      val colRows = shapes(t).map { case (g, s) =>
+        val colDf = DriverAgg.lowCard(g, s)
+        assert(batchPartial(colDf), colDf.queryExecution.executedPlan)
+        rows(colDf)
       }
+      t.unpersist(blocking = true)
+      val rowRows = withConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
+        shapes(t).map { case (g, s) =>
+          val rowDf = DriverAgg.lowCard(g, s)
+          assert(!batchPartial(rowDf), rowDf.queryExecution.executedPlan)
+          rows(rowDf)
+        }
+      }
+      assert(colRows == expected)
+      assert(rowRows == expected)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  // ---- driver mode of the packed partial, each compared with stock ----
+
+  /** The same query with no graft aggregate rule. */
+  private def stockRows(df: => DataFrame): Seq[String] =
+    withGraft("BoundedKeyDriverAgg" -> false, "PackedShuffleAgg" -> false)(rows(df))
+
+  private def driverExec(df: DataFrame): DriverGroupAggExec =
+    df.queryExecution.executedPlan.collectFirst { case d: DriverGroupAggExec => d }.get
+
+  private def partialOf(df: DataFrame): PackedPartialAggExec =
+    driverExec(df).child.asInstanceOf[PackedPartialAggExec]
+
+  /** Cached in batches of 100 rows, 4 partitions, partition p holding
+    * ids [1000p, 1000p + 1000): `blk` has 10 values per partition and 40
+    * in all, `spread` all 40 in every partition, and `s` 10 of its 17
+    * values per partition, a different 10 in each. `a` and `s` carry the
+    * ndv bounds a warm table's stats pass would attach.
+    */
+  private lazy val stressSrc: DataFrame = {
+    def ndv(n: Long) =
+      new org.apache.spark.sql.types.MetadataBuilder().putLong("graft.ndvBound", n).build()
+    val df = spark.range(0, 4000, 1, 4).selectExpr(
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE CAST(id % 5 AS STRING) END AS a",
+      "CASE WHEN id % 11 = 0 THEN CAST(NULL AS INT) ELSE CAST(id % 3 AS INT) END AS b",
+      "CAST(id DIV 100 AS INT) AS blk",
+      "CAST(id % 40 AS INT) AS spread",
+      "CASE WHEN id % 13 = 0 THEN NULL ELSE concat('s', CAST(id DIV 100 % 17 AS STRING)) END AS s",
+      "CASE WHEN id % 9 = 0 THEN CAST(NULL AS DOUBLE) ELSE CAST(id AS DOUBLE) / 8 END AS v")
+      .withMetadata("a", ndv(6L)).withMetadata("s", ndv(18L))
+    withConf("spark.sql.inMemoryColumnarStorage.batchSize" -> "100") { df.cache().count() }
+    df
+  }
+
+  /** `f` planned and run with the partial reading the cache's batches,
+    * or (`batch` false) its rows. */
+  private def onPath[A](batch: Boolean)(f: => A): A =
+    if (batch) f
+    else withConf("spark.sql.inMemoryColumnarStorage.enableVectorizedReader" -> "false")(f)
+
+  test("driver mode: flushGroups=8 merges many blobs per task; NULLs in both key positions") {
+    for (batch <- Seq(true, false)) {
+      val g = stressSrc.groupBy(col("a"), col("b"))
+        .agg(count(lit(1)).as("n"), round(sum(col("v")), 4).as("sv"),
+          min(col("v")).as("mn"), max(col("b")).as("mx"))
+      val s = Seq(col("a").asc_nulls_first, col("b").asc_nulls_first)
+      val got = onPath(batch)(withConf("spark.graft.agg.flushGroups" -> "8") {
+        val df = DriverAgg.lowCard(g, s)
+        val r = rows(df)
+        assert(partialOf(df).columnarChild == batch, df.queryExecution.executedPlan)
+        // 24 groups flushed at 8: each task returns several blobs
+        assert(partialOf(df).metrics("numOutputRows").value > 4, s"batch=$batch")
+        r
+      })
+      assert(got == stockRows(g.orderBy(s: _*)), s"batch=$batch")
+      assert(got.exists(_.startsWith("[null,0,")) && got.exists(_.startsWith("[0,null,")) &&
+        got.exists(_.startsWith("[null,null,")), got)
+    }
+  }
+
+  test("driver mode: the valve trips in the partial and in the driver merge, batch and row") {
+    for (batch <- Seq(true, false); key <- Seq("spread", "blk")) {
+      val g = stressSrc.groupBy(col(key))
+        .agg(count(lit(1)).as("n"), round(sum(col("v")), 4).as("sv"))
+      val df = DriverAgg.lowCard(g, Seq(col(key)), maxGroups = 16)
+      assert(onPath(batch)(rows(df)) == stockRows(g.orderBy(col(key))), s"batch=$batch key=$key")
+      assert(partialOf(df).columnarChild == batch)
+      val d = driverExec(df)
+      assert(d.metrics("valveFallbacks").value == 1, s"batch=$batch key=$key")
+      // spread: 40 groups in every map, so each partial task trips and
+      // no blob comes back; blk: every map holds 10, all 4 tasks return
+      // and only the merged 40 trip
+      val blobs = partialOf(df).metrics("numOutputRows").value
+      if (key == "spread") assert(blobs < 4, s"batch=$batch: $blobs")
+      else assert(blobs == 4, s"batch=$batch: $blobs")
+    }
+  }
+
+  test("driver mode: empty grouped input gives no rows, empty global input gives one") {
+    for (batch <- Seq(true, false)) {
+      val e = stressSrc.filter(col("v") < lit(-1.0))
+      val grouped = DriverAgg.lowCard(
+        e.groupBy(col("a")).agg(count(lit(1)).as("n")), Seq(col("a")))
+      assert(onPath(batch)(rows(grouped)).isEmpty)
+      assert(partialOf(grouped).columnarChild == batch)
+      val global = e.groupBy().agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
+        min(col("s")).as("ms"), max(col("s")).as("xs"))
+      val routed = DriverAgg.lowCard(global, Nil)
+      val got = onPath(batch)(rows(routed))
+      assert(partialOf(routed).columnarChild == batch)
+      assert(got.length == 1 && got == stockRows(global), s"batch=$batch: $got")
+    }
+  }
+
+  test("driver mode: string min/max and bounded count(DISTINCT) with NULLs over 4 partitions") {
+    stressSrc.createOrReplaceTempView("da_obj")
+    for (batch <- Seq(true, false)) {
+      // every group spans all 4 partitions, each holding a different
+      // part of its `s` values: the distinct counts are right only when
+      // the driver merges the 4 side arrays
+      val sql =
+        """SELECT a, min(s) AS mn, max(s) AS mx, count(DISTINCT s) AS ds, count(*) AS n
+          |FROM da_obj GROUP BY a ORDER BY a NULLS FIRST""".stripMargin
+      val q = spark.sql(sql)
+      val got = onPath(batch)(rows(q))
+      assert(partialOf(q).columnarChild == batch, q.queryExecution.executedPlan)
+      assert(got == stockRows(spark.sql(sql)), s"batch=$batch")
+      assert(got.head.startsWith("[null,"), got)
     }
   }
 }

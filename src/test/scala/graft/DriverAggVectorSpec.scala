@@ -1,20 +1,21 @@
 package graft
 
-import graft.plans.{DriverAgg, DriverGroupAggExec}
+import graft.plans.{DriverAgg, DriverGroupAggExec, PackedPartialAggExec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Differential specs for the round-12 batch-partial arms:
+/** Differential specs for the batch arms of the driver-final
+  * aggregate's packed partial:
   *  - selection fold (Filter over the cache scan pushed into the partial
-  *    loop as a DictSelection, incl. the new PRIM tier),
-  *  - dict-id group keys (string keys read as per-batch dictionary ids
-  *    remapped to task intern ids),
-  *  - compiled double-expression aggregate inputs (the q1 disc_price
-  *    shape evaluated straight off the vectors).
+  *    loop as a DictSelection, incl. the PRIM tier),
+  *  - dict-id group keys (string keys hashed once per batch dictionary
+  *    entry),
+  *  - expression aggregate inputs (the q1 disc_price shape, evaluated
+  *    through the value projection over the batch's row view).
   * Every arm must be row-identical to (a) itself with the arm's escape
-  * hatch off and (b) the ordinary shuffled plan, across AQE on/off,
-  * NULL keys, NULL inputs, NaN doubles, and the maxGroups fallback.
+  * hatch off and (b) the stock plan, across AQE on/off, NULL keys, NULL
+  * inputs, NaN doubles, and the maxGroups fallback.
   */
 class DriverAggVectorSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -53,6 +54,13 @@ class DriverAggVectorSpec extends AnyFunSuite {
 
   private val sort = Seq(col("flag").asc_nulls_first, col("status").asc_nulls_first)
 
+  /** The same query with no graft aggregate rule. */
+  private def stock(df: => DataFrame): Seq[String] =
+    withGraft("BoundedKeyDriverAgg" -> false, "PackedShuffleAgg" -> false)(rows(df))
+
+  private def partialOf(d: DriverGroupAggExec): PackedPartialAggExec =
+    d.child.asInstanceOf[PackedPartialAggExec]
+
   private def findExec(df: DataFrame): Option[DriverGroupAggExec] = {
     df.collect()
     def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[DriverGroupAggExec] = {
@@ -76,28 +84,25 @@ class DriverAggVectorSpec extends AnyFunSuite {
         val df = DriverAgg.lowCard(agg(cachedT), sort)
         val d = findExec(df)
         assert(d.isDefined, s"aqe=$aqe: no DriverGroupAggExec")
-        assert(d.get.columnarChild && d.get.selection.nonEmpty,
-          s"aqe=$aqe: selection not folded: ${d.get.simpleStringWithNodeId()}")
+        assert(partialOf(d.get).columnarChild && partialOf(d.get).selection.nonEmpty,
+          s"aqe=$aqe: selection not folded: ${d.get.treeString}")
         assert(rows(df) == expected, s"aqe=$aqe")
       } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     }
   }
 
   test("each arm's escape hatch reproduces identical rows (3-way differential)") {
-    val expected = rows(agg(cachedT).orderBy(sort: _*))
+    val expected = stock(agg(cachedT).orderBy(sort: _*))
     def run(): Seq[String] = rows(DriverAgg.lowCard(agg(cachedT), sort))
     assert(run() == expected) // all arms on
-    withGraft("DriverAgg.dictKeys" -> false) {
+    withGraft("PackedAgg.dictKeys" -> false) {
       assert(run() == expected, "dict keys off")
     }
-    withGraft("DriverAgg.exprVec" -> false) {
-      assert(run() == expected, "expr vec off")
-    }
-    withGraft("DriverAgg.selectionFold" -> false) {
+    withGraft("PackedAgg.selectionFold" -> false) {
       val df = DriverAgg.lowCard(agg(cachedT), sort)
       assert(rows(df) == expected, "selection fold off")
       val d = findExec(df)
-      assert(d.forall(_.selection.isEmpty), "hatch off must not fold")
+      assert(d.forall(partialOf(_).selection.isEmpty), "hatch off must not fold")
     }
   }
 

@@ -50,8 +50,8 @@ class GraftConfSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       s.conf.set("spark.graft.disabled", "PackedShuffleAgg,NoSuchRule"))
     assert(e.getMessage.contains("spark.graft.disabled"), e.getMessage)
-    s.conf.set("spark.graft.disabled", "PackedShuffleAgg,DriverAgg.dictKeys")
-    assert(s.conf.get("spark.graft.disabled") == "PackedShuffleAgg,DriverAgg.dictKeys")
+    s.conf.set("spark.graft.disabled", "PackedShuffleAgg,PackedAgg.dictKeys")
+    assert(s.conf.get("spark.graft.disabled") == "PackedShuffleAgg,PackedAgg.dictKeys")
     intercept[IllegalArgumentException](s.conf.set("spark.graft.agg.flushGroups", "0"))
   }
 

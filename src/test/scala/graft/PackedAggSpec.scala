@@ -71,6 +71,30 @@ class PackedAggSpec extends AnyFunSuite {
     }
   }
 
+  test("one dictionary-served string key: the entry slot memo survives map growth and flushes") {
+    // 4000 distinct values per 10k-row cached batch: each batch's
+    // dictionary holds them all, so the map grows past its initial 4096
+    // slots inside a batch (the memo must drop the moved slots) and,
+    // under flushGroups=8, every batch ends in a flush
+    val t = spark.range(0, 40000, 1, 2).selectExpr(
+      "CASE WHEN id % 997 = 0 THEN NULL ELSE concat('v', CAST(id * 7 % 4000 AS STRING)) END AS s",
+      "id % 5 AS l").cache()
+    t.count()
+    try {
+      withAqe(false) {
+        def q() = t.groupBy("s").agg(sum(col("l")).as("sl"), count(lit(1)).as("n"))
+          .orderBy(col("s").asc_nulls_first)
+        val partials = q().queryExecution.executedPlan.collect {
+          case p: graft.plans.PackedPartialAggExec => p }
+        assert(partials.nonEmpty && partials.forall(_.columnarChild))
+        val off = packedOff(q().collect().toSeq)
+        assert(q().collect().toSeq == off)
+        assert(withConf("spark.graft.agg.flushGroups" -> "8")(q().collect().toSeq) == off)
+        assert(off.size == 4001)
+      }
+    } finally t.unpersist()
+  }
+
   test("three keys incl. date/timestamp widen and convert back exactly") {
     withAqe(false) {
       val d = spark.range(30000).selectExpr(
@@ -464,9 +488,9 @@ class PackedAggSpec extends AnyFunSuite {
             |GROUP BY s ORDER BY s NULLS FIRST""".stripMargin)
         assert(q().queryExecution.executedPlan.collect {
           case d: graft.plans.DriverGroupAggExec => d }.nonEmpty)
-        val direct = q().collect().toSeq
-        val probed = withGraft("DriverAgg.directStringKey" -> false)(q().collect().toSeq)
-        assert(direct == probed)
+        val routed = q().collect().toSeq
+        val stock = withGraft("BoundedKeyDriverAgg" -> false)(q().collect().toSeq)
+        assert(routed == stock)
       } finally spark.sql("UNCACHE TABLE direct_cache")
     }
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.QueryProfile
+import graft.plans.{DriverAgg, QueryProfile}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,5 +51,20 @@ class QueryProfileSpec extends AnyFunSuite {
     val filterOut = prof.filter(r =>
       r.getString(2) == "numOutputRows" && r.getLong(3) == 5L)
     assert(filterOut.nonEmpty, prof.mkString("; "))
+  }
+
+  test("driver-final aggregate reports output rows, merged groups and valve fallbacks") {
+    def driverMetrics(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      QueryProfile.profile(df).collect().filter(_.getString(1) == "DriverGroupAgg")
+        .map(r => r.getString(2) -> r.getLong(3)).toMap
+    def grouped(mod: Int) = spark.range(0, 3000, 1, 3).selectExpr(s"id % $mod AS k", "id AS v")
+      .groupBy(col("k")).agg(sum(col("v")).as("s"))
+    // routed: 3 groups merged from 3 tasks, no fallback
+    assert(driverMetrics(DriverAgg.lowCard(grouped(3), Seq(col("k")))) ==
+      Map("numOutputRows" -> 3L, "mergedGroups" -> 3L, "valveFallbacks" -> 0L))
+    // valve trip: 30 groups per task against maxGroups = 16 — the
+    // retained plan's 30 rows, nothing merged on the driver
+    assert(driverMetrics(DriverAgg.lowCard(grouped(30), Seq(col("k")), maxGroups = 16)) ==
+      Map("numOutputRows" -> 30L, "mergedGroups" -> 0L, "valveFallbacks" -> 1L))
   }
 }

@@ -50,11 +50,15 @@ class WarmPlanSpec extends AnyFunSuite {
     // the cache must serve BATCHES: either through the generic
     // ColumnarToRow transition, or — since the r12 ndv-slack fix routes
     // q1's 3×2 string keys to the driver aggregate — consumed directly
-    // by DriverGroupAggExec's batch partial (columnarChild), which is
-    // the stronger form of the same property (no row transition at all)
+    // by DriverGroupAggExec's packed partial in its batch loop
+    // (columnarChild), which is the stronger form of the same property
+    // (no row transition at all)
     val transition = plan.collect { case c: ColumnarToRowExec => c }.nonEmpty
     val batchDirect = plan.collect {
-      case d: graft.plans.DriverGroupAggExec if d.columnarChild => d
+      case d: graft.plans.DriverGroupAggExec if (d.child match {
+        case p: graft.plans.PackedPartialAggExec => p.columnarChild
+        case _ => false
+      }) => d
     }.nonEmpty
     assert(transition || batchDirect, plan.toString.take(1500))
     assert(plan.collect { case i: InMemoryTableScanExec => i }.nonEmpty, plan.toString.take(1500))
@@ -64,5 +68,40 @@ class WarmPlanSpec extends AnyFunSuite {
     val plan = warmPlan("q5_local_supplier", aqe = false)
     val cached = plan.collect { case c: graft.plans.CachedBroadcastExec => c }
     assert(cached.nonEmpty, plan.toString.take(2000))
+  }
+
+  test("every driver-final aggregate runs the packed partial in driver mode") {
+    // the queries the driver route serves in the headline, h2o and olap
+    // suites: each plans a DriverGroupAggExec directly over a driver-mode
+    // PackedPartialAggExec (one partial; the driver merge is its sink)
+    def driverRouted(name: String, plan: SparkPlan): Unit = {
+      val ds = plan.collect { case d: graft.plans.DriverGroupAggExec => d }
+      assert(ds.nonEmpty, s"$name: ${plan.toString.take(1500)}")
+      ds.foreach(d => assert(d.child match {
+        case p: graft.plans.PackedPartialAggExec => p.driverFinal.isDefined
+        case _ => false
+      }, s"$name: ${d.treeString.take(1500)}"))
+    }
+    Seq("q1_pricing_summary", "q5_local_supplier", "events_tumbling_1h",
+        "cb_date_histogram", "cb_like_distinct", "cb_like_group_min")
+      .foreach(n => driverRouted(n, warmPlan(n, aqe = false)))
+    // h2o over its gate fixture, warm (the cache's ndv stats prove the
+    // keys bounded, as in the h2o benchmark)
+    graft.sources.H2oFixture.ensureGate(spark)
+    withAqe(false) {
+      try {
+        BenchH2o.register(spark, graft.sources.H2oFixture.gateDir, cached = true)
+        val texts = queries.H2oBoard.texts.toMap
+        Seq("h2o_g01", "h2o_g03", "h2o_g04", "h2o_g05", "h2o_g07").foreach { n =>
+          driverRouted(n, spark.sql(texts(n)).queryExecution.executedPlan)
+        }
+      } finally {
+        Tables.cacheMode = false
+        // H2oBoard re-registers its parquet views when these are gone
+        graft.sources.H2oFixture.tables.foreach { t =>
+          spark.catalog.dropTempView(if (t == "x") "h2o_x" else t)
+        }
+      }
+    }
   }
 }
