@@ -62,7 +62,8 @@ object Bench {
         .config("spark.ui.enabled", "false"))
       .config("spark.sql.shuffle.partitions",
         // every headline exchange moves partial-agg output (bytes, not
-        // rows): 2 reduce tasks beat 8 idle ones at this scale (BenchGrid)
+        // rows): 2 reduce tasks beat 8 idle ones at this scale (a width
+        // sweep; `BenchAB headline` with shuffle-partition arms re-runs it)
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "2"))
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
@@ -76,13 +77,9 @@ object Bench {
     // (PERF.md quantifies identical code drifting ±2× with the machine's
     // phase): it is reported in the output JSON so a slow-phase run is
     // distinguishable from a regression in the artifact itself.
-    def probeMs(): Double = {
-      val probe = spark.sparkContext.parallelize(1 to 32, 32)
-      val t = (1 to 120).map { _ =>
-        val t0 = System.nanoTime(); probe.count(); (System.nanoTime() - t0) / 1e6
-      }.sorted
-      t(t.length / 2)
-    }
+    // One task per core (`Suites.probeMs`): more tasks than cores would
+    // time the task queue too.
+    def probeMs(): Double = Suites.probeMs(spark, 120)
     val probeBefore = probeMs()
     // warm-engine mode (in-memory columnar tables ≙ DuckDB warm buffer
     // pool); SPARK_GRAFT_CACHE=0 reverts to cold parquet scans per run

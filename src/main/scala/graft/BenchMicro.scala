@@ -29,7 +29,7 @@ object BenchMicro {
     * to micro_ref_scan (see the stock lane below and
     * [[graft.queries.MicroShapes]]).
     */
-  private val stockShapes: Seq[(String, String)] = Seq(
+  private[graft] val stockShapes: Seq[(String, String)] = Seq(
     ("stock_cast_tower", "micro_cast_tower"),
     ("stock_wide_case", "micro_wide_case"),
     ("stock_in_list", "micro_in_list"),
@@ -45,7 +45,7 @@ object BenchMicro {
     * query, plan substring proving the rule fired; null = perf-only pair
     * with no structural pin).
     */
-  private def shapes: Seq[(String, String, String, String)] = Seq(
+  private[graft] def shapes: Seq[(String, String, String, String)] = Seq(
     ("vector_read", "VectorizedCacheRead",
       "q1_pricing_summary", null),
     ("packed_long_key", "PackedShuffleAgg",

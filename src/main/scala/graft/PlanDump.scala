@@ -1,30 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev diagnostic: print the analyzed + physical plan of a named query
-  * (AQE initial plan — the tree query-stage-prep rules see). Not part of
-  * the driver protocol.
+/** Prints, in formatted mode, the pre-execution plan and the final
+  * adaptive plan (after one run through the suite's sink) of named
+  * queries of a suite (`Suites`), in the suite's session and fixture
+  * state. A plan with graft rules or arms left out:
+  *   sbt -Dspark.graft.disabled=VectorizedCacheRead "runMain graft.PlanDump entry q1_pricing_summary"
+  *
+  * Usage: sbt "runMain graft.PlanDump <suite> [factor=N] [dir=PATH] [query ...]"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.tune(SparkSession.builder()
-        .master("local[8]")
-        .config("spark.ui.enabled", "false"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_CACHE=1: plan against the warm clustered cache (bench state)
-    if (sys.env.get("GRAFT_CACHE").contains("1")) Tables.cacheMode = true
-    args.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val df = fn(spark, sfDir)
-      println(s"==== $name")
-      println(df.queryExecution.executedPlan.toString)
-      df.collect()
-      println("---- after execution (final adaptive plan)")
-      println(df.queryExecution.executedPlan.toString)
+    require(args.nonEmpty,
+      s"usage: PlanDump <${Suites.all.map(_.name).mkString("|")}> [factor=N] [dir=PATH] [query ...]")
+    val suite = Suites(args(0))
+    val opts = Suites.parseArgs(args.drop(1).toSeq)
+    val names = suite.pick(opts.names)
+    val spark = Suites.session(suite)
+    val dir = Suites.load(spark, suite, opts)
+    names.foreach { name =>
+      suite.run(spark, dir, name) { df =>
+        println(s"==== $name pre-execution plan\n${df.queryExecution.explainString(FormattedMode)}")
+        suite.sink(df)
+        println(s"==== $name final adaptive plan\n${df.queryExecution.explainString(FormattedMode)}")
+      }
     }
     spark.stop()
   }

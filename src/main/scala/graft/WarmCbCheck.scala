@@ -1,39 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev check: every ClickBench text evaluated on the WARM clustered
   * hits cache (the bench arm — UserID-clustered, sorted-run string
   * keys, packed/collapse rules) must value-equal the COLD plain-parquet
   * evaluation in the same JVM. Catches warm-layer bugs the oracle gates
   * can't see (the driver's Verify runs cold).
   *
-  * Usage: SPARK_GRAFT_HITS_FACTOR=20 sbt "runMain graft.WarmCbCheck"
+  * Usage: sbt "runMain graft.WarmCbCheck [factor=N] [dir=PATH] [cb_qNN ...]"
   */
 object WarmCbCheck {
   def main(args: Array[String]): Unit = {
-    val factor = sys.env.getOrElse("SPARK_GRAFT_HITS_FACTOR", "20").toLong
-    val spark = GraftSession.tune(SparkSession.builder()
-        .master("local[32]")
-        .config("spark.ui.enabled", "false"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = graft.sources.HitsFixture.ensureScaled(spark, factor)
-    val cold = spark.read.parquet(s"$dir/hits.parquet")
-    Tables.cacheMode = true
+    val suite = Suites("clickbench")
+    val opts = Suites.parseArgs(args.toSeq)
+    val spark = Suites.session(suite)
+    val dir = Suites.load(spark, suite, opts)
     val warm = Tables(spark, dir, "hits")
-    warm.count()
-    val names = if (args.nonEmpty) args.toSeq else queries.ClickBench.texts.map(_._1)
-    val textMap = queries.ClickBench.texts.toMap
+    val cold = spark.read.parquet(s"$dir/hits.parquet")
+    val names = suite.pick(opts.names)
     var bad = 0
     names.foreach { name =>
-      val sql = textMap(name)
-      warm.createOrReplaceTempView("hits")
-      val w = spark.sql(sql).collect().map(_.toString).sorted.toSeq
-      cold.createOrReplaceTempView("hits")
-      val c = spark.sql(sql).collect().map(_.toString).sorted.toSeq
+      def rows(hits: org.apache.spark.sql.DataFrame): Seq[String] = {
+        hits.createOrReplaceTempView("hits")
+        suite.run(spark, dir, name)(_.collect().map(_.toString).sorted.toSeq)
+      }
+      val (w, c) = (rows(warm), rows(cold))
       if (w == c) println(s"[warmcb] OK   $name (${w.size} rows)")
       else {
         bad += 1

@@ -311,7 +311,7 @@ object DistinctWithHll {
 
   /** Pruned-projection size above which the columnar bucketed shape wins
     * (16 bytes/row → 32 MB ≈ 2M input rows). Measured crossover
-    * (BenchABDistinct, PERF.md): at 600k rows the single-level fused
+    * (PERF.md, an interleaved A/B of the two shapes): at 600k rows the single-level fused
     * aggregate already sits ON the raw update-loop floor and the bucket
     * merge's extra stage only adds dispatch (~59 vs 87 ms); at 6M rows
     * the per-row update and single-reducer merge dominate and the

@@ -256,7 +256,7 @@ object ClickBench {
   // init-time guard (Seq.toMap silently last-wins — round-10 lesson)
   require(defs.map(_._1).distinct.size == defs.size, "duplicate cb keys")
 
-  /** Shared texts for the scaled pairing (BenchClickBench +
+  /** Shared texts for the scaled pairing (`BenchBoard clickbench` +
     * tools/bench_cb_duckdb.py read this).
     */
   def texts: Seq[(String, String)] = defs.map(d => (d._1, d._2))

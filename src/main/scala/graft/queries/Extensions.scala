@@ -166,7 +166,7 @@ object Extensions {
     // DISJOINT slice of the key space in parallel (exact counts add,
     // HLL registers union via HllUnion — byte-identical estimate, pinned
     // in MultiDistinctSpec). Gated on the exact side; measured crossover
-    // vs the single-level shape recorded in PERF.md (BenchABDistinct)
+    // vs the single-level shape recorded in PERF.md (an interleaved A/B)
     "agg_fused_distinct_bucketed" -> { (s, d) =>
       import graft.functions.DistinctWithHll.distinct_with_hll
       Tables(s, d, "lineitem")

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * a `java.util.regex` matcher and pays a full regex match per row.
   * TPC-H q13's `o_comment NOT LIKE '%special%requests%'` measured
   * 144.1 ms (LIKE) vs 86.3 ms (indexOf chain) on the warm x100 orders
-  * fixture (`BenchABLike`, counts identical) — the regex is ~40% of the
+  * fixture (an interleaved A/B, counts identical) — the regex is ~40% of the
   * scan wall. The reference engine's LIKE kernel does exactly this
   * segment walk (`src/function/scalar/string/like.cpp`).
   *

@@ -97,7 +97,7 @@ object TpcdsFixture {
     spark.read.parquet(s"$dir/$table.parquet").createOrReplaceTempView(table)
   }
 
-  /** Scaled variant for the perf pairing (BenchTpcdsScale): same schema,
+  /** Scaled variant for the perf pairing (`BenchBoard tpcds`): same schema,
     * same dimensions and plants, `factor`× the fact-table rows — the
     * extra ids extend the same hash formulas, so every distribution
     * property (hot windows, ticket structure, returns derivation) holds

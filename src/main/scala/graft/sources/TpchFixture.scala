@@ -116,7 +116,7 @@ object TpchFixture {
     spark.read.parquet(s"$dir/$table.parquet").createOrReplaceTempView(table)
   }
 
-  /** Scaled variant for the perf pairing (BenchTpchScale): `factor`× the
+  /** Scaled variant for the perf pairing (`BenchBoard tpch`): `factor`× the
     * orders/lineitem rows (and proportionally customers/suppliers/parts,
     * dbgen-style) in its own dir; the correctness fixture is untouched.
     * Factor 100 ≈ dbgen SF1 row counts (6M lineitem). The 2^53

@@ -90,7 +90,7 @@ class WarmPlanSpec extends AnyFunSuite {
     graft.sources.H2oFixture.ensureGate(spark)
     withAqe(false) {
       try {
-        BenchH2o.register(spark, graft.sources.H2oFixture.gateDir, cached = true)
+        Suites("h2o").register(spark, graft.sources.H2oFixture.gateDir)
         val texts = queries.H2oBoard.texts.toMap
         Seq("h2o_g01", "h2o_g03", "h2o_g04", "h2o_g05", "h2o_g07").foreach { n =>
           driverRouted(n, spark.sql(texts(n)).queryExecution.executedPlan)

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """DuckDB side of the scaled ClickBench pairing (dev tool — pairs with
-`sbt "runMain graft.BenchClickBench"`; both medians go to PERF.md).
+`sbt "runMain graft.BenchBoard clickbench"`; both medians go to PERF.md).
 
 Reads the SAME scaled parquet dir the Scala side printed
 (`scaled_dir=...`) and runs the duck-dialect texts from
-tools/cb_duck_texts.json (regenerated by `sbt "runMain
-graft.DumpCbTexts"` so the two sides cannot drift).
+tools/cb_duck_texts.json (written by `BenchBoard clickbench` on each
+run so the two sides cannot drift).
 Protocol: 2 warmups + median of 5.
 
 Usage: python3 tools/bench_cb_duckdb.py <scaled_dir> [cb_qNN ...]

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """DuckDB side of the scaled h2oai pairing (dev tool — pairs with
-`sbt "runMain graft.BenchH2o"`; both medians go to PERF.md).
+`sbt "runMain graft.BenchBoard h2o"`; both medians go to PERF.md).
 
 Reads the SAME scaled parquet dir the Scala side printed
 (`scaled_dir=...`) and runs the duck-dialect texts from
-tools/h2o_duck_texts.json (written by BenchH2o on each run so the two
+tools/h2o_duck_texts.json (written by `BenchBoard h2o` on each run so the two
 sides cannot drift). Protocol: 2 warmups + median of 5.
 
 Usage: python3 tools/bench_h2o_duckdb.py <scaled_dir> [h2o_gNN ...]

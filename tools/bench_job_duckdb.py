@@ -1,10 +1,17 @@
 #!/usr/bin/env python3
 """DuckDB side of the scaled JOB pairing (dev tool — pairs with
-`sbt "runMain graft.BenchJob"`). The texts are verbatim shared-dialect
-SQL, so this reads them straight from the reference query files.
+`sbt "runMain graft.BenchBoard job"`).
+
+Reads the SAME scaled parquet dir the Scala side printed
+(`scaled_dir=...`) and runs the texts in tools/job_duck_texts.json
+(written by `BenchBoard job` on each run from `JobSlice.texts`, which
+are verbatim shared-dialect SQL, so the two sides cannot drift).
+Protocol: 2 warmups + median of 5.
 
 Usage: python3 tools/bench_job_duckdb.py <scaled_dir> [job_NNx ...]
 """
+import json
+import os
 import statistics
 import sys
 import time
@@ -16,36 +23,19 @@ TABLES = ["title", "movie_companies", "company_name", "company_type",
           "movie_keyword", "cast_info", "name", "aka_name", "role_type",
           "char_name", "kind_type", "movie_link", "link_type",
           "person_info", "comp_cast_type", "complete_cast", "aka_title"]
-QDIR = "/root/reference/benchmark/imdb_plan_cost/queries"
-
-
-def default_names():
-    """All fixture-eligible shapes (mirrors tools/gen_job_verbatim.py's
-    FROM-anchored table detection + the original JobSlice dozen)."""
-    import os
-    import re
-    out = []
-    for f in sorted(os.listdir(QDIR)):
-        sql = open(os.path.join(QDIR, f)).read()
-        m = re.search(r"\bFROM\b(.*?)\bWHERE\b", sql, re.S | re.I)
-        tabs = {t for t in re.findall(r"(\w+)\s+AS\s+\w+", m.group(1))}
-        if tabs <= set(TABLES):
-            out.append(f[:-4])
-        else:
-            print(f"SKIP {f[:-4]}: fixture lacks {sorted(tabs - set(TABLES))}")
-    return out
 
 
 def main():
     d = sys.argv[1]
-    names = [n.replace("job_", "") for n in sys.argv[2:]] or default_names()
+    with open(os.path.join(os.path.dirname(__file__), "job_duck_texts.json")) as f:
+        texts = json.load(f)
+    names = sys.argv[2:] or sorted(texts)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * "
                     f"FROM read_parquet('{d}/{t}.parquet/*.parquet')")
     for name in names:
-        with open(f"{QDIR}/{name}.sql") as f:
-            sql = f.read()
+        sql = texts[name]
         for _ in range(2):
             con.execute(sql).fetchall()
         ts = []
@@ -53,7 +43,7 @@ def main():
             t0 = time.time()
             con.execute(sql).fetchall()
             ts.append((time.time() - t0) * 1000)
-        print(f"[jobduck] job_{name:<6s} median={statistics.median(ts):8.1f} ms  "
+        print(f"[jobduck] {name:<9s} median={statistics.median(ts):8.1f} ms  "
               f"runs={','.join(f'{t:.0f}' for t in ts)}")
 
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """DuckDB side of the ClickBench/h2oai-shape pairing (dev tool — pairs
-with `sbt "runMain graft.BenchOlap"` on the same sf dir; both medians go
+with `sbt "runMain graft.BenchBoard olap"` on the same sf dir; both medians go
 to PERF.md). Protocol mirrors tools/rebaseline.py: warm run discarded,
 median of 9.
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """DuckDB side of the scaled TPC-DS pairing (dev tool — pairs with
-`sbt "runMain graft.BenchTpcdsScale"`; both medians go to PERF.md).
+`sbt "runMain graft.BenchBoard tpcds"`; both medians go to PERF.md).
 
 Reads the SAME scaled parquet dir the Scala side printed
 (`scaled_dir=...`), registers views, and runs the identical patched

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """DuckDB side of the scaled verbatim TPC-H pairing (dev tool — pairs
-with `sbt "runMain graft.BenchTpchScale"`; both medians go to PERF.md).
+with `sbt "runMain graft.BenchBoard tpch"`; both medians go to PERF.md).
 
 Reads the SAME scaled parquet dir the Scala side printed
 (`scaled_dir=...`) and runs the identical patched verbatim texts
